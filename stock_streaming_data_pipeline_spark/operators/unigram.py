@@ -44,6 +44,20 @@ MAX_WORD_LEN = 8  # DP horizon; longer words are excluded from training
 MIN_SEED_COUNT = 5  # weighted occurrence floor for multi-char seed pieces
 
 
+def _check_piece_len() -> None:
+    """The DP's s*10+l map-key encoding needs l (and hence MAX_PIECE_LEN)
+    to stay a single decimal digit; a raised constant would collide keys
+    far from the cause (an ANSI duplicate-map-key error at best)."""
+    if MAX_PIECE_LEN >= 10:
+        raise ValueError(
+            f"MAX_PIECE_LEN={MAX_PIECE_LEN}: the s*10+l map-key stride "
+            "needs MAX_PIECE_LEN < 10"
+        )
+
+
+_check_piece_len()
+
+
 def _micro(col):
     """round6 → exact micro-unit BIGINT (sign-uniform half-up)."""
     r = F.round(col, 6)
@@ -135,11 +149,8 @@ def _viterbi_segment(words: DataFrame, vocab: DataFrame) -> DataFrame:
     ).select("w", "wc", F.col("c.s").alias("s"), F.col("c.l").alias("l"), F.col("c.piece").alias("piece"))
     cands = slots.join(F.broadcast(vp), "piece")
     # (s,l) keys are unique per word, so the map is order-independent.
-    # The s*10+l key encoding needs l (and hence MAX_PIECE_LEN) to stay a
-    # single decimal digit, and `words` must be distinct per w — a raised
-    # constant or duplicated words would collide keys far from this code
-    # (ANSI duplicate-map-key error at best); fail loudly here instead.
-    assert MAX_PIECE_LEN < 10, "s*10+l map-key stride assumes MAX_PIECE_LEN < 10"
+    # The s*10+l key encoding needs MAX_PIECE_LEN < 10 (_check_piece_len,
+    # at import) and `words` distinct per w, or keys collide.
     maps = cands.groupBy("w").agg(
         F.max("wc").alias("wc"),
         F.map_from_entries(

@@ -75,6 +75,27 @@ def _shuffle_partitions() -> str:
     return str(default_parallelism())
 
 
+def _driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """Default ``spark.driver.memory``: ``SPARK_GRAFT_DRIVER_MEM`` if set,
+    else half the host's RAM. In local mode the driver JVM is the only
+    JVM, but it shares the host with the Python driver, the Python workers
+    and the page cache, so a heap sized past physical RAM would let the
+    JVM grow until the host kills it instead of collecting. 4g when
+    ``meminfo`` is unreadable."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    try:
+        with open(meminfo) as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    kib = int(line.split()[1])
+                    return f"{max(1024, kib // 2048)}m"
+    except (OSError, ValueError, IndexError):
+        pass
+    return "4g"
+
+
 def get_spark(
     app_name: str = "stock_streaming_data_pipeline_spark",
     *,
@@ -91,8 +112,7 @@ def get_spark(
     builder = SparkSession.builder.master(f"local[{cpus}]").appName(app_name)
     conf = dict(_BASE_CONF)
     conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions or cpus)
-    # Local mode: the driver JVM is the only process; give it most of RAM.
-    conf.setdefault("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+    conf.setdefault("spark.driver.memory", _driver_memory())
     if extra_conf:
         conf.update(extra_conf)
     for k, v in conf.items():
@@ -111,17 +131,21 @@ _RUNTIME_CONF = (
     "spark.sql.execution.arrow.pyspark.enabled",
     "spark.sql.parquet.filterPushdown",
     "spark.sql.files.maxPartitionBytes",
-    "spark.sql.shuffle.partitions",
 )
 
 
 def configure_session(spark: SparkSession) -> SparkSession:
-    """Apply runtime-settable engine defaults to an externally-built session."""
-    conf = dict(_BASE_CONF)
-    conf["spark.sql.shuffle.partitions"] = _shuffle_partitions()
+    """Apply runtime-settable engine defaults to an externally-built session.
+
+    ``spark.sql.shuffle.partitions`` is overwritten only when
+    ``SPARK_GRAFT_CPUS`` is set: otherwise the handed-in session's value
+    stays, since the driver host's core count says nothing about the
+    executor fleet behind that session."""
     for key in _RUNTIME_CONF:
         try:
-            spark.conf.set(key, conf[key])
+            spark.conf.set(key, _BASE_CONF[key])
         except Exception:
             pass  # non-runtime-settable on this build; defaults are fine
+    if "SPARK_GRAFT_CPUS" in os.environ:
+        spark.conf.set("spark.sql.shuffle.partitions", _shuffle_partitions())
     return spark

@@ -16,6 +16,7 @@ from pyspark.sql import types as T
 
 from stock_streaming_data_pipeline_spark.tables import (
     _timestamp_read_confs,
+    read_parquet,
     table_path,
 )
 
@@ -51,12 +52,13 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming view of the events table (file source), normalized to the
     same schema as the batch loader (ts → TIMESTAMP in micros)."""
     _timestamp_read_confs(spark)
-    # Streaming reads need an explicit schema; probe the batch reader for
-    # the testdata generation's physical ts type (raw nano-long vs micros).
+    # Streaming reads need an explicit schema; probe the (cached) batch
+    # schema for the testdata generation's physical ts type (raw nano-long
+    # vs micros).
     import os
 
     p = table_path(sf_dir, "events")
-    stored = spark.read.parquet(p).schema["ts"].dataType
+    stored = read_parquet(spark, p).schema["ts"].dataType
     # The file stream source requires a directory. The driver's testdata
     # ships events.parquet as a single FILE inside the sf dir (scope the
     # listing with a glob); generated tiers (.scaletier) ship it as a

@@ -4,13 +4,31 @@ The driver materializes a TPC-H-ish star schema plus ``events`` (the batch
 stand-in for the reference's trade stream — key=event_type/user_id,
 event-time=ts, measure=value; see FIXTURES.md §5), ``documents`` and
 ``embeddings`` (LLM-data operators). One parquet file per table.
+
+Every table read goes through ``read_parquet``. A schema-less
+``spark.read.parquet`` launches a one-task footer-merge job on every call,
+even for an unchanged file, so ``read_parquet`` keeps the inferred schema
+in a small process-wide LRU cache and re-reads with it, which plans
+without a job. The cache key is the absolute path, the file signature
+(``(size, mtime_ns, inode)`` for a file; the sorted ``(relpath, size,
+mtime_ns)`` listing for a directory of part files) and the session's
+parquet confs that change inference (``_SCHEMA_CONFS``), so a rewritten
+file or a flipped conf infers afresh. Each call still builds a new
+relation with fresh attribute ids; only the inference job is skipped.
+URIs with a scheme (``s3a://``, ``hdfs://``) are not cached: ``os.stat``
+cannot sign them, a remote listing just to build the key would cost about
+what it saves, and at that scale one footer job per load is noise.
 """
 
 from __future__ import annotations
 
 import os
+import threading
+from collections import OrderedDict
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES: tuple[str, ...] = (
     "region",
@@ -57,11 +75,73 @@ def _timestamp_read_confs(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
 
 
+# Session confs that change what parquet schema inference returns.
+# mergeSchema matters only for directories of part files.
+_SCHEMA_CONFS: tuple[str, ...] = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+)
+_SCHEMA_CACHE_MAX = 128
+_SCHEMA_CACHE: OrderedDict[tuple, StructType] = OrderedDict()
+_SCHEMA_LOCK = threading.Lock()
+
+
+def _file_signature(path: str) -> tuple | None:
+    """What identifies this version of a local parquet table, or None if
+    the path cannot be signed (a URI scheme, or nothing there)."""
+    if urlparse(path).scheme:
+        return None
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    if not os.path.isdir(path):
+        return (st.st_size, st.st_mtime_ns, st.st_ino)
+    entries = []
+    for root, _dirs, files in os.walk(path):
+        for f in files:
+            full = os.path.join(root, f)
+            try:
+                fst = os.stat(full)
+            except OSError:
+                continue  # removed mid-walk; the listing still differs
+            entries.append((os.path.relpath(full, path), fst.st_size, fst.st_mtime_ns))
+    return tuple(sorted(entries))
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers the schema once per file
+    version and conf setting (see the module docstring)."""
+    sig = _file_signature(path)
+    if sig is None:
+        return spark.read.parquet(path)
+    key = (
+        os.path.abspath(path),
+        sig,
+        tuple(str(spark.conf.get(c)).lower() for c in _SCHEMA_CONFS),
+    )
+    with _SCHEMA_LOCK:
+        schema = _SCHEMA_CACHE.get(key)
+        if schema is not None:
+            _SCHEMA_CACHE.move_to_end(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    with _SCHEMA_LOCK:
+        _SCHEMA_CACHE[key] = df.schema
+        while len(_SCHEMA_CACHE) > _SCHEMA_CACHE_MAX:
+            _SCHEMA_CACHE.popitem(last=False)
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     _timestamp_read_confs(spark)
-    df = spark.read.parquet(table_path(sf_dir, name))
+    df = read_parquet(spark, table_path(sf_dir, name))
     if name == "events":
         from pyspark.sql import functions as F
         from pyspark.sql import types as T
@@ -145,7 +225,7 @@ def load_events_pruned(
     from pyspark.sql import types as T
 
     _timestamp_read_confs(spark)
-    df = spark.read.parquet(table_path(sf_dir, "events"))
+    df = read_parquet(spark, table_path(sf_dir, "events"))
 
     def micros(s: str) -> int:
         t = dt.datetime.fromisoformat(s).replace(tzinfo=dt.timezone.utc)

@@ -186,6 +186,14 @@ def test_viterbi_fold_matches_bruteforce(spark):
         assert got[w] == brute(w), f"word {w!r}"
 
 
+def test_piece_len_guard_is_a_real_exception(monkeypatch):
+    from stock_streaming_data_pipeline_spark.operators import unigram
+
+    monkeypatch.setattr(unigram, "MAX_PIECE_LEN", 10)
+    with pytest.raises(ValueError, match="MAX_PIECE_LEN"):
+        unigram._check_piece_len()
+
+
 def test_argmin_code_carry_sub(spark):
     from stock_streaming_data_pipeline_spark.operators.similarity import (
         _argmin_code,

@@ -22,16 +22,6 @@ def epoch_us(col: Column | str) -> Column:
     return F.unix_micros(c.cast("timestamp"))
 
 
-def epoch_s(col: Column | str) -> Column:
-    """Timestamp → epoch seconds (window bounds are whole seconds here)."""
-    return F.unix_seconds(F.col(col) if isinstance(col, str) else col)
-
-
-def from_epoch_ms(col: Column | str) -> Column:
-    """Epoch-millis long → timestamp (C1, ProcessStockStream.py:106)."""
-    return F.timestamp_millis(F.col(col) if isinstance(col, str) else col)
-
-
 def json_double(col: Column | str, path: str) -> Column:
     """Extract a JSON field as double (C5; consumer-side json.loads,
     BtcPrediction/kafka.py:37-38)."""
@@ -55,7 +45,3 @@ def round6(col: Column) -> Column:
     """Engine-neutral rounding for ratio-magnitude doubles."""
     return F.round(col, 6)
 
-
-def day_num(col: Column | str) -> Column:
-    """Timestamp → integer epoch day (engine-neutral calendar bucketing)."""
-    return (epoch_us(col) / F.lit(86_400_000_000)).cast("long")

@@ -236,116 +236,3 @@ def ivf2_index_topk(
         .filter(F.col("rank") <= k)
         .select("query_id", "neighbor_id", "cosine", "rank")
     )
-
-
-def add_to_index(
-    spark: SparkSession,
-    path: str,
-    new_vectors: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Incremental index maintenance: assign NEW vectors against the
-    EXISTING centroids and append them to their inverted-list partitions
-    — no retrain, no rewrite of existing lists (dynamic partition
-    overwrite is not needed because appends go to new files inside each
-    list directory). This is how a production IVF index absorbs an
-    ingest batch; the quantizer drifts only if the data distribution
-    does, at which point build_ivf_index re-trains offline.
-
-    The assignment rule is byte-identical to the build path
-    (_nearest_centroid: round-6 cosine, cluster-id tie-breaks), so an
-    index built incrementally answers probes identically to one built
-    in a single shot over the union — pinned in tests/test_ann_index.py.
-    """
-    cents = spark.read.parquet(f"{path}/centroids").select(
-        F.col("cluster_id").alias("_cid"), "cvec"
-    )
-    c = new_vectors.select(
-        F.col(id_col).alias("vec_id"), as_double(F.col(vec_col)).alias("v")
-    )
-    assigned = _nearest_centroid(c, cents, key_col="vec_id", vec_alias="v")
-    (
-        assigned.select("vec_id", "v", "cluster_id")
-        .write.mode("append")
-        .partitionBy("cluster_id")
-        .parquet(f"{path}/lists")
-    )
-
-
-def rebalance_index(
-    spark: SparkSession,
-    path: str,
-    *,
-    max_list_rows: int,
-    iters: int = 2,
-) -> int:
-    """Index maintenance part 2: SPLIT oversized inverted lists. After
-    many add_to_index batches a hot list can grow past the probe budget;
-    this re-trains 2 sub-centroids WITHIN each oversized list (local
-    Lloyd on that list's vectors only — never a global retrain), rewrites
-    its members under fresh cluster ids, swaps the centroid rows, and
-    drops the old partition directory. Probes see a finer quantizer with
-    the same corpus; with exhaustive nprobe the answers are unchanged
-    (pinned in tests). Returns how many lists were split.
-
-    The per-split work is one tiny Spark job per hot list (lists over
-    budget are few by construction); everything else stays on disk
-    untouched."""
-    from pyspark.sql import functions as F
-
-    from stock_streaming_data_pipeline_spark.operators.similarity import (
-        _nearest_centroid,
-        ivf_train,
-    )
-    from stock_streaming_data_pipeline_spark.streaming.sinks import _hadoop_fs
-
-    lists = spark.read.parquet(f"{path}/lists")
-    counts = {
-        r["cluster_id"]: r["n"]
-        for r in lists.groupBy("cluster_id").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    cents = spark.read.parquet(f"{path}/centroids")
-    next_cid = max(counts) + 1 if counts else 0
-    split = 0
-    for cid, n in sorted(counts.items()):
-        if n <= max_list_rows:
-            continue
-        members = lists.filter(F.col("cluster_id") == cid).select("vec_id", "v")
-        sub_cents = ivf_train(
-            members, id_col="vec_id", vec_col="v", nlist=2, iters=iters
-        )
-        assigned = _nearest_centroid(
-            members.select(F.col("vec_id").alias("_vid"), F.col("v")),
-            sub_cents,
-            key_col="_vid",
-            vec_alias="v",
-        )
-        out = assigned.select(
-            F.col("_vid").alias("vec_id"),
-            "v",
-            (F.col("cluster_id") + F.lit(next_cid)).alias("cluster_id"),
-        )
-        out.write.mode("append").partitionBy("cluster_id").parquet(f"{path}/lists")
-        # swap centroid rows: drop cid, add the two sub-centroids
-        cents = cents.filter(F.col("cluster_id") != cid).unionByName(
-            sub_cents.select(
-                (F.col("_cid") + F.lit(next_cid)).alias("cluster_id"), "cvec"
-            )
-        )
-        fs, _ = _hadoop_fs(spark, path)
-        fs.delete(
-            spark._jvm.org.apache.hadoop.fs.Path(
-                f"{path}/lists/cluster_id={cid}"
-            ),
-            True,
-        )
-        next_cid += 2
-        split += 1
-    if split:
-        # publish the new centroid table (tiny; overwrite via temp swap)
-        cents.localCheckpoint(eager=True).write.mode("overwrite").parquet(
-            f"{path}/centroids"
-        )
-    return split

@@ -44,7 +44,6 @@ from pyspark.sql import functions as F
 from stock_streaming_data_pipeline_spark.operators.dedup import (
     MERSENNE31,
     portable_hash,
-    sql_portable_hash,
 )
 
 _GOLDEN = 2654435761  # Knuth's multiplicative-hash constant, also the
@@ -151,15 +150,3 @@ def bloom_semi_join(
     return pruned.join(
         keys.select(dim_key), pruned[fact_key] == F.col(dim_key), "left_semi"
     )
-
-
-def sql_bloom_positions(expr: str, *, k_hashes: int, m_bits: int, salt: str = "bf_") -> list[str]:
-    """DuckDB replay of the k bit positions — used only by tests that
-    audit the bitmap itself; catalog oracles built on bloom_semi_join
-    use the plain EXISTS form (the operator is exact by contract)."""
-    base = sql_portable_hash(f"CAST({expr} AS VARCHAR)", salt=salt)
-    h31 = f"({base} & 2147483647)"
-    return [
-        f"((({h31} * {2 * i + 1} + {i * _GOLDEN}) % {MERSENNE31}) % {m_bits})"
-        for i in range(k_hashes)
-    ]

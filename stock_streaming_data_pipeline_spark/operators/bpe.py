@@ -37,25 +37,6 @@ from stock_streaming_data_pipeline_spark.operators.dedup import SQL_TOKENS, toke
 EOW = "</w>"
 
 
-def _word_symbols(df: DataFrame, *, text_col: str) -> DataFrame:
-    """(w, wc, pos, sym): every distinct word of the corpus split into
-    single-character symbols plus the terminal marker."""
-    words = (
-        df.select(F.explode(tokens(F.col(text_col))).alias("w"))
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("wc"))
-    )
-    chars = words.select(
-        "w",
-        "wc",
-        F.explode(F.sequence(F.lit(1), F.length("w"))).alias("pos"),
-    ).withColumn("sym", F.expr("substring(w, pos, 1)"))
-    eow = words.select(
-        "w", "wc", (F.length("w") + 1).alias("pos"), F.lit(EOW).alias("sym")
-    )
-    return chars.unionByName(eow)
-
-
 def _merge_round(p: DataFrame, best: DataFrame) -> DataFrame:
     """Apply one merge rule to the indexed symbol relation ``p``
     (columns w, wc, pos, sym, nxt, idx) — greedy left-to-right."""

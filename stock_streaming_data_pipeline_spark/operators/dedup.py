@@ -326,37 +326,6 @@ def containment_pairs(
     )
 
 
-def minhash_signatures(
-    df: DataFrame,
-    *,
-    id_col: str,
-    text_col: str,
-    n: int = 3,
-    num_perm: int = 64,
-    portable: bool = True,
-) -> DataFrame:
-    """K minhash values per document: min over shingles of K independent
-    hashes.
-
-    Physical shape (the codegen-friendly one): explode shingles to rows,
-    hash each shingle ONCE with a native expression, derive the K
-    permutations as plain integer-mixing columns, then a single
-    partial-aggregated groupBy(doc) computes all K MIN buffers. Everything
-    runs inside whole-stage codegen; the previous
-    array_min(transform(...)) form ran K interpreted lambda passes per
-    document (higher-order functions never enter codegen — measured ~10x
-    slower), and the shuffle carries only per-partition partial-agg rows
-    either way. Deliberately NO collect_set in this aggregate: one
-    TypedImperativeAggregate forces the whole aggregate onto the
-    non-codegen ObjectHashAggregate path, dragging the 64 min buffers
-    with it (hashed sets, when needed, are a separate cheap agg —
-    see minhash_lsh_pairs)."""
-    hashed = _hashed_shingle_rows(
-        df, id_col=id_col, text_col=text_col, n=n, portable=portable
-    )
-    return hashed.groupBy("doc").agg(*_minhash_aggs(num_perm))
-
-
 def _hashed_shingle_rows(
     df: DataFrame, *, id_col: str, text_col: str, n: int, portable: bool
 ) -> DataFrame:
@@ -380,7 +349,18 @@ def _minhash_aggs(num_perm: int) -> list[Column]:
     """K MIN aggregates over a universal-hash family derived from one base
     hash: mask to 31 bits, then h_k(x) = (a_k*x + b_k) mod (2^31-1) —
     odd multipliers, values stay far below 2^63 (ANSI overflow-safe),
-    engine-portable arithmetic."""
+    engine-portable arithmetic.
+
+    Grouped by doc over :func:`_hashed_shingle_rows`, these are the
+    signatures: each shingle is hashed ONCE by a native expression and
+    the K permutations are plain integer-mixing columns, so one
+    partial-aggregated groupBy computes all K MIN buffers inside
+    whole-stage codegen (an array_min(transform(...)) form runs K
+    interpreted lambda passes per document, measured ~10x slower).
+    Deliberately NO collect_set next to these MINs: one
+    TypedImperativeAggregate forces the whole aggregate onto the
+    non-codegen ObjectHashAggregate path (minhash_lsh_pairs builds the
+    hashed sets in a separate agg)."""
     h31 = F.col("h").bitwiseAND(F.lit(0x7FFFFFFF))
     return [
         # Plain % instead of pmod (round 12): the operand is provably
@@ -944,51 +924,6 @@ WITH tok AS (
 votes AS (SELECT doc, {votes} FROM tok GROUP BY doc)
 SELECT doc, {acc} AS simhash FROM votes
 """
-
-
-def simhash_pairs(
-    df: DataFrame, *, id_col: str, text_col: str, max_hamming: int = 3
-) -> DataFrame:
-    """All document pairs with simhash hamming distance <= max_hamming.
-
-    Candidate generation is pigeonhole-banded: 4 chunks of 15 bits —
-    a pair within distance 3 must agree on at least one chunk, so the
-    result is EXACT while the join stays linear in bucket occupancy.
-    """
-    assert max_hamming <= 3, "4-chunk pigeonhole is complete only for <= 3"
-    sh = simhash(df, id_col=id_col, text_col=text_col)
-    chunks = F.array(
-        *[
-            F.struct(
-                F.lit(c).alias("chunk"),
-                F.shiftright(F.col("simhash"), c * 15)
-                .bitwiseAND(F.lit((1 << 15) - 1))
-                .alias("piece"),
-            )
-            for c in range(4)
-        ]
-    )
-    banded = sh.select("doc", "simhash", F.explode(chunks).alias("c")).select(
-        "doc", "simhash", "c.chunk", "c.piece"
-    )
-    a, b = banded.alias("a"), banded.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.chunk") == F.col("b.chunk"))
-            & (F.col("a.piece") == F.col("b.piece"))
-            & (F.col("a.doc") < F.col("b.doc")),
-        )
-        .select(
-            F.col("a.doc").alias("doc_a"),
-            F.col("b.doc").alias("doc_b"),
-            F.bit_count(
-                F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
-            ).alias("hamming"),
-        )
-        .dropDuplicates(["doc_a", "doc_b"])
-        .filter(F.col("hamming") <= max_hamming)
-    )
 
 
 def contamination_report(

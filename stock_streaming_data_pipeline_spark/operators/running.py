@@ -4,7 +4,7 @@ The reference keeps this state *outside* Spark — a producer-side dict for
 cumulative volume (FinnhubProducer.py:34-36) and a pandas FIFO for the
 100-row lookback (BtcPrediction/kafka.py:51-57). In-engine, batch form =
 window functions (one shuffle on the key, sorted within partitions);
-streaming form = transformWithState/applyInPandasWithState (streaming/state.py).
+streaming form = applyInPandasWithState (streaming/state.py).
 
 Scale notes: Window.partitionBy(key) is a single hash shuffle; skewed keys
 are handled by AQE only for joins/aggs, so a genuinely hot key in a window

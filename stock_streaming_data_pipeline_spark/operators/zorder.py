@@ -7,9 +7,9 @@ rank buckets, so a rectangle predicate touches O(perimeter) files
 instead of O(table) — the same layout trick Delta/Iceberg expose as
 ``OPTIMIZE ZORDER BY``, here as a first-class operator over plain
 parquet: compute the code (exact integer arithmetic — min/max scaling
-with integer division, bit interleave), then range-repartition + sort by
-it so every output file covers a compact Z-curve segment, and parquet
-footer min/max stats on BOTH columns become selective.
+with integer division, bit interleave); a writer that range-repartitions
+and sorts by it gives every output file a compact Z-curve segment, so
+parquet footer min/max stats on BOTH columns become selective.
 
 Everything is exact integer math — bucketing uses integer division on
 BIGINTs, interleaving uses shifts/masks — so the code column carries a
@@ -17,8 +17,7 @@ full DuckDB differential oracle, and the layout is reproducible
 bit-for-bit on any engine.
 
 Scale shape: the min/max bounds are one tiny agg (broadcast); the code
-is a map-only expression; the write is one range exchange on the code
-(the same shuffle any sorted write pays). No UDFs, no driver data.
+is a map-only expression. No UDFs, no driver data.
 """
 
 from __future__ import annotations
@@ -92,63 +91,3 @@ def zorder_codes(
         "zcode", interleave_bits(bx, by, bits=bits)
     ).drop("xlo", "xhi", "ylo", "yhi")
 
-
-def zorder_write(
-    df: DataFrame,
-    path: str,
-    *,
-    col_x: str,
-    col_y: str,
-    bits: int = 16,
-    num_files: int = 8,
-) -> None:
-    """Write ``df`` clustered along the Z-curve: range-repartition on the
-    code (contiguous curve segments per file) and sort within partitions,
-    so parquet min/max footer stats on BOTH columns are tight per file.
-    The code column itself is dropped from the stored schema — it is a
-    layout artifact, not data."""
-    coded = zorder_codes(df, col_x=col_x, col_y=col_y, bits=bits)
-    (
-        coded.repartitionByRange(num_files, "zcode")
-        .sortWithinPartitions("zcode")
-        .drop("zcode")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-
-
-def files_touched(path: str, *, col_x: str, x_range, col_y: str, y_range):
-    """Data-skipping measurement harness: how many parquet files under
-    ``path`` could contain rows with col_x in x_range AND col_y in
-    y_range, judged ONLY by footer min/max stats — exactly the pruning
-    decision a scan planner makes. Driver-side metadata read; used by
-    tests/benchmarks to compare layouts, not by query plans."""
-    import glob
-    import os
-
-    import pyarrow.parquet as pq
-
-    touched = 0
-    names = [
-        f
-        for f in glob.glob(os.path.join(path, "*.parquet"))
-        if os.path.getsize(f) > 0
-    ]
-    for fname in names:
-        md = pq.ParquetFile(fname).metadata
-        overlap = True
-        for col, (qlo, qhi) in ((col_x, x_range), (col_y, y_range)):
-            clo, chi = None, None
-            for rg in range(md.num_row_groups):
-                row_group = md.row_group(rg)
-                for ci in range(row_group.num_columns):
-                    c = row_group.column(ci)
-                    if c.path_in_schema == col and c.statistics is not None:
-                        s = c.statistics
-                        clo = s.min if clo is None else min(clo, s.min)
-                        chi = s.max if chi is None else max(chi, s.max)
-            if clo is not None and (chi < qlo or clo > qhi):
-                overlap = False
-                break
-        touched += int(overlap)
-    return touched, len(names)

@@ -1020,10 +1020,9 @@ FROM c
 def events_zorder_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Morton (Z-order) layout codes over (user_id, event-time): the sort
     key that makes parquet footer min/max stats selective on BOTH
-    dimensions at once (the OPTIMIZE ZORDER BY layout for plain parquet;
-    operators/zorder.zorder_write applies it). Pure BIGINT bucketing +
-    bit interleave -- exact in any engine, hence a full oracle. The
-    measured skipping win is pinned in tests/test_zorder.py."""
+    dimensions at once (the OPTIMIZE ZORDER BY layout for plain parquet).
+    Pure BIGINT bucketing + bit interleave -- exact in any engine, hence
+    a full oracle. Code locality is pinned in tests/test_zorder.py."""
     ev = load_table(spark, sf_dir, "events").withColumn(
         "ts_us", F.unix_micros(F.col("ts"))
     )

@@ -9,8 +9,6 @@ decode/explode surface (S2/P2) is exercised without Kafka.
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -24,7 +22,6 @@ def synthetic_trades(
     cadence_ms: int = 250,
     late_fraction: float = 0.03,
     late_by_s: int = 45,
-    seed: int = 7,
 ) -> DataFrame:
     """Deterministic trade ticks: bounded-random-walk price per symbol,
     log-uniform-ish volume, a fraction of late rows (5-60 s behind max
@@ -54,8 +51,6 @@ def synthetic_trades(
             F.round(F.pow(F.lit(10.0), noise(2) * 3 - 4), 6).alias("volume"),
         )
     )
-    _ = math  # (kept: documents the log-uniform intent of the pow() volume)
-    _ = seed
     return df
 
 

@@ -62,7 +62,7 @@ def _hadoop_fs(spark: SparkSession, path: str):
 #     `If-None-Match: *` — so the same code path is transactional on a
 #     real object store; only the jar/credentials are absent in this
 #     sandbox. The loser-retries contention behavior is pinned by
-#     tests/test_manifest.py::test_concurrent_committers_never_lose_a_commit;
+#     tests/test_scale_ops.py::test_concurrent_committers_never_lose_a_commit;
 #   - readers resolve the highest committed manifest and read EXACTLY its
 #     files: a crash between data-write and manifest-commit leaves the
 #     previous manifest (and therefore the previous state) in force, and
@@ -180,7 +180,7 @@ def _commit_manifest(spark: SparkSession, path: str, files: list[str]) -> int:
     HDFS = namenode-atomic ``create(overwrite=false)``; S3A (Hadoop
     3.4.1+) = the same create call compiled to a conditional PUT with
     ``If-None-Match: *``. Pinned under real thread contention by
-    tests/test_manifest.py::test_concurrent_committers_never_lose_a_commit."""
+    tests/test_scale_ops.py::test_concurrent_committers_never_lose_a_commit."""
     fs, _ = _hadoop_fs(spark, path)
     jvm = spark._jvm
     mdir = jvm.org.apache.hadoop.fs.Path(_manifest_dir(path))
@@ -510,41 +510,3 @@ def compact_upsert_table_with_deletes(
         if f.rsplit("/", 1)[-1] not in keep:
             fs.delete(spark._jvm.org.apache.hadoop.fs.Path(f), False)
 
-
-def missing_date_partitions(
-    spark: SparkSession,
-    path: str,
-    *,
-    start: str,
-    end: str,
-    grain: str = "day",
-) -> list[dict]:
-    """Backfill planning for the date-partitioned feature store: which
-    year/month/day(/hour) directories in [start, end] hold no data?
-    Driver-side directory listing only (partition dirs are metadata);
-    returns the partition-spec dicts a backfill job should recompute —
-    the gap detector that turns 'rerun the whole month' into 'rerun the
-    two missing days'."""
-    import datetime as dt
-
-    fs, hpath = _hadoop_fs(spark, path)
-    t0 = dt.date.fromisoformat(start)
-    t1 = dt.date.fromisoformat(end)
-    if grain != "day":
-        raise ValueError("only day grain implemented; hour follows the same walk")
-    missing = []
-    cur = t0
-    while cur <= t1:
-        part = (
-            f"{path}/year={cur.year}/month={cur.month}/day={cur.day}"
-        )
-        ppath = spark._jvm.org.apache.hadoop.fs.Path(part)
-        exists = fs.exists(ppath)
-        has_data = exists and any(
-            f.isFile() and f.getLen() > 0 and not f.getPath().getName().startswith("_")
-            for f in fs.listStatus(ppath)
-        )
-        if not has_data:
-            missing.append({"year": cur.year, "month": cur.month, "day": cur.day})
-        cur += dt.timedelta(days=1)
-    return missing

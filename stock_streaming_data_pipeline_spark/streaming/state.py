@@ -26,7 +26,6 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql import types as T
 
@@ -161,171 +160,6 @@ def trailing_lookback(
 
     return df.groupBy(key).applyInPandasWithState(
         fold, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-    )
-
-
-# ---------------------------------------------------------------------------
-# transformWithStateInPandas variants (Spark 4 arbitrary-state API)
-# ---------------------------------------------------------------------------
-# Same operators on the newer StatefulProcessor surface: typed named state
-# slots (ValueState) instead of a single opaque tuple, lifecycle hooks, and
-# optional timers. Semantics (buffer-sort-fold per batch, arrival order
-# across batches) match the applyInPandasWithState forms above exactly —
-# tests pin the equivalence. Requires the RocksDB state store provider
-# (set by running_total_tws/trailing_lookback_tws callers via
-# use_rocksdb_state()) and the protobuf package (the v2 state API talks to
-# a state server over a protobuf protocol) — gate with tws_available().
-
-
-def tws_available() -> bool:
-    """True when transformWithStateInPandas can actually run: its Python
-    state-server protocol imports google.protobuf at worker start (absent
-    in some runtimes — this container ships no usable protobuf, so these
-    variants are connector-gated like the Kafka/Avro sources)."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def use_rocksdb_state(spark) -> str | None:
-    """Switch the session to the RocksDB state store provider (required by
-    transformWithState); returns the previous provider for restoration."""
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    return prev
-
-
-def restore_state_provider(spark, prev: str | None) -> None:
-    key = "spark.sql.streaming.stateStore.providerClass"
-    if prev is None:
-        spark.conf.unset(key)
-    else:
-        spark.conf.set(key, prev)
-
-
-class _RunningTotalProcessor(StatefulProcessor):
-    """Per-key running sum as a StatefulProcessor (T11/A3/W1)."""
-
-    def __init__(self, key: str, ts: str, value: str, out: str) -> None:
-        self._cols = (key, ts, value, out)
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._total = handle.getValueState("total", "total double")
-
-    def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
-        k, ts, value, out = self._cols
-        got = self._total.get()
-        total = got[0] if got is not None else 0.0
-        chunks = [pdf for pdf in rows if len(pdf)]
-        if chunks:
-            pdf = pd.concat(chunks, ignore_index=True).sort_values(ts)
-            csum = pdf[value].cumsum() + total
-            total = float(csum.iloc[-1])
-            yield pd.DataFrame(
-                {k: pdf[k], ts: pdf[ts], value: pdf[value], out: csum}
-            )
-        self._total.update((total,))
-
-    def close(self) -> None:
-        pass
-
-
-def running_total_tws(
-    df: DataFrame,
-    *,
-    key: str = "symbol",
-    ts: str = "ts",
-    value: str = "volume",
-    out: str = "cumulative_volume",
-) -> DataFrame:
-    """``running_total`` on transformWithStateInPandas: identical output,
-    state in a named ValueState slot managed by the v2 state API."""
-    out_schema = (
-        f"{key} string, {ts} timestamp, {value} double, {out} double"
-    )
-    return df.groupBy(key).transformWithStateInPandas(
-        statefulProcessor=_RunningTotalProcessor(key, ts, value, out),
-        outputStructType=out_schema,
-        outputMode="append",
-        timeMode="none",
-    )
-
-
-class _LookbackProcessor(StatefulProcessor):
-    """Bounded FIFO lookback (the predictor's 100-row window, T11/W2)."""
-
-    def __init__(self, key: str, ts: str, value: str, rows: int) -> None:
-        self._cols = (key, ts, value)
-        self._rows = rows
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._fifo = handle.getValueState(
-            "fifo", "ts_us array<bigint>, vals array<double>"
-        )
-
-    def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
-        k, ts, value = self._cols
-        n_keep = self._rows
-        got = self._fifo.get()
-        ts_us, vals = (list(got[0]), list(got[1])) if got is not None else ([], [])
-        chunks = [pdf for pdf in rows if len(pdf)]
-        if chunks:
-            pdf = pd.concat(chunks, ignore_index=True).sort_values(ts)
-            out_rows = []
-            for t, v in zip(pdf[ts], pdf[value]):
-                ts_us.append(int(pd.Timestamp(t).value // 1000))
-                vals.append(float(v))
-                if len(vals) > n_keep:
-                    ts_us.pop(0)
-                    vals.pop(0)
-                window = pd.Series(vals)
-                cents = sum(_cents_half_up(x) for x in vals)
-                out_rows.append(
-                    (
-                        key[0], t, v,
-                        float(window.mean()), float(window.min()),
-                        float(window.max()), len(vals), cents,
-                    )
-                )
-            yield pd.DataFrame(
-                out_rows,
-                columns=[
-                    k, ts, value, "lookback_mean", "lookback_min",
-                    "lookback_max", "lookback_n", "lookback_cents_sum",
-                ],
-            )
-        self._fifo.update((ts_us, vals))
-
-    def close(self) -> None:
-        pass
-
-
-def trailing_lookback_tws(
-    df: DataFrame,
-    *,
-    key: str = "symbol",
-    ts: str = "ts",
-    value: str = "close",
-    rows: int = 100,
-) -> DataFrame:
-    """``trailing_lookback`` on transformWithStateInPandas (v2 state API)."""
-    out_schema = (
-        f"{key} string, {ts} timestamp, {value} double, "
-        "lookback_mean double, lookback_min double, lookback_max double, "
-        "lookback_n bigint, lookback_cents_sum bigint"
-    )
-    return df.groupBy(key).transformWithStateInPandas(
-        statefulProcessor=_LookbackProcessor(key, ts, value, rows),
-        outputStructType=out_schema,
-        outputMode="append",
-        timeMode="none",
     )
 
 

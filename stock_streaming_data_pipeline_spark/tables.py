@@ -246,10 +246,6 @@ def load_events_pruned(
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every table as a temp view (for the SQL surface)."""
     for name in TABLES:

@@ -58,103 +58,6 @@ def test_index_scan_prunes_unprobed_lists(spark, tmp_path):
     assert len(m.group(1).split(",")) == 3
 
 
-def test_incremental_add_matches_single_shot_build(spark, tmp_path):
-    """An index built on half the corpus then extended with add_to_index
-    answers every probe identically to an index whose LISTS contain the
-    same vectors from a single assignment pass over the union (same
-    frozen quantizer), and the appended vectors land in pruned
-    partitions like any others."""
-    from stock_streaming_data_pipeline_spark.operators import ann_index
-    from stock_streaming_data_pipeline_spark.tables import load_table
-
-    emb = load_table(spark, SF_SMOKE, "embeddings")
-    first = emb.filter(F.col("vec_id") % 2 == 0)
-    rest = emb.filter(F.col("vec_id") % 2 == 1)
-    queries = emb.filter(F.col("vec_id") < 6)
-
-    inc_path = str(tmp_path / "inc")
-    ann_index.build_ivf_index(first, inc_path, nlist=4, iters=2)
-    ann_index.add_to_index(spark, inc_path, rest)
-    got = sorted(
-        (r["query_id"], r["rank"], r["neighbor_id"], r["cosine"])
-        for r in ann_index.ivf_index_topk(
-            spark, inc_path, queries, k=5, nprobe=2
-        ).collect()
-    )
-
-    # single-shot reference: freeze the SAME quantizer (trained on
-    # `first`), assign the union in one pass
-    ref_path = str(tmp_path / "ref")
-    ann_index.build_ivf_index(first, ref_path, nlist=4, iters=2)
-    ann_index.add_to_index(spark, ref_path, rest.unionByName(first))
-    # ref lists now contain first twice -> rebuild clean instead
-    import shutil
-
-    shutil.rmtree(ref_path)
-    ann_index.build_ivf_index(first, ref_path, nlist=4, iters=2)
-    # overwrite lists with a one-pass assignment of the union
-    from stock_streaming_data_pipeline_spark.operators.similarity import (
-        _nearest_centroid,
-        as_double,
-    )
-
-    cents = spark.read.parquet(f"{ref_path}/centroids").select(
-        F.col("cluster_id").alias("_cid"), "cvec"
-    )
-    union = emb.select(
-        F.col("vec_id"), as_double(F.col("embedding")).alias("v")
-    )
-    assigned = _nearest_centroid(union, cents, key_col="vec_id", vec_alias="v")
-    assigned.select("vec_id", "v", "cluster_id").write.mode(
-        "overwrite"
-    ).partitionBy("cluster_id").parquet(f"{ref_path}/lists")
-    want = sorted(
-        (r["query_id"], r["rank"], r["neighbor_id"], r["cosine"])
-        for r in ann_index.ivf_index_topk(
-            spark, ref_path, queries, k=5, nprobe=2
-        ).collect()
-    )
-    assert got == want
-
-
-def test_rebalance_splits_hot_lists_and_preserves_answers(spark, tmp_path):
-    from pyspark.sql import functions as FF
-
-    from stock_streaming_data_pipeline_spark.operators import ann_index
-    from stock_streaming_data_pipeline_spark.tables import load_table
-
-    emb = load_table(spark, SF_SMOKE, "embeddings")
-    path = str(tmp_path / "idx")
-    # deliberately coarse index -> hot lists guaranteed
-    ann_index.build_ivf_index(emb, path, nlist=2, iters=1)
-    queries = emb.filter(FF.col("vec_id") < 5)
-    before = sorted(
-        (r["query_id"], r["rank"], r["neighbor_id"], r["cosine"])
-        for r in ann_index.ivf_index_topk(
-            spark, path, queries, k=5, nprobe=2  # exhaustive: 2 lists
-        ).collect()
-    )
-    n_total = emb.count()
-    split = ann_index.rebalance_index(spark, path, max_list_rows=n_total // 3)
-    assert split >= 1
-    lists = spark.read.parquet(f"{path}/lists")
-    counts = [
-        r["n"]
-        for r in lists.groupBy("cluster_id").agg(FF.count(FF.lit(1)).alias("n")).collect()
-    ]
-    assert sum(counts) == n_total  # nothing lost
-    assert max(counts) <= n_total // 3 or len(counts) > 2  # finer lists
-    cents = spark.read.parquet(f"{path}/centroids")
-    assert cents.count() == len(counts)
-    after = sorted(
-        (r["query_id"], r["rank"], r["neighbor_id"], r["cosine"])
-        for r in ann_index.ivf_index_topk(
-            spark, path, queries, k=5, nprobe=cents.count()  # exhaustive again
-        ).collect()
-    )
-    assert after == before  # exhaustive probe: identical answers
-
-
 def test_ivf2_index_matches_inmemory_and_prunes_leaves(spark, tmp_path):
     """The persisted two-level index must answer exactly like the
     retrain-per-query ivf2_topk, and its lists scan must carry BOTH

@@ -66,23 +66,6 @@ def test_minhash_lsh_recall_vs_exact(spark, near_dup_corpus):
     assert recall >= 0.9, f"LSH recall {recall:.2f} over {len(exact)} true pairs"
 
 
-def test_simhash_pairs_find_neardups(spark, near_dup_corpus):
-    pairs = dedup.simhash_pairs(
-        near_dup_corpus, id_col="doc_id", text_col="text", max_hamming=3
-    ).collect()
-    found = {(r["doc_a"], r["doc_b"]) for r in pairs}
-    # perturbed copies are ~identical term distributions → tiny hamming
-    expected = {
-        (r["doc_id"], r["doc_id"] + 1_000_000)
-        for r in near_dup_corpus.filter(
-            (F.col("doc_id") % 5 == 0) & (F.col("doc_id") < 1_000_000)
-        ).collect()
-    }
-    hit = len(found & expected) / len(expected)
-    assert hit >= 0.8, f"simhash hit rate {hit:.2f}"
-    assert all(r["hamming"] <= 3 for r in pairs)
-
-
 def test_lsh_topk_finds_planted_neighbor(spark):
     emb = load_table(spark, SF_SMOKE, "embeddings")
     # plant a near-copy of vec 3 (tiny deterministic perturbation)

@@ -133,20 +133,21 @@ def test_global_sort_uses_range_partitioning(spark):
 
 
 def test_minhash_codegen_and_partial_agg(spark):
-    """The minhash signature aggregate must stay on the codegen
-    HashAggregate path (an ObjectHashAggregate here means a
-    TypedImperativeAggregate leaked into the 64-min aggregate) with
-    map-side partial aggregation."""
+    """The minhash signature aggregate, built as minhash_lsh_pairs builds
+    it, must stay on the codegen HashAggregate path (an
+    ObjectHashAggregate here means a TypedImperativeAggregate leaked into
+    the 64-min aggregate) with map-side partial aggregation."""
     import contextlib
     import io
 
     from stock_streaming_data_pipeline_spark.operators import dedup
     from stock_streaming_data_pipeline_spark.tables import load_table
 
-    sigs = dedup.minhash_signatures(
+    hashed = dedup._hashed_shingle_rows(
         load_table(spark, SF_SMOKE, "documents"),
-        id_col="doc_id", text_col="text", n=3, num_perm=64,
+        id_col="doc_id", text_col="text", n=3, portable=True,
     )
+    sigs = hashed.groupBy("doc").agg(*dedup._minhash_aggs(64))
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         sigs.explain("formatted")

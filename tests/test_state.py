@@ -170,35 +170,6 @@ def test_late_rows_fold_in_arrival_order(spark, tmp_path):
         assert abs(final[sym] - want[sym]) < 1e-6
 
 
-@pytest.mark.skipif(
-    not stream_state.tws_available(),
-    reason="transformWithStateInPandas needs google.protobuf (not in this runtime)",
-)
-def test_tws_running_total_matches_v1(spark, trades_small, tmp_path):
-    """The Spark-4 StatefulProcessor variant must equal the
-    applyInPandasWithState running total row for row."""
-    path, batch = trades_small
-    prev = stream_state.use_rocksdb_state(spark)
-    try:
-        out = stream_state.running_total_tws(stream_trades(spark, path))
-        got = _settle_append(out, spark, tmp_path, "state_tws").toPandas()
-    finally:
-        stream_state.restore_state_provider(spark, prev)
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy("symbol").orderBy("ts").rowsBetween(W.unboundedPreceding, 0)
-    want = (
-        batch.withColumn("cumulative_volume", F.sum("volume").over(w))
-        .select("symbol", "ts", "volume", "cumulative_volume")
-        .toPandas()
-    )
-    key = ["symbol", "ts", "volume"]
-    got = got.sort_values(key).reset_index(drop=True)
-    want = want.sort_values(key).reset_index(drop=True)
-    assert len(got) == len(want)
-    assert (got["cumulative_volume"] - want["cumulative_volume"]).abs().max() < 1e-9
-
-
 def test_cents_half_up_matches_sql_round():
     """round(x*100, 0) half-away-from-zero (the DuckDB oracle rule), not
     Python's banker's rounding (ADVICE r1): 0.125 → 13 cents, not 12."""

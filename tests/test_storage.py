@@ -126,31 +126,3 @@ def test_approx_sketches_sane(spark):
     ).collect()[0]
     assert abs(row["approx_users"] - row["exact_users"]) <= 0.1 * row["exact_users"]
     assert abs(row["approx_p50"] - row["exact_p50"]) <= 5.0
-
-
-def test_missing_date_partitions_finds_gaps(spark, tmp_path):
-    import datetime as dt
-
-    from stock_streaming_data_pipeline_spark.streaming import sinks
-
-    rows = []
-    for day in (1, 2, 4):  # day 3 missing
-        rows += [
-            (f"s{i}", dt.datetime(2024, 1, day, 12, 0, 0), float(i))
-            for i in range(3)
-        ]
-    df = spark.createDataFrame(rows, "symbol string, timestamp timestamp, v double")
-    path = str(tmp_path / "store")
-    (
-        sinks.with_date_partitions(df)
-        .write.partitionBy("year", "month", "day")
-        .mode("overwrite")
-        .parquet(path)
-    )
-    missing = sinks.missing_date_partitions(
-        spark, path, start="2024-01-01", end="2024-01-05"
-    )
-    assert missing == [
-        {"year": 2024, "month": 1, "day": 3},
-        {"year": 2024, "month": 1, "day": 5},
-    ]

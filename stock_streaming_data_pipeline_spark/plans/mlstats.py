@@ -1400,7 +1400,6 @@ def mi_chi2_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Binned ROC / AUC / KS classifier evaluation
 # ---------------------------------------------------------------------------
 
-_AUC_BINS = 1024
 _EMB_DIM = 64
 
 
@@ -1817,7 +1816,6 @@ def anova_oneway_f(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _ACF_MAX_LAG = 10
-_CHI2_CRIT_DF10_05 = 18.307  # frozen chi-square critical value, df=10, 5%
 
 
 @register(

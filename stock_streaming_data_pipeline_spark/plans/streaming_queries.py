@@ -17,7 +17,6 @@ from __future__ import annotations
 
 import tempfile
 import uuid
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -52,35 +51,6 @@ def _settle_cap() -> int:
     return int(os.environ.get("SPARK_GRAFT_SETTLE_MAX_ROWS", SETTLE_MAX_ROWS))
 
 
-@contextmanager
-def _settle_shuffle_partitions(spark):
-    """Scope ``spark.sql.shuffle.partitions`` down around a settle-path
-    drain (state-store sizing — see settle()'s docstring), restoring the
-    session value afterwards. The conf is SESSION-GLOBAL: this relies on
-    the driver contract's single-threaded query execution (one query
-    settles at a time); concurrent callers on one session would race the
-    save/restore and must clone the session instead."""
-    import os
-
-    # Default 4 (round 12, re-measured warm A/B at sf0.01 AND sf0.1:
-    # 8 -> 4 cuts the three-query settle total ~16-18% — per-batch
-    # state-store commit count still dominates these aggregate-sized
-    # drains; 2 saved another ~10% but halves in-batch parallelism for
-    # no structural reason). Production replays with real keyed-state
-    # volume must raise this via the env knob — the SETTLE_MAX_ROWS cap
-    # is what keeps a small default safe on this path. A RocksDB state
-    # store was also measured (round 12) and is FLAT-to-slower here
-    # (tiny per-partition state; native store open/commit overhead
-    # without compaction benefit) — left on the default provider.
-    n_parts = os.environ.get("SPARK_GRAFT_SETTLE_SHUFFLE_PARTITIONS", "4")
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", n_parts)
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-
-
 def settle(sdf: DataFrame, mode: str) -> DataFrame:
     """Run a streaming DataFrame to completion (availableNow) into a memory
     sink; return the settled rows as a stable batch DataFrame. Refuses
@@ -88,40 +58,32 @@ def settle(sdf: DataFrame, mode: str) -> DataFrame:
     fact-grained streaming output belongs in a file sink, never a
     driver-side memory sink.
 
-    State-store sizing (optimization round 11, guide §1/§2): a stateful
-    micro-batch commits one state store PER shuffle partition PER
-    stateful operator — measured on streaming_asof_join at sf0.01, the
-    32-partition default spent 6.8 s of addBatch on a 20k-row batch and
-    4.7 s on the ZERO-row finalize batch, nearly all state-store commit
-    overhead (a stream-stream join alone keeps 4 stores per partition).
-    settle() is the CORRECTNESS path: its queries settle to
-    aggregate-sized outputs under SETTLE_MAX_ROWS, so the store count is
-    scoped down around the drain (results are partitioning-independent —
-    keyed state is hash-partitioned either way). Parameterized via
-    SPARK_GRAFT_SETTLE_SHUFFLE_PARTITIONS; volume replays (the bench's
-    throughput fan-out in streaming/jobs.py, the sf1 sweeps) do not go
-    through settle() and keep the session default."""
+    settle() writes no session conf. The query's state-store count is the
+    session's ``spark.sql.streaming.internal.stateStore.partitions`` (one
+    store per stateful operator on a local session, see session.py), which
+    Spark freezes in the query's checkpoint; results do not depend on it,
+    since keyed state is hash-partitioned either way. Each settle uses a
+    fresh checkpoint, so every settle starts from the session default."""
     spark = sdf.sparkSession
     name = "settle_" + uuid.uuid4().hex[:12]
     with tempfile.TemporaryDirectory(prefix="chk_") as chk:
-        with _settle_shuffle_partitions(spark):
-            q = (
-                sdf.writeStream.outputMode(mode)
-                .format("memory")
-                .queryName(name)
-                .trigger(availableNow=True)
-                .option("checkpointLocation", chk)
-                .start()
-            )
-            try:
-                finished = q.awaitTermination(600)
-                if not finished:
-                    raise TimeoutError(
-                        f"streaming query {name} did not finish draining within "
-                        "600s — refusing to return a partial memory-sink table"
-                    )
-            finally:
-                q.stop()
+        q = (
+            sdf.writeStream.outputMode(mode)
+            .format("memory")
+            .queryName(name)
+            .trigger(availableNow=True)
+            .option("checkpointLocation", chk)
+            .start()
+        )
+        try:
+            finished = q.awaitTermination(600)
+            if not finished:
+                raise TimeoutError(
+                    f"streaming query {name} did not finish draining within "
+                    "600s — refusing to return a partial memory-sink table"
+                )
+        finally:
+            q.stop()
         sink = spark.table(name)
         # memory-sink rows already sit in driver memory; the guard bounds
         # what settle() re-materializes and hands back as a batch frame.
@@ -256,30 +218,24 @@ def streaming_upsert_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     trades = events_as_trades(stream_events(spark, sf_dir))
     out_dir = tempfile.mkdtemp(prefix="fanout_")
-    # Same state-store sizing rationale as settle() (this is the
-    # correctness-scale replay of the fan-out; the bench's THROUGHPUT
-    # fan-out in bench.py keeps the session default): four concurrent
-    # stateful queries × 32 store instances each dominated the drain
-    # with commit overhead. Keyed results are partitioning-independent.
-    with _settle_shuffle_partitions(spark):
-        fan = start_fanout(
-            trades,
-            out_dir,
-            tumbling_window="1 day",
-            tumbling_watermark="1 hour",
-            feature_window="1 hour",
-            feature_slide="10 minutes",
-            feature_watermark="10 minutes",
-            available_now=True,
-        )
-        try:
-            for q in fan.queries:
-                if not q.awaitTermination(600):
-                    raise TimeoutError(
-                        f"fan-out query {q.name} did not finish draining within 600s"
-                    )
-        finally:
-            fan.stop_all()
+    fan = start_fanout(
+        trades,
+        out_dir,
+        tumbling_window="1 day",
+        tumbling_watermark="1 hour",
+        feature_window="1 hour",
+        feature_slide="10 minutes",
+        feature_watermark="10 minutes",
+        available_now=True,
+    )
+    try:
+        for q in fan.queries:
+            if not q.awaitTermination(600):
+                raise TimeoutError(
+                    f"fan-out query {q.name} did not finish draining within 600s"
+                )
+    finally:
+        fan.stop_all()
     vol = s.read_upsert_table(
         spark, fan.path("volume_tracking"), ["symbol", "timestamp"]
     )

@@ -78,12 +78,16 @@ class StockPipeline:
         if self.fan:
             self.fan.stop_all()
 
+    def _path(self, table: str) -> str:
+        if self.fan is None:
+            raise RuntimeError("StockPipeline.run() must be called first")
+        return self.fan.path(table)
+
     # -- read-side (Grafana/consumer parity) --
 
     def _resolved(self, table: str) -> DataFrame:
-        assert self.fan, "run() first"
         return sinks.read_upsert_table(
-            self.spark, self.fan.path(table), ["symbol", "timestamp"]
+            self.spark, self._path(table), ["symbol", "timestamp"]
         )
 
     def price_tracking(self) -> DataFrame:
@@ -97,20 +101,18 @@ class StockPipeline:
         (the predictor-consumer view, BtcPrediction/kafka.py:13)."""
         from pyspark.sql import functions as F
 
-        assert self.fan, "run() first"
-        raw = self.spark.read.parquet(self.fan.path("btc_features"))
+        raw = self.spark.read.parquet(self._path("btc_features"))
         return raw.select(
             F.from_json("value", FEATURE_SCHEMA).alias("v")
         ).select("v.*")
 
     def feature_store(self) -> DataFrame:
-        assert self.fan, "run() first"
-        return self.spark.read.parquet(self.fan.path("feature_store"))
+        return self.spark.read.parquet(self._path("feature_store"))
 
     def compact(self) -> None:
-        """Maintenance: compact both keyed-upsert tables."""
-        assert self.fan, "run() first"
+        """Maintenance: compact both keyed-upsert tables, dropping keys
+        whose latest write is a delete."""
         for t in ("price_tracking", "volume_tracking"):
             sinks.compact_upsert_table(
-                self.spark, self.fan.path(t), ["symbol", "timestamp"]
+                self.spark, self._path(t), ["symbol", "timestamp"]
             )

@@ -7,9 +7,12 @@ file store (:181-191). Here:
 - **Keyed upsert** → an LSM-style parquet sink: each micro-batch appends
   files stamped with the batch epoch and publishes them through an ATOMIC
   numbered-manifest commit (the Delta/Iceberg-log protocol — see the
-  commit-manifest section below); readers resolve last-write-wins per
-  key with ``max_by(values, epoch)`` over exactly the committed files.
-  This is exactly Cassandra's upsert-resolved-at-read model, is
+  commit-manifest section below). Upserts and deletes share one write
+  path: a delete is a keys-only tombstone row, as in Cassandra. Every
+  read (current state, time travel, change feed) and the compaction go
+  through one resolver, which picks each key's highest-epoch row over
+  exactly the committed files and drops keys whose winner is a
+  tombstone. This is Cassandra's upsert-resolved-at-read model, is
   idempotent under update-mode replays (same epoch overwrites), and at
   100 TB maps onto Delta/Iceberg MERGE or a periodic compaction job —
   the writer path (blind appends, no read-modify-write) is the part that
@@ -172,7 +175,9 @@ def _put_if_absent_posix(final: str, payload: bytes) -> bool:
         os.unlink(tmp)
 
 
-def _commit_manifest(spark: SparkSession, path: str, files: list[str]) -> int:
+def _commit_manifest(
+    spark: SparkSession, path: str, files: list[str], *, after: int | None = None
+) -> int:
     """Publish the complete data-file list as the next numbered manifest
     via each backend's own atomic conditional-write primitive, so
     concurrent committers cannot both win a version (losers retry at the
@@ -180,14 +185,19 @@ def _commit_manifest(spark: SparkSession, path: str, files: list[str]) -> int:
     HDFS = namenode-atomic ``create(overwrite=false)``; S3A (Hadoop
     3.4.1+) = the same create call compiled to a conditional PUT with
     ``If-None-Match: *``. Pinned under real thread contention by
-    tests/test_scale_ops.py::test_concurrent_committers_never_lose_a_commit."""
+    tests/test_scale_ops.py::test_concurrent_committers_never_lose_a_commit.
+
+    ``after`` is the committed version ``files`` builds on (0 for none)
+    when the caller has already read it; otherwise it is read here."""
     fs, _ = _hadoop_fs(spark, path)
     jvm = spark._jvm
     mdir = jvm.org.apache.hadoop.fs.Path(_manifest_dir(path))
     fs.mkdirs(mdir)
     local_mdir = _local_fs_path(_manifest_dir(path))
-    latest = _latest_manifest(spark, path)
-    version = (latest[0] if latest else 0) + 1
+    if after is None:
+        latest = _latest_manifest(spark, path)
+        after = latest[0] if latest else 0
+    version = after + 1
     while True:
         doc = json.dumps({"version": version, "files": sorted(files)})
         if local_mdir is not None:
@@ -237,29 +247,23 @@ def _commit_after_append(spark: SparkSession, path: str, pre: set[str]) -> None:
     fs, hpath = _hadoop_fs(spark, path)
     post = _list_data_files(fs, hpath)
     added = [f.rsplit("/", 1)[-1] for f in post if f not in pre]
-    latest = _latest_manifest(spark, path)
-    base = (
-        latest[1]
-        if latest is not None
-        else [f.rsplit("/", 1)[-1] for f in sorted(pre)]
-    )
-    _commit_manifest(spark, path, list(base) + added)
+    adopted = [f.rsplit("/", 1)[-1] for f in sorted(pre)]
+    after, base = _latest_manifest(spark, path) or (0, adopted)
+    _commit_manifest(spark, path, list(base) + added, after=after)
 
 
-def upsert_writer(path: str, key_cols: list[str]):
-    """foreachBatch writer: append batch stamped with its epoch id, then
-    commit a manifest making the new files visible atomically.
-
-    Deterministic per epoch → replays after a failure rewrite the same
-    logical rows, and the read-side last-write-wins keeps one winner.
-    """
+def _epoch_writer(path: str, project):
+    """The foreachBatch body both sink writers share: stamp the projected
+    batch with its epoch id, append it, then commit a manifest making
+    exactly the new files visible atomically."""
 
     def write(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
         fs, hpath = _hadoop_fs(spark, path)
         pre = set(_list_data_files(fs, hpath)) if fs.exists(hpath) else set()
         (
-            batch_df.withColumn("_epoch", F.lit(int(epoch_id)))
+            project(batch_df)
+            .withColumn("_epoch", F.lit(int(epoch_id)))
             .write.mode("append")
             .parquet(path)
         )
@@ -268,16 +272,64 @@ def upsert_writer(path: str, key_cols: list[str]):
     return write
 
 
+def upsert_writer(path: str, key_cols: list[str]):
+    """foreachBatch UPSERT writer: append the batch stamped with its epoch
+    id, then commit a manifest making the new files visible atomically.
+
+    Deterministic per epoch → replays after a failure rewrite the same
+    logical rows, and the read-side last-write-wins keeps one winner.
+    """
+    return _epoch_writer(path, lambda df: df)
+
+
+def tombstone_writer(path: str, key_cols: list[str]):
+    """foreachBatch DELETE writer: append keys-only rows flagged
+    ``_deleted`` at the batch epoch. Blind append like the upsert writer
+    (no read-modify-write) — deletion is resolved at read, exactly
+    Cassandra's tombstone model."""
+    return _epoch_writer(
+        path, lambda df: df.select(*key_cols, F.lit(True).alias("_deleted"))
+    )
+
+
+def _read_committed(spark: SparkSession, path: str) -> DataFrame:
+    """Exactly the committed files, with ``mergeSchema`` because a
+    tombstone file holds only the keys, ``_epoch`` and ``_deleted``. The
+    file list is pinned when the DataFrame is built, so a later append
+    alongside it cannot drift into the plan."""
+    return spark.read.option("mergeSchema", "true").parquet(
+        *_current_data_files(spark, path)
+    )
+
+
+def _resolve(
+    df: DataFrame, key_cols: list[str], *extra_aggs, keep_deletes: bool = False
+) -> DataFrame:
+    """Last-write-wins per key: the row with the highest ``_epoch`` is
+    picked as ONE struct (never column-by-column — per-column max_by
+    would stitch values across rows when tombstones hold NULL value
+    columns). Returns the keys, the winner's value columns, then
+    ``extra_aggs`` (computed over the same groups); keys whose winner is
+    a tombstone are dropped, or kept with a ``_deleted`` flag after the
+    value columns when ``keep_deletes``."""
+    flag = F.col("_deleted") if "_deleted" in df.columns else F.lit(None)
+    df = df.withColumn("_deleted", F.coalesce(flag, F.lit(False)))
+    values = [c for c in df.columns if c not in (*key_cols, "_epoch", "_deleted")]
+    resolved = df.groupBy(*key_cols).agg(
+        F.max_by(F.struct(*values, "_deleted"), "_epoch").alias("_w"), *extra_aggs
+    )
+    extras = [c for c in resolved.columns if c not in key_cols and c != "_w"]
+    resolved = resolved.select(*key_cols, "_w.*", *extras)
+    if keep_deletes:
+        return resolved
+    return resolved.filter(~F.col("_deleted")).drop("_deleted")
+
+
 def read_upsert_table(spark: SparkSession, path: str, key_cols: list[str]) -> DataFrame:
-    """Resolve the keyed-upsert sink to its current state: latest row per
-    key by (epoch, row order), i.e. Cassandra-style last-write-wins.
+    """Resolve the keyed-upsert sink to its current state: each live key's
+    highest-epoch row, i.e. Cassandra-style last-write-wins with deletes.
     Reads exactly the latest manifest's files."""
-    df = spark.read.parquet(*_current_data_files(spark, path))
-    value_cols = [c for c in df.columns if c not in key_cols and c != "_epoch"]
-    aggs = [
-        F.expr(f"max_by({c}, _epoch)").alias(c) for c in value_cols
-    ]
-    return df.groupBy(*key_cols).agg(*aggs)
+    return _resolve(_read_committed(spark, path), key_cols)
 
 
 def compact_upsert_table(
@@ -292,7 +344,9 @@ def compact_upsert_table(
     last-write-wins state as one new winning epoch, publish it with ONE
     atomic manifest commit, then garbage-collect the history files. This
     is the maintenance job that bounds read amplification at scale (the
-    Delta/Iceberg analogue is OPTIMIZE / rewrite-data-files).
+    Delta/Iceberg analogue is OPTIMIZE / rewrite-data-files). Tombstoned
+    keys are dropped physically: once the whole history collapses, no
+    older value is left for a grave marker to hide.
 
     Crash-safe at every point, on object stores too:
     1. resolve the current manifest's files;
@@ -312,18 +366,9 @@ def compact_upsert_table(
     FileSystem APIs, so the same code runs on file://, s3a://, hdfs://.
     """
     fs, hpath = _hadoop_fs(spark, path)
-    old_files = _current_data_files(spark, path)
+    resolved = _resolve(_read_committed(spark, path), key_cols)
     pre = set(_list_data_files(fs, hpath))
-    # Pin the read to the exact committed file list: the plan's input set
-    # cannot drift while we append the compacted epoch alongside it.
-    df = spark.read.parquet(*old_files)
-    value_cols = [c for c in df.columns if c not in key_cols and c != "_epoch"]
-    resolved = (
-        df.groupBy(*key_cols)
-        .agg(*[F.expr(f"max_by({c}, _epoch)").alias(c) for c in value_cols])
-        .withColumn("_epoch", F.lit(-1))
-    )
-    resolved.write.mode("append").parquet(path)
+    resolved.withColumn("_epoch", F.lit(-1)).write.mode("append").parquet(path)
     if _crash_before_manifest:
         # failpoint: die between writing the compacted files and the
         # manifest commit — readers must still resolve the OLD state
@@ -349,17 +394,14 @@ def read_upsert_table_as_of(
     as_of_epoch: int,
 ) -> DataFrame:
     """Time travel on the LSM upsert sink: the last-write-wins state AS
-    OF a past epoch — resolve only over rows stamped ≤ the cut (the
-    Delta ``VERSION AS OF`` read, for free from the epoch stamps; same
-    retention contract as read_changes: compaction collapses history, so
-    snapshots only resolve against epochs still present)."""
-    df = spark.read.parquet(*_current_data_files(spark, path)).filter(
-        F.col("_epoch") <= F.lit(as_of_epoch)
-    )
-    value_cols = [c for c in df.columns if c not in key_cols and c != "_epoch"]
-    return df.groupBy(*key_cols).agg(
-        *[F.expr(f"max_by({c}, _epoch)").alias(c) for c in value_cols]
-    )
+    OF a past epoch — resolve only over rows stamped ≤ the cut, so a key
+    deleted at or before the cut is absent and one deleted after it is
+    not (the Delta ``VERSION AS OF`` read, for free from the epoch
+    stamps; same retention contract as read_changes: compaction
+    collapses history, so snapshots only resolve against epochs still
+    present)."""
+    df = _read_committed(spark, path).filter(F.col("_epoch") <= F.lit(as_of_epoch))
+    return _resolve(df, key_cols)
 
 
 def read_changes(
@@ -371,36 +413,39 @@ def read_changes(
 ) -> DataFrame:
     """Change-data feed over the LSM upsert sink: the keys whose
     last-write-wins state changed AFTER ``since_epoch``, with the winning
-    value, the commit epoch, and whether the key existed at the cut
-    (``update``) or is new (``insert``) — the Delta/Iceberg
-    changed-rows-since-version read, resolved from the same epoch stamps
-    the writer already lays down. One partial-aggregated groupBy on the
-    key; no extra state is ever written.
+    value, the commit epoch, and the change type — ``update`` when the
+    key was live at the cut, ``insert`` when it was not, ``delete`` (with
+    null values) when its winner is a tombstone and it was live at the
+    cut; a key created and deleted after the cut is left out. The
+    Delta/Iceberg changed-rows-since-version read, resolved from the same
+    epoch stamps the writer already lays down. One partial-aggregated
+    groupBy on the key; no extra state is ever written.
 
     Retention contract (same as Delta CDF after VACUUM): compaction
     collapses history into epoch −1, so a CDC cut only resolves against
     epochs still present in the table — take changes feeds BEFORE
     compacting past the cut.
     """
-    df = spark.read.parquet(*_current_data_files(spark, path))
-    value_cols = [c for c in df.columns if c not in key_cols and c != "_epoch"]
-    resolved = df.groupBy(*key_cols).agg(
-        *[F.expr(f"max_by({c}, _epoch)").alias(c) for c in value_cols],
+    cut = F.lit(since_epoch)
+    # live at the cut: the winner among rows stamped <= cut is not a
+    # tombstone (max_by skips the NULL orderings of later rows)
+    at_cut = F.when(F.col("_epoch") <= cut, F.col("_epoch"))
+    existed = F.coalesce(F.max_by(~F.col("_deleted"), at_cut), F.lit(False))
+    changed = _resolve(
+        _read_committed(spark, path),
+        key_cols,
         F.max("_epoch").alias("_commit_epoch"),
-        F.max(
-            F.when(F.col("_epoch") <= F.lit(since_epoch), 1).otherwise(0)
-        ).alias("_existed"),
+        existed.alias("_existed"),
+        keep_deletes=True,
+    ).filter(
+        (F.col("_commit_epoch") > cut) & (F.col("_existed") | ~F.col("_deleted"))
     )
-    return (
-        resolved.filter(F.col("_commit_epoch") > F.lit(since_epoch))
-        .withColumn(
-            "_change_type",
-            F.when(F.col("_existed") == 1, F.lit("update")).otherwise(
-                F.lit("insert")
-            ),
-        )
-        .drop("_existed")
-    )
+    return changed.withColumn(
+        "_change_type",
+        F.when(F.col("_deleted"), F.lit("delete"))
+        .when(F.col("_existed"), F.lit("update"))
+        .otherwise(F.lit("insert")),
+    ).drop("_existed", "_deleted")
 
 
 def kafka_shaped(df: DataFrame, *, key: str, value_struct: list[str]) -> DataFrame:
@@ -421,92 +466,3 @@ def with_date_partitions(df: DataFrame, ts: str = "timestamp") -> DataFrame:
         .withColumn("day", F.dayofmonth(ts))
         .withColumn("hour", F.hour(ts))
     )
-
-
-def tombstone_writer(path: str, key_cols: list[str]):
-    """foreachBatch DELETE writer for the LSM upsert sink: append
-    keys-only rows flagged ``_deleted`` at the batch epoch. Blind append
-    like the upsert writer (no read-modify-write) — deletion is resolved
-    at read, exactly Cassandra's tombstone model."""
-
-    def write(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        fs, hpath = _hadoop_fs(spark, path)
-        pre = set(_list_data_files(fs, hpath)) if fs.exists(hpath) else set()
-        (
-            batch_df.select(*key_cols)
-            .withColumn("_epoch", F.lit(int(epoch_id)))
-            .withColumn("_deleted", F.lit(True))
-            .write.mode("append")
-            .parquet(path)
-        )
-        _commit_after_append(spark, path, pre)
-
-    return write
-
-
-def _winner_struct_expr(value_cols: list[str], has_deleted: bool) -> str:
-    fields = []
-    for c in value_cols:
-        fields.append(f"'{c}', {c}")
-    fields.append(
-        "'_deleted', coalesce(_deleted, false)"
-        if has_deleted
-        else "'_deleted', false"
-    )
-    return f"max_by(named_struct({', '.join(fields)}), _epoch)"
-
-
-def read_upsert_table_with_deletes(
-    spark: SparkSession, path: str, key_cols: list[str]
-) -> DataFrame:
-    """Last-write-wins WITH tombstones: the winning row per key is picked
-    as one struct (never column-by-column — per-column max_by would
-    stitch values across rows when tombstones hold NULL value columns),
-    and keys whose winner is a tombstone disappear from the view."""
-    df = spark.read.option("mergeSchema", "true").parquet(
-        *_current_data_files(spark, path)
-    )
-    value_cols = [
-        c for c in df.columns if c not in key_cols and c not in ("_epoch", "_deleted")
-    ]
-    has_del = "_deleted" in df.columns
-    resolved = df.groupBy(*key_cols).agg(
-        F.expr(_winner_struct_expr(value_cols, has_del)).alias("_w")
-    )
-    return resolved.filter(~F.col("_w._deleted")).select(
-        *key_cols, *[F.col(f"_w.{c}").alias(c) for c in value_cols]
-    )
-
-
-def compact_upsert_table_with_deletes(
-    spark: SparkSession, path: str, key_cols: list[str]
-) -> None:
-    """Delete-aware compaction: rewrite the resolved live state as epoch
-    −1 and physically drop tombstoned keys (tombstones past compaction
-    need no grave markers — the whole history collapses with them).
-    Same atomic manifest publish + GC ordering as compact_upsert_table."""
-    fs, hpath = _hadoop_fs(spark, path)
-    old_files = _current_data_files(spark, path)
-    pre = set(_list_data_files(fs, hpath))
-    df = spark.read.option("mergeSchema", "true").parquet(*old_files)
-    value_cols = [
-        c for c in df.columns if c not in key_cols and c not in ("_epoch", "_deleted")
-    ]
-    has_del = "_deleted" in df.columns
-    resolved = (
-        df.groupBy(*key_cols)
-        .agg(F.expr(_winner_struct_expr(value_cols, has_del)).alias("_w"))
-        .filter(~F.col("_w._deleted"))
-        .select(*key_cols, *[F.col(f"_w.{c}").alias(c) for c in value_cols])
-        .withColumn("_epoch", F.lit(-1))
-    )
-    resolved.write.mode("append").parquet(path)
-    post = _list_data_files(fs, hpath)
-    compacted = [f.rsplit("/", 1)[-1] for f in post if f not in pre]
-    _commit_manifest(spark, path, compacted)
-    keep = set(compacted)
-    for f in post:
-        if f.rsplit("/", 1)[-1] not in keep:
-            fs.delete(spark._jvm.org.apache.hadoop.fs.Path(f), False)
-

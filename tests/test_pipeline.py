@@ -2,10 +2,12 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from stock_streaming_data_pipeline_spark.pipeline import StockPipeline
 from stock_streaming_data_pipeline_spark.sources.trades import write_trades_dir
+from stock_streaming_data_pipeline_spark.streaming import sinks
 
 
 def test_pipeline_user_journey(spark, tmp_path):
@@ -35,5 +37,40 @@ def test_pipeline_user_journey(spark, tmp_path):
         pipe.compact()
         after = sorted(map(tuple, pipe.volume_tracking().collect()))
         assert before == after
+    finally:
+        pipe.stop()
+
+
+def test_reads_before_run_raise(spark, tmp_path):
+    pipe = StockPipeline(
+        source_dir=str(tmp_path / "trades"), out_dir=str(tmp_path / "out"), spark=spark
+    )
+    with pytest.raises(RuntimeError, match=r"run\(\) must be called first"):
+        pipe.price_tracking()
+    with pytest.raises(RuntimeError, match=r"run\(\) must be called first"):
+        pipe.compact()
+
+
+def test_compact_drops_a_deleted_key(spark, tmp_path):
+    src = str(tmp_path / "trades")
+    write_trades_dir(spark, src, files=2, n_rows=1000)
+    pipe = StockPipeline(
+        source_dir=src, out_dir=str(tmp_path / "out"), spark=spark
+    ).run()
+    try:
+        keys = ["symbol", "timestamp"]
+        prices = pipe.price_tracking()
+        victim = prices.select(*keys).orderBy(*keys).limit(1)
+        want = sorted(map(tuple, prices.join(victim, keys, "left_anti").collect()))
+        # a delete committed after every streamed epoch
+        sinks.tombstone_writer(pipe.fan.path("price_tracking"), keys)(victim, 10**6)
+        assert sorted(map(tuple, pipe.price_tracking().collect())) == want
+
+        pipe.compact()
+        assert sorted(map(tuple, pipe.price_tracking().collect())) == want
+        path = pipe.fan.path("price_tracking")
+        raw = spark.read.parquet(*sinks._current_data_files(spark, path))
+        assert raw.count() == len(want)
+        assert "_deleted" not in raw.columns
     finally:
         pipe.stop()

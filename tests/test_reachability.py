@@ -48,8 +48,6 @@ ALLOWLIST: dict[str, str] = {
         "public entry for the reference's StreamingJob (README migration table)"
     ),
     "streaming/sinks.py::tombstone_writer": _SINK_API,
-    "streaming/sinks.py::read_upsert_table_with_deletes": _SINK_API,
-    "streaming/sinks.py::compact_upsert_table_with_deletes": _SINK_API,
     "operators/mst.py::prim_total_weight": _REFERENCE,
     "operators/skyline.py::brute_force_skyline": _REFERENCE,
     "operators/jpeg_codec.py::reference_transform": _REFERENCE,

@@ -428,15 +428,15 @@ def test_tombstone_delete_resolution_and_compaction(spark, tmp_path):
 
     state = {
         r["k"]: r["v"]
-        for r in sinks.read_upsert_table_with_deletes(spark, path, ["k"]).collect()
+        for r in sinks.read_upsert_table(spark, path, ["k"]).collect()
     }
     assert state == {"a": 1, "b": 12}
 
     # tombstones must never leak value columns from older epochs
-    sinks.compact_upsert_table_with_deletes(spark, path, ["k"])
+    sinks.compact_upsert_table(spark, path, ["k"])
     after = {
         r["k"]: r["v"]
-        for r in sinks.read_upsert_table_with_deletes(spark, path, ["k"]).collect()
+        for r in sinks.read_upsert_table(spark, path, ["k"]).collect()
     }
     assert after == state
     # compaction physically dropped c: one epoch, two rows
@@ -445,21 +445,73 @@ def test_tombstone_delete_resolution_and_compaction(spark, tmp_path):
     assert [r["_epoch"] for r in raw.select("_epoch").distinct().collect()] == [-1]
 
 
-def test_delete_aware_reader_matches_plain_when_no_deletes(spark, tmp_path):
-    path = str(tmp_path / "nodel")
+def _deleted_b_table(spark, path):
+    """a, b, c upserted at epoch 1, b deleted at epoch 2."""
+    mk = lambda rows: spark.createDataFrame(rows, "k string, v long")  # noqa: E731
+    sinks.upsert_writer(path, ["k"])(mk([("a", 1), ("b", 10), ("c", 5)]), 1)
+    sinks.tombstone_writer(path, ["k"])(mk([("b", 0)]), 2)
+
+
+def test_tombstone_survives_both_compaction_failpoints(spark, tmp_path):
+    """A deleted key stays hidden in each crashed compaction state and
+    after the recovery compaction, which also drops it physically."""
+    want = {"a": 1, "c": 5}
+    for failpoint in ("_crash_before_manifest", "_crash_after_publish"):
+        path = str(tmp_path / failpoint)
+        _deleted_b_table(spark, path)
+        sinks.compact_upsert_table(spark, path, ["k"], **{failpoint: True})
+        crashed = {
+            r["k"]: r["v"]
+            for r in sinks.read_upsert_table(spark, path, ["k"]).collect()
+        }
+        assert crashed == want, failpoint
+        sinks.compact_upsert_table(spark, path, ["k"])
+        recovered = {
+            r["k"]: r["v"]
+            for r in sinks.read_upsert_table(spark, path, ["k"]).collect()
+        }
+        assert recovered == want, failpoint
+        raw = spark.read.parquet(*sinks._current_data_files(spark, path))
+        assert sorted(r["k"] for r in raw.collect()) == ["a", "c"], failpoint
+
+
+def test_time_travel_honours_tombstones_on_each_side_of_the_cut(spark, tmp_path):
+    path = str(tmp_path / "tt_del")
+    _deleted_b_table(spark, path)                                 # b dies at 2
+    sinks.tombstone_writer(path, ["k"])(
+        spark.createDataFrame([("c",)], "k string"), 4
+    )                                                             # c dies at 4
+
+    def as_of(epoch):
+        return {
+            r["k"]: r["v"]
+            for r in sinks.read_upsert_table_as_of(
+                spark, path, ["k"], as_of_epoch=epoch
+            ).collect()
+        }
+
+    assert as_of(1) == {"a": 1, "b": 10, "c": 5}
+    assert as_of(3) == {"a": 1, "c": 5}
+    assert as_of(4) == {"a": 1}
+
+
+def test_read_changes_reports_deletes_of_keys_live_at_the_cut(spark, tmp_path):
+    path = str(tmp_path / "cdc_del")
     up = sinks.upsert_writer(path, ["k"])
-    mk = lambda rows: spark.createDataFrame(rows, "k string, v long")
-    up(mk([("a", 1)]), 1)
-    up(mk([("a", 2), ("b", 3)]), 2)
-    a = sorted(
-        (r["k"], r["v"])
-        for r in sinks.read_upsert_table(spark, path, ["k"]).collect()
+    rm = sinks.tombstone_writer(path, ["k"])
+    mk = lambda rows: spark.createDataFrame(rows, "k string, v long")  # noqa: E731
+    up(mk([("a", 1), ("b", 10)]), 1)
+    up(mk([("c", 30)]), 3)                        # c born after the cut
+    rm(mk([("a", 0), ("c", 0)]), 4)               # a existed; c did not
+
+    out = {
+        r["k"]: r
+        for r in sinks.read_changes(spark, path, ["k"], since_epoch=2).collect()
+    }
+    assert set(out) == {"a"}
+    assert (out["a"]["_change_type"], out["a"]["v"], out["a"]["_commit_epoch"]) == (
+        "delete", None, 4,
     )
-    b = sorted(
-        (r["k"], r["v"])
-        for r in sinks.read_upsert_table_with_deletes(spark, path, ["k"]).collect()
-    )
-    assert a == b
 
 
 def test_merge_states_equals_full_recompute_and_handles_one_sided_groups(spark):

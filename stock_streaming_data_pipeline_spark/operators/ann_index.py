@@ -31,6 +31,7 @@ from stock_streaming_data_pipeline_spark.operators.similarity import (
     cosine,
     ivf_train,
 )
+from stock_streaming_data_pipeline_spark.tables import read_parquet
 
 
 def build_ivf_index(
@@ -77,7 +78,7 @@ def ivf_index_topk(
     centroids table; the big ``lists`` scan carries a partition-column
     semi-join on the probed cluster_ids, so unprobed list directories
     are pruned before any file I/O."""
-    cents = spark.read.parquet(f"{path}/centroids")
+    cents = read_parquet(spark, f"{path}/centroids")
     q = queries.select(
         F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qv")
     )
@@ -92,7 +93,7 @@ def ivf_index_topk(
         .filter(F.col("_rn") <= nprobe)
         .select("query_id", "qv", "cluster_id")
     )
-    lists = spark.read.parquet(f"{path}/lists")
+    lists = read_parquet(spark, f"{path}/lists")
     # Partition pruning: the probed cluster_ids are a tiny driver-side
     # set (<= queries x nprobe values, and the index's nlist bounds it);
     # an IN-list literal predicate prunes list directories at planning
@@ -185,8 +186,8 @@ def ivf2_index_topk(
     (cluster_id, subcell) prunes before any file I/O)."""
     from stock_streaming_data_pipeline_spark.operators.similarity import l2sq
 
-    cents = spark.read.parquet(f"{path}/centroids")
-    subcents = spark.read.parquet(f"{path}/subcentroids")
+    cents = read_parquet(spark, f"{path}/centroids")
+    subcents = read_parquet(spark, f"{path}/subcentroids")
     q = queries.select(
         F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qv")
     )
@@ -221,7 +222,7 @@ def ivf2_index_topk(
     for cid, sub in sorted(leaves):
         clause = (F.col("cluster_id") == cid) & (F.col("subcell") == sub)
         pred = clause if pred is None else (pred | clause)
-    lists = spark.read.parquet(f"{path}/lists").filter(pred)
+    lists = read_parquet(spark, f"{path}/lists").filter(pred)
     scored = (
         lists.join(F.broadcast(probes2), ["cluster_id", "subcell"])
         .filter(F.col("vec_id") != F.col("query_id"))

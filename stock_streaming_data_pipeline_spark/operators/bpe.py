@@ -15,7 +15,7 @@ size is vocabulary-bounded (|vocab| x avg word length rows) and
 independent of corpus row count — exactly how production BPE trainers
 shard. Per round: one window pass keyed by word (partitions bounded by
 word length), one tiny pair-count aggregate, a 1-row argmax broadcast,
-and a map-side merge; lineage is cut per round with localCheckpoint.
+and a map-side merge; lineage is cut per round with materialize.
 
 The greedy merge is RELATIONAL, not a per-word fold: greedy
 left-to-right application of pair (a,b) conflicts only where match
@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from stock_streaming_data_pipeline_spark.operators.checkpoint import materialize
 from stock_streaming_data_pipeline_spark.operators.dedup import SQL_TOKENS, tokens
 
 EOW = "</w>"
@@ -88,7 +89,7 @@ def bpe_train(df: DataFrame, *, text_col: str, k: int = 8) -> DataFrame:
         F.expr("transform(sequence(1, length(w)), i -> substring(w, i, 1))"),
         F.array(F.lit(EOW)),
     )
-    syms = words.select("w", "wc", arr.alias("s")).localCheckpoint(eager=True)
+    syms = materialize(words.select("w", "wc", arr.alias("s")), eager=True)
     pair = F.explode(
         F.zip_with(
             F.slice(F.col("s"), 1, F.greatest(F.size("s") - 1, F.lit(0))),
@@ -98,13 +99,13 @@ def bpe_train(df: DataFrame, *, text_col: str, k: int = 8) -> DataFrame:
     )
     bests: list[DataFrame] = []
     for r in range(k):
-        best = (
+        best = materialize(
             syms.select("wc", pair.alias("p"))
             .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
             .agg(F.sum("wc").alias("cnt"))
             .orderBy(F.desc("cnt"), F.asc("a"), F.asc("b"))
-            .limit(1)
-            .localCheckpoint(eager=True)
+            .limit(1),
+            eager=True,
         )
         bests.append(
             best.select(
@@ -115,14 +116,14 @@ def bpe_train(df: DataFrame, *, text_col: str, k: int = 8) -> DataFrame:
                 F.concat("a", "b").alias("merged"),
             )
         )
-        syms = (
+        syms = materialize(
             syms.crossJoin(F.broadcast(best.select("a", "b")))
             .select(
                 "w",
                 "wc",
                 _merge_fold(F.col("s"), F.col("a"), F.col("b")).alias("s"),
-            )
-            .localCheckpoint(eager=True)
+            ),
+            eager=True,
         )
     out = bests[0]
     for b in bests[1:]:

@@ -14,7 +14,7 @@ algorithm under a full differential check.
 Scale shape per round: one broadcast of the chosen set (≤ k vectors —
 the only driver-side data, k·dim doubles) against a map-side max-sim
 pass + a TakeOrdered(1). k rounds total; the corpus never shuffles, and
-it is materialized ONCE (localCheckpoint) so each round scans the
+it is materialized ONCE so each round scans the
 checkpointed blocks rather than replaying the full input lineage.
 
 Practical k ceiling: the algorithm is inherently sequential — each of
@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from stock_streaming_data_pipeline_spark.operators.checkpoint import materialize
 from stock_streaming_data_pipeline_spark.operators.similarity import (
     _sql_cos,
     as_double,
@@ -52,9 +53,10 @@ def kcenter_greedy(
     # Materialize the projected corpus once: every greedy round rescans
     # it, and without the checkpoint each round would re-plan (and
     # re-execute) the full upstream lineage k times.
-    vecs = df.select(
-        F.col(id_col).alias("vid"), as_double(F.col(vec_col)).alias("v")
-    ).localCheckpoint(eager=True)
+    vecs = materialize(
+        df.select(F.col(id_col).alias("vid"), as_double(F.col(vec_col)).alias("v")),
+        eager=True,
+    )
     first = vecs.orderBy("vid").limit(1).collect()[0]
     chosen = [(first["vid"], list(first["v"]), 1, None)]
     for t in range(2, k + 1):

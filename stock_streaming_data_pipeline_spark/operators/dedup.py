@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from stock_streaming_data_pipeline_spark.operators.checkpoint import materialize
 from stock_streaming_data_pipeline_spark.tables import fan_out
 
 MERSENNE31 = 2_147_483_647  # 2^31 - 1, fingerprint modulus
@@ -203,16 +204,13 @@ def ngram_jaccard_pairs(
         )
 
     # Prefix-filtered path: materialize the shingle scan — it feeds the
-    # index, the frequency ranking AND both verification sides. Eager
-    # localCheckpoint instead of persist (round 12 hygiene): the entry
-    # releases with the frame's GC instead of squatting in the
-    # CacheManager until someone calls clearCache.
-    base = (
+    # index, the frequency ranking AND both verification sides.
+    base = materialize(
         df.select(
             F.col(id_col).alias("doc"), shingles(F.col(text_col), n).alias("shingles")
         )
-        .filter(F.size("shingles") > 0)
-        .localCheckpoint(eager=True)
+        .filter(F.size("shingles") > 0),
+        eager=True,
     )
     sh = base.select(
         "doc", F.size("shingles").alias("n_sh"), F.explode("shingles").alias("sh")
@@ -435,7 +433,10 @@ def minhash_lsh_pairs(
     # shuffle volume is O(docs*bands) ids, not O(docs*bands*shingles).
     buckets = _band_buckets(sigs, num_perm=num_perm, bands=bands)
     a, b = buckets.alias("a"), buckets.alias("b")
-    cands = (
+    # Materialized once (tiny: id pairs) so the candidate relation can
+    # prune the verification pass below without re-running the
+    # signature/banding subtree.
+    cands = materialize(
         a.join(
             b,
             (F.col("a.band") == F.col("b.band"))
@@ -443,11 +444,8 @@ def minhash_lsh_pairs(
             & (F.col("a.doc") < F.col("b.doc")),
         )
         .select(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
-        .dropDuplicates(["doc_a", "doc_b"])
-        # Materialized once (tiny: id pairs) so the candidate relation can
-        # prune the verification pass below without re-running the
-        # signature/banding subtree.
-        .localCheckpoint(eager=True)
+        .dropDuplicates(["doc_a", "doc_b"]),
+        eager=True,
     )
     # Verification-side pruning (round 12, guide §3.2): only docs that
     # appear in a candidate pair ever reach the exact-Jaccard join, so the
@@ -558,15 +556,15 @@ def minhash_lsh_pairs_cross(
         bands=bands,
     )
     a, b = bk_l.alias("a"), bk_r.alias("b")
-    cands = (
+    cands = materialize(
         a.join(
             b,
             (F.col("a.band") == F.col("b.band"))
             & (F.col("a.bucket") == F.col("b.bucket")),
         )
         .select(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
-        .dropDuplicates(["doc_a", "doc_b"])
-        .localCheckpoint(eager=True)
+        .dropDuplicates(["doc_a", "doc_b"]),
+        eager=True,
     )
     # Same verification-side pruning as minhash_lsh_pairs (round 12,
     # guide §3.2): each side's exact-verification pass re-shingles only
@@ -877,7 +875,8 @@ def lsh_band_params(threshold: float, num_perm: int = 64) -> tuple[int, int]:
         cand = (abs(midpoint - threshold), b, r)
         if best is None or cand < best:
             best = cand
-    assert best is not None
+    if best is None:
+        raise RuntimeError(f"no LSH band split for num_perm={num_perm}")
     return best[1], best[2]
 
 
@@ -1023,7 +1022,7 @@ def connected_components(
     of its own label and its neighbors' labels; converges in O(diameter)
     rounds (dup-graph components are tiny in practice — diameter is single
     digits even at web scale). Each round is one shuffle; lineage is cut
-    with localCheckpoint to keep plans bounded. Driver-side work is one
+    with a materialization to keep plans bounded. Driver-side work is one
     convergence counter per round — scale-safe.
     """
     # Checkpoint the symmetrized edge relation ONCE (optimization round
@@ -1031,11 +1030,11 @@ def connected_components(
     # each round re-executed the ENTIRE upstream pair-generation subtree
     # (shingle explode + LSH/Jaccard self-join — the expensive part of
     # every caller) — O(rounds) recomputations of the heaviest stage.
-    edges = (
+    edges = materialize(
         pairs.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .unionByName(pairs.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        eager=True,
     )
     labels = (
         edges.select(F.col("a").alias("node"))
@@ -1048,18 +1047,18 @@ def connected_components(
             .groupBy("a")
             .agg(F.min("label").alias("nbr_label"))
         )
-        new_labels = (
+        new_labels = materialize(
             labels.join(neighbor_min, labels.node == neighbor_min.a, "left")
             .select(
                 "node",
                 F.least(
                     F.col("label"), F.coalesce(F.col("nbr_label"), F.col("label"))
                 ).alias("label"),
-            )
+            ),
             # eager=False: the convergence count below is the first
             # action over the round's labels, so materialization rides
             # that job instead of paying a separate one per round.
-            .localCheckpoint(eager=False)
+            eager=False,
         )
         changed = (
             new_labels.alias("n")
@@ -1556,17 +1555,15 @@ def cdc_shared_chunk_pairs(
     # doc): without it the self-join recomputes the whole chunking
     # pipeline — and therefore re-scans the corpus — once per join side
     # (8 file scans measured at round 10; 2 corpus passes after the
-    # materialization). Round 12 closed the documented round-11 cache
-    # lifecycle note by switching persist() → eager localCheckpoint: the
-    # stored rows are released by the ContextCleaner when the frame is
-    # garbage collected, so nothing squats in the CacheManager waiting
-    # for a clearCache that a long-lived driver session may never issue.
-    # eager=False: materialization rides the first action (the same
-    # one-job shape persist had — an eager checkpoint's separate
-    # copy-and-store job measured +0.3 s on this tiny relation).
-    fps = cdc_chunk_fingerprints(
-        df, id_col=id_col, text_col=text_col, gram=gram, mask=mask
-    ).localCheckpoint(eager=False)
+    # materialization). eager=False: materialization rides the first
+    # action — an eager checkpoint's separate copy-and-store job measured
+    # +0.3 s on this tiny relation.
+    fps = materialize(
+        cdc_chunk_fingerprints(
+            df, id_col=id_col, text_col=text_col, gram=gram, mask=mask
+        ),
+        eager=False,
+    )
     a = fps.select(F.col("doc").alias("doc_a"), "fp")
     b = fps.select(F.col("doc").alias("doc_b"), "fp")
     return (

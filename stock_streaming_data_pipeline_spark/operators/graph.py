@@ -17,7 +17,7 @@ defined semantics — deterministic, bounded by deg·1 micro-unit per node.
 
 Scale shape per iteration: one join ranks⋈edges (shuffle on src — edges
 pre-partitioned by src stay co-located across iterations) + one groupBy
-dst (partial-aggregated). localCheckpoint per round bounds lineage.
+dst (partial-aggregated). A materialization per round bounds lineage.
 Degrees are computed once. No driver-side data, no UDFs.
 """
 
@@ -25,6 +25,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from stock_streaming_data_pipeline_spark.operators.checkpoint import materialize
 
 SCALE = 1_000_000
 
@@ -52,11 +54,11 @@ def pagerank(
     e = edges.select(
         F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
     ).dropDuplicates(["src", "dst"])
-    nodes = (
+    nodes = materialize(
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=False)
+        .distinct(),
+        eager=False,
     )
     # n is ONE scalar (parameter-bounded driver traffic, the documented
     # exception) — as a literal it keeps every ranks rebuild a NARROW op
@@ -91,17 +93,17 @@ def pagerank(
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     base = _half_away(F.lit((1.0 - damping) * SCALE) / F.lit(float(n)))
     init = _half_away(F.lit(float(SCALE)) / F.lit(float(n)))
-    ranks = nodes.select("node", init.alias("r")).localCheckpoint(eager=False)
+    ranks = nodes.select("node", init.alias("r"))
     # Degrees attach to edges ONCE, outside the loop (the per-iteration
     # deg join re-aggregated the edge list every round); repartition by
     # src so the checkpointed relation is co-partitioned with ranks
     # (hash(node)) and each iteration's only exchange is the contribution
     # groupBy — the irreducible PageRank shuffle (guide §2.4).
-    ed = (
+    ed = materialize(
         e.join(deg, "src")
         .select("src", "dst", "deg")
-        .repartition("src")
-        .localCheckpoint(eager=False)
+        .repartition("src"),
+        eager=False,
     )
     for _ in range(iters):
         contrib = ranks.join(ed, ranks["node"] == ed["src"]).select(
@@ -109,7 +111,7 @@ def pagerank(
             F.expr("r div deg").alias("c"),
         )
         summed = contrib.groupBy("node").agg(F.sum("c").alias("s"))
-        ranks = (
+        ranks = materialize(
             nodes.join(summed, "node", "left")
             .na.fill({"s": 0})
             .select(
@@ -120,8 +122,8 @@ def pagerank(
                         F.lit(damping) * F.col("s").cast("double")
                     )
                 ).alias("r"),
-            )
-            .localCheckpoint(eager=False)
+            ),
+            eager=False,
         )
     return ranks.select(
         "node",
@@ -303,13 +305,13 @@ def triangles(
     # closing join — without this the upstream pair derivation (often an
     # expensive aggregation, e.g. the co-purchase basket mining) runs
     # three times
-    oriented = (
+    oriented = materialize(
         ranked.filter(
             (F.col("deg_u") < F.col("deg_v"))
             | ((F.col("deg_u") == F.col("deg_v")) & (F.col("u") < F.col("v")))
         )
-        .select("u", "v")
-        .localCheckpoint(eager=False)
+        .select("u", "v"),
+        eager=False,
     )
 
     wedge = oriented.alias("e1").join(
@@ -347,16 +349,16 @@ def kcore(
 
     Scale shape per round: one semi-join of edges against the alive set
     (shrinking monotonically), one degree aggregate — linear in edges,
-    lineage cut per round with localCheckpoint (the PageRank loop's
+    lineage cut per round with materialize (the PageRank loop's
     discipline)."""
-    e = (
+    e = materialize(
         pairs.select(
             F.least(F.col(a_col), F.col(b_col)).alias("u"),
             F.greatest(F.col(a_col), F.col(b_col)).alias("v"),
         )
         .filter(F.col("u") != F.col("v"))
-        .dropDuplicates(["u", "v"])
-        .localCheckpoint(eager=False)
+        .dropDuplicates(["u", "v"]),
+        eager=False,
     )
     alive = (
         e.select(F.col("u").alias("n"))
@@ -374,7 +376,7 @@ def kcore(
             .groupBy("n")
             .agg(F.count(F.lit(1)).alias("deg"))
         )
-        out = deg.filter(F.col("deg") >= k).localCheckpoint(eager=False)
+        out = materialize(deg.filter(F.col("deg") >= k), eager=False)
         alive = out.select("n")
     return out.select(F.col("n").alias("node"), F.col("deg").alias("degree"))
 
@@ -400,7 +402,7 @@ def label_propagation(
     ``min_by(label, (-votes, label))`` folded into a single
     ``min(struct)`` per node (skew-free: a mega-degree node's votes
     partial-aggregate map-side, never a ranking window). Lineage cut
-    per round with localCheckpoint."""
+    per round with materialize."""
     und = (
         pairs.select(
             F.least(F.col(a_col), F.col(b_col)).alias("u"),
@@ -409,27 +411,26 @@ def label_propagation(
         .filter(F.col("u") != F.col("v"))
         .dropDuplicates(["u", "v"])
     )
-    e = (
+    e = materialize(
         und.select(F.col("u").alias("src"), F.col("v").alias("dst"))
-        .unionByName(und.select(F.col("v").alias("src"), F.col("u").alias("dst")))
-        .localCheckpoint(eager=False)
+        .unionByName(und.select(F.col("v").alias("src"), F.col("u").alias("dst"))),
+        eager=False,
     )
     labels = (
         e.select(F.col("src").alias("n"))
         .distinct()
         .select("n", F.col("n").alias("lab"))
-        .localCheckpoint(eager=False)
     )
     for _ in range(rounds):
         votes = e.join(
             labels.select(F.col("n").alias("dst"), "lab"), "dst"
         ).select(F.col("src").alias("n"), "lab")
         counts = votes.groupBy("n", "lab").agg(F.count(F.lit(1)).alias("c"))
-        labels = (
+        labels = materialize(
             counts.groupBy("n")
             .agg(F.min(F.struct((-F.col("c")).alias("nc"), F.col("lab"))).alias("w"))
-            .select("n", F.col("w.lab").alias("lab"))
-            .localCheckpoint(eager=False)
+            .select("n", F.col("w.lab").alias("lab")),
+            eager=False,
         )
     return labels.select(F.col("n").alias("node"), F.col("lab").alias("community"))
 
@@ -450,25 +451,29 @@ def bfs_hops(
     frontier⋈edges plus the settled set, then one min-aggregate per
     node (map-side combinable — a mega-degree hub's candidate rows
     collapse before the shuffle). Lineage cut per round with
-    localCheckpoint, the :func:`kcore` discipline. ``rounds`` is a
+    materialize, the :func:`kcore` discipline. ``rounds`` is a
     static plan parameter so the oracle can replay the loop as chained
     CTEs."""
-    e = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).localCheckpoint(eager=False)
-    dist = seeds.select(
-        F.col(seed_col).alias("node"), F.lit(0).cast("long").alias("dist")
-    ).localCheckpoint(eager=False)
+    e = materialize(
+        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst")),
+        eager=False,
+    )
+    dist = materialize(
+        seeds.select(
+            F.col(seed_col).alias("node"), F.lit(0).cast("long").alias("dist")
+        ),
+        eager=False,
+    )
     for _ in range(rounds):
         hop = (
             e.join(dist.select(F.col("node").alias("src"), "dist"), "src")
             .select(F.col("dst").alias("node"), (F.col("dist") + 1).alias("dist"))
         )
-        dist = (
+        dist = materialize(
             dist.unionByName(hop)
             .groupBy("node")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=False)
+            .agg(F.min("dist").alias("dist")),
+            eager=False,
         )
     return dist
 
@@ -479,7 +484,7 @@ def hits(edges: DataFrame, *, rounds: int = 3) -> tuple[DataFrame, DataFrame]:
     Each round is the textbook pair of sparse matvecs, hub = E . auth
     then auth = E^T . hub, expressed as join + map-combined groupBy sums
     (the :func:`pagerank` discipline: no ranking windows, lineage cut per
-    round with localCheckpoint).
+    round with materialize).
 
     Engine-portability/determinism design: NO per-round normalization —
     float division would make every score a sum of doubles (order-
@@ -494,25 +499,24 @@ def hits(edges: DataFrame, *, rounds: int = 3) -> tuple[DataFrame, DataFrame]:
     Returns ``(hubs, auths)``: (u, h) and (i, a) with exact decimal
     scores after ``rounds`` full rounds.
     """
-    e = edges.localCheckpoint(eager=False)
+    e = materialize(edges, eager=False)
     auth = (
         e.groupBy("i")
         .agg(F.count(F.lit(1)).alias("_d"))
         .select("i", F.lit(1).cast("decimal(38,0)").alias("a"))
-        .localCheckpoint(eager=False)
     )
     hub = None
     for _ in range(rounds):
-        hub = (
+        hub = materialize(
             e.join(auth, "i")
             .groupBy("u")
-            .agg(F.sum("a").cast("decimal(38,0)").alias("h"))
-            .localCheckpoint(eager=False)
+            .agg(F.sum("a").cast("decimal(38,0)").alias("h")),
+            eager=False,
         )
-        auth = (
+        auth = materialize(
             e.join(hub, "u")
             .groupBy("i")
-            .agg(F.sum("h").cast("decimal(38,0)").alias("a"))
-            .localCheckpoint(eager=False)
+            .agg(F.sum("h").cast("decimal(38,0)").alias("a")),
+            eager=False,
         )
     return hub, auth

@@ -8,7 +8,7 @@ ascent on the log-likelihood, scoring — all as DataFrame ops.
 
 Scale shape per iteration (optimization round 12): features live as ONE
 dense row per doc — ``(doc, label, c0..c{DIM})``, the D+1 hashed bucket
-counts as BIGINT columns — built once and localCheckpointed; weights are
+counts as BIGINT columns — built once and materialized; weights are
 a 1-row array DataFrame broadcast into a nest-loop join. Each iteration
 is then a SINGLE codegen pass over the dense relation: the logit is a
 65-term integer dot product, the sigmoid the frozen-table expression,
@@ -50,6 +50,7 @@ from fractions import Fraction
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from stock_streaming_data_pipeline_spark.operators.checkpoint import materialize
 from stock_streaming_data_pipeline_spark.operators.dedup import (
     portable_hash,
     sql_portable_hash,
@@ -244,10 +245,11 @@ def train_score(
     # The labels relation is checkpointed too: it is consumed twice
     # (dense build + n_docs) and every caller derives it from a full
     # tokenizing filter pass over the corpus.
-    labels = labels.localCheckpoint(eager=True)
-    dense = _dense_features(
-        docs, labels, id_col=id_col, text_col=text_col
-    ).localCheckpoint(eager=True)
+    labels = materialize(labels, eager=True)
+    dense = materialize(
+        _dense_features(docs, labels, id_col=id_col, text_col=text_col),
+        eager=True,
+    )
     n_docs = labels.count()
 
     sig = F.expr(sigmoid_micro_sql("z", spark=True))

@@ -69,7 +69,7 @@ def boruvka_mst(
     minima — unique per group, which is all the next round needs; the
     final labels are canonicalized to min-node-id once, after the loop.
     Lineage is cut per round with :func:`truncate_lineage`, NOT plain
-    ``localCheckpoint``: this loop self-joins its own checkpoints, the
+    :func:`materialize`: this loop self-joins its own checkpoints, the
     exact shape that trips Spark 4.1's lazy checkpoint-stats rewrite
     into exponential driver-side planning (measured knee at ~18
     iterations; see operators/checkpoint.py for the jstack diagnosis

@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from stock_streaming_data_pipeline_spark.operators.checkpoint import materialize
+
 MICRO = 1_000_000
 
 
@@ -101,7 +103,6 @@ def power_iteration(cov: DataFrame, *, rounds: int = 8) -> DataFrame:
         cov.groupBy(F.col("i").alias("j"))
         .agg(F.count(F.lit(1)).alias("_d"))
         .select("j", F.lit(MICRO).cast("long").alias("v"))
-        .localCheckpoint(eager=False)
     )
     for _ in range(rounds):
         raw = (
@@ -110,7 +111,7 @@ def power_iteration(cov: DataFrame, *, rounds: int = 8) -> DataFrame:
             .agg(F.sum(F.col("c") * dec(F.col("v"))).alias("raw"))
         )
         m = raw.agg(F.max(F.abs(F.col("raw"))).alias("m"))
-        v = (
+        v = materialize(
             raw.crossJoin(F.broadcast(m))
             .select(
                 F.col("i").alias("j"),
@@ -122,7 +123,7 @@ def power_iteration(cov: DataFrame, *, rounds: int = 8) -> DataFrame:
                 )
                 .cast("long")
                 .alias("v"),
-            )
-            .localCheckpoint(eager=False)
+            ),
+            eager=False,
         )
     return v.select(F.col("j").alias("i"), "v")

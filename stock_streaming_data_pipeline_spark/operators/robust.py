@@ -20,7 +20,7 @@ repo's money-sum discipline, applied to an iterative estimator):
 Same data => same estimate on any cluster layout, any engine. Scale
 shape: T+1 aggregates over the projected 2-column relation (OLS init +
 T reweighted passes), each a map-side-combined groupBy().agg() onto one
-row; the projection is localCheckpointed so iterations re-scan cached
+row; the projection is materialized so iterations re-scan cached
 integer pairs, not the fact table (at the 100 TB tier this trades ~16
 bytes/row of cache for T parquet re-scans — flip to recompute if the
 cluster is storage-rich and memory-poor).

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from stock_streaming_data_pipeline_spark.operators.checkpoint import materialize
+
 
 def _ordered_window(key: str, ts: str, *tiebreak: str):
     return Window.partitionBy(key).orderBy(ts, *tiebreak)
@@ -250,8 +252,8 @@ def global_rank(
     # partitions and the global ranks silently skew (caught by the RFM
     # sf0.1 differential: plausible 1..n permutation, wrong order). The
     # checkpoint pins one physical partitioning for both consumers.
-    local = b.withColumn("_lrn", F.row_number().over(w_local)).localCheckpoint(
-        eager=False
+    local = materialize(
+        b.withColumn("_lrn", F.row_number().over(w_local)), eager=False
     )
     counts = local.groupBy("_pid").agg(F.count(F.lit(1)).alias("_n"))
     w_off = (

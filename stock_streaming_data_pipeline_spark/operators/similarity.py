@@ -21,6 +21,15 @@ import pandas as pd  # noqa: F401  (resolves pandas_udf type hints)
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from stock_streaming_data_pipeline_spark.operators.checkpoint import materialize
+
+
+def _subspace_dim(dim: int, num_sub: int) -> int:
+    """Width of each of the ``num_sub`` PQ subspaces of a ``dim`` vector."""
+    if num_sub <= 0 or dim % num_sub:
+        raise ValueError(f"num_sub={num_sub} must divide the embedding dim {dim}")
+    return dim // num_sub
+
 
 def as_double(vec: Column) -> Column:
     return F.transform(vec, lambda x: x.cast("double"))
@@ -262,7 +271,7 @@ def ivf_train(
 
     Each iteration = one broadcast assignment pass + one posexplode
     groupBy mean — no vectors ever reach the driver; lineage is cut per
-    iteration with localCheckpoint so the loop's plan stays bounded.
+    iteration with a materialization so the loop's plan stays bounded.
     Clusters that go empty during an update RETAIN their previous
     centroid (left-join + coalesce), so the trainer always returns
     exactly ``nlist`` centroids regardless of the data distribution.
@@ -277,10 +286,10 @@ def ivf_train(
     # would funnel the whole corpus through one task.
     seeds = vecs.orderBy("_vid").limit(nlist)
     w_seed = Window.orderBy("_vid")  # over nlist rows only — trivial
-    cents = (
+    cents = materialize(
         seeds.withColumn("_rn", F.row_number().over(w_seed))
-        .select((F.col("_rn") - 1).alias("_cid"), F.col("v").alias("cvec"))
-        .localCheckpoint(eager=True)
+        .select((F.col("_rn") - 1).alias("_cid"), F.col("v").alias("cvec")),
+        eager=True,
     )
     for _ in range(iters):
         assigned = _nearest_centroid(vecs, cents, key_col="_vid", vec_alias="v")
@@ -300,13 +309,13 @@ def ivf_train(
         # A cluster that captured no vectors this round keeps its previous
         # centroid (left-join + coalesce) instead of silently vanishing —
         # the update step must always return exactly nlist centroids.
-        cents = (
+        cents = materialize(
             cents.select("_cid", F.col("cvec").alias("old_cvec"))
             .join(new_means, "_cid", "left")
             .select(
                 "_cid", F.coalesce("new_cvec", "old_cvec").alias("cvec")
-            )
-            .localCheckpoint(eager=True)
+            ),
+            eager=True,
         )
     return cents
 
@@ -978,7 +987,7 @@ def pq_train(
         # relation: re-executing it twice is cheaper than an eager
         # checkpoint job (A/B round 12: 1.53 → 1.34 s per pq_train,
         # bit-identical codebooks).
-        codebook = codebook.localCheckpoint(eager=True)
+        codebook = materialize(codebook, eager=True)
     for _ in range(iters):
         # carry_sub rides each row's subvector through the argmin struct,
         # so the mean update needs no corpus-scale join back to sub_rows
@@ -999,13 +1008,13 @@ def pq_train(
         # codes that captured no subvectors retain their previous entry —
         # the update always returns exactly num_sub x ksub codebook rows
         # (same retention rule as ivf_train).
-        codebook = (
+        codebook = materialize(
             codebook.select("m", "code", F.col("cbvec").alias("old_cbvec"))
             .join(new_means, ["m", "code"], "left")
             .select(
                 "m", "code", F.coalesce("new_cbvec", "old_cbvec").alias("cbvec")
-            )
-            .localCheckpoint(eager=True)
+            ),
+            eager=True,
         )
     return codebook
 
@@ -1047,16 +1056,16 @@ def ivf_pq_topk(
     """
     dim_row = corpus.select(F.size(F.col(vec_col)).alias("d")).first()
     dim = int(dim_row["d"])
-    assert dim % num_sub == 0, "num_sub must divide the embedding dim"
-    dsub = dim // num_sub
+    dsub = _subspace_dim(dim, num_sub)
 
     cents = ivf_train(corpus, id_col=id_col, vec_col=vec_col, nlist=nlist, iters=iters)
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"), as_double(F.col(vec_col)).alias("cv")
     )
     c_assigned = _nearest_centroid(c, cents, key_col="neighbor_id", vec_alias="cv")
-    # Residual against the assigned coarse centroid, exploded to subspaces.
-    c_res = (
+    # Residual against the assigned coarse centroid, exploded to subspaces;
+    # materialized because it feeds codebook training AND encoding.
+    c_res = materialize(
         c_assigned.join(
             F.broadcast(cents.withColumnsRenamed({"_cid": "cluster_id"})), "cluster_id"
         )
@@ -1064,12 +1073,8 @@ def ivf_pq_topk(
             "neighbor_id",
             "cluster_id",
             F.zip_with("cv", "cvec", lambda x, y: x - y).alias("rv"),
-        )
-        # Eager localCheckpoint, not persist (round 12 hygiene): feeds
-        # codebook training AND encoding; the builder cannot unpersist
-        # (the encoding consumer is lazy), and a checkpoint RDD releases
-        # with the frame's GC instead of living in the CacheManager.
-        .localCheckpoint(eager=True)
+        ),
+        eager=True,
     )
     c_sub = _sub_rows(
         c_res.select("neighbor_id", F.col("rv").alias("v")),
@@ -1423,11 +1428,11 @@ def opq_train(
     import numpy as np
 
     d = int(df.select(F.size(F.col(vec_col)).alias("d")).first()["d"])
-    assert d % num_sub == 0, "num_sub must divide the embedding dim"
-    dsub = d // num_sub
-    x = df.select(
-        F.col(id_col).alias("_k"), as_double(F.col(vec_col)).alias("x")
-    ).localCheckpoint(eager=True)
+    dsub = _subspace_dim(d, num_sub)
+    x = materialize(
+        df.select(F.col(id_col).alias("_k"), as_double(F.col(vec_col)).alias("x")),
+        eager=True,
+    )
 
     R = np.eye(d)
     for _ in range(iters):
@@ -1460,7 +1465,7 @@ def opq_train(
         sub, key_col="_k", num_sub=num_sub, ksub=ksub, iters=pq_iters,
         complete_keys=True,
     )
-    sub.unpersist()  # cb is localCheckpointed inside pq_train
+    sub.unpersist()  # cb is materialized inside pq_train
     return R, cb
 
 
@@ -1700,8 +1705,7 @@ def sql_opq_topk(
     import duckdb
     import numpy as np
 
-    assert dim % num_sub == 0
-    dsub = dim // num_sub
+    dsub = _subspace_dim(dim, num_sub)
     from stock_streaming_data_pipeline_spark.tables import duck_glob
 
     con = duckdb.connect()

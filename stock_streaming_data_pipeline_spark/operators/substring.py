@@ -34,6 +34,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from stock_streaming_data_pipeline_spark.operators.checkpoint import materialize
 from stock_streaming_data_pipeline_spark.operators.dedup import (
     portable_hash,
     sql_portable_hash,
@@ -129,12 +130,11 @@ def longest_shared_substring_pairs(
     predicate) come from one posting-list equi-join over the fingerprint
     relation; the suffix-automaton verify then touches candidates only.
     The fingerprint relation is materialized once for the self-join (the
-    CDC lesson: without it the corpus re-scans once per join side) via
-    eager localCheckpoint — released on the frame's GC, nothing left in
-    the CacheManager (round-12 hygiene)."""
-    fps = lgram_fingerprints(
-        df, id_col=id_col, text_col=text_col, gram=min_len
-    ).localCheckpoint(eager=True)
+    CDC lesson: without it the corpus re-scans once per join side)."""
+    fps = materialize(
+        lgram_fingerprints(df, id_col=id_col, text_col=text_col, gram=min_len),
+        eager=True,
+    )
     a = fps.select(F.col("doc").alias("doc_a"), "fp")
     b = fps.select(F.col("doc").alias("doc_b"), "fp")
     pairs = (

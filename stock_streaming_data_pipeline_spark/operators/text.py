@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from stock_streaming_data_pipeline_spark.operators.checkpoint import materialize
 from stock_streaming_data_pipeline_spark.operators.dedup import (
     MERSENNE31,
     SQL_TOKENS,
@@ -353,7 +354,7 @@ def lm_perplexity(df: DataFrame, *, id_col: str, text_col: str) -> DataFrame:
     a 1-row aggregate cross-joined back (never a driver collect).
 
     ``bi`` feeds three consumers (the two count tables and the scoring
-    join), so it is materialized once with localCheckpoint — otherwise
+    join), so it is materialized once — otherwise
     the posexplode + per-doc window shuffle re-executes up to three
     times whenever Spark's exchange reuse doesn't kick in. The vocab
     branch deliberately hangs off ``tt`` (a plain explode scan), not the
@@ -366,11 +367,11 @@ def lm_perplexity(df: DataFrame, *, id_col: str, text_col: str) -> DataFrame:
     tt = t.filter(F.size("toks") >= 2)
     ex = tt.select("doc", F.posexplode("toks").alias("pos", "w1"))
     w = Window.partitionBy("doc").orderBy("pos")
-    bi = (
+    bi = materialize(
         ex.withColumn("w2", F.lead("w1").over(w))
         .filter(F.col("w2").isNotNull())
-        .select("doc", "w1", "w2")
-        .localCheckpoint(eager=False)
+        .select("doc", "w1", "w2"),
+        eager=False,
     )
     cb = bi.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("cb"))
     cu = bi.groupBy("w1").agg(F.count(F.lit(1)).alias("cu"))

@@ -20,7 +20,7 @@ DISTINCT-WORD relation (vocabulary-bounded, independent of corpus row
 count): the Viterbi DP is ``max_word_len`` relational steps, each a
 join of a words-sized frontier against the piece table, and each EM
 round adds one piece-count aggregate over the segmentations. Lineage is
-cut per DP step with localCheckpoint (the BPE trainer's discipline).
+cut per DP step with materialize (the BPE trainer's discipline).
 
 Determinism / differential contract: piece log-probs are round-6 then
 micro-snapped BIGINTs; DP scores are integer sums; the argmax at every
@@ -36,6 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from stock_streaming_data_pipeline_spark.operators.checkpoint import materialize
 from stock_streaming_data_pipeline_spark.operators.dedup import tokens
 from stock_streaming_data_pipeline_spark.operators.retrieval import SQL_TOKENS
 
@@ -240,11 +241,11 @@ def unigram_train(
     """Train the unigram LM: seed vocab → ``rounds`` × (Viterbi E-step,
     smoothed M-step). Returns (piece, cnt, logp) where cnt is the final
     round's weighted usage count and logp the smoothed log-prob."""
-    words = _word_counts(df, text_col=text_col).localCheckpoint(eager=True)
-    vocab = _seed_vocab(words).localCheckpoint(eager=True)
+    words = materialize(_word_counts(df, text_col=text_col), eager=True)
+    vocab = materialize(_seed_vocab(words), eager=True)
     for _ in range(rounds):
         segs = _viterbi_segment(words, vocab)
-        vocab = _m_step(vocab, segs).localCheckpoint(eager=True)
+        vocab = materialize(_m_step(vocab, segs), eager=True)
     return vocab.select(
         "piece",
         "cnt",
@@ -259,11 +260,11 @@ def unigram_segment(
     vocab and count pieces per doc — (doc, n_words, n_unigram_tokens).
     Words longer than MAX_WORD_LEN are outside the trained model and are
     excluded (inner join), mirrored exactly by the oracle."""
-    words = _word_counts(df, text_col=text_col).localCheckpoint(eager=True)
-    vocab = _seed_vocab(words).localCheckpoint(eager=True)
+    words = materialize(_word_counts(df, text_col=text_col), eager=True)
+    vocab = materialize(_seed_vocab(words), eager=True)
     for _ in range(rounds):
         segs = _viterbi_segment(words, vocab)
-        vocab = _m_step(vocab, segs).localCheckpoint(eager=True)
+        vocab = materialize(_m_step(vocab, segs), eager=True)
     per_word = _viterbi_segment(words, vocab).select(
         "w", F.size(F.split("seg", " ")).alias("n_tokens")
     )
@@ -434,12 +435,12 @@ def unigram_train_pruned(
     prune to the top ``prune_to`` pieces (plus single chars), then one
     more EM round under the pruned vocabulary — the full SentencePiece
     lifecycle (seed → EM → shrink → EM) in hard-EM form."""
-    words = _word_counts(df, text_col=text_col).localCheckpoint(eager=True)
-    vocab = _seed_vocab(words).localCheckpoint(eager=True)
+    words = materialize(_word_counts(df, text_col=text_col), eager=True)
+    vocab = materialize(_seed_vocab(words), eager=True)
     for _ in range(rounds):
         segs = _viterbi_segment(words, vocab)
-        vocab = _m_step(vocab, segs).localCheckpoint(eager=True)
-    vocab = _prune(vocab, prune_to).localCheckpoint(eager=True)
+        vocab = materialize(_m_step(vocab, segs), eager=True)
+    vocab = materialize(_prune(vocab, prune_to), eager=True)
     segs = _viterbi_segment(words, vocab)
     vocab = _m_step(vocab, segs)
     return vocab.select(

@@ -19,7 +19,7 @@ table is one explode + broadcast-vocab join + groupBy, and the greedy
 walk is ``MAX_WORD_LEN`` relational steps, each advancing every
 unfinished word by one piece (each step consumes ≥1 character, so the
 loop is statically bounded). Lineage is cut per step with
-localCheckpoint, the unigram DP's discipline.
+materialize, the unigram DP's discipline.
 
 Determinism / differential contract: greedy longest-match has no ties
 (lengths are distinct), counts are exact integers, and the rendered
@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from stock_streaming_data_pipeline_spark.operators.checkpoint import materialize
 from stock_streaming_data_pipeline_spark.operators.dedup import tokens
 from stock_streaming_data_pipeline_spark.operators.retrieval import SQL_TOKENS
 
@@ -85,7 +86,7 @@ def wordpiece_segment(df: DataFrame, *, text_col: str) -> DataFrame:
     """(w, wc, wordpieces, n_pieces): every distinct corpus word with its
     greedy longest-match WordPiece segmentation (continuations rendered
     ``##piece``, pieces space-joined) and corpus frequency."""
-    words = _word_counts(df, text_col=text_col).localCheckpoint(eager=False)
+    words = materialize(_word_counts(df, text_col=text_col), eager=False)
     vocab = _vocab(words)
 
     # best-match table: at every (word, position), the longest vocab
@@ -113,11 +114,11 @@ def wordpiece_segment(df: DataFrame, *, text_col: str) -> DataFrame:
             (F.col("pos") > 1).alias("is_cont"),
         )
     )
-    best = (
+    best = materialize(
         cand.join(F.broadcast(vocab), ["sub", "is_cont"])
         .groupBy("w", "pos")
-        .agg(F.max("l").alias("l"))
-        .localCheckpoint(eager=False)
+        .agg(F.max("l").alias("l")),
+        eager=False,
     )
 
     cur = words.select(
@@ -144,7 +145,7 @@ def wordpiece_segment(df: DataFrame, *, text_col: str) -> DataFrame:
                 (F.col("n_pieces") + 1).alias("n_pieces"),
             )
         )
-        cur = active.unionByName(done).localCheckpoint(eager=False)
+        cur = materialize(active.unionByName(done), eager=False)
     return cur.select("w", "wc", "wordpieces", "n_pieces")
 
 

@@ -32,6 +32,16 @@ FEATURE_SCHEMA = (
     "total_btc_volume double, high double, low double, close double, "
     "num_trades long"
 )
+# What start_fanout's two file sinks write, so a read plans without a
+# schema-inference job: the kafka-shaped features, and the feature store
+# (derive_features' columns, the hour column, then the partition columns).
+_KAFKA_SHAPED_SCHEMA = "key string, value string"
+_FEATURE_STORE_SCHEMA = (
+    "symbol string, timestamp timestamp, window_end timestamp, "
+    "total_usd_volume double, total_btc_volume double, high double, "
+    "low double, open double, close double, num_trades long not null, "
+    "hour int, year int, month int, day int"
+)
 
 
 class StockPipeline:
@@ -101,13 +111,17 @@ class StockPipeline:
         (the predictor-consumer view, BtcPrediction/kafka.py:13)."""
         from pyspark.sql import functions as F
 
-        raw = self.spark.read.parquet(self._path("btc_features"))
+        raw = self.spark.read.schema(_KAFKA_SHAPED_SCHEMA).parquet(
+            self._path("btc_features")
+        )
         return raw.select(
             F.from_json("value", FEATURE_SCHEMA).alias("v")
         ).select("v.*")
 
     def feature_store(self) -> DataFrame:
-        return self.spark.read.parquet(self._path("feature_store"))
+        return self.spark.read.schema(_FEATURE_STORE_SCHEMA).parquet(
+            self._path("feature_store")
+        )
 
     def compact(self) -> None:
         """Maintenance: compact both keyed-upsert tables, dropping keys

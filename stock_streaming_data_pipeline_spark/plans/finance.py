@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from stock_streaming_data_pipeline_spark.operators import finance, subseq
+from stock_streaming_data_pipeline_spark.operators.checkpoint import materialize
 from stock_streaming_data_pipeline_spark.plans.catalog import register
 from stock_streaming_data_pipeline_spark.plans.stock import SQL_TRADES, trades_view
 
@@ -928,9 +929,12 @@ def ts_kmedoids_dtw(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("key", "pos")
         .agg(F.sum("x").cast("long").alias("v"))
     )
-    d = subseq.dtw_pairwise(
-        prof, key_col="key", pos_col="pos", val_col="v", band=3, max_len=10
-    ).localCheckpoint(eager=False)
+    d = materialize(
+        subseq.dtw_pairwise(
+            prof, key_col="key", pos_col="pos", val_col="v", band=3, max_len=10
+        ),
+        eager=False,
+    )
     keys = ev.select(F.col("event_type").alias("key")).distinct()
     nk = keys.agg(F.count(F.lit(1)).cast("long").alias("n"))
     sym = (
@@ -959,7 +963,7 @@ def ts_kmedoids_dtw(spark: SparkSession, sf_dir: str) -> DataFrame:
     d2 = sym.select(
         F.col("x").alias("m2"), F.col("y").alias("key"), F.col("dtw").alias("dtw2")
     )
-    asg = (
+    asg = materialize(
         mp.join(F.broadcast(keys), F.lit(True))
         .join(d1, ["m1", "key"])
         .join(d2, ["m2", "key"])
@@ -972,8 +976,8 @@ def ts_kmedoids_dtw(spark: SparkSession, sf_dir: str) -> DataFrame:
             .when(F.col("dtw2") < F.col("dtw1"), F.col("m2"))
             .otherwise(F.least("m1", "m2"))
             .alias("medoid"),
-        )
-        .localCheckpoint(eager=False)
+        ),
+        eager=False,
     )
     cost = asg.groupBy("m1", "m2").agg(
         F.sum("dist").cast("long").alias("total"),
@@ -1586,12 +1590,12 @@ def ts_binary_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = (
         F.signum("value") * F.floor(F.abs(F.col("value")) * 100 + F.lit(0.5))
     ).cast("long")
-    hourly = (
+    hourly = materialize(  # both levels scan it
         t.withColumn("slot", (F.unix_micros("ts") / F.lit(3_600_000_000)).cast("long"))
         .withColumn("c", cents)
         .groupBy("event_type", "slot")
-        .agg(F.sum("c").alias("v"))
-        .localCheckpoint(eager=False)  # both levels scan it
+        .agg(F.sum("c").alias("v")),
+        eager=False,
     )
     cp0 = _cusum_pick(hourly, ["event_type"])
     root = cp0.select(

@@ -26,6 +26,7 @@ from stock_streaming_data_pipeline_spark.operators import (
     text,
     unigram,
 )
+from stock_streaming_data_pipeline_spark.operators.checkpoint import materialize
 from stock_streaming_data_pipeline_spark.plans.catalog import register
 from stock_streaming_data_pipeline_spark.tables import load_table
 
@@ -1071,22 +1072,13 @@ def curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     keepers = dedup.exact_duplicates(
         corpus, id_col="doc_id", text_col="text"
     ).select(F.col("keeper_id").alias("doc_id"))
-    # Materialize the two reused stage outputs (optimization round 11;
-    # round 12 switched persist() → eager localCheckpoint): `kept` feeds
-    # both the contamination report and the anti-join left side; `clean`
-    # feeds the repetition scorer, the quality filter and the sampler —
-    # composed lazily, the exact-dedup + contamination subtree
-    # re-executed up to 4x per action (guide §5: cache only what is
-    # reused and expensive to recompute). Unlike persist(), whose
-    # CacheManager entry lives until an explicit unpersist/clearCache
-    # (the round-11 leak finding — this builder cannot unpersist because
-    # the result is lazy), a localCheckpoint RDD is released by the
-    # ContextCleaner as soon as the frame is garbage collected, so a
-    # long-lived session that never calls clearCache cannot accumulate
-    # entries.
-    kept = corpus.join(keepers, "doc_id", "left_semi").localCheckpoint(
-        eager=True
-    )
+    # Materialize the two reused stage outputs (optimization round 11):
+    # `kept` feeds both the contamination report and the anti-join left
+    # side; `clean` feeds the repetition scorer, the quality filter and
+    # the sampler — composed lazily, the exact-dedup + contamination
+    # subtree re-executed up to 4x per action (guide §5: cache only what
+    # is reused and expensive to recompute).
+    kept = materialize(corpus.join(keepers, "doc_id", "left_semi"), eager=True)
 
     contaminated = dedup.contamination_report(
         kept,
@@ -1098,9 +1090,10 @@ def curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         n=5,
         min_overlap=0.2,
     ).select("doc").distinct()
-    clean = kept.join(
-        contaminated, kept["doc_id"] == contaminated["doc"], "left_anti"
-    ).localCheckpoint(eager=True)
+    clean = materialize(
+        kept.join(contaminated, kept["doc_id"] == contaminated["doc"], "left_anti"),
+        eager=True,
+    )
 
     # quality is per-row deterministic, so the former
     # `clean ⋉ quality_scores(clean).filter(q >= 0.40)` semi-join (two
@@ -3226,7 +3219,7 @@ def linkage_fellegi_sunter(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_chars",
     )
     x, y = recs.alias("x"), recs.alias("y")
-    cand = (
+    cand = materialize(  # scanned by the stats agg AND the scoring pass
         x.join(
             y,
             (F.col("x.lang") == F.col("y.lang"))
@@ -3242,8 +3235,8 @@ def linkage_fellegi_sunter(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .join(pairs_m, ["doc_a", "doc_b"], "left")
         .withColumn("is_m", F.coalesce("is_m_flag", F.lit(0)))
-        .drop("is_m_flag")
-        .localCheckpoint(eager=False)  # scanned by the stats agg AND the scoring pass
+        .drop("is_m_flag"),
+        eager=False,
     )
     s = cand.agg(
         F.sum("is_m").alias("nm"),
@@ -3334,8 +3327,8 @@ def basket_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     (confidence is asymmetric). One distinct pass, one support
     aggregate, one bounded self-join — no corpus-quadratic step."""
     li = load_table(spark, sf_dir, "lineitem")
-    items = li.select("l_orderkey", "l_partkey").distinct().localCheckpoint(
-        eager=False
+    items = materialize(
+        li.select("l_orderkey", "l_partkey").distinct(), eager=False
     )
     n_orders = items.agg(
         F.countDistinct("l_orderkey").alias("n")
@@ -4295,7 +4288,7 @@ def multimodal_phash_hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFram
     equi-joins on band keys (never an all-pairs hash comparison), then
     one bit_count(xor) verifies. Same exact-integer pipeline and shared
     oracle CTEs as the bucket query; deterministic end-to-end."""
-    ph = _phash_frame(spark, sf_dir).localCheckpoint(eager=False)
+    ph = materialize(_phash_frame(spark, sf_dir), eager=False)
     bands = ph.selectExpr(
         "media_id", "phash", "0 AS band", "phash % 256 AS bkey"
     ).unionByName(
@@ -5920,7 +5913,7 @@ def embedding_mutual_reach_clusters(spark: SparkSession, sf_dir: str) -> DataFra
     (2) exact squared-L2 on the micro lattice (order-fixed left fold,
     IEEE-identical in both engines); (3) core_k via a vec-partitioned
     rank window; (4) edges where mr <= eps; (5) min-label-propagation
-    connected components (operators/dedup.py, localCheckpoint-bounded
+    connected components (operators/dedup.py, materialization-bounded
     lineage); (6) cluster-size histogram. Points with fewer than k
     in-cell neighbors or no edge are noise by definition (HDBSCAN's
     own convention) and absent from the histogram."""

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from stock_streaming_data_pipeline_spark.operators import running
+from stock_streaming_data_pipeline_spark.operators.checkpoint import materialize
 from stock_streaming_data_pipeline_spark.plans.catalog import register
 from stock_streaming_data_pipeline_spark.tables import load_table
 
@@ -2853,7 +2854,7 @@ def pca_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     cov = pca.covariance_rows(emb, id_col="vec_id", vec_col="embedding")
-    cov = cov.localCheckpoint(eager=False)
+    cov = materialize(cov, eager=False)
     v = pca.power_iteration(cov, rounds=_PCA_ROUNDS)
     dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     rf = (
@@ -2931,8 +2932,8 @@ def pca_projection_extremes(spark: SparkSession, sf_dir: str) -> DataFrame:
     from stock_streaming_data_pipeline_spark.tables import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
-    cov = pca.covariance_rows(emb, id_col="vec_id", vec_col="embedding").localCheckpoint(
-        eager=False
+    cov = materialize(
+        pca.covariance_rows(emb, id_col="vec_id", vec_col="embedding"), eager=False
     )
     v = pca.power_iteration(cov, rounds=_PCA_ROUNDS)
     dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
@@ -3042,22 +3043,21 @@ def markov_stationary_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
     )
     outdeg = trans.groupBy("a").agg(F.sum("n").cast("long").alias("total"))
-    pq = (
+    pq = materialize(
         trans.join(F.broadcast(outdeg), "a")
         .selectExpr(
             "a",
             "b",
             "CAST(floor(CAST(n AS DOUBLE) / total * 1000000 + 0.5)"
             " AS BIGINT) AS pq",
-        )
-        .localCheckpoint(eager=False)
+        ),
+        eager=False,
     )
     dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     p = (
         trans.groupBy(F.col("a").alias("s"))
         .agg(F.count(F.lit(1)).alias("_d"))
         .select("s", F.lit(1_000_000).cast("long").alias("v"))
-        .localCheckpoint(eager=False)
     )
     for _ in range(_MKV_ROUNDS):
         raw = (
@@ -3067,10 +3067,10 @@ def markov_stationary_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumnRenamed("s2", "s")
         )
         tot = raw.agg(F.sum("raw").cast("double").alias("tot"))
-        p = (
+        p = materialize(
             raw.crossJoin(F.broadcast(tot))
-            .selectExpr("s", f"{_MKV_NORM} AS v")
-            .localCheckpoint(eager=False)
+            .selectExpr("s", f"{_MKV_NORM} AS v"),
+            eager=False,
         )
     return p.selectExpr("s AS event_type", "v AS stationary_micro")
 
@@ -4370,13 +4370,11 @@ def pca_second_component(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     cov = pca.covariance_rows(emb, id_col="vec_id", vec_col="embedding")
-    cov = cov.localCheckpoint(eager=False)
-    v1 = pca.power_iteration(cov, rounds=_PCA_ROUNDS).localCheckpoint(
-        eager=False
-    )
+    cov = materialize(cov, eager=False)
+    v1 = materialize(pca.power_iteration(cov, rounds=_PCA_ROUNDS), eager=False)
     dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     mx = cov.agg(F.max(F.abs(F.col("c"))).cast("decimal(38,0)").alias("m"))
-    cov_s = (
+    cov_s = materialize(
         cov.crossJoin(F.broadcast(mx))
         .selectExpr(
             "i",
@@ -4385,8 +4383,8 @@ def pca_second_component(spark: SparkSession, sf_dir: str) -> DataFrame:
             " * (abs(c) DIV CAST(rpad('1',"
             " greatest(1, length(CAST(m AS STRING)) - 14), '0')"
             " AS DECIMAL(38,0))) AS DECIMAL(38,0)) AS c",
-        )
-        .localCheckpoint(eager=False)
+        ),
+        eager=False,
     )
     vtv = v1.agg(F.sum(dec(F.col("v")) * dec(F.col("v"))).alias("w"))
     cv = (
@@ -4394,7 +4392,7 @@ def pca_second_component(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("i")
         .agg(F.sum(F.col("c") * dec(F.col("v"))).alias("raw"))
     )
-    cov2 = (
+    cov2 = materialize(
         cov_s.join(F.broadcast(cv), "i")
         .join(
             F.broadcast(v1.withColumnsRenamed({"i": "j", "v": "vj"})), "j"
@@ -4406,8 +4404,8 @@ def pca_second_component(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("w") * F.col("c") - F.col("raw") * dec(F.col("vj")))
             .cast("decimal(38,0)")
             .alias("c"),
-        )
-        .localCheckpoint(eager=False)
+        ),
+        eager=False,
     )
     v2 = pca.power_iteration(cov2, rounds=_PCA_ROUNDS)
     dp_t = (
@@ -6218,14 +6216,14 @@ def robust_regression_huber(spark: SparkSession, sf_dir: str) -> DataFrame:
     carry planted 50x price outliers: the output contrasts the OLS slope
     (dragged by them) with the Huber slope (they are downweighted to
     delta/|r|). Scale shape: OLS init + 6 reweighted passes, each one
-    map-combined aggregate onto a single row over the localCheckpointed
+    map-combined aggregate onto a single row over the materialized
     2-integer projection (cache ~16 B/row vs re-scanning parquet per
     pass — flip if memory-poor)."""
     from stock_streaming_data_pipeline_spark.operators import robust
 
     li = load_table(spark, sf_dir, "lineitem")
-    xy = li.selectExpr(f"{_HUB_X} AS x", f"{_HUB_Y} AS y").localCheckpoint(
-        eager=False
+    xy = materialize(
+        li.selectExpr(f"{_HUB_X} AS x", f"{_HUB_Y} AS y"), eager=False
     )
     dec = "decimal(38,0)"
     m = F.lit(_HUB_MICRO).cast("long")
@@ -6471,13 +6469,13 @@ def itemset_pair_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Materialize the deduped basket relation: it feeds FOUR consumers
     # (the two pair-join sides, per-item support, the order count) and
     # each would otherwise re-scan lineitem (5 file scans measured; 1
-    # after the materialization). Eager localCheckpoint instead of
-    # persist (round-12 hygiene, same swap as cdc_shared_chunk_pairs):
-    # the stored rows release with the frame's GC instead of occupying
-    # the CacheManager until an explicit clearCache.
-    items = li.select(
-        F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk")
-    ).distinct().localCheckpoint(eager=True)
+    # after the materialization).
+    items = materialize(
+        li.select(
+            F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk")
+        ).distinct(),
+        eager=True,
+    )
     n_orders = items.agg(
         F.count_distinct("ok").cast("long").alias("n_orders")
     )

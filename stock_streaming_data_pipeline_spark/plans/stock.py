@@ -25,6 +25,7 @@ from stock_streaming_data_pipeline_spark.operators.asof import (
     asof_join,
     asof_join_nearest,
 )
+from stock_streaming_data_pipeline_spark.operators.checkpoint import materialize
 from stock_streaming_data_pipeline_spark.plans.catalog import register
 from stock_streaming_data_pipeline_spark.tables import load_table
 
@@ -401,7 +402,12 @@ def hierarchical_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = (
         F.signum("value") * F.floor(F.abs(F.col("value")) * 100 + F.lit(0.5))
     ).cast("long")
-    minute = (
+    # Materialize the fine tier once: without this the three union
+    # branches each re-derive `minute` from the fact scan (3 full
+    # scans observed in the physical plan). With it, the facts are
+    # read once and the coarser tiers re-aggregate the materialized
+    # tier — the continuous-aggregate shape this query exists to show.
+    minute = materialize(
         ev.withColumn("slot", (epoch_us("ts") / F.lit(60_000_000)).cast("long"))
         .withColumn("cents", cents)
         .groupBy("event_type", "slot")
@@ -410,13 +416,8 @@ def hierarchical_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("cents").alias("total_cents"),
             F.max("value").alias("high"),
             F.min("value").alias("low"),
-        )
-        # Materialize the fine tier once: without this the three union
-        # branches each re-derive `minute` from the fact scan (3 full
-        # scans observed in the physical plan). With it, the facts are
-        # read once and the coarser tiers re-aggregate the materialized
-        # tier — the continuous-aggregate shape this query exists to show.
-        .localCheckpoint(eager=False)
+        ),
+        eager=False,
     )
 
     def _up(df: DataFrame, factor: int) -> DataFrame:

@@ -136,6 +136,19 @@ def test_ivf_pq_topk_finds_planted_neighbor(spark):
     assert got[0]["cosine"] >= 0.999999
 
 
+def test_num_sub_not_dividing_the_dim_raises_value_error(spark):
+    """The PQ subspace guard is a real exception, so it survives
+    ``python -O``: embeddings are 64-dim, and 7 subspaces do not fit."""
+    emb = load_table(spark, SF_SMOKE, "embeddings")
+    queries = emb.filter(F.col("vec_id") == 3)
+    with pytest.raises(ValueError, match="num_sub=7 must divide the embedding dim 64"):
+        similarity.ivf_pq_topk(emb, queries, num_sub=7)
+    with pytest.raises(ValueError, match="num_sub=7"):
+        similarity.opq_train(emb, num_sub=7)
+    with pytest.raises(ValueError, match="num_sub=7"):
+        similarity.sql_opq_topk(SF_SMOKE, num_sub=7, dim=64)
+
+
 def test_ivf_pq_recall_vs_brute_force(spark):
     """PQ compresses 64 floats to 8 codes, so ADC ordering is lossy — but
     with a 32-deep exact re-rank the top-5 recall must stay useful at
@@ -450,6 +463,8 @@ def test_lsh_band_params_solver():
     b_lo, _ = dedup.lsh_band_params(0.3, 64)
     b_hi, _ = dedup.lsh_band_params(0.9, 64)
     assert b_lo >= b and b_hi <= b
+    with pytest.raises(RuntimeError, match="num_perm=0"):
+        dedup.lsh_band_params(0.5, 0)
 
 
 def test_kmeans_converges_and_is_deterministic(spark):

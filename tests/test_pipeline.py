@@ -5,9 +5,10 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from stock_streaming_data_pipeline_spark.pipeline import StockPipeline
+from stock_streaming_data_pipeline_spark.pipeline import FEATURE_SCHEMA, StockPipeline
 from stock_streaming_data_pipeline_spark.sources.trades import write_trades_dir
 from stock_streaming_data_pipeline_spark.streaming import sinks
+from tests.test_table_schema_cache import _jobs_in_group
 
 
 def test_pipeline_user_journey(spark, tmp_path):
@@ -72,5 +73,35 @@ def test_compact_drops_a_deleted_key(spark, tmp_path):
         raw = spark.read.parquet(*sinks._current_data_files(spark, path))
         assert raw.count() == len(want)
         assert "_deleted" not in raw.columns
+    finally:
+        pipe.stop()
+
+
+def test_feature_reads_plan_without_a_job(spark, tmp_path):
+    """features() and feature_store() read with the sinks' known schemas:
+    a repeated read starts no Spark job, and the schemas are the ones
+    inference finds in the written files."""
+    src = str(tmp_path / "trades")
+    write_trades_dir(spark, src, files=2, n_rows=1000)
+    pipe = StockPipeline(
+        source_dir=src, out_dir=str(tmp_path / "out"), spark=spark
+    ).run()
+    try:
+        pipe.features()
+        assert _jobs_in_group(spark, "features-again", pipe.features) == 0
+        assert _jobs_in_group(spark, "store-again", pipe.feature_store) == 0
+        for table, read in (
+            ("btc_features", pipe.features),
+            ("feature_store", pipe.feature_store),
+        ):
+            inferred = spark.read.parquet(pipe.fan.path(table))
+            if table == "btc_features":
+                inferred = inferred.select(
+                    F.from_json("value", FEATURE_SCHEMA).alias("v")
+                ).select("v.*")
+            assert read().schema == inferred.schema, table
+            assert sorted(map(tuple, read().collect())) == sorted(
+                map(tuple, inferred.collect())
+            ), table
     finally:
         pipe.stop()

@@ -66,19 +66,9 @@ on anyway.
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import DataFrame
 
-# Spark's own master patterns for in-driver executors (SparkMasterRegex's
-# LOCAL_N_REGEX and LOCAL_N_FAILURES_REGEX, plus bare ``local``).
-_IN_DRIVER_MASTER = re.compile(r"local(\[(\d+|\*)(\s*,\s*\d+)?\])?")
-
-
-def _executors_in_driver(master: str) -> bool:
-    """True when ``master`` runs its executors inside the driver JVM.
-    ``local-cluster[...]`` is False: its executors are separate JVMs."""
-    return _IN_DRIVER_MASTER.fullmatch(master.strip()) is not None
+from stock_streaming_data_pipeline_spark.session import _executors_in_driver
 
 
 def materialize(df: DataFrame, *, eager: bool) -> DataFrame:

@@ -25,21 +25,20 @@ from pyspark.sql import DataFrame, SparkSession
 from stock_streaming_data_pipeline_spark.session import configure_session, get_spark
 from stock_streaming_data_pipeline_spark.sources.streams import stream_trades
 from stock_streaming_data_pipeline_spark.streaming import sinks
-from stock_streaming_data_pipeline_spark.streaming.jobs import FanOut, start_fanout
-
-FEATURE_SCHEMA = (
-    "symbol string, timestamp timestamp, total_usd_volume double, "
-    "total_btc_volume double, high double, low double, close double, "
-    "num_trades long"
+from stock_streaming_data_pipeline_spark.streaming.jobs import (
+    FEATURE_SCHEMA,
+    KAFKA_SHAPED_SCHEMA,
+    FanOut,
+    start_fanout,
 )
-# What start_fanout's two file sinks write, so a read plans without a
-# schema-inference job: the kafka-shaped features, and the feature store
-# (derive_features' columns, the hour column, then the partition columns).
-_KAFKA_SHAPED_SCHEMA = "key string, value string"
+
+# What the feature store's files hold, so a read plans without a
+# schema-inference job: derive_features' columns as parsed back from
+# btc_features' JSON, the hour column, then the partition columns.
 _FEATURE_STORE_SCHEMA = (
     "symbol string, timestamp timestamp, window_end timestamp, "
     "total_usd_volume double, total_btc_volume double, high double, "
-    "low double, open double, close double, num_trades long not null, "
+    "low double, open double, close double, num_trades long, "
     "hour int, year int, month int, day int"
 )
 
@@ -111,7 +110,7 @@ class StockPipeline:
         (the predictor-consumer view, BtcPrediction/kafka.py:13)."""
         from pyspark.sql import functions as F
 
-        raw = self.spark.read.schema(_KAFKA_SHAPED_SCHEMA).parquet(
+        raw = self.spark.read.schema(KAFKA_SHAPED_SCHEMA).parquet(
             self._path("btc_features")
         )
         return raw.select(

@@ -12,6 +12,7 @@ config rather than hardcoded.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
@@ -72,7 +73,7 @@ _BASE_CONF: dict[str, str] = {
 #   Measured on the fan-out (4-core host): processes forked per warm drain
 #   round 1,894 -> 372.
 # - One state store per stateful operator: each store costs a commit per
-#   batch whatever it holds, and the fan-out's three stateful queries already
+#   batch whatever it holds, and the fan-out's stateful queries already
 #   run concurrently and fill the cores (4-core host, fan-out drain against
 #   the same drain on local[1]: 1.38x with 4 stores per query, 2.19x with
 #   1). Batch shuffles keep spark.sql.shuffle.partitions. A restarted query keeps the count its
@@ -86,6 +87,17 @@ _LOCAL_STREAMING_CONF: dict[str, str] = {
     ),
     "spark.sql.streaming.internal.stateStore.partitions": "1",
 }
+
+
+# Spark's own master patterns for in-driver executors (SparkMasterRegex's
+# LOCAL_N_REGEX and LOCAL_N_FAILURES_REGEX, plus bare ``local``).
+_IN_DRIVER_MASTER = re.compile(r"local(\[(\d+|\*)(\s*,\s*\d+)?\])?")
+
+
+def _executors_in_driver(master: str) -> bool:
+    """True when ``master`` runs its executors inside the driver JVM.
+    ``local-cluster[...]`` is False: its executors are separate JVMs."""
+    return _IN_DRIVER_MASTER.fullmatch(master.strip()) is not None
 
 
 def default_parallelism() -> int:
@@ -169,14 +181,16 @@ def configure_session(spark: SparkSession) -> SparkSession:
     ``SPARK_GRAFT_CPUS`` is set: otherwise the handed-in session's value
     stays, since the driver host's core count says nothing about the
     executor fleet behind that session. The local streaming commit
-    defaults apply only to a ``local`` master, and only where the caller
-    has not set the key."""
+    defaults apply only to a master whose executors run in the driver JVM
+    (``local``, ``local[N]``, ``local[*]``, ``local[N,F]``; not
+    ``local-cluster[...]``), and only where the caller has not set the
+    key."""
     for key in _RUNTIME_CONF:
         try:
             spark.conf.set(key, _BASE_CONF[key])
         except Exception:
             pass  # non-runtime-settable on this build; defaults are fine
-    if spark.conf.get("spark.master", "").startswith("local"):
+    if _executors_in_driver(spark.conf.get("spark.master", "")):
         for key, value in _LOCAL_STREAMING_CONF.items():
             if spark.conf.get(key, None) is None:
                 spark.conf.set(key, value)

@@ -1,8 +1,9 @@
 """The four-query streaming fan-out (the reference's whole topology).
 
 Mirrors ProcessStockStream.py:91-196 Spark-first: one logical trade stream
-feeds four concurrent StreamingQuery instances, each with its own output
-mode, trigger and checkpoint:
+feeds three concurrent StreamingQuery instances, and a fourth is chained
+on the third's output, each with its own output mode, trigger and
+checkpoint:
 
   q1 volume_tracking  — 1-min tumbling agg, 30 s watermark, UPDATE mode,
                         keyed-upsert sink            (:112-129)
@@ -10,14 +11,26 @@ mode, trigger and checkpoint:
                         sink                         (:132-138)
   q3 features→kafka   — 30s/10s sliding agg, 10 s watermark, APPEND mode,
                         kafka-shaped (key, json value) sink (:143-179)
-  q4 feature store    — same agg, APPEND mode, parquet partitioned by
+  q4 feature store    — stateless: streams q3's sink back, parses the
+                        JSON value, APPEND mode, parquet partitioned by
                         year/month/day               (:181-191)
+
+The reference computes the sliding features twice (q3 and q4 each run the
+aggregation) and its LSTM sidecar consumes them once more from the
+``btc_features`` topic. Here q4 is that kind of consumer: it reads q3's
+file sink as a stream, so the aggregation and its state exist once, and
+the sink's ``_spark_metadata`` log keeps q4 exactly-once (files q3 wrote
+but never committed stay invisible), the downstream-query design of the
+Structured Streaming paper (SIGMOD 2018). The store therefore holds
+exactly the rows q3 published, with q3's batch boundaries and late-row
+drops. The JSON value carries ``open`` and ``window_end`` after the
+reference's eight fields, so the store keeps all ten feature columns.
 
 Divergences (deliberate, SURVEY §2.5/§4): ``close`` is pinned by event time
 (max_by) instead of arrival-order last(); per-batch sink errors propagate
 instead of being swallowed.
 
-Scale notes: all four queries shuffle on (window×symbol) or not at all;
+Scale notes: q1 and q3 shuffle on (window×symbol), q2 and q4 not at all;
 state is bounded by the watermarks. On a real cluster each query is an
 independent job — checkpoint isolation (one dir per query) is what makes
 the fan-out restartable per-query, exactly like the reference's four S3A
@@ -35,6 +48,17 @@ from pyspark.sql.streaming import StreamingQuery
 
 from stock_streaming_data_pipeline_spark.operators.ohlc import bar_aggs
 from stock_streaming_data_pipeline_spark.streaming import sinks
+
+# The JSON value q3 publishes: the reference's eight fields
+# (ProcessStockStream.py:163-172), then ``open`` and ``window_end``. q4 and
+# every reader of btc_features parse it with this schema.
+FEATURE_SCHEMA = (
+    "symbol string, timestamp timestamp, total_usd_volume double, "
+    "total_btc_volume double, high double, low double, close double, "
+    "num_trades long, open double, window_end timestamp"
+)
+# What the kafka-shaped sink writes.
+KAFKA_SHAPED_SCHEMA = "key string, value string"
 
 
 @dataclass
@@ -106,8 +130,29 @@ def start_fanout(
     ``available_now=True`` drains the source and settles (test/batch-replay
     mode); set False for continuous micro-batches with the reference's
     processing-time triggers.
+
+    With ``available_now`` q4's file source fixes its end offset when it
+    starts, so q4 starts only after q3 has terminated; the call returns
+    with all four handles in ``FanOut.queries`` either way. If q3 fails
+    while the call waits on it, or q4 fails to start, the queries already
+    started are stopped and the error propagates.
+
+    Raises RuntimeError, starting nothing, when ``out_dir/_chk/store``
+    exists: that is the checkpoint of the stateful feature_store query that
+    aggregated the trade stream itself, before q4 read btc_features.
     """
     fan = FanOut(out_dir)
+    legacy = fan.path("_chk/store")
+    fs, legacy_path = sinks._hadoop_fs(trades.sparkSession, legacy)
+    if fs.exists(legacy_path):
+        raise RuntimeError(
+            f"{legacy} is the checkpoint of a feature_store query that "
+            "aggregated the trade stream itself; feature_store now reads "
+            "btc_features, and restarting it next to the old output would "
+            "silently skip rows. Migrate by moving "
+            f"{fan.path('feature_store')} and {legacy} aside: feature_store "
+            "then rebuilds the store from btc_features' history."
+        )
 
     def trigger(writer, processing_time: str):
         if available_now:
@@ -166,10 +211,7 @@ def start_fanout(
     kafka_out = sinks.kafka_shaped(
         features,
         key="symbol",
-        value_struct=[
-            "symbol", "timestamp", "total_usd_volume", "total_btc_volume",
-            "high", "low", "close", "num_trades",
-        ],
+        value_struct=[f.split()[0] for f in FEATURE_SCHEMA.split(",")],
     )
     fan.queries.append(
         trigger(kafka_out.writeStream.outputMode("append"), "0 seconds")
@@ -180,15 +222,28 @@ def start_fanout(
         .start()
     )
 
-    # q4: features → partitioned feature store (append mode)
-    store = sinks.with_date_partitions(features, "timestamp")
-    fan.queries.append(
-        trigger(store.writeStream.outputMode("append"), "5 minutes")
-        .format("parquet")
-        .partitionBy("year", "month", "day")
-        .option("path", fan.path("feature_store"))
-        .option("checkpointLocation", fan.path("_chk/store"))
-        .queryName("feature_store")
-        .start()
-    )
+    # q4: q3's committed output → partitioned feature store (append mode,
+    # stateless; q3's sink log decides what q4 sees)
+    try:
+        if available_now:
+            fan.queries[-1].awaitTermination()
+        published = (
+            trades.sparkSession.readStream.schema(KAFKA_SHAPED_SCHEMA)
+            .parquet(fan.path("btc_features"))
+            .select(F.from_json("value", FEATURE_SCHEMA).alias("v"))
+            .select("v.*")
+        )
+        store = sinks.with_date_partitions(published.select(*features.columns), "timestamp")
+        fan.queries.append(
+            trigger(store.writeStream.outputMode("append"), "5 minutes")
+            .format("parquet")
+            .partitionBy("year", "month", "day")
+            .option("path", fan.path("feature_store"))
+            .option("checkpointLocation", fan.path("_chk/feature_store"))
+            .queryName("feature_store")
+            .start()
+        )
+    except BaseException:
+        fan.stop_all()
+        raise
     return fan

@@ -9,10 +9,12 @@ from __future__ import annotations
 
 import json
 import os
+import threading
 import time
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQueryListener
 
 from stock_streaming_data_pipeline_spark.sources.streams import TRADES_SCHEMA, stream_trades
 from stock_streaming_data_pipeline_spark.sources.trades import (
@@ -22,7 +24,11 @@ from stock_streaming_data_pipeline_spark.sources.trades import (
     write_trades_dir,
 )
 from stock_streaming_data_pipeline_spark.streaming import sinks
-from stock_streaming_data_pipeline_spark.streaming.jobs import start_fanout
+from stock_streaming_data_pipeline_spark.streaming.jobs import (
+    FEATURE_SCHEMA,
+    derive_features,
+    start_fanout,
+)
 
 
 @pytest.fixture(scope="module")
@@ -468,3 +474,261 @@ def test_fanout_crash_midbatch_recovers_exactly_once(spark, tmp_path, monkeypatc
         map(tuple, sinks.read_upsert_table(spark, victim, keys).collect())
     )
     assert recovered == expected
+
+
+# ---------------------------------------------------------------------------
+# The chained feature store: q4 reads q3's committed output
+# ---------------------------------------------------------------------------
+
+FEATURE_COLUMNS = [
+    "symbol", "timestamp", "window_end", "total_usd_volume", "total_btc_volume",
+    "high", "low", "open", "close", "num_trades",
+]
+
+
+def _query(fan, name):
+    return next(q for q in fan.queries if q.name == name)
+
+
+def _feature_rows(df):
+    """The ten feature columns, timestamps as epoch micros, sorted."""
+    cols = [
+        F.unix_micros(c).alias(c) if c in ("timestamp", "window_end") else F.col(c)
+        for c in FEATURE_COLUMNS
+    ]
+    return sorted(map(tuple, df.select(*cols).collect()))
+
+
+def _published_features(spark, out):
+    return (
+        spark.read.parquet(os.path.join(out, "btc_features"))
+        .select(F.from_json("value", FEATURE_SCHEMA).alias("v"))
+        .select("v.*")
+    )
+
+
+@pytest.fixture
+def new_york(spark):
+    """A non-UTC session time zone for one test (the session is shared)."""
+    key = "spark.sql.session.timeZone"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "America/New_York")
+    try:
+        yield
+    finally:
+        spark.conf.set(key, before)
+
+
+def test_feature_store_is_btc_features_exactly(spark, tmp_path, new_york):
+    """After an available_now drain, feature_store holds exactly the rows
+    btc_features published, all ten feature columns row-exact through the
+    JSON round trip, and they equal a batch derive_features over the same
+    trades restricted to the windows q3's final watermark closed. Prices
+    and volumes lie on a binary grid so every sum is exact in any order,
+    which makes a row-exact comparison with the batch plan well-defined.
+    Only q1 and q3 keep state."""
+    src = str(tmp_path / "src")
+    synthetic_trades(spark, n_rows=6000).select(
+        "symbol",
+        "ts",
+        (F.floor(F.col("price") * 256) / 256).alias("price"),
+        (F.greatest(F.floor(F.col("volume") * 2**20), F.lit(1)) / 2**20).alias("volume"),
+    ).repartition(4).write.parquet(src)
+    out = str(tmp_path / "out")
+    fan = start_fanout(stream_trades(spark, src), out, available_now=True)
+    try:
+        for q in fan.queries:
+            assert q.awaitTermination(300), q.name
+    finally:
+        fan.stop_all()
+
+    stateful = {
+        q.name for q in fan.queries for p in q.recentProgress if p["stateOperators"]
+    }
+    assert stateful == {"volume_tracking", "btc_features"}
+    watermark = _query(fan, "btc_features").lastProgress["eventTime"]["watermark"]
+
+    store = spark.read.parquet(fan.path("feature_store"))
+    got = _feature_rows(store)
+    assert got == _feature_rows(_published_features(spark, out))
+
+    batch = derive_features(
+        spark.read.schema(TRADES_SCHEMA).parquet(src),
+        window="30 seconds", slide="10 seconds", watermark="10 seconds",
+    )
+    closed = batch.filter(F.col("window_end") <= F.lit(watermark).cast("timestamp"))
+    want = _feature_rows(closed)
+    assert 0 < len(want) < batch.count()
+    assert got == want
+
+    # the date partitions follow the session time zone, as before
+    assert store.filter(
+        (F.year("timestamp") != F.col("year"))
+        | (F.month("timestamp") != F.col("month"))
+        | (F.dayofmonth("timestamp") != F.col("day"))
+        | (F.hour("timestamp") != F.col("hour"))
+    ).count() == 0
+
+
+def _write_stray(spark, tmp_path, dest: str, name: str) -> None:
+    """One parquet file with a well-formed features payload that no
+    btc_features batch committed (a crashed task's leftover)."""
+    value = json.dumps({
+        "symbol": "STRAY", "timestamp": "2024-01-01T00:00:00.000Z",
+        "total_usd_volume": 1.0, "total_btc_volume": 1.0, "high": 1.0,
+        "low": 1.0, "close": 1.0, "num_trades": 1, "open": 1.0,
+        "window_end": "2024-01-01T00:00:30.000Z",
+    })
+    tmp = str(tmp_path / f"stray-{name}")
+    spark.createDataFrame([("STRAY", value)], "key string, value string").coalesce(
+        1
+    ).write.parquet(tmp)
+    part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
+    os.makedirs(dest, exist_ok=True)
+    os.replace(os.path.join(tmp, part), os.path.join(dest, name))
+
+
+def _await_trigger(query, timeout_s: float = 120.0) -> None:
+    deadline = time.time() + timeout_s
+    while not query.recentProgress or query.status["isTriggerActive"]:
+        assert time.time() < deadline, f"{query.name} ran no trigger"
+        time.sleep(0.1)
+
+
+def test_feature_store_never_reads_uncommitted_files(spark, trades_dir, tmp_path):
+    """With processing-time triggers q4 starts right after q3, and reads
+    btc_features through its sink log: parquet files in the directory that
+    no q3 batch committed (one there before q3's sink existed, one dropped
+    while it runs) never reach feature_store. A restart's first q4
+    trigger picks up everything q3 committed."""
+    out = str(tmp_path / "out")
+    feats = os.path.join(out, "btc_features")
+    _write_stray(spark, tmp_path, feats, "part-00000-stray-before.snappy.parquet")
+
+    fan = start_fanout(stream_trades(spark, trades_dir), out, available_now=False)
+    try:
+        _query(fan, "btc_features").processAllAvailable()
+        _write_stray(spark, tmp_path, feats, "part-00000-stray-during.snappy.parquet")
+        _await_trigger(_query(fan, "feature_store"))
+    finally:
+        fan.stop_all()
+
+    fan = start_fanout(stream_trades(spark, trades_dir), out, available_now=False)
+    try:
+        _query(fan, "btc_features").processAllAvailable()
+        _await_trigger(_query(fan, "feature_store"))
+    finally:
+        fan.stop_all()
+
+    raw = spark.read.schema("key string, value string").parquet(
+        *[os.path.join(feats, f) for f in os.listdir(feats) if f.endswith(".parquet")]
+    )
+    assert raw.filter(F.col("key") == "STRAY").count() == 2  # on disk
+    published = _feature_rows(_published_features(spark, out))
+    assert published and all(r[0] != "STRAY" for r in published)
+    assert _feature_rows(spark.read.parquet(fan.path("feature_store"))) == published
+
+
+def test_fanout_refuses_a_pre_chaining_store_checkpoint(spark, trades_dir, tmp_path):
+    """An out_dir whose _chk/store holds the old stateful feature_store
+    query would restart at batch 0 next to a store whose sink log already
+    lists those batch ids, and lose rows silently. start_fanout raises
+    naming the migration and starts nothing; after the migration the
+    store is rebuilt from btc_features."""
+    out = tmp_path / "out"
+    old = sinks.with_date_partitions(
+        derive_features(
+            stream_trades(spark, trades_dir),
+            window="30 seconds", slide="10 seconds", watermark="10 seconds",
+        ),
+        "timestamp",
+    )
+    q = (
+        old.writeStream.outputMode("append")
+        .trigger(availableNow=True)
+        .format("parquet")
+        .partitionBy("year", "month", "day")
+        .option("path", str(out / "feature_store"))
+        .option("checkpointLocation", str(out / "_chk" / "store"))
+        .start()
+    )
+    assert q.awaitTermination(300)
+    q.stop()
+
+    with pytest.raises(RuntimeError, match=r"_chk/store.*Migrate by moving"):
+        start_fanout(stream_trades(spark, trades_dir), str(out), available_now=True)
+    assert [q.name for q in spark.streams.active] == []
+    assert sorted(os.listdir(out / "_chk")) == ["store"]
+
+    def rows():
+        store = spark.read.parquet(str(out / "feature_store"))
+        return sorted(map(tuple, store.select("symbol", "timestamp", "num_trades").collect()))
+
+    before = rows()
+    aside = tmp_path / "aside"
+    aside.mkdir()
+    os.replace(out / "feature_store", aside / "feature_store")
+    os.replace(out / "_chk" / "store", aside / "store")
+    fan = start_fanout(stream_trades(spark, trades_dir), str(out), available_now=True)
+    try:
+        fan.await_all()
+    finally:
+        fan.stop_all()
+    assert rows() == before
+
+
+def test_fanout_stops_started_queries_when_q3_fails(spark, trades_dir, tmp_path, monkeypatch):
+    """start_fanout waits on q3 before starting q4 in available_now mode.
+    q1 and q2 are held inside their first batch until q3 has failed and a
+    second longer; start_fanout stops them and propagates q3's error,
+    leaving no running query behind."""
+    q3_failed = threading.Event()
+
+    class FailureWatch(StreamingQueryListener):
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            pass
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            if event.exception:
+                q3_failed.set()
+
+    real_kafka, real_upsert = sinks.kafka_shaped, sinks.upsert_writer
+
+    def failing(df, **kwargs):
+        out = real_kafka(df, **kwargs)
+        return out.withColumn(
+            "value",
+            F.when(F.col("key").isNotNull(), F.raise_error(F.lit("injected q3 failure")))
+            .otherwise(F.col("value")),
+        )
+
+    def held(path, key_cols):
+        write = real_upsert(path, key_cols)
+
+        def run(batch_df, epoch_id):
+            assert q3_failed.wait(120), "q3 did not fail"
+            time.sleep(1.0)
+            write(batch_df, epoch_id)
+
+        return run
+
+    monkeypatch.setattr(sinks, "kafka_shaped", failing)
+    monkeypatch.setattr(sinks, "upsert_writer", held)
+    watch = FailureWatch()
+    spark.streams.addListener(watch)
+    out = tmp_path / "out"
+    try:
+        with pytest.raises(Exception, match="injected q3 failure"):
+            start_fanout(stream_trades(spark, trades_dir), str(out), available_now=True)
+        assert [q.name for q in spark.streams.active] == []
+    finally:
+        spark.streams.removeListener(watch)
+        for q in spark.streams.active:
+            q.stop()
+    assert "feature_store" not in os.listdir(out / "_chk")

@@ -170,3 +170,34 @@ def test_restart_keeps_checkpointed_state_partitions(spark, tmp_path, first, the
     assert parts == int(_LOCAL_STREAMING_CONF[STATE_PARTITIONS])
     assert resumed == whole
     assert sum(n for _, _, n in whole) == 3000
+
+
+class _StubConf:
+    def __init__(self, master: str) -> None:
+        self.values = {"spark.master": master}
+
+    def get(self, key, default=None):
+        return self.values.get(key, default)
+
+    def set(self, key, value) -> None:
+        self.values[key] = value
+
+
+class _StubSession:
+    def __init__(self, master: str) -> None:
+        self.conf = _StubConf(master)
+
+
+@pytest.mark.parametrize(
+    "master, filled",
+    [("local[4]", True), ("local-cluster[2,1,1024]", False), ("spark://h:7077", False)],
+)
+def test_streaming_defaults_only_for_executors_in_the_driver(master, filled):
+    """configure_session fills the unset streaming keys on a master whose
+    executors run in the driver JVM. ``local-cluster[...]`` runs them in
+    separate JVMs, so it keeps Spark's per-partition state stores, as a
+    real cluster does."""
+    stub = _StubSession(master)
+    configure_session(stub)
+    for key, value in _LOCAL_STREAMING_CONF.items():
+        assert stub.conf.get(key) == (value if filled else None), key

@@ -18,9 +18,8 @@ a 100x scale-up where a per-group ``pd.merge_asof`` (applyInPandas) would
 bottleneck on the hottest key's single task and an inequality join would
 explode. Right-before-left ordering at equal ts gives inclusive (<=)
 semantics. The per-key window itself still serializes a HOT key through
-one task (AQE cannot split windows) — :func:`asof_join_salted` is the
-segmented two-phase form for zipfian keys (measured in
-tools/skew_probe.py, SKEW_r7).
+one task (AQE cannot split windows); SCALE.md ("As-of join skew") has
+the measured per-day segmented form for a query with a hot key.
 
 The carried right columns travel as ONE struct per right row, not as
 independent columns: ``last(col, ignorenulls=True)`` per column would
@@ -180,117 +179,6 @@ def asof_join_nearest(
     return (
         unioned.filter(F.col("_tag") == 1)
         .withColumn("_m", picked)
-        .select(
-            *l_cols,
-            *[F.col("_m")[c].alias(f"{right_prefix}{c}") for c in carried],
-        )
-    )
-
-
-def asof_join_salted(
-    left: DataFrame,
-    right: DataFrame,
-    *,
-    by: str,
-    on: str,
-    right_values: list[str],
-    right_prefix: str = "asof_",
-    direction: str = "backward",
-    segment=None,
-) -> DataFrame:
-    """Hot-key-safe :func:`asof_join`: the two-phase segmented carry.
-
-    The plain form funnels ALL of a key's rows through one window task
-    (Window.partitionBy(key) has no AQE skew splitting), so a 90 %-skew
-    key serializes the stage at 100 TB — the same failure mode
-    ``running_sum`` has, fixed the same way:
-
-    1. split each key's timeline into contiguous segments via
-       ``segment`` — any monotone non-decreasing expression of ``on``
-       (default: calendar day) — and run the carry-forward window only
-       within (key, segment): the hot key's rows spread across as many
-       tasks as it has segments;
-    2. reduce each segment to its boundary right-row struct (backward:
-       the segment's LAST right row via one ``max_by`` aggregate;
-       forward: FIRST via ``min_by``) — one row per (key, segment), a
-       relation ~|keys|x|segments|, tiny next to the fact;
-    3. carry boundaries ACROSS segments with an ordered window over that
-       small relation (previous segments for backward, following for
-       forward), join back on (key, segment) — AQE-sized, no hard hint —
-       and ``coalesce(local, carried)``.
-
-    Result rows equal :func:`asof_join` exactly whenever right rows are
-    unique per (key, on) (duplicate right timestamps tie-break
-    arbitrarily in BOTH forms — the plain window's order is
-    nondeterministic across equal keys too). Equivalence, unmatched-row
-    behavior, and the hot-key task spread are pinned in
-    tests/test_scale_ops.py; the zipfian wall-clock win is measured in
-    tools/skew_probe.py (SKEW_r7).
-    """
-    if direction not in ("backward", "forward"):
-        raise ValueError(f"direction must be backward|forward, got {direction!r}")
-    carried = [on, *right_values]
-    l_cols = left.columns
-    row_struct, struct_type = _right_row_struct(right, carried)
-    l = left.withColumn("_tag", F.lit(1)).withColumn(
-        "_r", F.lit(None).cast(struct_type)
-    )
-    r = right.select(
-        F.col(by), F.col(on), F.lit(0).alias("_tag"), row_struct.alias("_r")
-    )
-    for c in l_cols:
-        if c not in (by, on):
-            r = r.withColumn(c, F.lit(None).cast(left.schema[c].dataType))
-    seg_col = F.to_date(F.col(on)) if segment is None else segment
-    u = l.unionByName(r.select(l.columns)).withColumn("_seg", seg_col)
-
-    backward = direction == "backward"
-    if backward:
-        w_local = (
-            Window.partitionBy(by, "_seg")
-            .orderBy(F.col(on).asc(), F.col("_tag").asc())
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        local = u.withColumn(
-            "_local_r", F.last("_r", ignorenulls=True).over(w_local)
-        )
-        bnd_agg = F.max_by("_r", F.col(on))
-        seg_order = F.col("_seg").asc()
-    else:
-        w_local = (
-            Window.partitionBy(by, "_seg")
-            .orderBy(F.col(on).asc(), F.col("_tag").desc())
-            .rowsBetween(0, Window.unboundedFollowing)
-        )
-        local = u.withColumn(
-            "_local_r", F.first("_r", ignorenulls=True).over(w_local)
-        )
-        bnd_agg = F.min_by("_r", F.col(on))
-        seg_order = F.col("_seg").desc()
-
-    bnd = (
-        r.withColumn("_seg", seg_col)
-        .groupBy(by, "_seg")
-        .agg(bnd_agg.alias("_seg_r"))
-    )
-    # Segment spine covers EVERY (key, segment) present in the union —
-    # segments with no right rows still need the carry from an earlier
-    # (later, for forward) segment.
-    spine = u.select(by, "_seg").distinct()
-    w_carry = (
-        Window.partitionBy(by)
-        .orderBy(seg_order)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    carry = (
-        spine.join(bnd, [by, "_seg"], "left")
-        .withColumn("_carry_r", F.last("_seg_r", ignorenulls=True).over(w_carry))
-        .select(by, "_seg", "_carry_r")
-    )
-    return (
-        local.join(carry, [by, "_seg"], "left")
-        .filter(F.col("_tag") == 1)
-        .withColumn("_m", F.coalesce("_local_r", "_carry_r"))
         .select(
             *l_cols,
             *[F.col("_m")[c].alias(f"{right_prefix}{c}") for c in carried],

@@ -8,10 +8,9 @@ recompute them independently).
 
 Scale design (100 TB):
 - exact dedup: one hash-groupBy, fully partial-aggregatable.
-- n-gram Jaccard similarity join: EXACT, with two physical strategies
-  (inverted-index count join for dense similarity graphs; PPJoin-style
-  prefix filtering for web-scale sparse graphs with hot shingles) — see
-  ngram_jaccard_pairs; plus an optional hot-shingle df cap.
+- n-gram Jaccard / containment similarity joins: EXACT, one
+  inverted-index count join (posting lists → pair counts) — see
+  _pair_counts.
 - MinHash-LSH: linear signature pass + band-bucket equi-join + exact
   verification of candidates only. The scale path; recall < 1 by design,
   so it carries no SQL oracle (driver records rows-only).
@@ -116,181 +115,39 @@ def exact_duplicates(df: DataFrame, *, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    *,
-    id_col: str,
-    text_col: str,
-    n: int = 3,
-    threshold: float = 0.5,
-    prefix_filter: bool = False,
-    max_shingle_df: int | None = None,
+def _pair_counts(
+    df: DataFrame, *, id_col: str, text_col: str, n: int
 ) -> DataFrame:
-    """EXACT n-gram Jaccard similarity join — two physical strategies with
-    identical output:
+    """(doc_b, doc_a, common, n_a, n_b) for every ordered doc pair
+    (doc_a < doc_b) sharing at least one distinct n-gram shingle:
+    ``common`` = |A∩B|, ``n_a``/``n_b`` = |A|, |B|. The shared front half
+    of the exact shingle-overlap joins; callers only score.
 
-    - ``prefix_filter=False`` (default): inverted-index via posting
-      lists — explode shingles, ONE groupBy on the shingle string into
-      per-shingle posting lists, generate ordered doc pairs map-side
-      from each list, COUNT common per pair (partial-aggregated),
-      Jaccard from the counts. The shingle STRINGS cross the wire
-      exactly once (the posting groupBy); the pair stream is pure
-      (long, long) rows. Measured 1.7× faster than the previous
-      string-keyed self-join at the sf1 tier (2.3 s vs 3.9 s) with
-      bit-identical output. Task memory is bounded by the hottest
-      shingle's document frequency (8 bytes/doc-id in one posting
-      list); past ~10⁷ df per shingle use ``max_shingle_df`` or
-      ``prefix_filter=True`` — the (df choose 2) pair blowup is
-      inherent to EXACT Jaccard whatever the join strategy.
-    - ``prefix_filter=True``: PPJoin-style prefix filtering — order each
-      document's shingles by global rarity; for Jaccard >= t a qualifying
-      pair must collide within the first ``|S| - ceil(t*|S|) + 1`` rarest
-      shingles, so only those prefixes enter the self-join; candidates are
-      then verified on full shingle sets. Best at web scale: large vocab,
-      sparse similarity graph, hot-shingle skew (the prefix holds only
-      RARE shingles, so the quadratic hot-key blowup disappears).
-
-    ``max_shingle_df`` additionally drops ultra-hot shingles entirely
-    (changes semantics slightly; off by default).
+    Inverted index via posting lists: explode shingles, ONE groupBy on
+    the shingle string into per-shingle posting lists, generate ordered
+    doc pairs map-side from each list, COUNT common per pair
+    (partial-aggregated). The shingle STRINGS cross the wire exactly once
+    (the posting groupBy); the pair stream is pure (long, long) rows.
+    Measured 1.7× faster than the previous string-keyed self-join at the
+    sf1 tier (2.3 s vs 3.9 s) with bit-identical output, and 3× faster
+    than PPJoin-style prefix filtering on this corpus (SCALE.md). Task
+    memory is bounded by the hottest shingle's document frequency
+    (8 bytes/doc-id in one posting list); the (df choose 2) pair blowup
+    is inherent to EXACT overlap whatever the join strategy.
     """
     df = fan_out(df)  # shingling is CPU-bound: spread a 1-file scan wide
-    if not prefix_filter:
-        # One shingle computation total: sizes derive from the SAME
-        # exploded rows (a size()+explode() pair would inline the shingle
-        # subtree twice after projection collapse — measured 2.5x slower).
-        sh = df.select(
-            F.col(id_col).alias("doc"),
-            F.explode(shingles(F.col(text_col), n)).alias("sh"),
-        )
-        if max_shingle_df is not None:
-            hot = sh.groupBy("sh").count().filter(F.col("count") > max_shingle_df)
-            sh = sh.join(F.broadcast(hot.select("sh")), "sh", "left_anti")
-        sizes = sh.groupBy("doc").agg(F.count(F.lit(1)).alias("n_sh"))
-        # Posting lists: the shingle strings shuffle ONCE; singleton
-        # shingles (most of the vocabulary) die here and never produce a
-        # pair row. Pair generation is two chained generators — map-side,
-        # no wide rows — and the pair-count shuffle carries (long, long)
-        # keys only.
-        posting = (
-            sh.groupBy("sh")
-            .agg(F.collect_list("doc").alias("docs"))
-            .filter(F.size("docs") > 1)
-            .select("docs")
-        )
-        common = (
-            posting.select(F.explode("docs").alias("doc_a"), "docs")
-            .select("doc_a", F.explode("docs").alias("doc_b"))
-            .filter(F.col("doc_a") < F.col("doc_b"))
-            .groupBy("doc_a", "doc_b")
-            .agg(F.count(F.lit(1)).alias("common"))
-        )
-        return (
-            common.join(
-                sizes.withColumnsRenamed({"doc": "doc_a", "n_sh": "n_a"}), "doc_a"
-            )
-            .join(sizes.withColumnsRenamed({"doc": "doc_b", "n_sh": "n_b"}), "doc_b")
-            .filter(
-                F.col("common") / (F.col("n_a") + F.col("n_b") - F.col("common"))
-                >= threshold
-            )
-            .withColumn(
-                "jaccard",
-                F.round(
-                    F.col("common") / (F.col("n_a") + F.col("n_b") - F.col("common")),
-                    6,
-                ),
-            )
-            .select("doc_a", "doc_b", "jaccard")
-        )
-
-    # Prefix-filtered path: materialize the shingle scan — it feeds the
-    # index, the frequency ranking AND both verification sides.
-    base = materialize(
-        df.select(
-            F.col(id_col).alias("doc"), shingles(F.col(text_col), n).alias("shingles")
-        )
-        .filter(F.size("shingles") > 0),
-        eager=True,
-    )
-    sh = base.select(
-        "doc", F.size("shingles").alias("n_sh"), F.explode("shingles").alias("sh")
-    )
-    if max_shingle_df is not None:
-        hot = sh.groupBy("sh").count().filter(F.col("count") > max_shingle_df)
-        sh = sh.join(F.broadcast(hot.select("sh")), "sh", "left_anti")
-    freq = sh.groupBy("sh").agg(F.count(F.lit(1)).alias("df"))
-    ranked = sh.join(freq, "sh").withColumn(
-        "r",
-        F.row_number().over(
-            Window.partitionBy("doc").orderBy(F.asc("df"), F.asc("sh"))
-        ),
-    )
-    prefix_len = F.col("n_sh") - F.ceil(F.lit(threshold) * F.col("n_sh")) + 1
-    joinable = ranked.filter(F.col("r") <= prefix_len).select("doc", "sh")
-    a, b = joinable.alias("a"), joinable.alias("b")
-    cands = (
-        a.join(b, (F.col("a.sh") == F.col("b.sh")) & (F.col("a.doc") < F.col("b.doc")))
-        .select(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
-        .dropDuplicates(["doc_a", "doc_b"])
-    )
-    verified = (
-        cands.join(
-            base.withColumnsRenamed({"doc": "doc_a", "shingles": "sh_a"}), "doc_a"
-        ).join(base.withColumnsRenamed({"doc": "doc_b", "shingles": "sh_b"}), "doc_b")
-        .filter(
-            F.size(F.array_intersect("sh_a", "sh_b"))
-            / F.size(F.array_union("sh_a", "sh_b"))
-            >= threshold
-        )
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.size(F.array_intersect("sh_a", "sh_b"))
-                / F.size(F.array_union("sh_a", "sh_b")),
-                6,
-            ),
-        )
-        .select("doc_a", "doc_b", "jaccard")
-    )
-    return verified
-
-
-def containment_pairs(
-    df: DataFrame,
-    *,
-    id_col: str,
-    text_col: str,
-    n: int = 3,
-    threshold: float = 0.8,
-    max_shingle_df: int | None = None,
-) -> DataFrame:
-    """Directional n-gram CONTAINMENT near-dup join: a pair qualifies when
-    ``|A∩B| / min(|A|, |B|)`` clears the threshold — i.e. when one
-    document's shingle set is (nearly) a subset of the other's. This is
-    the asymmetric sibling of :func:`ngram_jaccard_pairs` and catches the
-    case Jaccard structurally cannot: a short document embedded verbatim
-    inside a much longer one (quote farms, boilerplate wrappers,
-    truncated mirrors), where the union in Jaccard's denominator is
-    dominated by the long side and the score collapses toward
-    ``|A|/|B|`` no matter how complete the overlap is.
-
-    Same scale architecture as the inverted-index Jaccard path — the
-    shingle strings shuffle ONCE into posting lists, singleton shingles
-    die before pair generation, and the pair stream is pure
-    (long, long) — only the final scoring arithmetic differs. Emits both
-    directions (``cont_ab`` = fraction of A's shingles found in B,
-    ``cont_ba`` symmetric) so the consumer can tell container from
-    contained; the filter is on the max of the two.
-    """
-    df = fan_out(df)
+    # One shingle computation total: sizes derive from the SAME exploded
+    # rows (a size()+explode() pair would inline the shingle subtree
+    # twice after projection collapse — measured 2.5x slower).
     sh = df.select(
         F.col(id_col).alias("doc"),
         F.explode(shingles(F.col(text_col), n)).alias("sh"),
     )
-    if max_shingle_df is not None:
-        hot = sh.groupBy("sh").count().filter(F.col("count") > max_shingle_df)
-        sh = sh.join(F.broadcast(hot.select("sh")), "sh", "left_anti")
     sizes = sh.groupBy("doc").agg(F.count(F.lit(1)).alias("n_sh"))
+    # Posting lists: the shingle strings shuffle ONCE; singleton shingles
+    # (most of the vocabulary) die here and never produce a pair row.
+    # Pair generation is two chained generators — map-side, no wide rows
+    # — and the pair-count shuffle carries (long, long) keys only.
     posting = (
         sh.groupBy("sh")
         .agg(F.collect_list("doc").alias("docs"))
@@ -304,11 +161,57 @@ def containment_pairs(
         .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).alias("common"))
     )
+    return common.join(
+        sizes.withColumnsRenamed({"doc": "doc_a", "n_sh": "n_a"}), "doc_a"
+    ).join(sizes.withColumnsRenamed({"doc": "doc_b", "n_sh": "n_b"}), "doc_b")
+
+
+def ngram_jaccard_pairs(
+    df: DataFrame,
+    *,
+    id_col: str,
+    text_col: str,
+    n: int = 3,
+    threshold: float = 0.5,
+) -> DataFrame:
+    """EXACT n-gram Jaccard similarity join: every doc pair whose
+    distinct-shingle Jaccard ``|A∩B| / |A∪B|`` clears ``threshold``,
+    scored from :func:`_pair_counts`' overlap counts."""
+    jaccard = F.col("common") / (F.col("n_a") + F.col("n_b") - F.col("common"))
     return (
-        common.join(
-            sizes.withColumnsRenamed({"doc": "doc_a", "n_sh": "n_a"}), "doc_a"
-        )
-        .join(sizes.withColumnsRenamed({"doc": "doc_b", "n_sh": "n_b"}), "doc_b")
+        _pair_counts(df, id_col=id_col, text_col=text_col, n=n)
+        .filter(jaccard >= threshold)
+        .withColumn("jaccard", F.round(jaccard, 6))
+        .select("doc_a", "doc_b", "jaccard")
+    )
+
+
+def containment_pairs(
+    df: DataFrame,
+    *,
+    id_col: str,
+    text_col: str,
+    n: int = 3,
+    threshold: float = 0.8,
+) -> DataFrame:
+    """Directional n-gram CONTAINMENT near-dup join: a pair qualifies when
+    ``|A∩B| / min(|A|, |B|)`` clears the threshold — i.e. when one
+    document's shingle set is (nearly) a subset of the other's. This is
+    the asymmetric sibling of :func:`ngram_jaccard_pairs` and catches the
+    case Jaccard structurally cannot: a short document embedded verbatim
+    inside a much longer one (quote farms, boilerplate wrappers,
+    truncated mirrors), where the union in Jaccard's denominator is
+    dominated by the long side and the score collapses toward
+    ``|A|/|B|`` no matter how complete the overlap is.
+
+    Same overlap counts as the Jaccard join (:func:`_pair_counts`); only
+    the final scoring arithmetic differs. Emits both directions
+    (``cont_ab`` = fraction of A's shingles found in B, ``cont_ba``
+    symmetric) so the consumer can tell container from contained; the
+    filter is on the max of the two.
+    """
+    return (
+        _pair_counts(df, id_col=id_col, text_col=text_col, n=n)
         .filter(
             F.greatest(
                 F.col("common") / F.col("n_a"), F.col("common") / F.col("n_b")

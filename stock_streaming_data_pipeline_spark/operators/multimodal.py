@@ -112,21 +112,19 @@ def png_decode_features(payload: bytes, dim: int = 8) -> list[float]:
 
 
 def auto_decode_features(payload: bytes, dim: int = 8) -> list[float]:
-    """Default decoder: real pixel features where the payload is PNG,
+    """Feature decoder: real pixel features where the payload is PNG,
     digest fake elsewhere (JPEG/audio/video codecs absent)."""
     if png_codec.is_png(payload):
         return png_decode_features(payload, dim)
     return fake_decode_features(payload, dim)
 
 
-def extract_features(
-    media: DataFrame, *, dim: int = 8, decoder=auto_decode_features
-) -> DataFrame:
+def extract_features(media: DataFrame, *, dim: int = 8) -> DataFrame:
     """mapInPandas feature extraction over binary payloads.
 
-    ``decoder`` is the pluggable bytes→vector step; the default decodes
-    PNG payloads for real (pure-stdlib codec) and digest-fakes the
-    formats whose codec libs are absent from this environment.
+    The bytes→vector step is :func:`auto_decode_features`: it decodes PNG
+    payloads for real (pure-stdlib codec) and digest-fakes the formats
+    whose codec libs are absent from this environment.
     """
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -141,7 +139,7 @@ def extract_features(
                         lambda b: hashlib.sha256(b or b"").hexdigest()
                     ),
                     "feat": payloads.map(
-                        lambda b: decoder(b or b"", dim) if decoder else None
+                        lambda b: auto_decode_features(b or b"", dim)
                     ),
                 }
             )

@@ -8,8 +8,7 @@ BtcPrediction/predict_btc.py:40,43).
 Both are pure built-ins: the null profile is one all-column aggregate
 (single reduce, no shuffle of raw rows); min-max scaling is a grouped
 min/max broadcast back over the rows — expressed as an unordered window
-over the key partition so Catalyst plans it as one shuffle, or as a
-broadcast join of the tiny per-key stats at very large scale.
+over the key partition so Catalyst plans it as one shuffle.
 """
 
 from __future__ import annotations
@@ -33,43 +32,17 @@ def null_profile(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
 def minmax_scale(
     df: DataFrame,
     *,
-    key: str | None,
+    key: str,
     cols: list[str],
     suffix: str = "_scaled",
-    strategy: str = "window",
 ) -> DataFrame:
-    """Min-max scale ``cols`` to [0,1] (per key when given, else global).
+    """Min-max scale ``cols`` to [0,1] per ``key``: an unordered window
+    over the key partition, one shuffle of the data.
 
     Constant columns scale to 0.0 (the reference's scaler divides by zero
     there; we pin a defined value instead).
-
-    ``strategy``:
-    - "window": unordered window over the key partition — one shuffle of
-      the data. Right up to medium scale.
-    - "join": aggregate the tiny per-key stats, broadcast-join them back —
-      the rows are never shuffled (stats travel instead). The 100 TB form,
-      and the only sane global (key=None) form at scale.
-    Both produce identical results (pinned by test).
     """
-    if strategy == "join":
-        aggs = []
-        for c in cols:
-            aggs += [F.min(c).alias(f"_lo_{c}"), F.max(c).alias(f"_hi_{c}")]
-        stats = df.groupBy(key).agg(*aggs) if key else df.agg(*aggs)
-        joined = (
-            df.join(F.broadcast(stats), on=key) if key
-            else df.crossJoin(F.broadcast(stats))
-        )
-        out = joined
-        for c in cols:
-            lo, hi = F.col(f"_lo_{c}"), F.col(f"_hi_{c}")
-            out = out.withColumn(
-                f"{c}{suffix}",
-                F.when(hi - lo == 0, F.lit(0.0)).otherwise((F.col(c) - lo) / (hi - lo)),
-            )
-        return out.drop(*[f"_lo_{c}" for c in cols], *[f"_hi_{c}" for c in cols])
-
-    w = Window.partitionBy(key) if key is not None else Window.partitionBy()
+    w = Window.partitionBy(key)
     out = df
     for c in cols:
         lo, hi = F.min(c).over(w), F.max(c).over(w)

@@ -216,7 +216,6 @@ def global_rank(
     order_col: str,
     id_col: str,
     out: str = "rank",
-    partitions: int | None = None,
 ) -> DataFrame:
     """Distributed GLOBAL row rank (dense total order by
     ``(order_col, id_col)``) without the single-task global window:
@@ -239,7 +238,7 @@ def global_rank(
     single-window form is pinned in tests/test_scale_ops.py.
     """
     spark = df.sparkSession
-    n_part = partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
     b = df.repartitionByRange(n_part, F.col(order_col), F.col(id_col)).withColumn(
         "_pid", F.spark_partition_id()
     )

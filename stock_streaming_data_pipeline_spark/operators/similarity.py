@@ -7,9 +7,9 @@ Two tiers, per the standard ANN architecture:
   order is fixed → bit-reproducible (and mirrored by the DuckDB oracle's
   ``list_reduce``).
 - **LSH-bucketed ANN (random-hyperplane signs)** — the scale path: hash
-  every vector to a sign-bit bucket; probe only the query's bucket (plus
-  optional multi-probe neighbors). Linear build, sub-linear probe;
-  approximate by design (rows-only check).
+  every vector to a sign-bit bucket; probe only the query's bucket.
+  Linear build, sub-linear probe; approximate by design (rows-only
+  check).
 
 At 100 TB the brute-force tier survives as the re-rank stage over LSH/IVF
 candidates, which is exactly how it is composed here.
@@ -192,31 +192,15 @@ def lsh_topk(
     k: int = 5,
     dim: int = 64,
     bits: int = 12,
-    multi_probe: int = 0,
 ) -> DataFrame:
     """Approximate top-k: exact re-rank restricted to the query's LSH
-    bucket(s). Build is one linear pass; probe touches ~corpus/2^bits rows
-    per probed bucket.
-
-    ``multi_probe=1`` additionally probes every bucket at hamming distance
-    1 in sign space (the standard multi-probe LSH recall lift: a near
-    neighbor that disagrees on exactly one hyperplane is still found) —
-    1+bits buckets per query instead of 1, still sub-linear."""
+    bucket. Build is one linear pass; probe touches ~corpus/2^bits rows."""
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"), as_double(F.col(vec_col)).alias("cv")
     ).withColumn("bucket", lsh_bucket(F.col("cv"), dim=dim, bits=bits))
     q = queries.select(
         F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qv")
     ).withColumn("bucket", lsh_bucket(F.col("qv"), dim=dim, bits=bits))
-    if multi_probe >= 1:
-        probes = F.array(
-            F.col("bucket"),
-            *[
-                F.col("bucket").bitwiseXOR(F.lit(1 << b)).alias(f"p{b}")
-                for b in range(bits)
-            ],
-        )
-        q = q.withColumn("bucket", F.explode(probes))
     scored = (
         c.join(F.broadcast(q), "bucket")
         .filter(F.col("neighbor_id") != F.col("query_id"))

@@ -6,11 +6,8 @@ table) and the join is key-colocated downstream. Salting is the classic
 manual remedy: spread each hot fact key over S salt buckets and replicate
 the (small) build side S times.
 
-Semantics are identical to the plain join for the supported join types
-(inner / left / left_semi / left_anti — fact-preserving joins); the test
-suite pins equality. Outer-on-dim types (right / full) are rejected: the
-dim side is exploded S-fold, so every unmatched dim row would be emitted
-S times.
+The join is inner, and its result is identical to the plain inner join;
+the test suite pins equality.
 Use when: fact⋈dim with a known/measured hot-key set, dim small enough to
 replicate S-fold (it usually is — salting only makes sense when dim is the
 small side anyway).
@@ -31,10 +28,9 @@ def salted_join(
     fact_key: str,
     dim_key: str,
     salts: int = 8,
-    how: str = "inner",
     salt_cols: Sequence[str],
 ) -> DataFrame:
-    """Join fact⋈dim on key with S-way salting of the fact side.
+    """Inner-join fact⋈dim on key with S-way salting of the fact side.
 
     fact gets a per-row salt in [0, S); dim is exploded to all S salt
     values. The join key becomes (key, salt) — the hot key's rows now
@@ -58,21 +54,7 @@ def salted_join(
     caller-chosen columns. Passing ONLY the join key is rejected too:
     every row of a hot key would hash to the same bucket, silently
     disabling the spreading this operator exists for.
-
-    Only fact-preserving join types are supported: with the dim side
-    replicated S-fold, a right/full outer join would emit every unmatched
-    dim row S times.
     """
-    supported = {"inner", "left", "leftouter", "left_outer",
-                 "left_semi", "leftsemi", "semi",
-                 "left_anti", "leftanti", "anti"}
-    if how.lower() not in supported:
-        raise ValueError(
-            f"salted_join: unsupported how={how!r}; the dim side is "
-            f"replicated {salts}x, so outer-on-dim join types (right/full) "
-            "would duplicate unmatched dim rows. Use one of "
-            "inner/left/left_semi/left_anti."
-        )
     if not salt_cols:
         raise ValueError(
             "salted_join: salt_cols is required — pass the join key plus "
@@ -102,6 +84,5 @@ def salted_join(
         salted_dim,
         (salted_fact[fact_key] == salted_dim[dim_key])
         & (salted_fact["_salt"] == salted_dim["_salt"]),
-        how,
     )
     return out.drop("_salt")

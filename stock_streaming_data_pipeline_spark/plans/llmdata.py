@@ -323,7 +323,7 @@ def embedding_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.filter(F.col("vec_id") < 10)
     # bits sizes the bucket fan-out: ~corpus/2^bits candidates per probe.
     # 4 bits → ~1/16th of the corpus per probe at test scale; at 100 TB
-    # raise bits (and add multi-probe) to keep buckets ~10^3-10^4 rows.
+    # raise bits to keep buckets ~10^3-10^4 rows.
     return similarity.lsh_topk(emb, queries, k=5, dim=64, bits=4)
 
 

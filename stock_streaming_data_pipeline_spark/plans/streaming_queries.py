@@ -36,12 +36,14 @@ from stock_streaming_data_pipeline_spark.streaming import state as stream_state
 # settle() drains a memory sink through the driver, so it is ONLY for
 # aggregate-sized results (windowed rollups, sketches, top-k). A streaming
 # query whose settled output grows with the fact table must drain through
-# a file sink (streaming/sinks.py partitioned_file_sink) instead — this
-# cap turns that mistake into a loud error rather than a silent
-# corpus-sized driver collect. Verification harnesses that legitimately
-# need full settled outputs for a differential compare (the sf1 sweep
-# replays 1M events through append-mode queries) raise the cap explicitly
-# via SPARK_GRAFT_SETTLE_MAX_ROWS instead of weakening the default.
+# a parquet file sink instead — the ``writeStream.format("parquet")``
+# sinks of streaming/jobs.py start_fanout (btc_features, and the
+# date-partitioned feature_store) are the pattern. This cap turns that
+# mistake into a loud error rather than a silent corpus-sized driver
+# collect. Verification harnesses that legitimately need full settled
+# outputs for a differential compare (the sf1 sweep replays 1M events
+# through append-mode queries) raise the cap explicitly via
+# SPARK_GRAFT_SETTLE_MAX_ROWS instead of weakening the default.
 SETTLE_MAX_ROWS = 100_000
 
 

@@ -107,11 +107,12 @@ def default_parallelism() -> int:
 def _shuffle_partitions() -> str:
     """Initial shuffle partition count, sized to the advertised core count
     (SPARK_GRAFT_CPUS). AQE coalescing owns the effective number at small
-    scale; at cluster scale raise SPARK_GRAFT_CPUS (or pass an explicit
-    ``shuffle_partitions``) so the initial number matches the executor
-    fleet. Round-12 fix: the driver-handed path (``configure_session``)
-    previously re-applied a hardcoded 32 from _BASE_CONF regardless of
-    SPARK_GRAFT_CPUS, diverging from ``get_spark``'s sizing."""
+    scale; at cluster scale raise SPARK_GRAFT_CPUS (or pass
+    ``spark.sql.shuffle.partitions`` in ``get_spark``'s ``extra_conf``) so
+    the initial number matches the executor fleet. Round-12 fix: the
+    driver-handed path (``configure_session``) previously re-applied a
+    hardcoded 32 from _BASE_CONF regardless of SPARK_GRAFT_CPUS,
+    diverging from ``get_spark``'s sizing."""
     return str(default_parallelism())
 
 
@@ -139,7 +140,6 @@ def _driver_memory(meminfo: str = "/proc/meminfo") -> str:
 def get_spark(
     app_name: str = "stock_streaming_data_pipeline_spark",
     *,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with the engine's defaults.
@@ -151,7 +151,7 @@ def get_spark(
     cpus = default_parallelism()
     builder = SparkSession.builder.master(f"local[{cpus}]").appName(app_name)
     conf = {**_BASE_CONF, **_LOCAL_STREAMING_CONF}
-    conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions or cpus)
+    conf["spark.sql.shuffle.partitions"] = str(cpus)
     conf.setdefault("spark.driver.memory", _driver_memory())
     if extra_conf:
         conf.update(extra_conf)

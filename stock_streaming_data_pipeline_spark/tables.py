@@ -43,9 +43,6 @@ TABLES: tuple[str, ...] = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-
 def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
@@ -153,7 +150,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def fan_out(df: DataFrame, parts: int | None = None) -> DataFrame:
+def fan_out(df: DataFrame) -> DataFrame:
     """Round-robin repartition up to the session's default parallelism —
     ONLY when the upstream scan has fewer splits.
 
@@ -173,7 +170,7 @@ def fan_out(df: DataFrame, parts: int | None = None) -> DataFrame:
     import math
 
     spark = df.sparkSession
-    target = parts or spark.sparkContext.defaultParallelism
+    target = spark.sparkContext.defaultParallelism
     files = df.inputFiles()
     if len(files) >= target:
         return df  # already at least one task per core

@@ -20,7 +20,7 @@ SF_FUZZ = SF_SMOKE
 def spark():
     from stock_streaming_data_pipeline_spark.session import get_spark
 
-    spark = get_spark("tests", shuffle_partitions=8)
+    spark = get_spark("tests", extra_conf={"spark.sql.shuffle.partitions": "8"})
     yield spark
 
 

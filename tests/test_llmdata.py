@@ -398,25 +398,6 @@ def test_resize_plumbing(spark):
         assert len(r["payload"]) == (224 * 224) // 64
 
 
-def test_jaccard_strategies_identical(spark, near_dup_corpus):
-    """Count-join and prefix-filtered strategies must produce the same
-    exact pair set (physical plan choice, not semantics)."""
-    kw = dict(id_col="doc_id", text_col="text", n=3, threshold=0.6)
-    count_based = {
-        (r["doc_a"], r["doc_b"], r["jaccard"])
-        for r in dedup.ngram_jaccard_pairs(
-            near_dup_corpus, prefix_filter=False, **kw
-        ).collect()
-    }
-    prefixed = {
-        (r["doc_a"], r["doc_b"], r["jaccard"])
-        for r in dedup.ngram_jaccard_pairs(
-            near_dup_corpus, prefix_filter=True, **kw
-        ).collect()
-    }
-    assert count_based == prefixed and count_based
-
-
 def test_connected_components_chain(spark):
     """A-B, B-C, C-D chains must collapse into one component (pairs alone
     under-merge transitive duplicates)."""
@@ -431,27 +412,6 @@ def test_connected_components_chain(spark):
     }
     assert comp[1] == comp[2] == comp[3] == comp[4] == 1
     assert comp[10] == comp[11] == 10
-
-
-def test_multi_probe_lifts_recall(spark):
-    """Multi-probe LSH recall@5 must dominate single-probe at equal bits."""
-    emb = load_table(spark, SF_SMOKE, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 20)
-    exact = {
-        (r["query_id"], r["neighbor_id"])
-        for r in similarity.cosine_topk(emb, queries, k=5).collect()
-    }
-    def recall(mp):
-        got = {
-            (r["query_id"], r["neighbor_id"])
-            for r in similarity.lsh_topk(
-                emb, queries, k=5, dim=64, bits=8, multi_probe=mp
-            ).collect()
-        }
-        return len(got & exact) / len(exact)
-    r0, r1 = recall(0), recall(1)
-    assert r1 >= r0
-    assert r1 > 0
 
 
 def test_lsh_band_params_solver():

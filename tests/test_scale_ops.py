@@ -33,29 +33,6 @@ def test_salted_join_equals_plain_join(spark):
     assert salted.exceptAll(plain).count() == 0
 
 
-def test_salted_join_left_variants_match_plain(spark):
-    """left / semi / anti survive salting (dim holds every salt value, so
-    match-vs-no-match per fact row is unchanged)."""
-    fact = spark.range(5_000).select(
-        (F.col("id") % 150).alias("k"), F.col("id").alias("payload")
-    )
-    dim = spark.range(100).select(
-        F.col("id").alias("dk"), F.concat(F.lit("n_"), F.col("id")).alias("name")
-    )
-    for how, cols in [
-        ("left", ["k", "payload", "name"]),
-        ("left_semi", ["k", "payload"]),
-        ("left_anti", ["k", "payload"]),
-    ]:
-        plain = fact.join(dim, fact.k == dim.dk, how).select(*cols)
-        salted = salted_join(
-            fact, dim, fact_key="k", dim_key="dk", salts=4, how=how,
-            salt_cols=("k", "payload"),
-        ).select(*cols)
-        assert plain.exceptAll(salted).count() == 0, how
-        assert salted.exceptAll(plain).count() == 0, how
-
-
 def test_salted_join_salt_cols_deterministic_and_equal(spark):
     """salt_cols makes the salt a pure function of row content (retry-safe
     under recomputation — ADVICE r8: monotonically_increasing_id depends
@@ -90,21 +67,6 @@ def test_salted_join_salt_cols_deterministic_and_equal(spark):
         .select("_salt").distinct().count()
     )
     assert n_buckets == 8
-
-
-def test_salted_join_rejects_outer_on_dim(spark):
-    """right/full would emit unmatched dim rows S times — refused
-    (ADVICE r1)."""
-    import pytest
-
-    fact = spark.range(10).select(F.col("id").alias("k"))
-    dim = spark.range(10).select(F.col("id").alias("dk"))
-    for how in ("right", "full", "full_outer", "right_outer"):
-        with pytest.raises(ValueError, match="unsupported how"):
-            salted_join(
-                fact, dim, fact_key="k", dim_key="dk", how=how,
-                salt_cols=("k",),
-            )
 
 
 def test_salted_join_requires_real_salt_cols(spark):
@@ -151,29 +113,6 @@ def test_upsert_compaction_preserves_state(spark, tmp_path):
         for r in sinks.read_upsert_table(spark, path, ["symbol", "timestamp"]).collect()
     }
     assert final == {"A": 10.0, "B": 20.0, "C": 3.0}
-
-
-def test_minmax_strategies_identical(spark):
-    from stock_streaming_data_pipeline_spark.operators.profile import minmax_scale
-
-    ev = load_table(spark, SF_SMOKE, "events")
-    a = (
-        minmax_scale(ev, key="event_type", cols=["value"], strategy="window")
-        .select("event_id", "value_scaled")
-        .toPandas()
-        .sort_values("event_id")
-        .reset_index(drop=True)
-    )
-    b = (
-        minmax_scale(ev, key="event_type", cols=["value"], strategy="join")
-        .select("event_id", "value_scaled")
-        .toPandas()
-        .sort_values("event_id")
-        .reset_index(drop=True)
-    )
-    assert a.equals(b)
-    g = minmax_scale(ev, key=None, cols=["value"], strategy="join")
-    assert g.agg(F.min("value_scaled"), F.max("value_scaled")).collect()[0] == (0.0, 1.0)
 
 
 def test_running_sum_salted_equals_plain(spark):
@@ -738,90 +677,6 @@ def test_attribution_splits_credit_exactly(spark, tmp_path):
         "view": (2, 666666),
         "click": (1, 333333),
     }
-
-
-def test_asof_salted_equals_plain_both_directions(spark):
-    """The segmented as-of join must equal the single-window form
-    row-for-row in both directions, including rows with no match and
-    segments containing no right rows (the cross-segment carry)."""
-    from stock_streaming_data_pipeline_spark.operators import asof
-
-    base = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
-    # left: hourly points over 6 days; right: sparse quotes with whole
-    # days empty (days 2 and 4 have no right rows at all) + one exact-ts
-    # collision to pin inclusive semantics
-    left = spark.createDataFrame(
-        [(i, 1 + i % 3, base + dt.timedelta(hours=i)) for i in range(144)],
-        ["lid", "k", "ts"],
-    )
-    right_rows = [
-        (100 + j, 1 + j % 3, base + dt.timedelta(hours=5 * j + 1), float(j))
-        for j in range(29)
-        if (5 * j + 1) // 24 not in (2, 4)
-    ]
-    right_rows.append((999, 1, base + dt.timedelta(hours=7), 777.0))
-    right = spark.createDataFrame(right_rows, ["rid", "k", "ts", "px"])
-
-    for direction in ("backward", "forward"):
-        plain = asof.asof_join(
-            left, right, by="k", on="ts",
-            right_values=["rid", "px"], direction=direction,
-        )
-        salted = asof.asof_join_salted(
-            left, right, by="k", on="ts",
-            right_values=["rid", "px"], direction=direction,
-        )
-        cols = ["lid", "k", "asof_rid", "asof_px"]
-        assert plain.select(cols).exceptAll(salted.select(cols)).count() == 0, direction
-        assert salted.select(cols).exceptAll(plain.select(cols)).count() == 0, direction
-        assert plain.count() == salted.count() == 144
-
-
-def test_asof_salted_spreads_hot_key(spark):
-    """Planted 90%-skew key over 20 days: the salted as-of's big-side
-    window must partition on (key, segment), and the largest (key,
-    segment) task must stay far below the hot key's row total."""
-    from stock_streaming_data_pipeline_spark.operators import asof
-
-    base_epoch = int(dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc).timestamp())
-    n = 10_000
-    left = spark.range(n).select(
-        F.col("id").alias("lid"),
-        F.when(F.col("id") % 10 != 0, F.lit(7))
-        .otherwise(F.col("id") % 100).cast("long").alias("k"),
-        F.timestamp_seconds(
-            F.lit(base_epoch) + F.col("id") * 173 % (86400 * 20)
-        ).alias("ts"),
-    )
-    right = spark.range(200).select(
-        F.col("id").alias("rid"),
-        (F.col("id") % 100).cast("long").alias("k"),
-        F.timestamp_seconds(
-            F.lit(base_epoch) + F.col("id") * 9973 % (86400 * 20)
-        ).alias("ts"),
-        (F.col("id") * 2).cast("double").alias("px"),
-    )
-    out = asof.asof_join_salted(
-        left, right, by="k", on="ts", right_values=["rid", "px"]
-    )
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "hashpartitioning(k" in plan
-    assert "_seg" in plan.split("hashpartitioning(k", 1)[1][:80]
-    seg_max = (
-        left.withColumn("_seg", F.to_date("ts"))
-        .groupBy("k", "_seg").count().agg(F.max("count")).collect()[0][0]
-    )
-    hot_total = left.filter(F.col("k") == 7).count()
-    assert hot_total >= 0.89 * n
-    assert seg_max <= hot_total / 10
-    # spot-check correctness against the plain form on the hot key
-    plain = asof.asof_join(
-        left, right, by="k", on="ts", right_values=["rid", "px"]
-    )
-    cols = ["lid", "asof_rid", "asof_px"]
-    a = plain.filter(F.col("k") == 7).select(cols)
-    b = out.filter(F.col("k") == 7).select(cols)
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
 
 
 def test_concurrent_committers_never_lose_a_commit(spark, tmp_path):

@@ -745,7 +745,9 @@ def main(argv: list[str]) -> int:
     from stock_streaming_data_pipeline_spark.session import get_spark
     from stock_streaming_data_pipeline_spark.tables import duck_glob, load_table
 
-    spark = get_spark("fuzz-differential", shuffle_partitions=8)
+    spark = get_spark(
+        "fuzz-differential", extra_conf={"spark.sql.shuffle.partitions": "8"}
+    )
     con = duckdb.connect()
     for t in TABLES:
         load_table(spark, sf_dir, t).createOrReplaceTempView(t)

@@ -494,7 +494,7 @@ def main(argv: list[str]) -> int:
     from stock_streaming_data_pipeline_spark.plans import catalog
     from stock_streaming_data_pipeline_spark.session import get_spark
 
-    spark = get_spark("plan-lint", shuffle_partitions=8)
+    spark = get_spark("plan-lint", extra_conf={"spark.sql.shuffle.partitions": "8"})
     wanted = set(argv) or None
     cat = catalog.catalog()
     all_findings: list[str] = []

@@ -28,11 +28,7 @@ Probes, each min-of-two passes after a warm-up:
 Round-7 additions (verdict item #6 — the join-shaped operators that
 claim hot-key safety in their docstrings):
 
-3. AS-OF JOIN SKEW — `asof_join` (single carry-forward window per key)
-   vs `asof_join_salted` (two-phase segmented carry), result-equality
-   asserted on the matched right-row ids.
-
-4. INTERVAL-JOIN SKEW — the attribution_linear shape (equi on the hot
+3. INTERVAL-JOIN SKEW — the attribution_linear shape (equi on the hot
    key + time-range residual inside the sort-merge join), AQE skew
    split on vs off, `skew=true` marker required in the final plan.
 
@@ -201,60 +197,6 @@ def main() -> int:
         report["join_skew_off_sec"] / max(report["join_skew_on_sec"], 1e-9), 2
     )
 
-    # ---- as-of join skew: plain single-window vs segmented carry -----
-    # (round-7 verdict item #6: asof_join claims hot-key safety in its
-    # docstring; measure it. Right side = sparse per-user quotes.)
-    from stock_streaming_data_pipeline_spark.operators.asof import (
-        asof_join,
-        asof_join_salted,
-    )
-
-    right = (
-        ev.filter(F.col("event_id") % 97 == 0)
-        .select(
-            F.col("event_id").alias("rid"),
-            "user_id",
-            "ts",
-            F.col("value").alias("px"),
-        )
-    )
-
-    def asof_plain():
-        return asof_join(
-            ev.select("event_id", "user_id", "ts"), right,
-            by="user_id", on="ts", right_values=["rid", "px"],
-        )
-
-    def asof_salted():
-        return asof_join_salted(
-            ev.select("event_id", "user_id", "ts"), right,
-            by="user_id", on="ts", right_values=["rid", "px"],
-        )
-
-    timed(asof_plain, passes=1)  # warm-up
-    report["asof_plain_sec"] = timed(asof_plain)
-    report["asof_salted_sec"] = timed(asof_salted)
-    report["asof_speedup"] = round(
-        report["asof_plain_sec"] / max(report["asof_salted_sec"], 1e-9), 2
-    )
-    asof_diff = (
-        asof_plain()
-        .select("event_id", "asof_rid")
-        .join(
-            asof_salted().select(
-                "event_id", F.col("asof_rid").alias("asof_rid2")
-            ),
-            "event_id",
-        )
-        .filter(
-            ~(
-                F.col("asof_rid").eqNullSafe(F.col("asof_rid2"))
-            )
-        )
-        .count()
-    )
-    report["asof_salted_equals_plain"] = asof_diff == 0
-
     # ---- interval-join skew: the attribution_linear shape ------------
     # equi on the zipf key + time-range residual inside the sort-merge
     # join; AQE skew split on/off. Purchases are a sampled slice so the
@@ -339,8 +281,7 @@ def main() -> int:
     with open(out_path, "w") as fh:
         json.dump({"skew_probe": report}, fh, indent=2)
     print(json.dumps({"skew_probe": report}))
-    ok = report["salted_equals_plain"] and report["asof_salted_equals_plain"]
-    return 0 if ok else 1
+    return 0 if report["salted_equals_plain"] else 1
 
 
 if __name__ == "__main__":

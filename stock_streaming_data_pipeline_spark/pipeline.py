@@ -110,16 +110,16 @@ class StockPipeline:
         (the predictor-consumer view, BtcPrediction/kafka.py:13)."""
         from pyspark.sql import functions as F
 
-        raw = self.spark.read.schema(KAFKA_SHAPED_SCHEMA).parquet(
-            self._path("btc_features")
+        raw = sinks.read_file_sink(
+            self.spark, self._path("btc_features"), KAFKA_SHAPED_SCHEMA
         )
         return raw.select(
             F.from_json("value", FEATURE_SCHEMA).alias("v")
         ).select("v.*")
 
     def feature_store(self) -> DataFrame:
-        return self.spark.read.schema(_FEATURE_STORE_SCHEMA).parquet(
-            self._path("feature_store")
+        return sinks.read_file_sink(
+            self.spark, self._path("feature_store"), _FEATURE_STORE_SCHEMA
         )
 
     def compact(self) -> None:

@@ -16,6 +16,8 @@ import re
 
 from pyspark.sql import SparkSession
 
+from stock_streaming_data_pipeline_spark import jvm_archive
+
 # Configs that matter at 100 TB and are safe at test scale. Notes:
 # - AQE subsumes hand-tuned shuffle partition counts and handles skewed
 #   join keys (salting is still applied in operators that self-join on
@@ -142,7 +144,9 @@ def get_spark(
     *,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or reuse) a SparkSession with the engine's defaults.
+    """Build (or reuse) a SparkSession with the engine's defaults. A
+    launch of the gateway JVM starts it from the class-data archive that
+    ``jvm_archive`` builds and validates.
 
     When the driver hands us an existing session (``__spark_entry__.entry``),
     we do NOT rebuild it — ``configure_session`` applies the runtime-settable
@@ -155,9 +159,10 @@ def get_spark(
     conf.setdefault("spark.driver.memory", _driver_memory())
     if extra_conf:
         conf.update(extra_conf)
-    for k, v in conf.items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    with jvm_archive.launching(conf):
+        for k, v in conf.items():
+            builder = builder.config(k, v)
+        spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
 

@@ -33,9 +33,11 @@ from __future__ import annotations
 import json
 import os
 import re
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 def _hadoop_fs(spark: SparkSession, path: str):
@@ -87,6 +89,15 @@ def _manifest_dir(path: str) -> str:
     return path.rstrip("/") + "/_manifests"
 
 
+def _read_text(spark: SparkSession, fs, hpath) -> str:
+    """One small file's text through the Hadoop FS (no Spark job)."""
+    stream = fs.open(hpath)
+    try:
+        return spark._jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
+    finally:
+        stream.close()
+
+
 def _read_manifest_doc(spark: SparkSession, fs, mfile: str):
     """Parse one manifest through the Hadoop FS stream (no Spark job for
     a tiny JSON — manifest reads happen once per micro-batch). Returns
@@ -95,13 +106,8 @@ def _read_manifest_doc(spark: SparkSession, fs, mfile: str):
     write, so a reader racing the commit (or surviving a writer crash
     between create and write) can observe an in-flight manifest — which
     is, by the protocol's own semantics, not yet committed."""
-    jvm = spark._jvm
     try:
-        stream = fs.open(jvm.org.apache.hadoop.fs.Path(mfile))
-        try:
-            raw = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-        finally:
-            stream.close()
+        raw = _read_text(spark, fs, spark._jvm.org.apache.hadoop.fs.Path(mfile))
     except Exception:
         # open/read failure on a listed manifest = in-flight or torn
         # (e.g. the checksummed local FS rejects a mid-write read, S3
@@ -446,6 +452,68 @@ def read_changes(
         .when(F.col("_existed"), F.lit("update"))
         .otherwise(F.lit("insert")),
     ).drop("_existed", "_deleted")
+
+
+# ---------------------------------------------------------------------------
+# File sink (btc_features, feature_store)
+#
+# Spark's file sink commits each batch's files to `_spark_metadata/<batch>`
+# (every tenth batch rewrites the whole list as `<batch>.compact`). Each
+# entry stores the file's absolute URI at write time, so Spark's own reader
+# of the directory fails once it is moved or copied.
+# ---------------------------------------------------------------------------
+
+_SINK_LOG_RE = re.compile(r"(\d+)(\.compact)?")
+
+
+def _sink_log_files(spark: SparkSession, path: str) -> list[str] | None:
+    """The URIs the sink log at ``path`` lists as committed (the latest
+    compact file plus the later batches), or None without a log."""
+    fs, _ = _hadoop_fs(spark, path)
+    log = spark._jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + "/_spark_metadata")
+    if not fs.exists(log):
+        return None
+    batches = {}
+    for st in fs.listStatus(log):
+        m = _SINK_LOG_RE.fullmatch(st.getPath().getName())
+        if m:
+            batches[int(m.group(1))] = (bool(m.group(2)), st.getPath())
+    first = max((b for b, (compact, _) in batches.items() if compact), default=0)
+    files: dict[str, None] = {}
+    for batch in sorted(b for b in batches if b >= first):
+        # line 1 is the log version; then one JSON entry per file
+        for line in _read_text(spark, fs, batches[batch][1]).splitlines()[1:]:
+            entry = json.loads(line)
+            if entry.get("action") == "delete":
+                files.pop(entry["path"], None)
+            else:
+                files[entry["path"]] = None
+    return list(files)
+
+
+def read_file_sink(spark: SparkSession, path: str, schema: str) -> DataFrame:
+    """Read a file sink's output directory wherever it lives now: exactly
+    the files its log committed, each rebased from its logged location
+    onto ``path`` (the file name below the partition directories named by
+    ``schema``'s columns), with partitions discovered below ``path``.
+    Without a log, the directory is read as plain parquet."""
+    reader = spark.read.schema(schema)
+    logged = _sink_log_files(spark, path)
+    if logged is None:
+        return reader.parquet(path)
+    columns = set(StructType.fromDDL(schema).fieldNames())
+    base = path.rstrip("/")
+    files = []
+    for uri in logged:
+        parts = unquote(urlparse(uri).path).split("/")
+        keep = 1  # the file name, then each partition directory above it
+        while len(parts) > keep + 1:
+            column, eq, _ = parts[-keep - 1].partition("=")
+            if not (eq and column in columns):
+                break
+            keep += 1
+        files.append("/".join([base, *parts[-keep:]]))
+    return reader.option("basePath", base).parquet(*files)
 
 
 def kafka_shaped(df: DataFrame, *, key: str, value_struct: list[str]) -> DataFrame:

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -105,3 +107,28 @@ def test_feature_reads_plan_without_a_job(spark, tmp_path):
             ), table
     finally:
         pipe.stop()
+
+
+def test_feature_reads_follow_a_moved_output_directory(spark, tmp_path):
+    """A file sink's log lists absolute paths, so Spark's own reader of a
+    moved sink directory fails. After the drained output directory is
+    moved, the pipeline's reads over the new location return the same
+    features and feature-store rows."""
+    src = str(tmp_path / "trades")
+    write_trades_dir(spark, src, files=2, n_rows=1000)
+    pipe = StockPipeline(
+        source_dir=src, out_dir=str(tmp_path / "out"), spark=spark
+    ).run()
+    try:
+        feats = sorted(map(tuple, pipe.features().collect()))
+        store = sorted(map(tuple, pipe.feature_store().collect()))
+    finally:
+        pipe.stop()
+    assert feats and store
+
+    os.rename(tmp_path / "out", tmp_path / "moved")
+    pipe.fan.out_dir = str(tmp_path / "moved")
+    assert sorted(map(tuple, pipe.features().collect())) == feats
+    assert sorted(map(tuple, pipe.feature_store().collect())) == store
+    with pytest.raises(Exception, match="FileNotFound|does not exist|PATH_NOT_FOUND"):
+        spark.read.parquet(pipe.fan.path("feature_store")).collect()

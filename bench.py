@@ -155,8 +155,8 @@ def _streaming_block(spark) -> dict:
             "wall_s": drain["wall_s"],
             "rows_per_sec": round(rows / drain["wall_s"], 1),
             # Probes sampled around the DRAIN window specifically. The
-            # round-11 interleaved adjudication (SCALE.md, tools/
-            # adjudicate_perf.py) found NO in-guest probe predicts the
+            # round-11 interleaved adjudication (SCALE.md, "Round-11
+            # adjudication") found NO in-guest probe predicts the
             # between-rounds drain level — same-session repeats are
             # tight (±3%) while r9→r10→r11 swung 170.6k→108.6k→~149k
             # at quiet steal/spin/throttle/page-cache every time — so

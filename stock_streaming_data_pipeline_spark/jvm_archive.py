@@ -105,8 +105,7 @@ def launching(conf: dict[str, str]) -> Iterator[None]:
     if launch is None:
         yield
         return
-    options = conf.get("spark.driver.defaultJavaOptions")
-    conf["spark.driver.defaultJavaOptions"] = " ".join(filter(None, (launch.java_options, options)))
+    prepend_java_options(conf, launch.java_options)
     os.environ["SPARK_CONF_DIR"] = launch.conf_dir
     try:
         yield
@@ -116,6 +115,14 @@ def launching(conf: dict[str, str]) -> Iterator[None]:
     finally:
         del os.environ["SPARK_CONF_DIR"]
     launch.started()
+
+
+def prepend_java_options(conf: dict[str, str], options: str) -> None:
+    """Put ``options`` first in ``conf``'s ``spark.driver.defaultJavaOptions``.
+    Spark puts ``extraJavaOptions`` after it, and the JVM takes the last
+    value of a flag, so the caller's own flags win."""
+    rest = conf.get("spark.driver.defaultJavaOptions")
+    conf["spark.driver.defaultJavaOptions"] = " ".join(filter(None, (options, rest)))
 
 
 def plan(conf: dict[str, str]) -> _Launch | None:

@@ -40,7 +40,9 @@ checkpoint paths (:128,137,178,190).
 from __future__ import annotations
 
 import os
+import posixpath
 from dataclasses import dataclass, field
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -114,6 +116,25 @@ def derive_features(trades: DataFrame, *, window: str, slide: str, watermark: st
     )
 
 
+def _refuse_moved(fan: FanOut, spark) -> None:
+    """Raise RuntimeError when btc_features' sink log or q4's source log
+    lists btc_features files outside ``fan.path("btc_features")``."""
+    fs, features = sinks._hadoop_fs(spark, fan.path("btc_features"))
+    here = fs.makeQualified(features).toUri().getPath().rstrip("/")
+    for log in (fan.path("btc_features/_spark_metadata"), fan.path("_chk/feature_store/sources/0")):
+        for uri in sinks.logged_files(spark, log) or []:
+            logged = posixpath.dirname(unquote(urlparse(uri).path))
+            if logged != here:
+                raise RuntimeError(
+                    f"{log} lists btc_features files in {logged}, not in "
+                    f"{here}: {fan.out_dir} was moved from "
+                    f"{posixpath.dirname(logged)}, and Spark's file logs hold "
+                    "absolute paths, so the fan-out cannot resume here. Move "
+                    "the directory back to resume it; its outputs can be read "
+                    "where they are."
+                )
+
+
 def start_fanout(
     trades: DataFrame,
     out_dir: str,
@@ -139,7 +160,10 @@ def start_fanout(
 
     Raises RuntimeError, starting nothing, when ``out_dir/_chk/store``
     exists: that is the checkpoint of the stateful feature_store query that
-    aggregated the trade stream itself, before q4 read btc_features.
+    aggregated the trade stream itself, before q4 read btc_features. Also
+    when ``out_dir`` was moved: btc_features' sink log and q4's source log
+    name its files by absolute path, so q4 could not resume from the new
+    location (``StockPipeline``'s reads still work there).
     """
     fan = FanOut(out_dir)
     legacy = fan.path("_chk/store")
@@ -153,6 +177,7 @@ def start_fanout(
             f"{fan.path('feature_store')} and {legacy} aside: feature_store "
             "then rebuilds the store from btc_features' history."
         )
+    _refuse_moved(fan, trades.sparkSession)
 
     def trigger(writer, processing_time: str):
         if available_now:

@@ -466,11 +466,12 @@ def read_changes(
 _SINK_LOG_RE = re.compile(r"(\d+)(\.compact)?")
 
 
-def _sink_log_files(spark: SparkSession, path: str) -> list[str] | None:
-    """The URIs the sink log at ``path`` lists as committed (the latest
-    compact file plus the later batches), or None without a log."""
-    fs, _ = _hadoop_fs(spark, path)
-    log = spark._jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + "/_spark_metadata")
+def logged_files(spark: SparkSession, log_dir: str) -> list[str] | None:
+    """The file URIs a Spark file log lists (the latest compact file plus
+    the later batches), or None without a log: a file sink's
+    ``<path>/_spark_metadata`` or a file source's ``sources/<n>`` in its
+    query's checkpoint. Both store each file's absolute URI."""
+    fs, log = _hadoop_fs(spark, log_dir)
     if not fs.exists(log):
         return None
     batches = {}
@@ -498,7 +499,7 @@ def read_file_sink(spark: SparkSession, path: str, schema: str) -> DataFrame:
     ``schema``'s columns), with partitions discovered below ``path``.
     Without a log, the directory is read as plain parquet."""
     reader = spark.read.schema(schema)
-    logged = _sink_log_files(spark, path)
+    logged = logged_files(spark, path.rstrip("/") + "/_spark_metadata")
     if logged is None:
         return reader.parquet(path)
     columns = set(StructType.fromDDL(schema).fieldNames())

@@ -206,10 +206,13 @@ def exited_dump(classpath):
         json.dump({"pid": 0, "start": None, "classpath": classpath, "heap": "64m"}, fh)
 
 
-def session():
+def session(java_options=""):
     before = dict(os.environ)
     spark = get_spark("archive-e2e", extra_conf={
-        "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={tmpdir}"})
+        "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={tmpdir} {java_options}"})
+    jvm = spark._jvm
+    vm = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+        jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean"))
     changed = sorted(k for k in {*before, *os.environ} if before.get(k) != os.environ.get(k))
     df = spark.range(200).selectExpr("id % 7 AS k", "id").groupBy("k").sum("id")
     print(json.dumps({
@@ -217,6 +220,9 @@ def session():
         "tmpdir": spark._jvm.java.lang.System.getProperty("java.io.tmpdir"),
         "options": spark.sparkContext.getConf().get("spark.driver.defaultJavaOptions"),
         "env": changed,
+        "tier4": {name: vm.getVMOption(name).getValue() for name in (
+            "Tier4InvocationThreshold", "Tier4MinInvocationThreshold",
+            "Tier4CompileThreshold", "Tier4BackEdgeThreshold")},
     }))
     spark.stop()
     gateway = SparkContext._gateway
@@ -239,9 +245,16 @@ os.chmod(key + ".jsa", 0o644)
 with open(key + ".jsa", "r+b") as fh:
     fh.seek(os.path.getsize(key + ".jsa") // 2)
     fh.write(b"\xff" * 64)
-session()
+session("-XX:Tier4InvocationThreshold=7000")
 """
 
+# C2 thresholds every get_spark JVM runs with: 3x JDK 17's defaults.
+_TIER4 = {
+    "Tier4InvocationThreshold": "15000",
+    "Tier4MinInvocationThreshold": "1800",
+    "Tier4CompileThreshold": "45000",
+    "Tier4BackEdgeThreshold": "120000",
+}
 # PySpark's SparkContext sets these itself on its first start.
 _PYSPARK_ENV = {"SPARK_AUTH_SOCKET_TIMEOUT", "SPARK_BUFFER_SIZE"}
 
@@ -251,7 +264,10 @@ def test_sessions_start_whatever_the_cache_holds(tmp_path):
     a truncated part (it launches a dump), a launch that promotes and
     maps an archive made for its classpath, and a launch over that
     archive corrupted. Each returns the rows, keeps the caller's
-    -Djava.io.tmpdir and leaves os.environ as it found it."""
+    -Djava.io.tmpdir, runs with the engine's C2 thresholds and leaves
+    os.environ as it found it. The last one's caller sets
+    -XX:Tier4InvocationThreshold in extraJavaOptions, and that value
+    wins."""
     cache = tmp_path / "jvm"
     tmpdir = tmp_path / "java-tmp"
     tmpdir.mkdir()
@@ -273,6 +289,8 @@ def test_sessions_start_whatever_the_cache_holds(tmp_path):
         assert run["rows"] == want
         assert run["tmpdir"] == str(tmpdir)
         assert set(run["env"]) <= _PYSPARK_ENV
+    assert truncated["tier4"] == mapped["tier4"] == _TIER4
+    assert corrupt["tier4"] == {**_TIER4, "Tier4InvocationThreshold": "7000"}
     assert not list(tmp_path.glob("hs_err_pid*"))
 
 

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -132,3 +133,25 @@ def test_feature_reads_follow_a_moved_output_directory(spark, tmp_path):
     assert sorted(map(tuple, pipe.feature_store().collect())) == store
     with pytest.raises(Exception, match="FileNotFound|does not exist|PATH_NOT_FOUND"):
         spark.read.parquet(pipe.fan.path("feature_store")).collect()
+
+
+def test_moved_output_directory_is_refused_on_restart(spark, tmp_path):
+    """Resuming a drained output directory from a new location would fail
+    inside q4's file source, whose log and btc_features' sink log name
+    files by absolute path. The restart raises first, naming the move,
+    and starts no query; moved back, the pipeline resumes."""
+    src = str(tmp_path / "trades")
+    write_trades_dir(spark, src, files=2, n_rows=1000)
+    out, moved = tmp_path / "out", tmp_path / "moved"
+    StockPipeline(source_dir=src, out_dir=str(out), spark=spark).run().stop()
+
+    os.rename(out, moved)
+    refused = f"{re.escape(str(moved))} was moved from {re.escape(str(out))}, .* Move the directory back"
+    with pytest.raises(RuntimeError, match=refused):
+        StockPipeline(source_dir=src, out_dir=str(moved), spark=spark).run()
+    assert spark.streams.active == []
+
+    os.rename(moved, out)
+    pipe = StockPipeline(source_dir=src, out_dir=str(out), spark=spark).run()
+    pipe.stop()
+    assert pipe.features().count() > 0

@@ -1,16 +1,18 @@
-"""Pure-stdlib baseline JPEG codec (grayscale, sequential DCT).
+"""Pure-stdlib JPEG codec (baseline and progressive DCT).
 
 The image tier's third real codec next to PNG (operators/png_codec.py)
 and WAV (operators/wav_codec.py): encode = level-shift → 8×8 float DCT →
 quantize → zigzag → DC-differential + run-length AC → canonical Huffman
-entropy coding with byte stuffing; decode = the exact inverse marker
-walk (SOI/DQT/SOF0/DHT/SOS/EOI), Huffman bit reader, dequant, IDCT,
-clamp. No PIL/libjpeg — the container framing, entropy coding, and
-transform arithmetic are all implemented here from the public JPEG
-spec (ITU T.81 baseline), so executors need only the stdlib.
+entropy coding with byte stuffing; decode (:func:`decode_jpeg`, one
+decoder for every supported stream) = one marker walk
+(SOI/DQT/SOF0|SOF2/DHT/DRI/SOS.../EOI), Huffman bit reader, per-scan
+coefficient accumulation, dequant, IDCT, clamp. No PIL/libjpeg — the
+container framing, entropy coding, and transform arithmetic are all
+implemented here from the public JPEG spec (ITU T.81), so executors
+need only the stdlib.
 
-Scope (honest): baseline sequential (SOF0) only — single-component
-8-bit grayscale, and 3-component YCbCr color in 4:2:0 (the dominant
+Scope (honest): baseline sequential (SOF0) single-component 8-bit
+grayscale, and 3-component YCbCr color in 4:2:0 (the dominant
 real-world shape), 4:2:2 or 4:4:4, all with optional DRI/RSTn restart
 markers, plus PROGRESSIVE (SOF2) grayscale and 4:4:4 color; other
 samplings (4:4:0 etc.) raise.
@@ -189,6 +191,23 @@ class _BitReader:
             v = (v << 1) | self.read_bit()
         return v
 
+    def read_symbol(self, table: dict) -> int:
+        """One Huffman symbol, via a table from _decode_huffman_dht."""
+        code = 0
+        for length in range(1, 17):
+            code = (code << 1) | self.read_bit()
+            sym = table.get((length, code))
+            if sym is not None:
+                return sym
+        raise ValueError("jpeg: invalid huffman code")
+
+    def receive_extend(self, cat: int) -> int:
+        """The signed value of a ``cat``-bit magnitude (T.81 F.2.2.1)."""
+        bits = self.read_bits(cat)
+        if cat and bits < (1 << (cat - 1)):
+            return bits - (1 << cat) + 1
+        return bits
+
     def expect_restart(self, m: int) -> None:
         """Discard the current byte's padding bits, then consume the
         expected RSTm marker (raw FF D0+m, outside the stuffing layer)."""
@@ -213,14 +232,6 @@ def _magnitude(v: int) -> tuple[int, int]:
     cat = a.bit_length()
     bits = v if v > 0 else v + (1 << cat) - 1
     return cat, bits
-
-
-def _extend(bits: int, cat: int) -> int:
-    if cat == 0:
-        return 0
-    if bits < (1 << (cat - 1)):
-        return bits - (1 << cat) + 1
-    return bits
 
 
 def reference_transform(pixels: bytes, width: int, height: int) -> bytes:
@@ -439,137 +450,14 @@ def _decode_huffman_dht(seg: bytes) -> dict[int, dict]:
         pos += 16
         n = sum(bits)
         symbols = list(seg[pos : pos + n])
+        if len(bits) < 16 or len(symbols) < n:
+            raise ValueError("jpeg: truncated DHT")
         pos += n
         codes = _canonical_codes(bits, symbols)
         # invert: (length, code) -> symbol for the bit reader
         lookup = {(ln, code): sym for sym, (code, ln) in codes.items()}
         tables[tc_th] = lookup
     return tables
-
-
-def decode_jpeg(data: bytes):
-    """(width, height, pixels bytes) from a baseline grayscale JPEG."""
-    if data[:2] != b"\xff\xd8":
-        raise ValueError("jpeg: missing SOI")
-    pos = 2
-    quant: dict[int, list[int]] = {}
-    huff: dict[int, dict] = {}
-    width = height = 0
-    comp_qtab = 0
-    restart_interval = 0
-    scan_start = None
-    while pos < len(data):
-        if data[pos] != 0xFF:
-            raise ValueError(f"jpeg: expected marker at {pos}")
-        marker = data[pos + 1]
-        pos += 2
-        if marker == 0xD9:  # EOI
-            break
-        if marker in (0x01,) or 0xD0 <= marker <= 0xD7:
-            continue  # standalone
-        (seglen,) = struct.unpack(">H", data[pos : pos + 2])
-        seg = data[pos + 2 : pos + seglen]
-        if marker == 0xDB:  # DQT
-            p = 0
-            while p < len(seg):
-                pq_tq = seg[p]
-                if pq_tq >> 4:
-                    raise ValueError("jpeg: 16-bit quant tables unsupported")
-                zz = list(seg[p + 1 : p + 65])
-                tab = [0] * 64
-                for z, (r, c) in enumerate(ZIGZAG):
-                    tab[r * 8 + c] = zz[z]
-                quant[pq_tq & 0xF] = tab
-                p += 65
-        elif marker == 0xC0:  # SOF0 baseline
-            precision, height, width, ncomp = struct.unpack(">BHHB", seg[:6])
-            if precision != 8:
-                raise ValueError("jpeg: only 8-bit precision supported")
-            if ncomp != 1:
-                raise ValueError("jpeg: only single-component (grayscale) supported")
-            cid, sampling, comp_qtab = struct.unpack(">BBB", seg[6:9])
-            if sampling != 0x11:
-                raise ValueError("jpeg: subsampling unsupported")
-        elif marker in (0xC1, 0xC2, 0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB):
-            raise ValueError("jpeg: only baseline sequential (SOF0) supported")
-        elif marker == 0xC4:  # DHT
-            huff.update(_decode_huffman_dht(seg))
-        elif marker == 0xDD:  # DRI
-            (restart_interval,) = struct.unpack(">H", seg[:2])
-        elif marker == 0xDA:  # SOS
-            scan_start = pos + seglen
-            pos = scan_start
-            break
-        pos += seglen
-    if scan_start is None or not width or not height:
-        raise ValueError("jpeg: missing SOS/SOF0")
-    if width % 8 or height % 8:
-        raise ValueError("jpeg: non-multiple-of-8 dimensions unsupported")
-
-    # locate EOI (scan bytes are stuffed, so a bare FF D9 terminates)
-    end = data.find(b"\xff\xd9", scan_start)
-    if end < 0:
-        raise ValueError("jpeg: missing EOI")
-    dc_tab = huff.get(0x00)
-    ac_tab = huff.get(0x10)
-    qtab = quant.get(comp_qtab)
-    if dc_tab is None or ac_tab is None or qtab is None:
-        raise ValueError("jpeg: missing tables")
-
-    r = _BitReader(data[scan_start:end])
-
-    def read_symbol(table: dict) -> int:
-        code = 0
-        for length in range(1, 17):
-            code = (code << 1) | r.read_bit()
-            sym = table.get((length, code))
-            if sym is not None:
-                return sym
-        raise ValueError("jpeg: invalid huffman code")
-
-    C = DCT_BASIS
-    pixels = bytearray(width * height)
-    prev_dc = 0
-    mcu = 0
-    for by in range(0, height, 8):
-        for bx in range(0, width, 8):
-            if restart_interval and mcu and mcu % restart_interval == 0:
-                r.expect_restart((mcu // restart_interval - 1) % 8)
-                prev_dc = 0
-            mcu += 1
-            zz = [0] * 64
-            cat = read_symbol(dc_tab)
-            diff = _extend(r.read_bits(cat), cat) if cat else 0
-            prev_dc += diff
-            zz[0] = prev_dc
-            z = 1
-            while z < 64:
-                sym = read_symbol(ac_tab)
-                if sym == 0x00:  # EOB
-                    break
-                if sym == 0xF0:  # ZRL
-                    z += 16
-                    continue
-                run, cat = sym >> 4, sym & 0xF
-                z += run
-                if z > 63:
-                    raise ValueError("jpeg: AC run overflow")
-                zz[z] = _extend(r.read_bits(cat), cat)
-                z += 1
-            Q = [[0.0] * 8 for _ in range(8)]
-            for z2, (rr, cc) in enumerate(ZIGZAG):
-                Q[rr][cc] = float(zz[z2] * qtab[rr * 8 + cc])
-            T2 = [
-                [sum(C[u][i] * Q[u][j] for u in range(8)) for j in range(8)]
-                for i in range(8)
-            ]
-            for rr in range(8):
-                for cc in range(8):
-                    x = sum(T2[rr][j] * C[j][cc] for j in range(8)) + 128.0
-                    pixels[(by + rr) * width + bx + cc] = min(
-                        255, max(0, _round_half_up(x))
-                    )
-    return width, height, bytes(pixels)
 
 
 # ---------------------------------------------------------------------------
@@ -857,166 +745,6 @@ def encode_jpeg_color(
     return bytes(out)
 
 
-def decode_jpeg_color(data: bytes):
-    """(width, height, interleaved RGB bytes) from a baseline 4:2:0
-    YCbCr JPEG (the encode_jpeg_color layout: SOF0, 3 components, Y
-    sampled 2x2, shared-or-separate Huffman tables). Grayscale streams
-    belong to decode_jpeg; other samplings/progressive raise."""
-    if data[:2] != b"\xff\xd8":
-        raise ValueError("jpeg: missing SOI")
-    pos = 2
-    quant: dict[int, list[int]] = {}
-    huff: dict[int, dict] = {}
-    width = height = 0
-    restart_interval = 0
-    comp_spec: list[tuple[int, int, int]] = []  # (cid, sampling, qtab id)
-    scan_tabs: dict[int, tuple[int, int]] = {}  # cid -> (dc table, ac table)
-    scan_start = None
-    while pos < len(data):
-        if data[pos] != 0xFF:
-            raise ValueError(f"jpeg: expected marker at {pos}")
-        marker = data[pos + 1]
-        pos += 2
-        if marker == 0xD9:
-            break
-        if marker in (0x01,) or 0xD0 <= marker <= 0xD7:
-            continue
-        (seglen,) = struct.unpack(">H", data[pos : pos + 2])
-        seg = data[pos + 2 : pos + seglen]
-        if marker == 0xDB:
-            p = 0
-            while p < len(seg):
-                pq_tq = seg[p]
-                if pq_tq >> 4:
-                    raise ValueError("jpeg: 16-bit quant tables unsupported")
-                zz = list(seg[p + 1 : p + 65])
-                tab = [0] * 64
-                for z, (r, c) in enumerate(ZIGZAG):
-                    tab[r * 8 + c] = zz[z]
-                quant[pq_tq & 0xF] = tab
-                p += 65
-        elif marker == 0xC0:
-            precision, height, width, ncomp = struct.unpack(">BHHB", seg[:6])
-            if precision != 8:
-                raise ValueError("jpeg: only 8-bit precision supported")
-            if ncomp != 3:
-                raise ValueError("jpeg color: expected 3 components")
-            for k in range(3):
-                cid, sampling, qid = struct.unpack(
-                    ">BBB", seg[6 + 3 * k : 9 + 3 * k]
-                )
-                comp_spec.append((cid, sampling, qid))
-            if [s for _, s, _ in comp_spec] not in (
-                [0x22, 0x11, 0x11],  # 4:2:0
-                [0x21, 0x11, 0x11],  # 4:2:2
-                [0x11, 0x11, 0x11],  # 4:4:4
-            ):
-                raise ValueError(
-                    "jpeg color: only 4:2:0 (2x2,1x1,1x1), 4:2:2 "
-                    "(2x1,1x1,1x1) or 4:4:4 (1x1,1x1,1x1) supported"
-                )
-        elif marker in (0xC1, 0xC2, 0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB):
-            raise ValueError("jpeg: only baseline sequential (SOF0) supported")
-        elif marker == 0xC4:
-            huff.update(_decode_huffman_dht(seg))
-        elif marker == 0xDD:  # DRI
-            (restart_interval,) = struct.unpack(">H", seg[:2])
-        elif marker == 0xDA:
-            ns = seg[0]
-            if ns != 3:
-                raise ValueError("jpeg color: expected 3-component scan")
-            for k in range(3):
-                cid, tdta = seg[1 + 2 * k], seg[2 + 2 * k]
-                scan_tabs[cid] = (tdta >> 4, tdta & 0xF)
-            scan_start = pos + seglen
-            pos = scan_start
-            break
-        pos += seglen
-    if scan_start is None or not width or not height:
-        raise ValueError("jpeg: missing SOS/SOF0")
-    hdiv, vdiv = comp_spec[0][1] >> 4, comp_spec[0][1] & 0xF
-    mcu_w, mcu_h = 8 * hdiv, 8 * vdiv
-    if width % mcu_w or height % mcu_h:
-        raise ValueError(
-            f"jpeg color: non-multiple-of-{mcu_w}x{mcu_h} dimensions "
-            "unsupported"
-        )
-
-    end = data.find(b"\xff\xd9", scan_start)
-    if end < 0:
-        raise ValueError("jpeg: missing EOI")
-    r = _BitReader(data[scan_start:end])
-
-    def read_symbol(table: dict) -> int:
-        code = 0
-        for length in range(1, 17):
-            code = (code << 1) | r.read_bit()
-            sym = table.get((length, code))
-            if sym is not None:
-                return sym
-        raise ValueError("jpeg: invalid huffman code")
-
-    def read_block(dc_tab, ac_tab, prev_dc: int) -> tuple[list[int], int]:
-        zz = [0] * 64
-        cat = read_symbol(dc_tab)
-        diff = _extend(r.read_bits(cat), cat) if cat else 0
-        dc = prev_dc + diff
-        zz[0] = dc
-        z = 1
-        while z < 64:
-            sym = read_symbol(ac_tab)
-            if sym == 0x00:
-                break
-            if sym == 0xF0:
-                z += 16
-                continue
-            run, cat = sym >> 4, sym & 0xF
-            z += run
-            if z > 63:
-                raise ValueError("jpeg: AC run overflow")
-            zz[z] = _extend(r.read_bits(cat), cat)
-            z += 1
-        return zz, dc
-
-    cw, chh = width // hdiv, height // vdiv
-    yp = [0] * (width * height)
-    cbp = [0] * (cw * chh)
-    crp = [0] * (cw * chh)
-    preds = {cid: 0 for cid, _, _ in comp_spec}
-    planes = {comp_spec[0][0]: (yp, width), comp_spec[1][0]: (cbp, cw),
-              comp_spec[2][0]: (crp, cw)}
-    yblocks = tuple((br, bc) for br in range(vdiv) for bc in range(hdiv))
-    mcu = 0
-    for my in range(0, height, mcu_h):
-        for mx in range(0, width, mcu_w):
-            if restart_interval and mcu and mcu % restart_interval == 0:
-                r.expect_restart((mcu // restart_interval - 1) % 8)
-                preds = {cid: 0 for cid in preds}
-            mcu += 1
-            for k, (cid, sampling, qid) in enumerate(comp_spec):
-                td, ta = scan_tabs[cid]
-                dc_tab, ac_tab = huff.get(td), huff.get(0x10 | ta)
-                qtab = quant.get(qid)
-                if dc_tab is None or ac_tab is None or qtab is None:
-                    raise ValueError("jpeg: missing tables")
-                plane, stride = planes[cid]
-                blocks = yblocks if k == 0 else ((0, 0),)
-                for br, bc in blocks:
-                    zz, preds[cid] = read_block(dc_tab, ac_tab, preds[cid])
-                    px = _inverse_block(zz, qtab)
-                    if k == 0:
-                        ox, oy = mx + 8 * bc, my + 8 * br
-                    else:
-                        ox, oy = mx // hdiv, my // vdiv
-                    for rr in range(8):
-                        for cc in range(8):
-                            plane[(oy + rr) * stride + ox + cc] = px[rr * 8 + cc]
-    sub_name = {(2, 2): "420", (2, 1): "422", (1, 1): "444"}[(hdiv, vdiv)]
-    return width, height, ycbcr_to_rgb_bytes(
-        yp, cbp, crp, width, height, subsampling=sub_name
-    )
-
-
 def sql_reference_stats_color(media_text_sql: str, *, table: str = "documents") -> str:
     """DuckDB oracle for the 16×16 4:2:0 color JPEG round-trip: replays
     :func:`reference_transform_color` relationally — interleaved RGB from
@@ -1025,7 +753,7 @@ def sql_reference_stats_color(media_text_sql: str, *, table: str = "documents") 
     the Annex-K.1 table, one 8×8 block per chroma channel against the
     Annex-K.2 table), replicated upsample, lattice inverse conversion —
     reduced to the channel-summed pixel statistics of
-    :func:`multimodal.jpeg_color_pixel_stats`. Entropy layer correctness
+    :func:`multimodal.jpeg_pixel_stats`. Entropy layer correctness
     is what the differential proves, exactly as in the grayscale oracle."""
     cvals = ",\n    ".join(
         f"({u}, {i}, {DCT_BASIS[u][i]!r})" for u in range(8) for i in range(8)
@@ -1486,12 +1214,10 @@ def encode_jpeg_gray_progressive(pixels: bytes, width: int, height: int) -> byte
     return bytes(out)
 
 
-def _decode_scan_dc_first(r, blocks, al: int, dc_tab, read_symbol) -> None:
+def _decode_scan_dc_first(r, blocks, al: int, dc_tab) -> None:
     prev = 0
     for blk in blocks:
-        cat = read_symbol(dc_tab)
-        diff = _extend(r.read_bits(cat), cat) if cat else 0
-        prev += diff
+        prev += r.receive_extend(r.read_symbol(dc_tab))
         blk[0] = prev << al
 
 
@@ -1502,32 +1228,37 @@ def _decode_scan_dc_refine(r, blocks, al: int) -> None:
             blk[0] |= 1 << al
 
 
-def _decode_scan_ac_first(r, blocks, ss, se, al, ac_tab, read_symbol) -> None:
+def _decode_ac_band(r, blk, ss: int, se: int, al: int, ac_tab) -> int:
+    """One block's AC coefficients ss..se at point transform al — the
+    whole 1..63 band at al=0 in a baseline scan. Returns how many of the
+    following blocks an EOBn symbol ends as well (0 for EOB0)."""
+    k = ss
+    while k <= se:
+        sym = r.read_symbol(ac_tab)
+        run, size = sym >> 4, sym & 0xF
+        if size == 0:
+            if run != 15:
+                return (1 << run) - 1 + r.read_bits(run)
+            k += 16  # ZRL
+            continue
+        k += run
+        if k > se:
+            raise ValueError("jpeg: AC run past band end")
+        blk[k] = r.receive_extend(size) << al
+        k += 1
+    return 0
+
+
+def _decode_scan_ac_first(r, blocks, ss, se, al, ac_tab) -> None:
     eobrun = 0
     for blk in blocks:
         if eobrun:
             eobrun -= 1
-            continue
-        k = ss
-        while k <= se:
-            sym = read_symbol(ac_tab)
-            run, size = sym >> 4, sym & 0xF
-            if size == 0:
-                if run != 15:
-                    eobrun = (1 << run) - 1
-                    if run:
-                        eobrun += r.read_bits(run)
-                    break
-                k += 16  # ZRL
-                continue
-            k += run
-            if k > se:
-                raise ValueError("jpeg: AC run past band end")
-            blk[k] = _extend(r.read_bits(size), size) << al
-            k += 1
+        else:
+            eobrun = _decode_ac_band(r, blk, ss, se, al, ac_tab)
 
 
-def _decode_scan_ac_refine(r, blocks, ss, se, al, ac_tab, read_symbol) -> None:
+def _decode_scan_ac_refine(r, blocks, ss, se, al, ac_tab) -> None:
     p1, m1 = 1 << al, -1 << al
 
     def correct(blk, k) -> None:
@@ -1539,7 +1270,7 @@ def _decode_scan_ac_refine(r, blocks, ss, se, al, ac_tab, read_symbol) -> None:
         k = ss
         if eobrun == 0:
             while k <= se:
-                sym = read_symbol(ac_tab)
+                sym = r.read_symbol(ac_tab)
                 run, size = sym >> 4, sym & 0xF
                 val = 0
                 if size == 0:
@@ -1570,144 +1301,6 @@ def _decode_scan_ac_refine(r, blocks, ss, se, al, ac_tab, read_symbol) -> None:
                     correct(blk, k)
                 k += 1
             eobrun -= 1
-
-
-def decode_jpeg_progressive(data: bytes):
-    """(width, height, pixels bytes) from a progressive (SOF2) grayscale
-    JPEG — accumulates coefficient bit-planes across scans, then one
-    dequant+IDCT pass."""
-    if data[:2] != b"\xff\xd8":
-        raise ValueError("jpeg: missing SOI")
-    pos = 2
-    quant: dict[int, list[int]] = {}
-    huff: dict[int, dict] = {}
-    width = height = 0
-    comp_qtab = 0
-    blocks: list[list[int]] | None = None
-    while pos < len(data):
-        if data[pos] != 0xFF:
-            raise ValueError(f"jpeg: expected marker at {pos}")
-        marker = data[pos + 1]
-        pos += 2
-        if marker == 0xD9:
-            break
-        if marker in (0x01,) or 0xD0 <= marker <= 0xD7:
-            continue
-        (seglen,) = struct.unpack(">H", data[pos : pos + 2])
-        seg = data[pos + 2 : pos + seglen]
-        if marker == 0xDB:
-            p = 0
-            while p < len(seg):
-                pq_tq = seg[p]
-                if pq_tq >> 4:
-                    raise ValueError("jpeg: 16-bit quant tables unsupported")
-                zz = list(seg[p + 1 : p + 65])
-                tab = [0] * 64
-                for z, (rr, cc) in enumerate(ZIGZAG):
-                    tab[rr * 8 + cc] = zz[z]
-                quant[pq_tq & 0xF] = tab
-                p += 65
-        elif marker == 0xC2:  # SOF2 progressive
-            precision, height, width, ncomp = struct.unpack(">BHHB", seg[:6])
-            if precision != 8:
-                raise ValueError("jpeg: only 8-bit precision supported")
-            if ncomp != 1:
-                raise ValueError(
-                    "jpeg: progressive decode supports single-component "
-                    "(grayscale) only"
-                )
-            _cid, sampling, comp_qtab = struct.unpack(">BBB", seg[6:9])
-            if sampling != 0x11:
-                raise ValueError("jpeg: subsampling unsupported")
-            if width % 8 or height % 8:
-                raise ValueError("jpeg: non-multiple-of-8 dimensions unsupported")
-            blocks = [[0] * 64 for _ in range((width // 8) * (height // 8))]
-        elif marker == 0xC0:
-            raise ValueError("jpeg: baseline stream — use decode_jpeg")
-        elif marker in (0xC1, 0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB):
-            raise ValueError("jpeg: unsupported SOF variant")
-        elif marker == 0xC4:
-            huff.update(_decode_huffman_dht(seg))
-        elif marker == 0xDD:
-            raise ValueError("jpeg: restart markers unsupported in progressive")
-        elif marker == 0xDA:
-            if blocks is None:
-                raise ValueError("jpeg: SOS before SOF2")
-            ns = seg[0]
-            if ns != 1:
-                raise ValueError("jpeg: one component per scan supported")
-            ss, se, ahal = struct.unpack(">BBB", seg[1 + 2 * ns :][:3])
-            ah, al = ahal >> 4, ahal & 0xF
-            scan_start = pos + seglen
-            # scan data runs to the next real (non-stuffed) marker
-            end = scan_start
-            while True:
-                end = data.find(b"\xff", end)
-                if end < 0:
-                    raise ValueError("jpeg: unterminated scan")
-                if data[end + 1] != 0x00:
-                    break
-                end += 2
-            r = _BitReader(data[scan_start:end])
-
-            def read_symbol(table: dict) -> int:
-                code = 0
-                for length in range(1, 17):
-                    code = (code << 1) | r.read_bit()
-                    sym = table.get((length, code))
-                    if sym is not None:
-                        return sym
-                raise ValueError("jpeg: invalid huffman code")
-
-            dc_tab, ac_tab = huff.get(0x00), huff.get(0x10)
-            if ss == 0:
-                if se != 0:
-                    raise ValueError("jpeg: DC scan must have Se=0")
-                if dc_tab is None and ah == 0:
-                    raise ValueError("jpeg: missing DC table")
-                if ah == 0:
-                    _decode_scan_dc_first(r, blocks, al, dc_tab, read_symbol)
-                else:
-                    _decode_scan_dc_refine(r, blocks, al)
-            else:
-                if ac_tab is None:
-                    raise ValueError("jpeg: missing AC table")
-                if ah == 0:
-                    _decode_scan_ac_first(
-                        r, blocks, ss, se, al, ac_tab, read_symbol
-                    )
-                else:
-                    _decode_scan_ac_refine(
-                        r, blocks, ss, se, al, ac_tab, read_symbol
-                    )
-            pos = end
-            continue
-        pos += seglen
-    if blocks is None or not width or not height:
-        raise ValueError("jpeg: missing SOF2/SOS")
-    qtab = quant.get(comp_qtab)
-    if qtab is None:
-        raise ValueError("jpeg: missing quant table")
-
-    C = DCT_BASIS
-    pixels = bytearray(width * height)
-    bw = width // 8
-    for bi, zz in enumerate(blocks):
-        by, bx = (bi // bw) * 8, (bi % bw) * 8
-        Q = [[0.0] * 8 for _ in range(8)]
-        for z2, (rr, cc) in enumerate(ZIGZAG):
-            Q[rr][cc] = float(zz[z2] * qtab[rr * 8 + cc])
-        T2 = [
-            [sum(C[u][i] * Q[u][j] for u in range(8)) for j in range(8)]
-            for i in range(8)
-        ]
-        for rr in range(8):
-            for cc in range(8):
-                x = sum(T2[rr][j] * C[j][cc] for j in range(8)) + 128.0
-                pixels[(by + rr) * width + bx + cc] = min(
-                    255, max(0, _round_half_up(x))
-                )
-    return width, height, bytes(pixels)
 
 
 def sql_reference_stats_tiled(
@@ -1844,145 +1437,215 @@ def encode_jpeg_color_progressive(rgb: bytes, width: int, height: int) -> bytes:
     return bytes(out)
 
 
-def decode_jpeg_color_progressive(data: bytes):
-    """(width, height, rgb bytes) from a progressive (SOF2) 4:4:4 YCbCr
-    JPEG with single-component scans — per-component coefficient
-    bit-plane accumulation, then dequant+IDCT per plane and the lattice
-    JFIF inverse."""
+# ---------------------------------------------------------------------------
+# Decoder: one marker walk for every DCT stream this module writes (T.81
+# Annex B). Each scan fills the same per-component coefficient blocks —
+# a baseline stream is the single interleaved scan that carries every
+# coefficient at full precision, a progressive one refines them over
+# spectral bands and bit planes — and one dequant+IDCT pass turns the
+# blocks into planes.
+# ---------------------------------------------------------------------------
+
+# SOF component sampling bytes -> ycbcr_to_rgb_bytes layout (None: gray).
+_FRAME_LAYOUTS = {(0x11,): None} | {
+    ((h << 4) | v, 0x11, 0x11): name for name, (h, v) in SAMPLING_DIVS.items()
+}
+
+
+def _decode_scan_baseline(
+    r, scan, mcus_x: int, mcus_y: int, restart_interval: int
+) -> None:
+    """Sequential scan: MCU by MCU, each scan component's h x v blocks,
+    each block's DC difference then its whole AC band; DRI/RSTn resets
+    the DC predictors."""
+    preds = [0] * len(scan)
+    for m in range(mcus_x * mcus_y):
+        if restart_interval and m and m % restart_interval == 0:
+            r.expect_restart((m // restart_interval - 1) % 8)
+            preds = [0] * len(scan)
+        my, mx = divmod(m, mcus_x)
+        for k, ((_tq, h, v, bw, blocks), dc_tab, ac_tab) in enumerate(scan):
+            for br in range(v):
+                for bc in range(h):
+                    blk = blocks[(my * v + br) * bw + mx * h + bc]
+                    preds[k] += r.receive_extend(r.read_symbol(dc_tab))
+                    blk[0] = preds[k]
+                    if _decode_ac_band(r, blk, 1, 63, 0, ac_tab):
+                        raise ValueError("jpeg: EOB run in a baseline scan")
+
+
+def decode_jpeg(data: bytes):
+    """``(width, height, channels, pixels)`` from a JPEG stream — the
+    png_codec.decode_png contract: 1 channel (the Y plane) for
+    grayscale, 3 (interleaved RGB) for color.
+
+    Accepts baseline (SOF0) grayscale and 4:2:0 / 4:2:2 / 4:4:4 YCbCr,
+    with or without DRI/RSTn restart markers, and progressive (SOF2)
+    grayscale and 4:4:4 with single-component scans. Every other
+    stream raises ValueError."""
     if data[:2] != b"\xff\xd8":
         raise ValueError("jpeg: missing SOI")
-    pos = 2
     quant: dict[int, list[int]] = {}
     huff: dict[int, dict] = {}
-    width = height = 0
-    comp_qtab: dict[int, int] = {}
-    comp_blocks: dict[int, list[list[int]]] = {}
-    while pos < len(data):
+    # cid -> (quant table id, h, v, blocks per row, zigzag blocks), in
+    # frame order
+    comps: dict[int, tuple] = {}
+    layout = None
+    progressive = scanned = False
+    restart_interval = mcus_x = mcus_y = width = height = 0
+    pos = 2
+    while True:
+        if pos + 2 > len(data):
+            raise ValueError("jpeg: missing EOI")
         if data[pos] != 0xFF:
             raise ValueError(f"jpeg: expected marker at {pos}")
         marker = data[pos + 1]
         pos += 2
-        if marker == 0xD9:
+        if marker == 0xD9:  # EOI
             break
-        if marker in (0x01,) or 0xD0 <= marker <= 0xD7:
-            continue
-        (seglen,) = struct.unpack(">H", data[pos : pos + 2])
+        if marker == 0x01 or 0xD0 <= marker <= 0xD7:
+            continue  # standalone
+        seglen = int.from_bytes(data[pos : pos + 2], "big")
+        if seglen < 2 or pos + seglen > len(data):
+            raise ValueError("jpeg: truncated segment")
         seg = data[pos + 2 : pos + seglen]
-        if marker == 0xDB:
-            p = 0
-            while p < len(seg):
-                pq_tq = seg[p]
-                if pq_tq >> 4:
+        pos += seglen
+        if marker == 0xDB:  # DQT
+            if len(seg) % 65:
+                raise ValueError("jpeg: truncated DQT")
+            for p in range(0, len(seg), 65):
+                if seg[p] >> 4:
                     raise ValueError("jpeg: 16-bit quant tables unsupported")
-                zz = list(seg[p + 1 : p + 65])
                 tab = [0] * 64
                 for z, (rr, cc) in enumerate(ZIGZAG):
-                    tab[rr * 8 + cc] = zz[z]
-                quant[pq_tq & 0xF] = tab
-                p += 65
-        elif marker == 0xC2:
+                    tab[rr * 8 + cc] = seg[p + 1 + z]
+                quant[seg[p] & 0xF] = tab
+        elif marker in (0xC0, 0xC2):  # SOF0 baseline, SOF2 progressive
+            if len(seg) < 6:
+                raise ValueError("jpeg: truncated SOF")
             precision, height, width, ncomp = struct.unpack(">BHHB", seg[:6])
             if precision != 8:
                 raise ValueError("jpeg: only 8-bit precision supported")
-            if ncomp != 3:
+            progressive = marker == 0xC2
+            spec = [tuple(seg[6 + 3 * k : 9 + 3 * k]) for k in range(ncomp)]
+            sampling = tuple(s for _, s, _ in spec)
+            if sampling not in _FRAME_LAYOUTS:
                 raise ValueError(
-                    "jpeg: progressive color decode supports 3 components"
+                    "jpeg: only grayscale or color 4:2:0 (2x2,1x1,1x1), "
+                    "4:2:2 (2x1,1x1,1x1) or 4:4:4 (1x1,1x1,1x1) supported"
                 )
-            for k in range(3):
-                cid, sampling, tq = struct.unpack(">BBB", seg[6 + 3 * k : 9 + 3 * k])
-                if sampling != 0x11:
-                    raise ValueError(
-                        "jpeg: progressive color supports 4:4:4 only"
-                    )
-                comp_qtab[cid] = tq
-            if width % 8 or height % 8:
-                raise ValueError("jpeg: non-multiple-of-8 dimensions unsupported")
-            nblocks = (width // 8) * (height // 8)
-            comp_blocks = {
-                cid: [[0] * 64 for _ in range(nblocks)] for cid in comp_qtab
-            }
-        elif marker == 0xC0:
-            raise ValueError("jpeg: baseline stream — use decode_jpeg_color")
-        elif marker in (0xC1, 0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB):
-            raise ValueError("jpeg: unsupported SOF variant")
-        elif marker == 0xC4:
+            if progressive and sampling[0] != 0x11:
+                raise ValueError("jpeg: progressive color supports 4:4:4 only")
+            layout = _FRAME_LAYOUTS[sampling]
+            mcu_w, mcu_h = 8 * (sampling[0] >> 4), 8 * (sampling[0] & 0xF)
+            if not width or not height or width % mcu_w or height % mcu_h:
+                raise ValueError(
+                    f"jpeg: dimensions must be positive multiples of "
+                    f"{mcu_w}x{mcu_h}"
+                )
+            mcus_x, mcus_y = width // mcu_w, height // mcu_h
+            # every block costs at least one bit of entropy-coded data
+            # (its DC code), so a frame claiming more blocks than the
+            # stream has bits is refused before anything is allocated
+            units = sum((s >> 4) * (s & 0xF) for s in sampling)
+            if mcus_x * mcus_y * units > 8 * len(data):
+                raise ValueError("jpeg: frame larger than the stream")
+            comps = {}
+            for cid, s, tq in spec:
+                h, v = s >> 4, s & 0xF
+                nblocks = mcus_x * h * mcus_y * v
+                blocks = [[0] * 64 for _ in range(nblocks)]
+                comps[cid] = (tq, h, v, mcus_x * h, blocks)
+            if len(comps) != ncomp:
+                raise ValueError("jpeg: duplicate component id")
+        elif 0xC1 <= marker <= 0xCF and marker not in (0xC4, 0xC8, 0xCC):
+            raise ValueError(
+                "jpeg: only baseline (SOF0) and progressive (SOF2) supported"
+            )
+        elif marker == 0xC4:  # DHT
             huff.update(_decode_huffman_dht(seg))
-        elif marker == 0xDD:
-            raise ValueError("jpeg: restart markers unsupported in progressive")
-        elif marker == 0xDA:
-            if not comp_blocks:
-                raise ValueError("jpeg: SOS before SOF2")
-            ns = seg[0]
-            if ns != 1:
-                raise ValueError("jpeg: one component per scan supported")
-            cid = seg[1]
-            if cid not in comp_blocks:
-                raise ValueError(f"jpeg: unknown scan component {cid}")
-            ss, se, ahal = struct.unpack(">BBB", seg[1 + 2 * ns :][:3])
+        elif marker == 0xDD:  # DRI
+            if len(seg) != 2:
+                raise ValueError("jpeg: bad DRI length")
+            (restart_interval,) = struct.unpack(">H", seg)
+        elif marker == 0xDA:  # SOS
+            if not comps:
+                raise ValueError("jpeg: SOS before SOF")
+            ns = seg[0] if seg else 0
+            if len(seg) < 4 + 2 * ns:
+                raise ValueError("jpeg: truncated SOS")
+            scan = []
+            for k in range(ns):
+                cid, tables = seg[1 + 2 * k], seg[2 + 2 * k]
+                if cid not in comps:
+                    raise ValueError(f"jpeg: unknown scan component {cid}")
+                dc_tab, ac_tab = huff.get(tables >> 4), huff.get(0x10 | tables & 0xF)
+                scan.append((comps[cid], dc_tab, ac_tab))
+            ss, se, ahal = seg[1 + 2 * ns : 4 + 2 * ns]
             ah, al = ahal >> 4, ahal & 0xF
-            scan_start = pos + seglen
-            end = scan_start
+            # entropy-coded data runs to the next marker that is neither
+            # a stuffed FF00 nor an RSTn
+            end = pos
             while True:
                 end = data.find(b"\xff", end)
-                if end < 0:
+                if end < 0 or end + 1 >= len(data):
                     raise ValueError("jpeg: unterminated scan")
-                if data[end + 1] != 0x00:
+                if data[end + 1] and not 0xD0 <= data[end + 1] <= 0xD7:
                     break
                 end += 2
-            r = _BitReader(data[scan_start:end])
-
-            def read_symbol(table: dict) -> int:
-                code = 0
-                for length in range(1, 17):
-                    code = (code << 1) | r.read_bit()
-                    sym = table.get((length, code))
-                    if sym is not None:
-                        return sym
-                raise ValueError("jpeg: invalid huffman code")
-
-            dc_tab, ac_tab = huff.get(0x00), huff.get(0x10)
-            blocks = comp_blocks[cid]
+            r = _BitReader(data[pos:end])
+            pos = end
+            scanned = True
+            if not progressive:
+                if ns != len(comps):
+                    raise ValueError(
+                        "jpeg: the baseline scan must interleave every component"
+                    )
+                if any(dc is None or ac is None for _, dc, ac in scan):
+                    raise ValueError("jpeg: missing tables")
+                _decode_scan_baseline(r, scan, mcus_x, mcus_y, restart_interval)
+                continue
+            if ns != 1:
+                raise ValueError("jpeg: one component per progressive scan")
+            if restart_interval:
+                raise ValueError("jpeg: restart markers unsupported in progressive")
+            if ss > se or se > 63:
+                raise ValueError("jpeg: bad spectral selection")
+            (_tq, _h, _v, _bw, blocks), dc_tab, ac_tab = scan[0]
             if ss == 0:
                 if se != 0:
                     raise ValueError("jpeg: DC scan must have Se=0")
-                if ah == 0:
-                    if dc_tab is None:
-                        raise ValueError("jpeg: missing DC table")
-                    _decode_scan_dc_first(r, blocks, al, dc_tab, read_symbol)
-                else:
+                if ah:
                     _decode_scan_dc_refine(r, blocks, al)
-            else:
-                if ac_tab is None:
-                    raise ValueError("jpeg: missing AC table")
-                if ah == 0:
-                    _decode_scan_ac_first(
-                        r, blocks, ss, se, al, ac_tab, read_symbol
-                    )
+                elif dc_tab is None:
+                    raise ValueError("jpeg: missing DC table")
                 else:
-                    _decode_scan_ac_refine(
-                        r, blocks, ss, se, al, ac_tab, read_symbol
-                    )
-            pos = end
-            continue
-        pos += seglen
-    if not comp_blocks or not width or not height:
-        raise ValueError("jpeg: missing SOF2/SOS")
+                    _decode_scan_dc_first(r, blocks, al, dc_tab)
+            elif ac_tab is None:
+                raise ValueError("jpeg: missing AC table")
+            elif ah:
+                _decode_scan_ac_refine(r, blocks, ss, se, al, ac_tab)
+            else:
+                _decode_scan_ac_first(r, blocks, ss, se, al, ac_tab)
+    if not scanned:
+        raise ValueError("jpeg: missing SOF/SOS")
 
-    bw = width // 8
-    planes: dict[int, list[int]] = {}
-    for cid, blocks in comp_blocks.items():
-        qtab = quant.get(comp_qtab[cid])
+    planes = []
+    for tq, _h, _v, bw, blocks in comps.values():
+        qtab = quant.get(tq)
         if qtab is None:
             raise ValueError("jpeg: missing quant table")
-        plane = [0] * (width * height)
+        stride = 8 * bw
+        plane = [0] * (64 * len(blocks))
         for bi, zz in enumerate(blocks):
-            by, bx = (bi // bw) * 8, (bi % bw) * 8
-            blk = _inverse_block(zz, qtab)
+            px = _inverse_block(zz, qtab)
+            o = (bi // bw) * 8 * stride + (bi % bw) * 8
             for rr in range(8):
-                for cc in range(8):
-                    plane[(by + rr) * width + bx + cc] = blk[rr * 8 + cc]
-        planes[cid] = plane
-    rgb = ycbcr_to_rgb_bytes(
-        planes[1], planes[2], planes[3], width, height, subsampling="444"
+                row = o + rr * stride
+                plane[row : row + 8] = px[8 * rr : 8 * rr + 8]
+        planes.append(plane)
+    if layout is None:
+        return width, height, 1, bytes(planes[0])
+    return width, height, 3, ycbcr_to_rgb_bytes(
+        *planes, width, height, subsampling=layout
     )
-    return width, height, rgb

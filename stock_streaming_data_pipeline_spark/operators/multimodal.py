@@ -3,15 +3,14 @@ processed with Arrow-batched ``mapInPandas`` operators.
 
 PNG payloads get REAL decoding via the pure-stdlib codec in
 ``operators/png_codec.py`` (zlib inflate + scanline unfiltering + CRC
-validation), baseline JPEG — grayscale AND 4:2:0 / 4:2:2 / 4:4:4 YCbCr
-color, with optional restart markers — via ``operators/jpeg_codec.py``
-(marker walk + Huffman + dequant + IDCT + chroma upsample), and WAV
-PCM16 via ``operators/wav_codec.py`` — each exercised end-to-end by
-``multimodal_*`` catalog queries with full DuckDB oracles. Progressive
-JPEG (SOF2 grayscale and 4:4:4 color — spectral selection + successive
-approximation) decodes for real too. Remaining codecs (compressed
-audio, video) raise NotImplementedError — those libraries are not in
-this environment —
+validation), JPEG — baseline grayscale and 4:2:0 / 4:2:2 / 4:4:4 YCbCr
+color with optional restart markers, progressive grayscale and 4:4:4
+color — via the one decoder ``jpeg_codec.decode_jpeg`` (marker walk +
+Huffman + per-scan coefficient accumulation + dequant + IDCT + chroma
+upsample), and WAV PCM16 via ``operators/wav_codec.py`` — each
+exercised end-to-end by ``multimodal_*`` catalog queries with full
+DuckDB oracles. Remaining codecs (compressed audio, video) raise
+NotImplementedError — those libraries are not in this environment —
 with a deterministic digest fake behind the same contract so the Spark
 plumbing (schema, batch iterator shape, partition-size control) stays
 testable for every media type.
@@ -62,26 +61,20 @@ FEATURE_SCHEMA = (
 
 def decode_image(payload: bytes) -> tuple[int, int, int, bytearray]:
     """Real image decode: ``(width, height, channels, pixels)``. PNG is
-    decoded by the pure-stdlib codec (png_codec.py); baseline JPEG
-    (grayscale, or 4:2:0 / 4:2:2 / 4:4:4 YCbCr color, with or without
-    restart markers) by jpeg_codec.py, routed on the SOF0 component
-    count; other formats raise NotImplementedError until their codec
-    libraries exist on executors."""
+    decoded by the pure-stdlib codec (png_codec.decode_png); JPEG by
+    jpeg_codec.decode_jpeg, the one decoder for baseline grayscale and
+    4:2:0 / 4:2:2 / 4:4:4 color (with or without restart markers) and
+    progressive grayscale and 4:4:4 color; other formats raise
+    NotImplementedError until their codec libraries exist on
+    executors."""
     if png_codec.is_png(payload):
         return png_codec.decode_png(payload)
     if payload[:2] == b"\xff\xd8":
-        try:
-            w, h, px = jpeg_codec.decode_jpeg(bytes(payload))
-            return w, h, 1, bytearray(px)
-        except ValueError as e:
-            if "single-component" not in str(e):
-                raise
-        w, h, px = jpeg_codec.decode_jpeg_color(bytes(payload))
-        return w, h, 3, bytearray(px)
+        w, h, ch, px = jpeg_codec.decode_jpeg(bytes(payload))
+        return w, h, ch, bytearray(px)
     raise NotImplementedError(
-        "only PNG and baseline JPEG (grayscale / 4:2:0 color) decoding "
-        "are implemented (pure-stdlib codecs); other codecs are not "
-        "installed in this environment"
+        "only PNG and JPEG decoding are implemented (pure-stdlib codecs); "
+        "other codecs are not installed in this environment"
     )
 
 
@@ -357,16 +350,20 @@ def documents_as_jpeg_media(
 
 
 def jpeg_pixel_stats(media: DataFrame) -> DataFrame:
-    """Per-image pixel statistics via REAL baseline-JPEG decode
-    (mapInPandas): marker walk, Huffman decode, dequant, IDCT — reduced
-    to sum/min/max/mean. Linear per partition; payloads never leave the
-    executors."""
+    """Per-image pixel statistics via REAL JPEG decode (mapInPandas,
+    jpeg_codec.decode_jpeg: baseline or progressive, gray or color) —
+    sum/min/max/mean over every decoded sample, all channels summed.
+    The mean uses the codec's half-up round6 (jpeg_codec._round6), as
+    DuckDB's round does: Python's builtin round is banker's and diverges
+    from the SQL oracle on exact ties (at 256 samples the mean's
+    decimal expansion ends at digit 8, so digit-7 ties occur). Linear
+    per partition; payloads never leave the executors."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
             for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                w, h, px = jpeg_codec.decode_jpeg(bytes(payload))
+                w, h, _ch, px = jpeg_codec.decode_jpeg(bytes(payload))
                 n = len(px)
                 rows.append(
                     {
@@ -376,7 +373,7 @@ def jpeg_pixel_stats(media: DataFrame) -> DataFrame:
                         "sum_px": sum(px),
                         "min_px": min(px) if n else 0,
                         "max_px": max(px) if n else 0,
-                        "mean_px": round(sum(px) / n, 6) if n else 0.0,
+                        "mean_px": jpeg_codec._round6(sum(px) / n) if n else 0.0,
                     }
                 )
             if rows:
@@ -680,37 +677,6 @@ def documents_as_jpeg_color_media(
     return docs.select("doc_id", "text").mapInPandas(run, MEDIA_SCHEMA)
 
 
-def jpeg_color_pixel_stats(media: DataFrame) -> DataFrame:
-    """Per-image statistics over all three decoded RGB channels via the
-    REAL 4:2:0 color decoder (mapInPandas): marker walk, interleaved-MCU
-    Huffman decode, dequant, IDCT, chroma upsample, YCbCr→RGB. The mean
-    uses the codec's half-up round6 (jpeg_codec._round6) — Python's
-    builtin round is banker's and WOULD diverge from the SQL oracle on
-    the exact .5e-6 ties that sum/768 produces."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                w, h, px = jpeg_codec.decode_jpeg_color(bytes(payload))
-                n = len(px)
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "width": w,
-                        "height": h,
-                        "sum_px": sum(px),
-                        "min_px": min(px) if n else 0,
-                        "max_px": max(px) if n else 0,
-                        "mean_px": jpeg_codec._round6(sum(px) / n) if n else 0.0,
-                    }
-                )
-            if rows:
-                yield pd.DataFrame(rows)
-
-    return media.mapInPandas(run, PIXEL_STATS_SCHEMA)
-
-
 def documents_as_jpeg_progressive_media(
     docs: DataFrame, *, width: int = 16, height: int = 16
 ) -> DataFrame:
@@ -751,46 +717,6 @@ def documents_as_jpeg_progressive_media(
     return docs.select("doc_id", "text").mapInPandas(run, MEDIA_SCHEMA)
 
 
-def jpeg_progressive_pixel_stats(media: DataFrame) -> DataFrame:
-    """Per-image pixel statistics via REAL progressive-JPEG decode
-    (mapInPandas): marker walk, per-scan coefficient bit-plane
-    accumulation (DC/AC first + refinement, EOB runs), one dequant+IDCT
-    pass — reduced to sum/min/max/mean. Payloads never leave the
-    executors."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import math
-
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                w, h, px = jpeg_codec.decode_jpeg_progressive(bytes(payload))
-                n = len(px)
-                # half-UP 6-decimal mean, exact: for n a power of two,
-                # sum*1e6/n is an exact double, so floor(x+0.5) is
-                # deterministic and matches DuckDB's half-away round.
-                # (Python's round() is half-even; at n=256 the mean's
-                # decimal expansion terminates at digit 8, so digit-7
-                # ties are EXACT and the two conventions really diverge
-                # — caught by the sf0.01 differential.)
-                mean = math.floor(sum(px) * 1e6 / n + 0.5) / 1e6 if n else 0.0
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "width": w,
-                        "height": h,
-                        "sum_px": sum(px),
-                        "min_px": min(px) if n else 0,
-                        "max_px": max(px) if n else 0,
-                        "mean_px": mean,
-                    }
-                )
-            if rows:
-                yield pd.DataFrame(rows)
-
-    return media.mapInPandas(run, PIXEL_STATS_SCHEMA)
-
-
 def documents_as_jpeg_progressive_color_media(
     docs: DataFrame, *, width: int = 8, height: int = 8
 ) -> DataFrame:
@@ -828,35 +754,6 @@ def documents_as_jpeg_progressive_color_media(
             )
 
     return docs.select("doc_id", "text").mapInPandas(run, MEDIA_SCHEMA)
-
-
-def jpeg_progressive_color_pixel_stats(media: DataFrame) -> DataFrame:
-    """Per-image RGB statistics via the REAL progressive color decoder
-    (per-component bit-plane accumulation across 24 scans, dequant,
-    IDCT, lattice JFIF inverse). Same half-up round6 mean discipline as
-    the baseline color stats."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                w, h, px = jpeg_codec.decode_jpeg_color_progressive(bytes(payload))
-                n = len(px)
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "width": w,
-                        "height": h,
-                        "sum_px": sum(px),
-                        "min_px": min(px) if n else 0,
-                        "max_px": max(px) if n else 0,
-                        "mean_px": jpeg_codec._round6(sum(px) / n) if n else 0.0,
-                    }
-                )
-            if rows:
-                yield pd.DataFrame(rows)
-
-    return media.mapInPandas(run, PIXEL_STATS_SCHEMA)
 
 
 PIXEL_ROWS_SCHEMA = "media_id long, i int, v int"

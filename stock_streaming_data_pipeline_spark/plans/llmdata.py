@@ -1752,11 +1752,11 @@ def multimodal_jpeg_color_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     jpeg_codec.reference_transform_color, which the DuckDB oracle
     replays relationally (per-block matrix products against the literal
     DCT basis, both quant tables as literal relations, replicated
-    chroma upsample, lattice YCbCr↔RGB). Non-4:2:0 color samplings and
-    progressive streams still raise honestly."""
+    chroma upsample, lattice YCbCr↔RGB). Samplings other than 4:2:0,
+    4:2:2 and 4:4:4 still raise honestly."""
     docs = _ascii_text_docs(load_table(spark, sf_dir, "documents"))
     media = multimodal.documents_as_jpeg_color_media(docs, width=16, height=16)
-    return multimodal.jpeg_color_pixel_stats(media)
+    return multimodal.jpeg_pixel_stats(media)
 
 
 @register(
@@ -1776,7 +1776,7 @@ def multimodal_jpeg_444_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     media = multimodal.documents_as_jpeg_color_media(
         docs, width=8, height=8, subsampling="444"
     )
-    return multimodal.jpeg_color_pixel_stats(media)
+    return multimodal.jpeg_pixel_stats(media)
 
 
 @register(
@@ -1801,7 +1801,7 @@ def multimodal_jpeg_progressive_color_decode(
     media = multimodal.documents_as_jpeg_progressive_color_media(
         docs, width=8, height=8
     )
-    return multimodal.jpeg_progressive_color_pixel_stats(media)
+    return multimodal.jpeg_pixel_stats(media)
 
 
 @register(
@@ -1826,7 +1826,7 @@ def multimodal_jpeg_progressive_decode(spark: SparkSession, sf_dir: str) -> Data
     media = multimodal.documents_as_jpeg_progressive_media(
         docs, width=16, height=16
     )
-    return multimodal.jpeg_progressive_pixel_stats(media)
+    return multimodal.jpeg_pixel_stats(media)
 
 
 @register(

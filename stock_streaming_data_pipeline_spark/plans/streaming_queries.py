@@ -212,41 +212,47 @@ def streaming_upsert_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
     events table: update-mode windowed aggs through the epoch-stamped
     keyed-upsert sink, resolved last-write-wins — the final volume_tracking
     state must equal the batch aggregation (Cassandra-parity semantics,
-    T4/T8)."""
-    import tempfile
+    T4/T8). The resolved rows are aggregate-sized (one per symbol-day),
+    so they are collected, as settle() does, and the fan-out's output
+    directory is deleted before returning."""
+    import shutil
 
     from stock_streaming_data_pipeline_spark.streaming import sinks as s
     from stock_streaming_data_pipeline_spark.streaming.jobs import start_fanout
 
     trades = events_as_trades(stream_events(spark, sf_dir))
     out_dir = tempfile.mkdtemp(prefix="fanout_")
-    fan = start_fanout(
-        trades,
-        out_dir,
-        tumbling_window="1 day",
-        tumbling_watermark="1 hour",
-        feature_window="1 hour",
-        feature_slide="10 minutes",
-        feature_watermark="10 minutes",
-        available_now=True,
-    )
     try:
-        for q in fan.queries:
-            if not q.awaitTermination(600):
-                raise TimeoutError(
-                    f"fan-out query {q.name} did not finish draining within 600s"
-                )
+        fan = start_fanout(
+            trades,
+            out_dir,
+            tumbling_window="1 day",
+            tumbling_watermark="1 hour",
+            feature_window="1 hour",
+            feature_slide="10 minutes",
+            feature_watermark="10 minutes",
+            available_now=True,
+        )
+        try:
+            for q in fan.queries:
+                if not q.awaitTermination(600):
+                    raise TimeoutError(
+                        f"fan-out query {q.name} did not finish draining "
+                        "within 600s"
+                    )
+        finally:
+            fan.stop_all()
+        vol = s.read_upsert_table(
+            spark, fan.path("volume_tracking"), ["symbol", "timestamp"]
+        ).select(
+            F.col("symbol").alias("event_type"),
+            F.unix_seconds("timestamp").alias("window_start"),
+            round6(F.col("total_volume")).alias("total_volume"),
+            round6(F.col("total_usd_volume")).alias("total_usd_volume"),
+        )
+        return spark.createDataFrame(vol.collect(), vol.schema)
     finally:
-        fan.stop_all()
-    vol = s.read_upsert_table(
-        spark, fan.path("volume_tracking"), ["symbol", "timestamp"]
-    )
-    return vol.select(
-        F.col("symbol").alias("event_type"),
-        F.unix_seconds("timestamp").alias("window_start"),
-        round6(F.col("total_volume")).alias("total_volume"),
-        round6(F.col("total_usd_volume")).alias("total_usd_volume"),
-    )
+        shutil.rmtree(out_dir)
 
 
 # Sign-safe fixed-two-decimal rendering of a BIGINT cents column `c`:

@@ -55,12 +55,10 @@ _BASE_CONF: dict[str, str] = {
     # one empty byte range on the single-file single-row-group driver
     # testdata — measured ≤1% on the sf0.1 bench vs 128 MiB. At petabyte
     # scale with many large files, raise this toward the 128 MiB default
-    # via SPARK_GRAFT_MAX_PARTITION_BYTES — the rule is
+    # through get_spark(extra_conf=...) — the rule is
     # compressed-bytes-per-core-second of downstream compute, not a
     # universal constant.
-    "spark.sql.files.maxPartitionBytes": os.environ.get(
-        "SPARK_GRAFT_MAX_PARTITION_BYTES", "8388608"
-    ),
+    "spark.sql.files.maxPartitionBytes": "8388608",
     "spark.streaming.stopGracefullyOnShutdown": "true",
     "spark.ui.enabled": "false",
     # The engine runs hundreds of distinct queries per session (catalog

@@ -175,18 +175,9 @@ def fan_out(df: DataFrame) -> DataFrame:
     if len(files) >= target:
         return df  # already at least one task per core
     if files:
-        raw = str(
-            spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728b")
-        ).strip().lower()
-        mult = 1
-        for suf, m in (
-            ("kb", 1 << 10), ("mb", 1 << 20), ("gb", 1 << 30),
-            ("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30), ("b", 1),
-        ):
-            if raw.endswith(suf):
-                raw, mult = raw[: -len(suf)], m
-                break
-        max_bytes = int(float(raw) * mult) if raw else 128 << 20
+        # spark.sql.files.maxPartitionBytes as Spark parsed it (any size
+        # suffix)
+        max_bytes = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
         jconf = spark._jsc.hadoopConfiguration()
         jvm = spark._jvm
         total = 0

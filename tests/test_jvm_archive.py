@@ -295,6 +295,12 @@ def test_sessions_start_whatever_the_cache_holds(tmp_path):
 
 
 def test_git_tracks_no_jvm_artefacts():
+    inside = subprocess.run(
+        ["git", "rev-parse", "--is-inside-work-tree"],
+        cwd=REPO, capture_output=True, text=True,
+    )
+    if inside.returncode != 0:
+        pytest.skip(f"not a git checkout: {inside.stderr.strip()}")
     tracked = subprocess.run(
         ["git", "ls-files"], cwd=REPO, capture_output=True, text=True, check=True
     ).stdout.splitlines()

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import functions as F
 
 from stock_streaming_data_pipeline_spark.operators.skew import salted_join
@@ -742,3 +743,26 @@ def test_concurrent_committers_never_lose_a_commit(spark, tmp_path):
     # and the reader resolves the single highest one
     latest = sinks._latest_manifest(spark, path)
     assert latest is not None and latest[0] == max(versions)
+
+
+def test_fan_out_takes_split_size_as_spark_parses_it(spark, tmp_path):
+    """fan_out estimates splits from maxPartitionBytes as the session's
+    SQLConf parsed it, so every size suffix Spark accepts works: a
+    one-file input splits into enough tasks at 1k (no exchange added)
+    and into one task at 1t (a round-robin exchange added)."""
+    from stock_streaming_data_pipeline_spark.tables import fan_out
+
+    if spark.sparkContext.defaultParallelism < 2:
+        pytest.skip("one core: fan_out never repartitions")
+    path = str(tmp_path / "one_file")
+    spark.range(0, 50_000).coalesce(1).write.parquet(path)
+    df = spark.read.parquet(path)
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "1k")
+        assert fan_out(df) is df
+        spark.conf.set(key, "1t")
+        assert fan_out(df) is not df
+    finally:
+        spark.conf.set(key, old)

@@ -335,6 +335,30 @@ def test_settle_refuses_fact_grained_output(spark, monkeypatch):
     assert 0 < out.count() <= 10
 
 
+def test_upsert_fanout_query_leaves_no_output_directory(
+    spark, duck, tmp_path, monkeypatch
+):
+    """streaming_upsert_fanout drains the fan-out into a temporary output
+    directory. Once the query returns, that directory is gone, and the
+    rows it returned still match the oracle without it."""
+    import tempfile
+
+    from check_oracle import compare
+
+    from stock_streaming_data_pipeline_spark.plans.catalog import (
+        catalog,
+        resolve_oracle,
+    )
+    from tests.conftest import SF_SMOKE
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    q = catalog()["streaming_upsert_fanout"]
+    out = q.build(spark, SF_SMOKE)
+    assert not list(tmp_path.glob("fanout_*"))
+    want = duck.execute(resolve_oracle(q, SF_SMOKE)).df()
+    assert not compare(q.name, out.toPandas(), want)
+
+
 def test_check_oracle_import_does_not_raise_settle_cap(monkeypatch):
     """Importing tools/check_oracle (conftest and the schema-gate tests do,
     for its compare/duck_connection helpers) must NOT export the raised

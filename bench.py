@@ -53,40 +53,6 @@ def _force(df) -> int:
     return 0
 
 
-def _cpu_ticks() -> tuple[int, int]:
-    """(steal_ticks, total_ticks) from the aggregate /proc/stat cpu line.
-
-    Steal is field 8 (user nice system idle iowait irq softirq steal);
-    on a VM it counts ticks the hypervisor ran somebody else while this
-    guest was runnable — exactly the host-contention signal that has
-    twice made round-over-round BENCH totals drift with zero code change.
-    """
-    try:
-        with open("/proc/stat") as fh:
-            parts = fh.readline().split()
-    except OSError:
-        return 0, 0
-    vals = [int(x) for x in parts[1:]]
-    steal = vals[7] if len(vals) > 7 else 0
-    return steal, sum(vals)
-
-
-def _spin_calibration() -> float:
-    """Seconds for a fixed single-thread Python spin loop.
-
-    A constant-work probe: on a quiet host this is stable run-to-run, so
-    a benchmark whose spin samples disagree (or exceed a known-quiet
-    baseline) was measured under contention and its absolute numbers
-    should be read as upper bounds, not regressions.
-    """
-    t0 = time.perf_counter()
-    acc = 0
-    for i in range(2_000_000):
-        acc += i
-    assert acc == 1999999000000
-    return round(time.perf_counter() - t0, 4)
-
-
 def _streaming_block(spark) -> dict:
     """Streaming engine numbers alongside the batch wall clocks: replay
     N synthetic trades through the four-query fan-out (decode → watermark
@@ -135,10 +101,7 @@ def _streaming_block(spark) -> dict:
         # round-over-round comparable rows/sec number (r5+ protocol).
         src = os.path.join(work, "src")
         trades.write_trades_dir(spark, src, files=8, n_rows=rows, cadence_ms=50)
-        d_steal0, d_total0 = _cpu_ticks()
-        d_spin = _spin_calibration()
         drain = replay(src, os.path.join(work, "out"), mfpt=None)
-        d_steal1, d_total1 = _cpu_ticks()
         # Block 2 — PACED latency: one source file per trigger, >=12
         # micro-batches per query (48 input batches across the fan-out)
         # so p95 is distinguishable from max (r9 verdict #8). Throughput
@@ -154,23 +117,6 @@ def _streaming_block(spark) -> dict:
             "rows": rows,
             "wall_s": drain["wall_s"],
             "rows_per_sec": round(rows / drain["wall_s"], 1),
-            # Probes sampled around the DRAIN window specifically. The
-            # round-11 interleaved adjudication (SCALE.md, "Round-11
-            # adjudication") found NO in-guest probe predicts the
-            # between-rounds drain level — same-session repeats are
-            # tight (±3%) while r9→r10→r11 swung 170.6k→108.6k→~149k
-            # at quiet steal/spin/throttle/page-cache every time — so
-            # these fields exist to CLASSIFY a drain delta as
-            # epoch-confounded (all probes quiet ⇒ don't chase it),
-            # not to explain it.
-            "drain_steal_pct": (
-                round(
-                    100.0 * (d_steal1 - d_steal0)
-                    / max(d_total1 - d_total0, 1),
-                    3,
-                )
-            ),
-            "drain_spin_sec": d_spin,
             "concurrent_queries": 4,
             "batches": len(drain["batch_ms"]),
             "paced": {
@@ -241,8 +187,6 @@ def main() -> None:
     # of engine throughput than a single sample that may straddle a steal
     # window. Iteration order interleaves whole passes (q1..qN, q1..qN)
     # so the two samples of each query are maximally separated in time.
-    steal0, total0 = _cpu_ticks()
-    spin_before = _spin_calibration()
     samples: dict[str, list[float]] = {}
     for _pass in range(2):
         for name, build in bench_set:
@@ -255,8 +199,6 @@ def main() -> None:
             # between queries so one query's cache pressure never bills
             # the next one's measurement.
             spark.catalog.clearCache()
-    spin_after = _spin_calibration()
-    steal1, total1 = _cpu_ticks()
 
     timings = {name: min(ts) for name, ts in samples.items()}
     total = round(sum(timings.values()), 3)
@@ -270,11 +212,6 @@ def main() -> None:
         name: round((max(ts) - min(ts)) / max(min(ts), 1e-9), 3)
         for name, ts in samples.items()
     }
-    steal_pct = (
-        round(100.0 * (steal1 - steal0) / max(total1 - total0, 1), 2)
-        if total1 > total0
-        else 0.0
-    )
 
     # Streaming block last: outside the batch-timed region by design.
     try:
@@ -305,14 +242,11 @@ def main() -> None:
                 "like_for_like_queries": sorted(
                     q for q in LIKE_FOR_LIKE if q in timings
                 ),
-                # self-adjudication: both raw samples per query, their
-                # relative spread, hypervisor steal ticks over the whole
-                # measured region, and a fixed spin-loop probe before/after
+                # self-adjudication: both raw samples per query and their
+                # relative spread
                 "samples": samples,
                 "spread": spread,
                 "max_spread": max(spread.values(), default=0.0),
-                "steal_pct": steal_pct,
-                "spin_sec": [spin_before, spin_after],
                 "streaming": streaming,
             }
         )

@@ -1,7 +1,8 @@
 """Pure-stdlib JPEG codec (baseline and progressive DCT).
 
 The image tier's third real codec next to PNG (operators/png_codec.py)
-and WAV (operators/wav_codec.py): encode = level-shift → 8×8 float DCT →
+and WAV (operators/wav_codec.py): encode (:func:`encode_jpeg` baseline,
+:func:`encode_jpeg_progressive`) = level-shift → 8×8 float DCT →
 quantize → zigzag → DC-differential + run-length AC → canonical Huffman
 entropy coding with byte stuffing; decode (:func:`decode_jpeg`, one
 decoder for every supported stream) = one marker walk
@@ -279,103 +280,13 @@ def reference_transform(pixels: bytes, width: int, height: int) -> bytes:
     return bytes(out)
 
 
-def encode_jpeg_gray(
-    pixels: bytes, width: int, height: int, *,
-    restart_interval: int | None = None,
-) -> bytes:
-    """Baseline sequential grayscale JPEG of raw 8-bit pixels.
-    ``restart_interval`` (in MCUs = blocks here) adds DRI + RSTn resync
-    markers with DC-predictor resets; pixels are unchanged."""
-    if width % 8 or height % 8:
-        raise ValueError("jpeg: dimensions must be multiples of 8")
-    if len(pixels) != width * height:
-        raise ValueError("jpeg: pixel buffer size mismatch")
-
-    out = bytearray()
-    out += b"\xff\xd8"  # SOI
-    # DQT: table 0, 8-bit precision, natural (zigzag) order
-    zz_q = bytes(QUANT_LUMA[r * 8 + c] for (r, c) in ZIGZAG)
-    out += b"\xff\xdb" + struct.pack(">HB", 2 + 1 + 64, 0x00) + zz_q
-    # SOF0: 8-bit, 1 component, no subsampling (1x1), quant table 0
-    out += b"\xff\xc0" + struct.pack(">HBHHB", 2 + 6 + 3, 8, height, width, 1)
-    out += struct.pack(">BBB", 1, 0x11, 0)
-    # DHT: DC table 0 + AC table 0
-    out += b"\xff\xc4" + struct.pack(">HB", 2 + 1 + 16 + len(_DC_SYMBOLS), 0x00)
-    out += bytes(_DC_BITS) + bytes(_DC_SYMBOLS)
-    out += b"\xff\xc4" + struct.pack(">HB", 2 + 1 + 16 + len(_AC_SYMBOLS), 0x10)
-    out += bytes(_AC_BITS) + bytes(_AC_SYMBOLS)
-    if restart_interval:
-        out += b"\xff\xdd" + struct.pack(">HH", 4, restart_interval)  # DRI
-    # SOS
-    out += b"\xff\xda" + struct.pack(">HB", 2 + 1 + 2 + 3, 1)
-    out += struct.pack(">BB", 1, 0x00) + struct.pack(">BBB", 0, 63, 0)
-
-    C = DCT_BASIS
-    w = _BitWriter()
-    prev_dc = 0
-    mcu = 0
-    for by in range(0, height, 8):
-        for bx in range(0, width, 8):
-            if restart_interval and mcu and mcu % restart_interval == 0:
-                w.restart((mcu // restart_interval - 1) % 8)
-                prev_dc = 0
-            mcu += 1
-            X = [
-                [pixels[(by + r) * width + bx + c] - 128.0 for c in range(8)]
-                for r in range(8)
-            ]
-            T = [
-                [sum(C[u][i] * X[i][j] for i in range(8)) for j in range(8)]
-                for u in range(8)
-            ]
-            Y = [
-                [sum(T[u][j] * C[v][j] for j in range(8)) for v in range(8)]
-                for u in range(8)
-            ]
-            q = [
-                _round_half_up(Y[r][c] / QUANT_LUMA[r * 8 + c])
-                for (r, c) in ZIGZAG
-            ]
-            # DC
-            diff = q[0] - prev_dc
-            prev_dc = q[0]
-            cat, bits = _magnitude(diff)
-            code, length = _DC_CODES[cat]
-            w.write(code, length)
-            if cat:
-                w.write(bits, cat)
-            # AC with run-length / ZRL / EOB
-            run = 0
-            for z in range(1, 64):
-                v = q[z]
-                if v == 0:
-                    run += 1
-                    continue
-                while run > 15:
-                    zc, zl = _AC_CODES[0xF0]
-                    w.write(zc, zl)
-                    run -= 16
-                cat, bits = _magnitude(v)
-                code, length = _AC_CODES[(run << 4) | cat]
-                w.write(code, length)
-                w.write(bits, cat)
-                run = 0
-            if run:
-                ec, el = _AC_CODES[0x00]
-                w.write(ec, el)
-    w.flush()
-    out += w.buf
-    out += b"\xff\xd9"  # EOI
-    return bytes(out)
-
-
 def sql_reference_stats(media_text_sql: str, *, table: str = "documents") -> str:
     """DuckDB oracle for the 8×8 grayscale JPEG round-trip: replays
     :func:`reference_transform` relationally — pixels from the sanitized
     text bytes, DCT via the literal basis matrix (two join-aggregate
     matrix products), floor(x+0.5) quantize/dequantize against the
     literal Annex-K table, IDCT, clamp — reduced to the same pixel
-    statistics as :func:`multimodal.jpeg_pixel_stats`. The entropy layer
+    statistics as :func:`multimodal.pixel_stats`. The entropy layer
     (Huffman/byte stuffing/markers) has no SQL analogue; its correctness
     is exactly what the differential proves, because any entropy bug
     breaks decode(encode(px)) == reference_transform(px)."""
@@ -592,36 +503,6 @@ def _inverse_block(zz, qtab):
     return out
 
 
-def _write_block(w: _BitWriter, zz: list[int], prev_dc: int) -> int:
-    """Entropy-encode one block's zigzag coefficients (shared DC/AC
-    tables); returns the new DC predictor."""
-    diff = zz[0] - prev_dc
-    cat, bits = _magnitude(diff)
-    code, length = _DC_CODES[cat]
-    w.write(code, length)
-    if cat:
-        w.write(bits, cat)
-    run = 0
-    for z in range(1, 64):
-        v = zz[z]
-        if v == 0:
-            run += 1
-            continue
-        while run > 15:
-            zc, zl = _AC_CODES[0xF0]
-            w.write(zc, zl)
-            run -= 16
-        cat, bits = _magnitude(v)
-        code, length = _AC_CODES[(run << 4) | cat]
-        w.write(code, length)
-        w.write(bits, cat)
-        run = 0
-    if run:
-        ec, el = _AC_CODES[0x00]
-        w.write(ec, el)
-    return zz[0]
-
-
 def ycbcr_to_rgb_bytes(
     yp, cb, cr, width: int, height: int, *, subsampling: str = "420"
 ) -> bytes:
@@ -647,7 +528,7 @@ def ycbcr_to_rgb_bytes(
 def reference_transform_color(
     rgb: bytes, width: int, height: int, *, subsampling: str = "420"
 ) -> bytes:
-    """decode(encode_jpeg_color(rgb)) must equal THIS: lattice YCbCr
+    """decode(encode_jpeg(rgb, subsampling=...)) must equal THIS: lattice YCbCr
     (+ 2x2 subsample for 4:2:0), per-block quantize-roundtrip
     (luma/chroma Annex-K tables), replicated upsample (identity for
     4:4:4), lattice inverse conversion — fully SQL-replayable
@@ -674,77 +555,6 @@ def reference_transform_color(
     )
 
 
-def encode_jpeg_color(
-    rgb: bytes, width: int, height: int, *,
-    restart_interval: int | None = None,
-    subsampling: str = "420",
-) -> bytes:
-    """Baseline sequential YCbCr JPEG of raw interleaved 8-bit RGB —
-    4:2:0 (the dominant shape), 4:2:2 or 4:4:4 via ``subsampling``.
-
-    ``restart_interval`` (MCUs) emits a DRI segment plus cycling RSTn
-    markers with DC-predictor resets — the resync feature virtually
-    every camera/encoder writes; pixels are unchanged (the reference
-    transform is restart-agnostic)."""
-    hdiv, vdiv = _sampling_divs(subsampling)
-    yp, cb, cr = rgb_to_ycbcr_planes(rgb, width, height, subsampling=subsampling)
-    cw = width // hdiv
-
-    out = bytearray()
-    out += b"\xff\xd8"  # SOI
-    # DQT: luma table 0 + chroma table 1, zigzag order
-    for tid, tab in ((0, QUANT_LUMA), (1, QUANT_CHROMA)):
-        zz_q = bytes(tab[r * 8 + c] for (r, c) in ZIGZAG)
-        out += b"\xff\xdb" + struct.pack(">HB", 2 + 1 + 64, tid) + zz_q
-    # SOF0: 8-bit, 3 components — Y sampled (hdiv, vdiv) with qtab 0;
-    # Cb & Cr 1x1 / qtab 1
-    out += b"\xff\xc0" + struct.pack(">HBHHB", 2 + 6 + 9, 8, height, width, 3)
-    out += struct.pack(">BBB", 1, (hdiv << 4) | vdiv, 0)
-    out += struct.pack(">BBB", 2, 0x11, 1)
-    out += struct.pack(">BBB", 3, 0x11, 1)
-    # DHT: the shared self-describing DC + AC tables (ids 0)
-    out += b"\xff\xc4" + struct.pack(">HB", 2 + 1 + 16 + len(_DC_SYMBOLS), 0x00)
-    out += bytes(_DC_BITS) + bytes(_DC_SYMBOLS)
-    out += b"\xff\xc4" + struct.pack(">HB", 2 + 1 + 16 + len(_AC_SYMBOLS), 0x10)
-    out += bytes(_AC_BITS) + bytes(_AC_SYMBOLS)
-    if restart_interval:
-        out += b"\xff\xdd" + struct.pack(">HH", 4, restart_interval)  # DRI
-    # SOS: all 3 components use DC table 0 / AC table 0
-    out += b"\xff\xda" + struct.pack(">HB", 2 + 1 + 6 + 3, 3)
-    for cid in (1, 2, 3):
-        out += struct.pack(">BB", cid, 0x00)
-    out += struct.pack(">BBB", 0, 63, 0)
-
-    w = _BitWriter()
-    dc_y = dc_cb = dc_cr = 0
-    mcu = 0
-    mcu_w, mcu_h = 8 * hdiv, 8 * vdiv
-    # luma blocks per MCU, left-to-right then top-to-bottom (T.81 order)
-    yblocks = tuple((br, bc) for br in range(vdiv) for bc in range(hdiv))
-    for my in range(0, height, mcu_h):
-        for mx in range(0, width, mcu_w):
-            if restart_interval and mcu and mcu % restart_interval == 0:
-                w.restart((mcu // restart_interval - 1) % 8)
-                dc_y = dc_cb = dc_cr = 0
-            mcu += 1
-            for br, bc in yblocks:
-                zz = _forward_block_zz(
-                    yp, width, mx + 8 * bc, my + 8 * br, QUANT_LUMA
-                )
-                dc_y = _write_block(w, zz, dc_y)
-            cx, cy = mx // hdiv, my // vdiv
-            dc_cb = _write_block(
-                w, _forward_block_zz(cb, cw, cx, cy, QUANT_CHROMA), dc_cb
-            )
-            dc_cr = _write_block(
-                w, _forward_block_zz(cr, cw, cx, cy, QUANT_CHROMA), dc_cr
-            )
-    w.flush()
-    out += w.buf
-    out += b"\xff\xd9"  # EOI
-    return bytes(out)
-
-
 def sql_reference_stats_color(media_text_sql: str, *, table: str = "documents") -> str:
     """DuckDB oracle for the 16×16 4:2:0 color JPEG round-trip: replays
     :func:`reference_transform_color` relationally — interleaved RGB from
@@ -753,7 +563,7 @@ def sql_reference_stats_color(media_text_sql: str, *, table: str = "documents") 
     the Annex-K.1 table, one 8×8 block per chroma channel against the
     Annex-K.2 table), replicated upsample, lattice inverse conversion —
     reduced to the channel-summed pixel statistics of
-    :func:`multimodal.jpeg_pixel_stats`. Entropy layer correctness
+    :func:`multimodal.pixel_stats`. Entropy layer correctness
     is what the differential proves, exactly as in the grayscale oracle."""
     cvals = ",\n    ".join(
         f"({u}, {i}, {DCT_BASIS[u][i]!r})" for u in range(8) for i in range(8)
@@ -1006,17 +816,18 @@ FROM rgb GROUP BY media_id
 
 
 # ---------------------------------------------------------------------------
-# Progressive (SOF2) grayscale — spectral selection + successive
-# approximation per ITU T.81 Annex G, the last common real-world JPEG
-# shape (every "optimized for web" photo). The scan script is the
-# classic simple progression: DC at Al=1 then refined, each AC band
-# (1-5, 6-63) first at Al=2 then refined 2→1→0. Same differential
-# contract as baseline: the quantized coefficients are IDENTICAL to
-# SOF0's — progressive is purely a different entropy layering — so
-# decode(encode_progressive(px)) == reference_transform(px) and the
-# SAME relational oracle checks both paths. EOB runs are emitted as
-# EOB0 only (the Annex-K Huffman tables carry no EOBn>0 symbols);
-# the decoder handles general EOBn for spec compliance.
+# Progressive (SOF2) — spectral selection + successive approximation per
+# ITU T.81 Annex G, the last common real-world JPEG shape (every
+# "optimized for web" photo), for grayscale and 4:4:4 color. The scan
+# script is the classic simple progression: DC at Al=1 then refined,
+# each AC band (1-5, 6-63) first at Al=2 then refined 2→1→0, one
+# component per scan. Same differential contract as baseline: the
+# quantized coefficients are IDENTICAL to SOF0's — progressive is purely
+# a different entropy layering — so decode(encode_jpeg_progressive(px))
+# == reference_transform(px) and the SAME relational oracle checks both
+# paths. EOB runs are emitted as EOB0 only (the Annex-K Huffman tables
+# carry no EOBn>0 symbols); the decoder handles general EOBn for spec
+# compliance.
 # ---------------------------------------------------------------------------
 
 # (Ss, Se, Ah, Al) per scan — libjpeg's default simple progression for a
@@ -1033,185 +844,240 @@ _PROGRESSIVE_SCANS = (
 )
 
 
-def _quantized_blocks(pixels: bytes, width: int, height: int) -> list[list[int]]:
-    """Per-block zigzag-ordered quantized DCT coefficients — the shared
-    transform layer; bit-identical to what the baseline encoder codes."""
-    C = DCT_BASIS
-    blocks: list[list[int]] = []
-    for by in range(0, height, 8):
-        for bx in range(0, width, 8):
-            X = [
-                [pixels[(by + r) * width + bx + c] - 128.0 for c in range(8)]
-                for r in range(8)
-            ]
-            T = [
-                [sum(C[u][i] * X[i][j] for i in range(8)) for j in range(8)]
-                for u in range(8)
-            ]
-            Y = [
-                [sum(T[u][j] * C[v][j] for j in range(8)) for v in range(8)]
-                for u in range(8)
-            ]
-            blocks.append(
-                [
-                    _round_half_up(Y[r][c] / QUANT_LUMA[r * 8 + c])
-                    for (r, c) in ZIGZAG
-                ]
-            )
-    return blocks
+# ---------------------------------------------------------------------------
+# Encoder: one path for every stream the decoder reads. A frame is a
+# component list (id, h, v, qtable, plane, stride) — one gray component,
+# or Y + Cb + Cr in a SAMPLING_DIVS layout — whose 8x8 blocks each go
+# through _forward_block_zz once. The baseline encoder codes them in one
+# interleaved scan, the progressive one in the _PROGRESSIVE_SCANS script;
+# both write the same headers and the same DC difference and AC band
+# codes (_write_dc, _write_ac_band — the encoder twins of the decoder's
+# receive_extend and _decode_ac_band).
+# ---------------------------------------------------------------------------
 
 
-def _shr_to_zero(v: int, n: int) -> int:
-    """v / 2**n truncated toward zero (T.81's point transform for AC)."""
-    return v >> n if v >= 0 else -((-v) >> n)
+def _frame_components(pixels, width: int, height: int, subsampling):
+    """``(id, h, v, qtable, plane, stride)`` per frame component:
+    ``subsampling=None`` is one gray component over ``pixels``;
+    ``"420"``/``"422"``/``"444"`` converts interleaved RGB to Y (sampled
+    hdiv x vdiv, luma table) + Cb + Cr (1x1, chroma table)."""
+    if subsampling is None:
+        if width % 8 or height % 8:
+            raise ValueError("jpeg: dimensions must be multiples of 8")
+        if len(pixels) != width * height:
+            raise ValueError("jpeg: pixel buffer size mismatch")
+        return [(1, 1, 1, QUANT_LUMA, pixels, width)]
+    hdiv, vdiv = _sampling_divs(subsampling)
+    yp, cb, cr = rgb_to_ycbcr_planes(pixels, width, height, subsampling=subsampling)
+    cw = width // hdiv
+    return [
+        (1, hdiv, vdiv, QUANT_LUMA, yp, width),
+        (2, 1, 1, QUANT_CHROMA, cb, cw),
+        (3, 1, 1, QUANT_CHROMA, cr, cw),
+    ]
 
 
-def _encode_scan_dc_first(blocks, al: int) -> bytes:
-    w = _BitWriter()
-    prev = 0
-    for blk in blocks:
-        # arithmetic shift (floor) for DC so refinement bits OR back in
-        # exactly (two's-complement; decoder does coef |= bit << al)
-        t = blk[0] >> al
-        cat, bits = _magnitude(t - prev)
-        prev = t
-        code, length = _DC_CODES[cat]
-        w.write(code, length)
-        if cat:
-            w.write(bits, cat)
-    w.flush()
-    return bytes(w.buf)
+def _component_blocks(comps, height: int) -> list[list[list[int]]]:
+    """Each component's quantized zigzag blocks, row-major over its plane
+    (the decoder's block order)."""
+    vmax = comps[0][2]
+    return [
+        [
+            _forward_block_zz(plane, stride, bx, by, qtab)
+            for by in range(0, height * v // vmax, 8)
+            for bx in range(0, stride, 8)
+        ]
+        for _cid, _h, v, qtab, plane, stride in comps
+    ]
 
 
-def _encode_scan_dc_refine(blocks, al: int) -> bytes:
-    w = _BitWriter()
-    for blk in blocks:
-        w.write((blk[0] >> al) & 1, 1)
-    w.flush()
-    return bytes(w.buf)
+def _write_headers(comps, width: int, height: int, sof: int) -> bytearray:
+    """SOI, one DQT per quant table in use, SOF0 (``sof`` 0xC0) or SOF2
+    (0xC2), and the DHT segments of the shared DC and AC tables (ids 0)."""
+    qtabs: list[list[int]] = []
+    for comp in comps:
+        if comp[3] not in qtabs:
+            qtabs.append(comp[3])
+    out = bytearray(b"\xff\xd8")
+    for tq, tab in enumerate(qtabs):
+        # 8-bit precision, entries in zigzag order
+        zz_q = bytes(tab[r * 8 + c] for (r, c) in ZIGZAG)
+        out += b"\xff\xdb" + struct.pack(">HB", 2 + 1 + 64, tq) + zz_q
+    n = len(comps)
+    out += bytes((0xFF, sof))
+    out += struct.pack(">HBHHB", 2 + 6 + 3 * n, 8, height, width, n)
+    for cid, h, v, qtab, _plane, _stride in comps:
+        out += struct.pack(">BBB", cid, (h << 4) | v, qtabs.index(qtab))
+    for tc_th, bits, symbols in (
+        (0x00, _DC_BITS, _DC_SYMBOLS), (0x10, _AC_BITS, _AC_SYMBOLS)
+    ):
+        out += b"\xff\xc4" + struct.pack(">HB", 2 + 1 + 16 + len(symbols), tc_th)
+        out += bytes(bits) + bytes(symbols)
+    return out
 
 
-def _encode_scan_ac_first(blocks, ss: int, se: int, al: int) -> bytes:
-    w = _BitWriter()
-    for blk in blocks:
+def _write_sos(cids, ss: int, se: int, ah: int, al: int) -> bytes:
+    """SOS header: every scan component uses DC table 0 / AC table 0."""
+    out = b"\xff\xda" + struct.pack(">HB", 2 + 1 + 2 * len(cids) + 3, len(cids))
+    for cid in cids:
+        out += struct.pack(">BB", cid, 0x00)
+    return out + struct.pack(">BBB", ss, se, (ah << 4) | al)
+
+
+def _write_dc(w: _BitWriter, diff: int) -> None:
+    """One DC difference: its category's code, then its magnitude bits."""
+    cat, bits = _magnitude(diff)
+    w.write(*_DC_CODES[cat])
+    w.write(bits, cat)
+
+
+def _write_ac_band(w: _BitWriter, blk, ss: int, se: int, al: int) -> None:
+    """One block's AC coefficients ss..se at point transform al — the
+    whole 1..63 band at al=0 in a baseline scan: run/size codes, ZRL for
+    16 zeros, EOB0 when the band ends in zeros."""
+    run = 0
+    for k in range(ss, se + 1):
+        # point transform: v / 2**al truncated toward zero (T.81 G.1.2.2)
+        v = blk[k]
+        t = v >> al if v >= 0 else -(-v >> al)
+        if t == 0:
+            run += 1
+            continue
+        while run > 15:
+            w.write(*_AC_CODES[0xF0])
+            run -= 16
+        cat, bits = _magnitude(t)
+        w.write(*_AC_CODES[(run << 4) | cat])
+        w.write(bits, cat)
         run = 0
-        pending_eob = False
-        for k in range(ss, se + 1):
-            t = _shr_to_zero(blk[k], al)
-            if t == 0:
-                run += 1
-                continue
-            while run > 15:
-                zc, zl = _AC_CODES[0xF0]
-                w.write(zc, zl)
-                run -= 16
-            cat, bits = _magnitude(t)
-            code, length = _AC_CODES[(run << 4) | cat]
-            w.write(code, length)
-            w.write(bits, cat)
-            run = 0
-        if run:
-            pending_eob = True
-        if pending_eob:
-            ec, el = _AC_CODES[0x00]  # EOB0: run length 1, no extension bits
-            w.write(ec, el)
-    w.flush()
-    return bytes(w.buf)
+    if run:
+        w.write(*_AC_CODES[0x00])
 
 
-def _encode_scan_ac_refine(blocks, ss: int, se: int, al: int) -> bytes:
-    w = _BitWriter()
-    for blk in blocks:
-        absvals = [abs(blk[k]) >> al for k in range(ss, se + 1)]
-        # last newly-visible (== 1 at this precision) coefficient: runs
-        # beyond it fold into the EOB instead of ZRLs
-        eob_idx = -1
-        for i, t in enumerate(absvals):
-            if t == 1:
-                eob_idx = i
-        run = 0
-        br: list[int] = []  # buffered correction bits
-        for i, t in enumerate(absvals):
-            if t == 0:
-                run += 1
-                continue
-            # Emit pending ZRLs at ANY nonzero coefficient — including a
-            # history one — unless they fold into the EOB. A history
-            # coefficient encountered while run > 15 must come AFTER the
-            # ZRL in the bit stream (its correction bit belongs to the
-            # next symbol's walk, which starts past the 16 skipped
-            # zeros); buffering it across the ZRL desyncs the decoder's
-            # positional bit reads (caught by the sf0.01 differential).
-            while run > 15 and i <= eob_idx:
-                zc, zl = _AC_CODES[0xF0]
-                w.write(zc, zl)
-                for b in br:
-                    w.write(b, 1)
-                br = []
-                run -= 16
-            if t > 1:
-                # history coefficient (visible in an earlier scan):
-                # correction bit rides behind the next emitted symbol
-                br.append(t & 1)
-                continue
-            # newly visible coefficient (t == 1)
-            code, length = _AC_CODES[(run << 4) | 1]
-            w.write(code, length)
-            w.write(1 if blk[ss + i] > 0 else 0, 1)
+def _write_ac_refine(w: _BitWriter, blk, ss: int, se: int, al: int) -> None:
+    """One block's bit plane al of AC coefficients ss..se (T.81 G.1.2.3):
+    newly visible coefficients as run/1 codes with a sign bit, a
+    correction bit for each coefficient visible in an earlier scan."""
+    absvals = [abs(blk[k]) >> al for k in range(ss, se + 1)]
+    # last newly-visible (== 1 at this precision) coefficient: runs
+    # beyond it fold into the EOB instead of ZRLs
+    eob_idx = -1
+    for i, t in enumerate(absvals):
+        if t == 1:
+            eob_idx = i
+    run = 0
+    br: list[int] = []  # buffered correction bits
+    for i, t in enumerate(absvals):
+        if t == 0:
+            run += 1
+            continue
+        # Emit pending ZRLs at ANY nonzero coefficient — including a
+        # history one — unless they fold into the EOB. A history
+        # coefficient encountered while run > 15 must come AFTER the
+        # ZRL in the bit stream (its correction bit belongs to the
+        # next symbol's walk, which starts past the 16 skipped
+        # zeros); buffering it across the ZRL desyncs the decoder's
+        # positional bit reads (caught by the sf0.01 differential).
+        while run > 15 and i <= eob_idx:
+            w.write(*_AC_CODES[0xF0])
             for b in br:
                 w.write(b, 1)
             br = []
-            run = 0
-        if run or br:
-            ec, el = _AC_CODES[0x00]  # EOB0 with trailing correction bits
-            w.write(ec, el)
-            for b in br:
-                w.write(b, 1)
+            run -= 16
+        if t > 1:
+            # history coefficient (visible in an earlier scan):
+            # correction bit rides behind the next emitted symbol
+            br.append(t & 1)
+            continue
+        # newly visible coefficient (t == 1)
+        w.write(*_AC_CODES[(run << 4) | 1])
+        w.write(1 if blk[ss + i] > 0 else 0, 1)
+        for b in br:
+            w.write(b, 1)
+        br = []
+        run = 0
+    if run or br:
+        w.write(*_AC_CODES[0x00])  # EOB0 with trailing correction bits
+        for b in br:
+            w.write(b, 1)
+
+
+def encode_jpeg(
+    pixels: bytes, width: int, height: int, *,
+    subsampling: str | None = None,
+    restart_interval: int | None = None,
+) -> bytes:
+    """Baseline sequential (SOF0) JPEG: 8-bit grayscale pixels with
+    ``subsampling=None``, else interleaved 8-bit RGB as YCbCr 4:2:0
+    (``"420"``, the dominant real-world shape), 4:2:2 or 4:4:4.
+
+    ``restart_interval`` (MCUs) emits a DRI segment plus cycling RSTn
+    markers with DC-predictor resets — the resync feature virtually
+    every camera/encoder writes; pixels are unchanged (the reference
+    transforms are restart-agnostic)."""
+    comps = _frame_components(pixels, width, height, subsampling)
+    blocks = _component_blocks(comps, height)
+    out = _write_headers(comps, width, height, 0xC0)
+    if restart_interval:
+        out += b"\xff\xdd" + struct.pack(">HH", 4, restart_interval)  # DRI
+    out += _write_sos([c[0] for c in comps], 0, 63, 0, 0)
+    mcus_x = width // (8 * comps[0][1])
+    mcus_y = height // (8 * comps[0][2])
+    w = _BitWriter()
+    preds = [0] * len(comps)
+    for m in range(mcus_x * mcus_y):
+        if restart_interval and m and m % restart_interval == 0:
+            w.restart((m // restart_interval - 1) % 8)
+            preds = [0] * len(comps)
+        my, mx = divmod(m, mcus_x)
+        # each component's h x v blocks, left-to-right then top-to-bottom
+        # (T.81 order)
+        for k, (_cid, h, v, _qtab, _plane, _stride) in enumerate(comps):
+            for br in range(v):
+                for bc in range(h):
+                    blk = blocks[k][(my * v + br) * mcus_x * h + mx * h + bc]
+                    _write_dc(w, blk[0] - preds[k])
+                    preds[k] = blk[0]
+                    _write_ac_band(w, blk, 1, 63, 0)
     w.flush()
-    return bytes(w.buf)
+    return bytes(out + w.buf + b"\xff\xd9")
 
 
-def encode_jpeg_gray_progressive(pixels: bytes, width: int, height: int) -> bytes:
-    """Progressive (SOF2) grayscale JPEG of raw 8-bit pixels, 8-scan
-    spectral-selection + successive-approximation script. The quantized
-    coefficients are identical to :func:`encode_jpeg_gray`'s, so both
-    decode to the same image."""
-    if width % 8 or height % 8:
-        raise ValueError("jpeg: dimensions must be multiples of 8")
-    if len(pixels) != width * height:
-        raise ValueError("jpeg: pixel buffer size mismatch")
-    blocks = _quantized_blocks(pixels, width, height)
-
-    out = bytearray()
-    out += b"\xff\xd8"
-    zz_q = bytes(QUANT_LUMA[r * 8 + c] for (r, c) in ZIGZAG)
-    out += b"\xff\xdb" + struct.pack(">HB", 2 + 1 + 64, 0x00) + zz_q
-    # SOF2: progressive DCT, 1 component
-    out += b"\xff\xc2" + struct.pack(">HBHHB", 2 + 6 + 3, 8, height, width, 1)
-    out += struct.pack(">BBB", 1, 0x11, 0)
-    out += b"\xff\xc4" + struct.pack(">HB", 2 + 1 + 16 + len(_DC_SYMBOLS), 0x00)
-    out += bytes(_DC_BITS) + bytes(_DC_SYMBOLS)
-    out += b"\xff\xc4" + struct.pack(">HB", 2 + 1 + 16 + len(_AC_SYMBOLS), 0x10)
-    out += bytes(_AC_BITS) + bytes(_AC_SYMBOLS)
+def encode_jpeg_progressive(
+    pixels: bytes, width: int, height: int, *, subsampling: str | None = None
+) -> bytes:
+    """Progressive (SOF2) JPEG of grayscale pixels (``subsampling=None``)
+    or interleaved RGB as 4:4:4 YCbCr (``"444"``): the 8-scan
+    spectral-selection + successive-approximation script, one
+    single-component scan per component (24 scans for color — legal per
+    T.81; interleaving DC scans would only shrink headers). The
+    quantized coefficients equal :func:`encode_jpeg`'s with the same
+    ``subsampling``, so both decode to the same pixels and share the
+    relational oracles."""
+    if subsampling not in (None, "444"):
+        raise ValueError("jpeg: progressive color supports 4:4:4 only")
+    comps = _frame_components(pixels, width, height, subsampling)
+    blocks = _component_blocks(comps, height)
+    out = _write_headers(comps, width, height, 0xC2)
     for ss, se, ah, al in _PROGRESSIVE_SCANS:
-        out += b"\xff\xda" + struct.pack(">HB", 2 + 1 + 2 + 3, 1)
-        out += struct.pack(">BB", 1, 0x00)
-        out += struct.pack(">BBB", ss, se, (ah << 4) | al)
-        if ss == 0:
-            data = (
-                _encode_scan_dc_first(blocks, al)
-                if ah == 0
-                else _encode_scan_dc_refine(blocks, al)
-            )
-        else:
-            data = (
-                _encode_scan_ac_first(blocks, ss, se, al)
-                if ah == 0
-                else _encode_scan_ac_refine(blocks, ss, se, al)
-            )
-        out += data
-    out += b"\xff\xd9"
-    return bytes(out)
+        for (cid, *_rest), comp_blocks in zip(comps, blocks):
+            out += _write_sos([cid], ss, se, ah, al)
+            w = _BitWriter()
+            prev = 0
+            for blk in comp_blocks:
+                if ss:
+                    (_write_ac_refine if ah else _write_ac_band)(w, blk, ss, se, al)
+                elif ah:
+                    w.write((blk[0] >> al) & 1, 1)
+                else:
+                    # arithmetic shift (floor) for DC so refinement bits
+                    # OR back in exactly (two's-complement; the decoder
+                    # does coef |= bit << al)
+                    _write_dc(w, (blk[0] >> al) - prev)
+                    prev = blk[0] >> al
+            w.flush()
+            out += w.buf
+    return bytes(out + b"\xff\xd9")
 
 
 def _decode_scan_dc_first(r, blocks, al: int, dc_tab) -> None:
@@ -1377,64 +1243,6 @@ SELECT media_id, {width} AS width, {height} AS height,
        round(CAST(sum(v) AS DOUBLE) / {n}, 6) AS mean_px
 FROM xr GROUP BY media_id
 """
-
-
-def encode_jpeg_color_progressive(rgb: bytes, width: int, height: int) -> bytes:
-    """Progressive (SOF2) 4:4:4 YCbCr JPEG of raw interleaved RGB: the
-    grayscale 8-scan spectral-selection + successive-approximation
-    script applied per component as single-component non-interleaved
-    scans (24 scans total — legal per T.81; interleaving DC scans would
-    only shrink headers). Coefficients equal the baseline 4:4:4
-    encoder's, so both decode to the same pixels and share the
-    relational oracle."""
-    yp, cb, cr = rgb_to_ycbcr_planes(rgb, width, height, subsampling="444")
-
-    def blocks_of(plane, qtab):
-        return [
-            _forward_block_zz(plane, width, bx, by, qtab)
-            for by in range(0, height, 8)
-            for bx in range(0, width, 8)
-        ]
-
-    comp_blocks = {
-        1: blocks_of(yp, QUANT_LUMA),
-        2: blocks_of(cb, QUANT_CHROMA),
-        3: blocks_of(cr, QUANT_CHROMA),
-    }
-
-    out = bytearray()
-    out += b"\xff\xd8"
-    for tq, qtab in ((0, QUANT_LUMA), (1, QUANT_CHROMA)):
-        zz_q = bytes(qtab[r * 8 + c] for (r, c) in ZIGZAG)
-        out += b"\xff\xdb" + struct.pack(">HB", 2 + 1 + 64, tq) + zz_q
-    out += b"\xff\xc2" + struct.pack(">HBHHB", 2 + 6 + 9, 8, height, width, 3)
-    for cid, tq in ((1, 0), (2, 1), (3, 1)):
-        out += struct.pack(">BBB", cid, 0x11, tq)
-    out += b"\xff\xc4" + struct.pack(">HB", 2 + 1 + 16 + len(_DC_SYMBOLS), 0x00)
-    out += bytes(_DC_BITS) + bytes(_DC_SYMBOLS)
-    out += b"\xff\xc4" + struct.pack(">HB", 2 + 1 + 16 + len(_AC_SYMBOLS), 0x10)
-    out += bytes(_AC_BITS) + bytes(_AC_SYMBOLS)
-    for ss, se, ah, al in _PROGRESSIVE_SCANS:
-        for cid in (1, 2, 3):
-            blocks = comp_blocks[cid]
-            out += b"\xff\xda" + struct.pack(">HB", 2 + 1 + 2 + 3, 1)
-            out += struct.pack(">BB", cid, 0x00)
-            out += struct.pack(">BBB", ss, se, (ah << 4) | al)
-            if ss == 0:
-                data = (
-                    _encode_scan_dc_first(blocks, al)
-                    if ah == 0
-                    else _encode_scan_dc_refine(blocks, al)
-                )
-            else:
-                data = (
-                    _encode_scan_ac_first(blocks, ss, se, al)
-                    if ah == 0
-                    else _encode_scan_ac_refine(blocks, ss, se, al)
-                )
-            out += data
-    out += b"\xff\xd9"
-    return bytes(out)
 
 
 # ---------------------------------------------------------------------------

@@ -25,14 +25,20 @@ decode cost is linear per partition and embarrassingly parallel.
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
+import math
+import struct
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from stock_streaming_data_pipeline_spark.operators import jpeg_codec, png_codec
+from stock_streaming_data_pipeline_spark.operators import (
+    jpeg_codec,
+    png_codec,
+    wav_codec,
+)
 
 MEDIA_SCHEMA = T.StructType(
     [
@@ -106,7 +112,8 @@ def png_decode_features(payload: bytes, dim: int = 8) -> list[float]:
 
 def auto_decode_features(payload: bytes, dim: int = 8) -> list[float]:
     """Feature decoder: real pixel features where the payload is PNG,
-    digest fake elsewhere (JPEG/audio/video codecs absent)."""
+    the digest fake for every other payload — JPEG included, although
+    :func:`decode_image` reads it: this path's features stay digests."""
     if png_codec.is_png(payload):
         return png_decode_features(payload, dim)
     return fake_decode_features(payload, dim)
@@ -116,8 +123,8 @@ def extract_features(media: DataFrame, *, dim: int = 8) -> DataFrame:
     """mapInPandas feature extraction over binary payloads.
 
     The bytes→vector step is :func:`auto_decode_features`: it decodes PNG
-    payloads for real (pure-stdlib codec) and digest-fakes the formats
-    whose codec libs are absent from this environment.
+    payloads for real (pure-stdlib codec) and digest-fakes every other
+    payload.
     """
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -138,26 +145,6 @@ def extract_features(media: DataFrame, *, dim: int = 8) -> DataFrame:
             )
 
     return media.mapInPandas(run, schema=FEATURE_SCHEMA)
-
-
-RESIZED_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("payload", T.BinaryType(), True),
-        T.StructField("media_type", T.StringType(), True),
-        T.StructField(
-            "meta",
-            T.StructType(
-                [
-                    T.StructField("width", T.IntegerType()),
-                    T.StructField("height", T.IntegerType()),
-                    T.StructField("sample_rate", T.IntegerType()),
-                    T.StructField("n_frames", T.IntegerType()),
-                ]
-            ),
-        ),
-    ]
-)
 
 
 def fake_resize_payload(payload: bytes, width: int, height: int) -> bytes:
@@ -217,7 +204,7 @@ def resize_images(
                 }
             )
 
-    return media.mapInPandas(run, schema=RESIZED_SCHEMA)
+    return media.mapInPandas(run, schema=MEDIA_SCHEMA)
 
 
 def sample_frames(media: DataFrame, *, every_n: int = 10) -> DataFrame:
@@ -237,36 +224,35 @@ def sample_frames(media: DataFrame, *, every_n: int = 10) -> DataFrame:
     )
 
 
-def documents_as_png_media(
-    docs: DataFrame, *, width: int = 8, height: int = 8
+def _text_media(
+    docs: DataFrame, n_bytes: int, encode: Callable[[bytes], bytes],
+    media_type: str, *,
+    width: int = 0, height: int = 0, sample_rate: int = 0, n_frames: int = 0,
 ) -> DataFrame:
-    """REAL-PNG media table derived from document text: the first
-    width*height UTF-8 bytes (space-padded) become a grayscale image,
-    encoded executor-side with the real encoder. Because the pixel bytes
-    are a deterministic function of the text, downstream decode results
-    carry full DuckDB oracles — the differential check proves the codec
-    round-trip, not just the plumbing."""
-    n = width * height
+    """Media table derived from document text: each document's first
+    ``n_bytes`` UTF-8 bytes (space-padded) become the payload
+    ``encode(raw)``, encoded executor-side, with the given metadata.
+    Because the payload is a deterministic function of the text,
+    downstream decode results carry full DuckDB oracles — the
+    differential check proves the codec round-trip, not just the
+    plumbing."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            payloads = [
-                png_codec.encode_png(
-                    t.encode("utf-8")[:n].ljust(n, b" "), width, height
-                )
-                for t in pdf["text"]
-            ]
             yield pd.DataFrame(
                 {
                     "media_id": pdf["doc_id"],
-                    "payload": payloads,
-                    "media_type": "image",
+                    "payload": [
+                        encode(t.encode("utf-8")[:n_bytes].ljust(n_bytes, b" "))
+                        for t in pdf["text"]
+                    ],
+                    "media_type": media_type,
                     "meta": [
                         {
                             "width": width,
                             "height": height,
-                            "sample_rate": 0,
-                            "n_frames": 0,
+                            "sample_rate": sample_rate,
+                            "n_frames": n_frames,
                         }
                     ]
                     * len(pdf),
@@ -274,6 +260,19 @@ def documents_as_png_media(
             )
 
     return docs.select("doc_id", "text").mapInPandas(run, MEDIA_SCHEMA)
+
+
+def documents_as_png_media(
+    docs: DataFrame, *, width: int = 8, height: int = 8
+) -> DataFrame:
+    """REAL-PNG media table derived from document text: the first
+    width*height bytes become a grayscale image encoded with the real
+    encoder (png_codec.encode_png)."""
+    return _text_media(
+        docs, width * height,
+        lambda raw: png_codec.encode_png(raw, width, height),
+        "image", width=width, height=height,
+    )
 
 
 PIXEL_STATS_SCHEMA = (
@@ -282,88 +281,28 @@ PIXEL_STATS_SCHEMA = (
 )
 
 
-def png_pixel_stats(media: DataFrame) -> DataFrame:
-    """Per-image pixel statistics via REAL PNG decode (mapInPandas): the
-    decoded sample stream reduced to sum/min/max/mean. Linear per
-    partition, payloads never leave the executors."""
+def pixel_stats(media: DataFrame, *, frame_idx: int | None = None) -> DataFrame:
+    """Per-image pixel statistics via REAL decode (mapInPandas,
+    :func:`decode_image`: PNG, or JPEG baseline or progressive, gray or
+    color) — sum/min/max/mean over every decoded sample, all channels
+    summed. With ``frame_idx`` each payload is a PSEQ clip and only that
+    frame is decoded (the container walk skips the rest) — the
+    keyframe-extraction shape of a video featurization pass.
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                w, h, ch, px = png_codec.decode_png(bytes(payload))
-                n = len(px)
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "width": w,
-                        "height": h,
-                        "sum_px": sum(px),
-                        "min_px": min(px) if n else 0,
-                        "max_px": max(px) if n else 0,
-                        "mean_px": round(sum(px) / n, 6) if n else 0.0,
-                    }
-                )
-            if rows:
-                yield pd.DataFrame(rows)
-
-    return media.mapInPandas(run, PIXEL_STATS_SCHEMA)
-
-
-def documents_as_jpeg_media(
-    docs: DataFrame, *, width: int = 8, height: int = 8
-) -> DataFrame:
-    """REAL-JPEG media table derived from document text: the first
-    width*height bytes (ASCII-sanitized upstream, space-padded) become a
-    grayscale image encoded executor-side with the baseline JPEG
-    encoder. JPEG is lossy, but deterministically so — downstream decode
-    equals jpeg_codec.reference_transform of the same bytes, which the
-    DuckDB oracle replays from literal DCT/quant tables."""
-    n = width * height
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [
-                jpeg_codec.encode_jpeg_gray(
-                    t.encode("utf-8")[:n].ljust(n, b" "), width, height
-                )
-                for t in pdf["text"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"],
-                    "payload": payloads,
-                    "media_type": "image",
-                    "meta": [
-                        {
-                            "width": width,
-                            "height": height,
-                            "sample_rate": 0,
-                            "n_frames": 0,
-                        }
-                    ]
-                    * len(pdf),
-                }
-            )
-
-    return docs.select("doc_id", "text").mapInPandas(run, MEDIA_SCHEMA)
-
-
-def jpeg_pixel_stats(media: DataFrame) -> DataFrame:
-    """Per-image pixel statistics via REAL JPEG decode (mapInPandas,
-    jpeg_codec.decode_jpeg: baseline or progressive, gray or color) —
-    sum/min/max/mean over every decoded sample, all channels summed.
     The mean uses the codec's half-up round6 (jpeg_codec._round6), as
     DuckDB's round does: Python's builtin round is banker's and diverges
-    from the SQL oracle on exact ties (at 256 samples the mean's
-    decimal expansion ends at digit 8, so digit-7 ties occur). Linear
-    per partition; payloads never leave the executors."""
+    from the SQL oracle on exact ties (at 256 samples the mean's decimal
+    expansion ends at digit 8, so digit-7 ties occur). Linear per
+    partition; payloads never leave the executors."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
             for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                w, h, _ch, px = jpeg_codec.decode_jpeg(bytes(payload))
+                payload = bytes(payload)
+                if frame_idx is not None:
+                    payload = decode_pngseq_frame(payload, frame_idx)
+                w, h, _ch, px = decode_image(payload)
                 n = len(px)
                 rows.append(
                     {
@@ -380,6 +319,33 @@ def jpeg_pixel_stats(media: DataFrame) -> DataFrame:
                 yield pd.DataFrame(rows)
 
     return media.mapInPandas(run, PIXEL_STATS_SCHEMA)
+
+
+def documents_as_jpeg_media(
+    docs: DataFrame, *, width: int, height: int,
+    subsampling: str | None = None, progressive: bool = False,
+) -> DataFrame:
+    """REAL-JPEG media table derived from document text: the first
+    width*height bytes (ASCII-sanitized upstream, space-padded) become a
+    grayscale image with ``subsampling=None``; otherwise the first
+    width*height*3 become interleaved RGB, coded as YCbCr in that
+    layout. Encoded executor-side with jpeg_codec.encode_jpeg, or
+    encode_jpeg_progressive (gray or 4:4:4) with ``progressive``. JPEG
+    is lossy, but deterministically so — downstream decode equals
+    jpeg_codec.reference_transform (or reference_transform_color) of the
+    same bytes, which the DuckDB oracles replay from literal DCT/quant
+    tables; progressive and baseline share the quantized coefficients,
+    so they share the oracles too."""
+
+    def encode(raw: bytes) -> bytes:
+        if progressive:
+            return jpeg_codec.encode_jpeg_progressive(
+                raw, width, height, subsampling=subsampling
+            )
+        return jpeg_codec.encode_jpeg(raw, width, height, subsampling=subsampling)
+
+    n = width * height * (1 if subsampling is None else 3)
+    return _text_media(docs, n, encode, "image", width=width, height=height)
 
 
 def documents_as_media(docs: DataFrame) -> DataFrame:
@@ -400,38 +366,16 @@ def documents_as_media(docs: DataFrame) -> DataFrame:
 
 def documents_as_wav_media(docs: DataFrame, *, n_samples: int = 64) -> DataFrame:
     """REAL-WAV media table derived from document text: the first
-    ``n_samples`` UTF-8 bytes (space-padded) map to PCM16 samples via
-    (byte − 100)·128, encoded executor-side with the stdlib RIFF encoder
-    (operators/wav_codec.py). Sample values are a deterministic function
-    of the text, so decoded-audio statistics carry full DuckDB oracles —
-    the audio twin of documents_as_png_media."""
-    from stock_streaming_data_pipeline_spark.operators import wav_codec
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for t in pdf["text"]:
-                raw = t.encode("utf-8")[:n_samples].ljust(n_samples, b" ")
-                samples = [(b - 100) * 128 for b in raw]
-                payloads.append(wav_codec.encode_wav(samples, sample_rate=8000))
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"],
-                    "payload": payloads,
-                    "media_type": "audio",
-                    "meta": [
-                        {
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 8000,
-                            "n_frames": n_samples,
-                        }
-                    ]
-                    * len(pdf),
-                }
-            )
-
-    return docs.select("doc_id", "text").mapInPandas(run, MEDIA_SCHEMA)
+    ``n_samples`` bytes map to PCM16 samples via (byte − 100)·128,
+    encoded with the stdlib RIFF encoder (operators/wav_codec.py) — the
+    audio twin of documents_as_png_media."""
+    return _text_media(
+        docs, n_samples,
+        lambda raw: wav_codec.encode_wav(
+            [(b - 100) * 128 for b in raw], sample_rate=8000
+        ),
+        "audio", sample_rate=8000, n_frames=n_samples,
+    )
 
 
 AUDIO_STATS_SCHEMA = (
@@ -445,7 +389,6 @@ def wav_audio_stats(media: DataFrame) -> DataFrame:
     RIFF chunk walk + PCM16 unpack, reduced to duration, amplitude
     bounds, RMS energy and zero-crossing count (integer sums → the
     stats replay exactly from the source bytes in any engine)."""
-    from stock_streaming_data_pipeline_spark.operators import wav_codec
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -454,7 +397,6 @@ def wav_audio_stats(media: DataFrame) -> DataFrame:
                 rate, s = wav_codec.decode_wav(bytes(payload))
                 n = len(s)
                 sq = sum(v * v for v in s)
-                import math
                 zc = sum(
                     1
                     for i in range(1, n)
@@ -492,11 +434,9 @@ def encode_pngseq(frames: list[bytes]) -> bytes:
     for a real video container (MP4 demuxing needs codec libs this
     sandbox lacks) — but the PIPELINE is the real thing: container walk,
     frame select, per-frame image decode."""
-    import struct as _struct
-
-    out = [PSEQ_MAGIC, _struct.pack("<I", len(frames))]
+    out = [PSEQ_MAGIC, struct.pack("<I", len(frames))]
     for f in frames:
-        out.append(_struct.pack("<I", len(f)))
+        out.append(struct.pack("<I", len(f)))
         out.append(f)
     return b"".join(out)
 
@@ -505,16 +445,14 @@ def decode_pngseq_frame(payload: bytes, idx: int) -> bytes:
     """Seek to frame ``idx`` by walking the length prefixes (no decode
     of skipped frames — the point of a container walk) and return its
     PNG bytes."""
-    import struct as _struct
-
     if payload[:4] != PSEQ_MAGIC:
         raise ValueError("not a PSEQ container")
-    (n,) = _struct.unpack_from("<I", payload, 4)
+    (n,) = struct.unpack_from("<I", payload, 4)
     if not 0 <= idx < n:
         raise IndexError(f"frame {idx} out of range 0..{n - 1}")
     pos = 8
     for i in range(n):
-        (flen,) = _struct.unpack_from("<I", payload, pos)
+        (flen,) = struct.unpack_from("<I", payload, pos)
         pos += 4
         if i == idx:
             frame = payload[pos : pos + flen]
@@ -530,73 +468,21 @@ def documents_as_pngseq_media(
 ) -> DataFrame:
     """REAL-container video table: document text split into ``n_frames``
     consecutive width*height byte tiles, each a real PNG frame inside
-    the PSEQ container. Deterministic from the text, so frame-level
-    decode results carry full DuckDB oracles."""
-    from stock_streaming_data_pipeline_spark.operators import png_codec
-
+    the PSEQ container."""
     fsize = width * height
-    total = fsize * n_frames
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for t in pdf["text"]:
-                raw = t.encode("utf-8")[:total].ljust(total, b" ")
-                frames = [
-                    png_codec.encode_png(
-                        raw[i * fsize : (i + 1) * fsize], width, height
-                    )
-                    for i in range(n_frames)
-                ]
-                payloads.append(encode_pngseq(frames))
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"],
-                    "payload": payloads,
-                    "media_type": "video",
-                    "meta": [
-                        {
-                            "width": width,
-                            "height": height,
-                            "sample_rate": 0,
-                            "n_frames": n_frames,
-                        }
-                    ]
-                    * len(pdf),
-                }
-            )
+    def encode(raw: bytes) -> bytes:
+        return encode_pngseq(
+            [
+                png_codec.encode_png(raw[i * fsize : (i + 1) * fsize], width, height)
+                for i in range(n_frames)
+            ]
+        )
 
-    return docs.select("doc_id", "text").mapInPandas(run, MEDIA_SCHEMA)
-
-
-def pngseq_frame_stats(media: DataFrame, *, frame_idx: int) -> DataFrame:
-    """Decode ONE selected frame per clip (container walk skips the
-    rest) and reduce it to pixel statistics — the keyframe-extraction
-    shape of a video featurization pass."""
-    from stock_streaming_data_pipeline_spark.operators import png_codec
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                frame = decode_pngseq_frame(bytes(payload), frame_idx)
-                w, h, ch, px = png_codec.decode_png(frame)
-                n = len(px)
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "width": w,
-                        "height": h,
-                        "sum_px": sum(px),
-                        "min_px": min(px) if n else 0,
-                        "max_px": max(px) if n else 0,
-                        "mean_px": round(sum(px) / n, 6) if n else 0.0,
-                    }
-                )
-            if rows:
-                yield pd.DataFrame(rows)
-
-    return media.mapInPandas(run, PIXEL_STATS_SCHEMA)
+    return _text_media(
+        docs, fsize * n_frames, encode, "video",
+        width=width, height=height, n_frames=n_frames,
+    )
 
 
 def resample_audio(media: DataFrame, *, factor: int) -> DataFrame:
@@ -605,7 +491,6 @@ def resample_audio(media: DataFrame, *, factor: int) -> DataFrame:
     through the stdlib codec (the audio twin of resize_images' nearest-
     neighbor kernel). Deterministic: sample selection is pure indexing,
     so downstream stats replay from the source bytes."""
-    from stock_streaming_data_pipeline_spark.operators import wav_codec
 
     if factor < 1:
         raise ValueError("factor must be >= 1")
@@ -634,126 +519,6 @@ def resample_audio(media: DataFrame, *, factor: int) -> DataFrame:
             )
 
     return media.mapInPandas(run, MEDIA_SCHEMA)
-
-
-def documents_as_jpeg_color_media(
-    docs: DataFrame, *, width: int = 16, height: int = 16,
-    subsampling: str = "420",
-) -> DataFrame:
-    """COLOR (4:2:0 YCbCr) baseline-JPEG media table from document text:
-    the first width*height*3 bytes (ASCII-sanitized upstream,
-    space-padded) become an interleaved RGB image encoded executor-side
-    by jpeg_codec.encode_jpeg_color. Deterministically lossy — downstream
-    decode equals jpeg_codec.reference_transform_color, replayed
-    relationally by jpeg_codec.sql_reference_stats_color."""
-    n = width * height * 3
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [
-                jpeg_codec.encode_jpeg_color(
-                    t.encode("utf-8")[:n].ljust(n, b" "), width, height,
-                    subsampling=subsampling,
-                )
-                for t in pdf["text"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"],
-                    "payload": payloads,
-                    "media_type": "image",
-                    "meta": [
-                        {
-                            "width": width,
-                            "height": height,
-                            "sample_rate": 0,
-                            "n_frames": 0,
-                        }
-                    ]
-                    * len(pdf),
-                }
-            )
-
-    return docs.select("doc_id", "text").mapInPandas(run, MEDIA_SCHEMA)
-
-
-def documents_as_jpeg_progressive_media(
-    docs: DataFrame, *, width: int = 16, height: int = 16
-) -> DataFrame:
-    """PROGRESSIVE-JPEG media table derived from document text: the first
-    width*height bytes (ASCII-sanitized upstream, space-padded) become a
-    grayscale image encoded executor-side with the SOF2 progressive
-    encoder (8-scan spectral-selection + successive-approximation
-    script). Quantized coefficients equal the baseline encoder's, so
-    downstream decode equals jpeg_codec.reference_transform of the same
-    bytes — replayed relationally by sql_reference_stats_tiled."""
-    n = width * height
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [
-                jpeg_codec.encode_jpeg_gray_progressive(
-                    t.encode("utf-8")[:n].ljust(n, b" "), width, height
-                )
-                for t in pdf["text"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"],
-                    "payload": payloads,
-                    "media_type": "image",
-                    "meta": [
-                        {
-                            "width": width,
-                            "height": height,
-                            "sample_rate": 0,
-                            "n_frames": 0,
-                        }
-                    ]
-                    * len(pdf),
-                }
-            )
-
-    return docs.select("doc_id", "text").mapInPandas(run, MEDIA_SCHEMA)
-
-
-def documents_as_jpeg_progressive_color_media(
-    docs: DataFrame, *, width: int = 8, height: int = 8
-) -> DataFrame:
-    """PROGRESSIVE COLOR (SOF2 4:4:4 YCbCr) JPEG media table from
-    document text: first width*height*3 bytes become an interleaved RGB
-    image encoded executor-side with the 24-scan per-component
-    progressive encoder. Coefficients equal the baseline 4:4:4
-    encoder's, so decode equals reference_transform_color(444) and the
-    existing sql_reference_stats_color_444 oracle applies unchanged."""
-    n = width * height * 3
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [
-                jpeg_codec.encode_jpeg_color_progressive(
-                    t.encode("utf-8")[:n].ljust(n, b" "), width, height
-                )
-                for t in pdf["text"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"],
-                    "payload": payloads,
-                    "media_type": "image",
-                    "meta": [
-                        {
-                            "width": width,
-                            "height": height,
-                            "sample_rate": 0,
-                            "n_frames": 0,
-                        }
-                    ]
-                    * len(pdf),
-                }
-            )
-
-    return docs.select("doc_id", "text").mapInPandas(run, MEDIA_SCHEMA)
 
 
 PIXEL_ROWS_SCHEMA = "media_id long, i int, v int"
@@ -788,7 +553,6 @@ def wav_sample_rows(media: DataFrame) -> DataFrame:
     (mapInPandas) — the relational hand-off for spectral operators
     (framed DFT spectrograms): Python only decodes; all signal math
     after this row stream is Catalyst expressions."""
-    from stock_streaming_data_pipeline_spark.operators import wav_codec
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

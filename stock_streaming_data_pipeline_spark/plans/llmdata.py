@@ -1324,7 +1324,7 @@ def multimodal_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     all — this is LLM-data-tier scope.)"""
     docs = _ascii_text_docs(load_table(spark, sf_dir, "documents"))
     media = multimodal.documents_as_png_media(docs, width=8, height=8)
-    return multimodal.png_pixel_stats(media)
+    return multimodal.pixel_stats(media)
 
 
 @register(
@@ -1359,7 +1359,7 @@ def multimodal_png_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _ascii_text_docs(load_table(spark, sf_dir, "documents"))
     media = multimodal.documents_as_png_media(docs, width=8, height=8)
     resized = multimodal.resize_images(media, width=4, height=4)
-    return multimodal.png_pixel_stats(resized)
+    return multimodal.pixel_stats(resized)
 
 
 _MIX_TAU = 0.5       # temperature: flattens the language distribution
@@ -1732,7 +1732,7 @@ def multimodal_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     codecs (PNG lossless, JPEG lossy, WAV PCM16)."""
     docs = _ascii_text_docs(load_table(spark, sf_dir, "documents"))
     media = multimodal.documents_as_jpeg_media(docs, width=8, height=8)
-    return multimodal.jpeg_pixel_stats(media)
+    return multimodal.pixel_stats(media)
 
 
 @register(
@@ -1743,7 +1743,7 @@ def multimodal_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 def multimodal_jpeg_color_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """COLOR baseline-JPEG round-trip — the 4:2:0 YCbCr shape virtually
     every real-world JPEG uses: each document's first 768 bytes become a
-    16×16 interleaved-RGB image, encoded with the real color encoder
+    16×16 interleaved-RGB image, encoded by jpeg_codec.encode_jpeg
     (lattice JFIF conversion, 2×2 chroma subsample, per-block DCT +
     Annex-K.1/K.2 quantization, interleaved-MCU Huffman entropy layer)
     and decoded back with the real multi-component decoder, reduced to
@@ -1755,8 +1755,10 @@ def multimodal_jpeg_color_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     chroma upsample, lattice YCbCr↔RGB). Samplings other than 4:2:0,
     4:2:2 and 4:4:4 still raise honestly."""
     docs = _ascii_text_docs(load_table(spark, sf_dir, "documents"))
-    media = multimodal.documents_as_jpeg_color_media(docs, width=16, height=16)
-    return multimodal.jpeg_pixel_stats(media)
+    media = multimodal.documents_as_jpeg_media(
+        docs, width=16, height=16, subsampling="420"
+    )
+    return multimodal.pixel_stats(media)
 
 
 @register(
@@ -1773,10 +1775,10 @@ def multimodal_jpeg_444_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     Cb/Cr against K.2) — the third differential-checked JPEG layout
     beside grayscale and 4:2:0."""
     docs = _ascii_text_docs(load_table(spark, sf_dir, "documents"))
-    media = multimodal.documents_as_jpeg_color_media(
+    media = multimodal.documents_as_jpeg_media(
         docs, width=8, height=8, subsampling="444"
     )
-    return multimodal.jpeg_pixel_stats(media)
+    return multimodal.pixel_stats(media)
 
 
 @register(
@@ -1790,18 +1792,18 @@ def multimodal_jpeg_progressive_color_decode(
     """Progressive COLOR JPEG round-trip (SOF2 4:4:4, 24 per-component
     spectral-selection + successive-approximation scans): each
     document's first 192 bytes become an 8×8 RGB image, encoded with
-    the progressive color encoder and decoded by per-component
+    jpeg_codec.encode_jpeg_progressive and decoded by per-component
     bit-plane accumulation, reduced to channel-summed stats. The
-    quantized coefficients equal the baseline 4:4:4 encoder's, so the
+    quantized coefficients equal the baseline 4:4:4 stream's, so the
     EXISTING sql_reference_stats_color_444 oracle checks the whole
     progressive entropy layering unchanged — with this, every common
     real-world JPEG shape (grayscale/color × baseline/progressive ×
     three samplings + restart markers) decodes for real."""
     docs = _ascii_text_docs(load_table(spark, sf_dir, "documents"))
-    media = multimodal.documents_as_jpeg_progressive_color_media(
-        docs, width=8, height=8
+    media = multimodal.documents_as_jpeg_media(
+        docs, width=8, height=8, subsampling="444", progressive=True
     )
-    return multimodal.jpeg_pixel_stats(media)
+    return multimodal.pixel_stats(media)
 
 
 @register(
@@ -1823,10 +1825,10 @@ def multimodal_jpeg_progressive_decode(spark: SparkSession, sf_dir: str) -> Data
     proves, since baseline and progressive share quantized
     coefficients."""
     docs = _ascii_text_docs(load_table(spark, sf_dir, "documents"))
-    media = multimodal.documents_as_jpeg_progressive_media(
-        docs, width=16, height=16
+    media = multimodal.documents_as_jpeg_media(
+        docs, width=16, height=16, progressive=True
     )
-    return multimodal.jpeg_pixel_stats(media)
+    return multimodal.pixel_stats(media)
 
 
 @register(
@@ -2407,7 +2409,7 @@ def multimodal_video_keyframe(spark: SparkSession, sf_dir: str) -> DataFrame:
     media = multimodal.documents_as_pngseq_media(
         docs, n_frames=4, width=8, height=8
     )
-    return multimodal.pngseq_frame_stats(media, frame_idx=2)
+    return multimodal.pixel_stats(media, frame_idx=2)
 
 
 @register(

@@ -62,7 +62,6 @@ ALLOWLIST: dict[str, str] = {
     "operators/similarity.py::pq_reconstruction_error": _REFERENCE,
     "operators/similarity.py::sql_ivf_topk": _REFERENCE,
     "operators/graph.py::sql_pagerank": _REFERENCE,
-    "operators/multimodal.py::decode_image": _REFERENCE,
 }
 
 _FAKE = "tests inject a fake in place of the real dependency"
@@ -88,11 +87,7 @@ OPTION_ALLOWLIST: dict[str, str] = {
     "streaming/state.py::trailing_lookback(emit_ready_only=)": (
         "reference parity: the predictor's 100-row readiness gate"
     ),
-    "operators/jpeg_codec.py::encode_jpeg_gray(restart_interval=)": (
-        "the only generator of restart-marked input for the decoder's "
-        "external-payload path"
-    ),
-    "operators/jpeg_codec.py::encode_jpeg_color(restart_interval=)": (
+    "operators/jpeg_codec.py::encode_jpeg(restart_interval=)": (
         "the only generator of restart-marked input for the decoder's "
         "external-payload path"
     ),

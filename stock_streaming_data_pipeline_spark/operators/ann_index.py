@@ -30,6 +30,7 @@ from stock_streaming_data_pipeline_spark.operators.similarity import (
     as_double,
     cosine,
     ivf_train,
+    ranked_topk,
 )
 from stock_streaming_data_pipeline_spark.tables import read_parquet
 
@@ -109,14 +110,7 @@ def ivf_index_topk(
         .withColumn("cosine", F.round(cosine(F.col("qv"), F.col("v")), 6))
         .select("query_id", F.col("vec_id").alias("neighbor_id"), "cosine")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return ranked_topk(scored, k)
 
 
 def build_ivf2_index(
@@ -229,11 +223,4 @@ def ivf2_index_topk(
         .withColumn("cosine", F.round(cosine(F.col("qv"), F.col("v")), 6))
         .select("query_id", F.col("vec_id").alias("neighbor_id"), "cosine")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return ranked_topk(scored, k)

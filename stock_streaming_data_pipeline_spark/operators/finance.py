@@ -24,19 +24,14 @@ No UDFs anywhere — all expressions stay inside whole-stage codegen.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from stock_streaming_data_pipeline_spark.functions.scalars import round6
-
-
-def to_scaled_long(col: Column | str, scale: int) -> Column:
-    """value * 10^scale rounded half-away-from-zero to BIGINT — the SQL
-    ``round()`` rule, replayed with signum/floor so Spark's banker's-
-    rounding ``bround`` never enters the picture."""
-    c = F.col(col) if isinstance(col, str) else col
-    factor = F.lit(float(10**scale))
-    return (F.signum(c) * F.floor(F.abs(c) * factor + F.lit(0.5))).cast("long")
+from stock_streaming_data_pipeline_spark.functions.scalars import (
+    dec38,
+    half_away,
+    round6,
+)
 
 
 def vwap_bars(
@@ -56,8 +51,8 @@ def vwap_bars(
     vwap division is one double op on identical operands in any engine.
     One partial-aggregated shuffle on (key, bucket).
     """
-    p = to_scaled_long(price_col, 2)
-    q = to_scaled_long(qty_col, 6)
+    p = half_away(price_col, 2)
+    q = half_away(qty_col, 6)
     return (
         trades.filter(F.col(price_col).isNotNull() & F.col(qty_col).isNotNull())
         .groupBy(
@@ -65,8 +60,8 @@ def vwap_bars(
             F.date_trunc(bucket, F.col(ts_col)).alias("bucket_ts"),
         )
         .agg(
-            F.sum((p * q).cast("decimal(38,0)")).alias("s_pq"),
-            F.sum(q.cast("decimal(38,0)")).alias("s_q"),
+            F.sum(dec38(p * q)).alias("s_pq"),
+            F.sum(dec38(q)).alias("s_q"),
             F.count(F.lit(1)).alias("n_trades"),
         )
         .filter(F.col("s_q") > 0)
@@ -94,7 +89,7 @@ def hourly_means_milli(
     sum/count accumulate as integers, the one mean division runs in
     double, and the result is re-snapped half-away to milli. The exact
     integer grid is what makes downstream rolling moments portable."""
-    cents = to_scaled_long(price_col, 2)
+    cents = half_away(price_col, 2)
     return (
         trades.filter(F.col(price_col).isNotNull())
         .groupBy(
@@ -105,7 +100,7 @@ def hourly_means_milli(
         .select(
             "key",
             "bucket_ts",
-            to_scaled_long(
+            half_away(
                 F.col("s").cast("double") / F.col("n").cast("double"), 1
             ).alias("mean_milli"),
         )
@@ -187,7 +182,7 @@ def max_drawdown(
     shape covered by the salted variant in operators/running.py if a
     single key ever dominates.
     """
-    cents = to_scaled_long(price_col, 2)
+    cents = half_away(price_col, 2)
     base = trades.filter(F.col(price_col).isNotNull()).select(
         F.col(key_col).alias("key"),
         F.col(ts_col).alias("ts"),

@@ -26,13 +26,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from stock_streaming_data_pipeline_spark.functions.scalars import dec38, half_away
 from stock_streaming_data_pipeline_spark.operators.checkpoint import materialize
 
 SCALE = 1_000_000
-
-
-def _half_away(col):
-    return (F.signum(col) * F.floor(F.abs(col) + F.lit(0.5))).cast("long")
 
 
 def pagerank(
@@ -91,8 +88,8 @@ def pagerank(
         )
         return edges.sparkSession.createDataFrame([], schema)
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    base = _half_away(F.lit((1.0 - damping) * SCALE) / F.lit(float(n)))
-    init = _half_away(F.lit(float(SCALE)) / F.lit(float(n)))
+    base = half_away(F.lit((1.0 - damping) * SCALE) / F.lit(float(n)), 0)
+    init = half_away(F.lit(float(SCALE)) / F.lit(float(n)), 0)
     ranks = nodes.select("node", init.alias("r"))
     # Degrees attach to edges ONCE, outside the loop (the per-iteration
     # deg join re-aggregated the edge list every round); repartition by
@@ -118,9 +115,7 @@ def pagerank(
                 "node",
                 (
                     base
-                    + _half_away(
-                        F.lit(damping) * F.col("s").cast("double")
-                    )
+                    + half_away(F.lit(damping) * F.col("s").cast("double"), 0)
                 ).alias("r"),
             ),
             eager=False,
@@ -503,20 +498,20 @@ def hits(edges: DataFrame, *, rounds: int = 3) -> tuple[DataFrame, DataFrame]:
     auth = (
         e.groupBy("i")
         .agg(F.count(F.lit(1)).alias("_d"))
-        .select("i", F.lit(1).cast("decimal(38,0)").alias("a"))
+        .select("i", dec38(F.lit(1)).alias("a"))
     )
     hub = None
     for _ in range(rounds):
         hub = materialize(
             e.join(auth, "i")
             .groupBy("u")
-            .agg(F.sum("a").cast("decimal(38,0)").alias("h")),
+            .agg(dec38(F.sum("a")).alias("h")),
             eager=False,
         )
         auth = materialize(
             e.join(hub, "u")
             .groupBy("i")
-            .agg(F.sum("h").cast("decimal(38,0)").alias("a")),
+            .agg(dec38(F.sum("h")).alias("a")),
             eager=False,
         )
     return hub, auth

@@ -91,11 +91,16 @@ def fake_decode_features(payload: bytes, dim: int = 8) -> list[float]:
     return [digest[i] / 255.0 for i in range(dim)]
 
 
-def png_decode_features(payload: bytes, dim: int = 8) -> list[float]:
-    """REAL feature extraction for PNG payloads: decode pixels and emit
-    [width, height, channels, n_samples, mean/255, min/255, max/255,
-    first_sample/255, ...] truncated/zero-padded to ``dim``."""
-    w, h, ch, px = png_codec.decode_png(payload)
+def auto_decode_features(payload: bytes, dim: int = 8) -> list[float]:
+    """Feature decoder: for a payload :func:`decode_image` reads (PNG, or
+    JPEG baseline or progressive), REAL pixel features [width, height,
+    channels, n_samples, mean/255, min/255, max/255, first_sample/255, ...]
+    truncated/zero-padded to ``dim``; the digest fake for every other
+    payload."""
+    try:
+        w, h, ch, px = decode_image(payload)
+    except NotImplementedError:
+        return fake_decode_features(payload, dim)
     n = len(px)
     feats = [
         float(w),
@@ -110,21 +115,12 @@ def png_decode_features(payload: bytes, dim: int = 8) -> list[float]:
     return (feats + [0.0] * dim)[:dim]
 
 
-def auto_decode_features(payload: bytes, dim: int = 8) -> list[float]:
-    """Feature decoder: real pixel features where the payload is PNG,
-    the digest fake for every other payload — JPEG included, although
-    :func:`decode_image` reads it: this path's features stay digests."""
-    if png_codec.is_png(payload):
-        return png_decode_features(payload, dim)
-    return fake_decode_features(payload, dim)
-
-
 def extract_features(media: DataFrame, *, dim: int = 8) -> DataFrame:
     """mapInPandas feature extraction over binary payloads.
 
     The bytes→vector step is :func:`auto_decode_features`: it decodes PNG
-    payloads for real (pure-stdlib codec) and digest-fakes every other
-    payload.
+    and JPEG payloads for real (pure-stdlib codecs, through
+    :func:`decode_image`) and digest-fakes every other payload.
     """
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -524,8 +520,9 @@ def resample_audio(media: DataFrame, *, factor: int) -> DataFrame:
 PIXEL_ROWS_SCHEMA = "media_id long, i int, v int"
 
 
-def png_pixel_rows(media: DataFrame) -> DataFrame:
-    """Per-pixel rows (media_id, i, v) via REAL PNG decode (mapInPandas) —
+def pixel_rows(media: DataFrame) -> DataFrame:
+    """Per-pixel rows (media_id, i, v) via REAL decode (mapInPandas,
+    :func:`decode_image`: PNG, or JPEG baseline or progressive) —
     the relational hand-off for downstream pixel-domain operators
     (DCT perceptual hashing, histogram audits): the Python side ONLY
     decodes; every transform after this row stream is Catalyst
@@ -535,7 +532,7 @@ def png_pixel_rows(media: DataFrame) -> DataFrame:
         for pdf in batches:
             mids, idxs, vals = [], [], []
             for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                _w, _h, _ch, px = png_codec.decode_png(bytes(payload))
+                _w, _h, _ch, px = decode_image(bytes(payload))
                 mids.extend([mid] * len(px))
                 idxs.extend(range(len(px)))
                 vals.extend(px)

@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from stock_streaming_data_pipeline_spark.functions.scalars import dec38, half_up
 from stock_streaming_data_pipeline_spark.operators.checkpoint import materialize
 
 MICRO = 1_000_000
@@ -40,9 +41,7 @@ def quantized_components(df: DataFrame, *, id_col: str, vec_col: str) -> DataFra
         F.posexplode(
             F.transform(
                 F.col(vec_col),
-                lambda x: F.floor(x.cast("double") * MICRO + F.lit(0.5)).cast(
-                    "long"
-                ),
+                lambda x: half_up(x.cast("double"), 6),
             )
         ).alias("i", "xi"),
     )
@@ -54,10 +53,9 @@ def covariance_rows(df: DataFrame, *, id_col: str, vec_col: str) -> DataFrame:
     xq = df.select(
         F.transform(
             F.col(vec_col),
-            lambda x: F.floor(x.cast("double") * MICRO + F.lit(0.5)).cast("long"),
+            lambda x: half_up(x.cast("double"), 6),
         ).alias("xq")
     )
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     # Two chained generators: n -> n*d -> n*d^2 rows, all map-local;
     # partial aggregation collapses to <= d^2 rows per task pre-shuffle.
     prods = xq.select(
@@ -71,12 +69,12 @@ def covariance_rows(df: DataFrame, *, id_col: str, vec_col: str) -> DataFrame:
     # n*d^2-row hot loop than a BigDecimal multiply; the summed values
     # are identical exact integers either way.
     gram = prods.groupBy("i", "j").agg(
-        F.sum(dec(F.col("xi") * F.col("xj"))).alias("sxx")
+        F.sum(dec38(F.col("xi") * F.col("xj"))).alias("sxx")
     )
     sums = (
         xq.select(F.posexplode("xq").alias("i", "xi"))
         .groupBy("i")
-        .agg(F.sum(dec(F.col("xi"))).alias("sx"))
+        .agg(F.sum(dec38(F.col("xi"))).alias("sx"))
     )
     n = df.agg(F.count(F.lit(1)).cast("long").alias("n"))
     return (
@@ -86,7 +84,7 @@ def covariance_rows(df: DataFrame, *, id_col: str, vec_col: str) -> DataFrame:
         .select(
             "i",
             "j",
-            (dec(F.col("n")) * F.col("sxx") - F.col("sx") * F.col("sy")).alias(
+            (dec38(F.col("n")) * F.col("sxx") - F.col("sx") * F.col("sy")).alias(
                 "c"
             ),
         )
@@ -98,7 +96,6 @@ def power_iteration(cov: DataFrame, *, rounds: int = 8) -> DataFrame:
     integer-renormalized matvecs from the all-ones start. Returns
     (i, v) with v the micro-scaled (L-inf-normalized) loading,
     |v| <= 1e6 exact BIGINT."""
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     v = (
         cov.groupBy(F.col("i").alias("j"))
         .agg(F.count(F.lit(1)).alias("_d"))
@@ -108,21 +105,16 @@ def power_iteration(cov: DataFrame, *, rounds: int = 8) -> DataFrame:
         raw = (
             cov.join(v, "j")
             .groupBy("i")
-            .agg(F.sum(F.col("c") * dec(F.col("v"))).alias("raw"))
+            .agg(F.sum(F.col("c") * dec38(F.col("v"))).alias("raw"))
         )
         m = raw.agg(F.max(F.abs(F.col("raw"))).alias("m"))
         v = materialize(
             raw.crossJoin(F.broadcast(m))
             .select(
                 F.col("i").alias("j"),
-                F.floor(
-                    F.col("raw").cast("double")
-                    / F.col("m").cast("double")
-                    * MICRO
-                    + F.lit(0.5)
-                )
-                .cast("long")
-                .alias("v"),
+                half_up(
+                    F.col("raw").cast("double") / F.col("m").cast("double"), 6
+                ).alias("v"),
             ),
             eager=False,
         )

@@ -30,7 +30,11 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from stock_streaming_data_pipeline_spark.functions.scalars import round6
+from stock_streaming_data_pipeline_spark.functions.scalars import (
+    half_away,
+    half_up,
+    round6,
+)
 from stock_streaming_data_pipeline_spark.operators.dedup import tokens
 
 # DuckDB-side tokenizer — identical contract to operators/dedup.tokens.
@@ -109,9 +113,7 @@ def bm25_topk(
         .crossJoin(F.broadcast(n_docs))
         .select(
             "doc",
-            (F.signum(partial) * F.floor(F.abs(partial) * 1e6 + F.lit(0.5)))
-            .cast("long")
-            .alias("part_micro"),
+            half_away(partial, 6).alias("part_micro"),
         )
     )
     return (
@@ -205,9 +207,7 @@ def tfidf_top_terms(
         scored.select(
             "doc",
             "term",
-            (F.signum(raw) * F.floor(F.abs(raw) * 1e6 + F.lit(0.5)))
-            .cast("long")
-            .alias("score_micro"),
+            half_away(raw, 6).alias("score_micro"),
         )
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= top)
@@ -434,10 +434,7 @@ def rrf_fusion(
     def contrib(rank_col: str):
         return F.when(
             F.col(rank_col).isNotNull(),
-            F.floor(
-                F.round(F.lit(1.0) / (F.lit(k0) + F.col(rank_col)), 6) * 1e6
-                + F.lit(0.5)
-            ),
+            half_up(F.round(F.lit(1.0) / (F.lit(k0) + F.col(rank_col)), 6), 6),
         ).otherwise(F.lit(0))
 
     fused = (

@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from stock_streaming_data_pipeline_spark.functions.scalars import dec38, half_away
 from stock_streaming_data_pipeline_spark.operators.dedup import (
     portable_hash,
     sql_portable_hash,
@@ -121,13 +122,8 @@ def sample_temperature(
     )
     tot = counts.agg(F.sum("_grp_w").alias("_w_sum"))
     h = F.pmod(portable_hash(F.col(id_col).cast("string"), salt="tmp_"), F.lit(_M))
-    dec = "decimal(38,0)"
-    lhs = (
-        h.cast(dec) * F.col("_grp_n").cast(dec) * F.col("_w_sum").cast(dec)
-    )
-    rhs = (
-        F.lit(total_target).cast(dec) * F.col("_grp_w").cast(dec) * F.lit(_M).cast(dec)
-    )
+    lhs = dec38(h) * dec38(F.col("_grp_n")) * dec38(F.col("_w_sum"))
+    rhs = dec38(F.lit(total_target)) * dec38(F.col("_grp_w")) * dec38(F.lit(_M))
     return (
         df.join(F.broadcast(counts), group_col)
         .join(F.broadcast(tot))
@@ -397,32 +393,16 @@ def dsir_importance(
         counts.crossJoin(F.broadcast(totals))
         .select(
             "b",
-            (
-                F.signum(
-                    F.round(
-                        F.log(
-                            ((F.col("ct") + 1) / (F.col("tt") + F.lit(n_buckets)))
-                            / ((F.col("cr") + 1) / (F.col("tr") + F.lit(n_buckets)))
-                        ),
-                        6,
-                    )
-                )
-                * F.floor(
-                    F.abs(
-                        F.round(
-                            F.log(
-                                ((F.col("ct") + 1) / (F.col("tt") + F.lit(n_buckets)))
-                                / ((F.col("cr") + 1) / (F.col("tr") + F.lit(n_buckets)))
-                            ),
-                            6,
-                        )
-                    )
-                    * 1e6
-                    + F.lit(0.5)
-                )
-            )
-            .cast("long")
-            .alias("lam_micro"),
+            half_away(
+                F.round(
+                    F.log(
+                        ((F.col("ct") + 1) / (F.col("tt") + F.lit(n_buckets)))
+                        / ((F.col("cr") + 1) / (F.col("tr") + F.lit(n_buckets)))
+                    ),
+                    6,
+                ),
+                6,
+            ).alias("lam_micro"),
         )
     )
     scored = (
@@ -546,14 +526,11 @@ def sample_pps_ht(
         h * F.col("_S") < F.lit(n_target) * F.col(size_col).cast("long") * F.lit(_M)
     )
     certain = F.lit(n_target) * F.col(size_col).cast("long") >= F.col("_S")
-    contrib = F.when(
-        certain, F.col(cents_col).cast("decimal(38,0)") * 100
-    ).otherwise(
-        F.expr(
-            f"CAST({cents_col} AS DECIMAL(38,0)) * CAST(_S AS DECIMAL(38,0)) * 100 "
-            f"DIV (CAST({n_target} AS DECIMAL(38,0)) * CAST({size_col} AS DECIMAL(38,0)))"
-        ).cast("decimal(38,0)")
+    scaled = F.expr(
+        f"CAST({cents_col} AS DECIMAL(38,0)) * CAST(_S AS DECIMAL(38,0)) * 100 "
+        f"DIV (CAST({n_target} AS DECIMAL(38,0)) * CAST({size_col} AS DECIMAL(38,0)))"
     )
+    contrib = F.when(certain, dec38(F.col(cents_col)) * 100).otherwise(dec38(scaled))
     return (
         kept.groupBy(group_col)
         .agg(

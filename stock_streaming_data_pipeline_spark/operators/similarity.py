@@ -58,6 +58,22 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
+def ranked_topk(
+    scored: DataFrame,
+    k: int,
+    cols: tuple[str, ...] = ("query_id", "neighbor_id", "cosine", "rank"),
+) -> DataFrame:
+    """The top ``k`` rows per ``query_id`` by (``cosine`` desc,
+    ``neighbor_id`` asc), numbered 1..k as BIGINT ``rank``: the one
+    deterministic tie order every ANN tier and its oracle share."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w).cast("long"))
+        .filter(F.col("rank") <= k)
+        .select(*cols)
+    )
+
+
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -82,14 +98,7 @@ def cosine_topk(
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .withColumn("cosine", F.round(cosine(F.col("qv"), F.col("cv")), 6))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return ranked_topk(scored, k)
 
 
 def neardup_pairs(
@@ -207,12 +216,7 @@ def lsh_topk(
         .dropDuplicates(["query_id", "neighbor_id"])
         .withColumn("cosine", F.round(cosine(F.col("qv"), F.col("cv")), 6))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return ranked_topk(scored, k)
 
 
 def _nearest_centroid(
@@ -673,12 +677,7 @@ def ivf_topk(
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .withColumn("cosine", F.round(cosine(F.col("qv"), F.col("cv")), 6))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return ranked_topk(scored, k)
 
 
 def sql_ivf_pq_topk(
@@ -1133,12 +1132,7 @@ def ivf_pq_topk(
         .join(F.broadcast(q), "query_id")
         .withColumn("cosine", F.round(cosine(F.col("qv"), F.col("cv")), 6))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        rescored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return ranked_topk(rescored, k)
 
 
 def ivf2_topk(
@@ -1215,12 +1209,7 @@ def ivf2_topk(
         .join(F.broadcast(q), "query_id")
         .withColumn("cosine", F.round(cosine(F.col("qv"), F.col("cv")), 6))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        rescored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return ranked_topk(rescored, k)
 
 
 def sql_ivf2_topk(
@@ -1546,12 +1535,7 @@ def opq_topk(
         .join(F.broadcast(q_raw), "query_id")
         .withColumn("cosine", F.round(cosine(F.col("qv"), F.col("cv")), 6))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        rescored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return ranked_topk(rescored, k)
 
 
 def _sql_rot_cte(R, table: str, *, name: str = "rot") -> str:

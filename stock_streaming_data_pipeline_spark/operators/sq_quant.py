@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from stock_streaming_data_pipeline_spark.functions.scalars import half_up
 from stock_streaming_data_pipeline_spark.operators.similarity import (
     SQL_DOT,
     SQL_NORM,
@@ -34,6 +35,7 @@ from stock_streaming_data_pipeline_spark.operators.similarity import (
     cosine,
     dot,
     norm,
+    ranked_topk,
 )
 
 
@@ -83,7 +85,7 @@ def sq_encode(
         lambda x, s: F.when(s.h == s.l, F.lit(0.0)).otherwise(
             F.least(
                 F.lit(255.0),
-                F.floor((x - s.l) / (s.h - s.l) * F.lit(255.0) + F.lit(0.5)),
+                half_up((x - s.l) / (s.h - s.l) * F.lit(255.0), 0),
             )
         ),
     )
@@ -148,14 +150,7 @@ def sq_topk(
         .join(F.broadcast(q), "query_id")
         .withColumn("cosine", F.round(cosine(F.col("qv"), F.col("cv")), 6))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        rerank.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return ranked_topk(rerank, k)
 
 
 def sql_sq_topk(

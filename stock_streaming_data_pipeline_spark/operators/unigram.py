@@ -36,6 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from stock_streaming_data_pipeline_spark.functions.scalars import half_away, round6
 from stock_streaming_data_pipeline_spark.operators.checkpoint import materialize
 from stock_streaming_data_pipeline_spark.operators.dedup import tokens
 from stock_streaming_data_pipeline_spark.operators.retrieval import SQL_TOKENS
@@ -57,12 +58,6 @@ def _check_piece_len() -> None:
 
 
 _check_piece_len()
-
-
-def _micro(col):
-    """round6 → exact micro-unit BIGINT (sign-uniform half-up)."""
-    r = F.round(col, 6)
-    return (F.signum(r) * F.floor(F.abs(r) * 1e6 + F.lit(0.5))).cast("long")
 
 
 def _word_counts(df: DataFrame, *, text_col: str) -> DataFrame:
@@ -109,7 +104,8 @@ def _seed_vocab(words: DataFrame) -> DataFrame:
     return subs.crossJoin(F.broadcast(total)).select(
         "piece",
         "cnt",
-        _micro(F.log(F.col("cnt").cast("double") / F.col("t"))).alias("lp"),
+        half_away(round6(F.log(F.col("cnt").cast("double") / F.col("t"))), 6)
+        .alias("lp"),
     )
 
 
@@ -227,10 +223,11 @@ def _m_step(vocab: DataFrame, segs: DataFrame) -> DataFrame:
     return joined.crossJoin(F.broadcast(tot)).select(
         "piece",
         "cnt",
-        _micro(
-            F.log(
-                (F.col("cnt") + 1).cast("double") / (F.col("t") + F.col("v"))
-            )
+        half_away(
+            round6(
+                F.log((F.col("cnt") + 1).cast("double") / (F.col("t") + F.col("v")))
+            ),
+            6,
         ).alias("lp"),
     )
 

@@ -12,6 +12,18 @@ Parity rules (so the driver's order-insensitive value-hash compare passes):
   engines; double summation order would otherwise diverge in the last ulp);
 - ratio/avg-style doubles are rounded to 6 decimals on both sides;
 - timestamps surface as epoch BIGINTs (engine-neutral representation).
+
+On the Spark side each rule has one owner, and
+``tests/test_parity_rules_guard.py`` fails on a copy anywhere else:
+- ``functions/scalars.half_up(x, s)``: ``floor(x * 10^s + 0.5)`` to BIGINT;
+- ``functions/scalars.half_away(x, s)``: ``round(x * 10^s)`` to BIGINT
+  (half away from zero, replayed with signum/floor);
+- ``functions/scalars.dec38(x)``: the DECIMAL(38,0) cast that integer-unit
+  sums and products accumulate in;
+- ``functions/scalars.round6(x)``: ``round(x, 6)``;
+- ``operators/similarity.ranked_topk(scored, k)``: ``row_number()`` over
+  ``query_id`` by ``cosine DESC, neighbor_id``, kept while ``rank <= k``.
+The oracle SQL spells each rule on its own; it is the independent side.
 """
 
 from __future__ import annotations

@@ -12,6 +12,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from stock_streaming_data_pipeline_spark.functions.scalars import (
+    dec38,
+    half_away,
+    half_up,
+)
 from stock_streaming_data_pipeline_spark.operators import finance, subseq
 from stock_streaming_data_pipeline_spark.operators.checkpoint import materialize
 from stock_streaming_data_pipeline_spark.plans.catalog import register
@@ -266,7 +271,7 @@ def trend_slope_by_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys re-center x per key first."""
     ev = trades_view(spark, sf_dir).filter(F.col("value").isNotNull())
     x = (F.unix_micros("ts") / F.lit(1_000_000)).cast("long") - F.lit(1_704_067_200)
-    y = finance.to_scaled_long("value", 2)
+    y = half_away("value", 2)
     base = ev.select(F.col("event_type").alias("key"), x.alias("x"), y.alias("y"))
     m = base.groupBy("key").agg(
         F.count(F.lit(1)).alias("n"),
@@ -413,8 +418,8 @@ def moments_by_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     doubles (identically parenthesized in the oracle, round-6). One
     partial-aggregated groupBy; map-only + rollup at any scale."""
     t = trades_view(spark, sf_dir).filter(F.col("value").isNotNull())
-    p = finance.to_scaled_long(F.col("value"), 2)
-    d = F.lit(1).cast("decimal(38,0)")
+    p = half_away("value", 2)
+    d = dec38(F.lit(1))
     s = t.select(F.col("event_type"), p.alias("p")).groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(F.col("p") * d).alias("s1"),
@@ -504,7 +509,7 @@ def seasonal_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
         t.select(
             "event_type",
             F.date_trunc("hour", "ts").alias("bucket_ts"),
-            finance.to_scaled_long(F.col("value"), 2).alias("p"),
+            half_away("value", 2).alias("p"),
         )
         .groupBy("event_type", "bucket_ts")
         .agg(F.sum("p").cast("long").alias("v_c"))
@@ -691,7 +696,7 @@ def candlestick_patterns(spark: SparkSession, sf_dir: str) -> DataFrame:
     window. One fact scan → one grouped aggregate → bounded bar-level
     window work."""
     ev = trades_view(spark, sf_dir).filter(F.col("value").isNotNull())
-    cents = finance.to_scaled_long("value", 2)
+    cents = half_away("value", 2)
     bars = (
         ev.select(
             "event_type",
@@ -808,13 +813,13 @@ def ts_dtw_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.date_trunc("day", "ts").alias("day"),
         )
         .agg(
-            F.sum(finance.to_scaled_long("value", 2)).alias("s"),
+            F.sum(half_away("value", 2)).alias("s"),
             F.count(F.lit(1)).alias("n"),
         )
         .select(
             "key",
             "day",
-            finance.to_scaled_long(
+            half_away(
                 F.col("s").cast("double") / F.col("n").cast("double"), 1
             ).alias("mean_milli"),
         )
@@ -1066,7 +1071,7 @@ def holt_linear_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.date_trunc("day", "ts").alias("day"),
         )
         .agg(
-            F.sum(finance.to_scaled_long("value", 2)).alias("s"),
+            F.sum(half_away("value", 2)).alias("s"),
             F.count(F.lit(1)).alias("n"),
         )
         .select(
@@ -1118,13 +1123,12 @@ def holt_linear_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         )["out"].alias("out"),
     )
     row = folded.select("key", F.explode("out").alias("r"))
-    micro = lambda c: F.floor(c * 1_000_000 + F.lit(0.5)).cast("long")  # noqa: E731
     return row.select(
         "key",
         F.col("r.day_s").alias("day_s"),
-        micro(F.col("r.l")).alias("level_micro"),
-        micro(F.col("r.b")).alias("trend_micro"),
-        micro(F.col("r.l") + F.lit(7) * F.col("r.b")).alias("forecast7_micro"),
+        half_up("r.l", 6).alias("level_micro"),
+        half_up("r.b", 6).alias("trend_micro"),
+        half_up(F.col("r.l") + F.lit(7) * F.col("r.b"), 6).alias("forecast7_micro"),
     )
 
 
@@ -1195,9 +1199,7 @@ def ts_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     the slot-grained relation (~720 rows/key/month — bounded, no
     self-join, no global sort)."""
     t = trades_view(spark, sf_dir).filter(F.col("value").isNotNull())
-    cents = (
-        F.signum("value") * F.floor(F.abs(F.col("value")) * 100 + F.lit(0.5))
-    ).cast("long")
+    cents = half_away("value", 2)
     hourly = (
         t.withColumn("slot", (F.unix_micros("ts") / F.lit(3_600_000_000)).cast("long"))
         .withColumn("c", cents)
@@ -1311,9 +1313,7 @@ def ts_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     is ONE max(struct(...)) aggregate per key — never a ranking window
     over the raw facts."""
     t = trades_view(spark, sf_dir).filter(F.col("value").isNotNull())
-    cents = (
-        F.signum("value") * F.floor(F.abs(F.col("value")) * 100 + F.lit(0.5))
-    ).cast("long")
+    cents = half_away("value", 2)
     hourly = (
         t.withColumn("slot", (F.unix_micros("ts") / F.lit(3_600_000_000)).cast("long"))
         .withColumn("c", cents)
@@ -1409,7 +1409,7 @@ def holt_winters_seasonal(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.date_trunc("day", "ts").alias("day"),
         )
         .agg(
-            F.sum(finance.to_scaled_long("value", 2)).alias("s"),
+            F.sum(half_away("value", 2)).alias("s"),
             F.count(F.lit(1)).alias("n"),
         )
         .select(
@@ -1468,14 +1468,13 @@ def holt_winters_seasonal(spark: SparkSession, sf_dir: str) -> DataFrame:
         )["out"].alias("out"),
     )
     row = folded.select("key", F.explode("out").alias("r"))
-    micro = lambda c: F.floor(c * 1_000_000 + F.lit(0.5)).cast("long")  # noqa: E731
     return row.select(
         "key",
         F.col("r.day_s").alias("day_s"),
-        micro(F.col("r.l")).alias("level_micro"),
-        micro(F.col("r.b")).alias("trend_micro"),
-        micro(F.col("r.s")).alias("seasonal_micro"),
-        micro(F.col("r.l") + F.lit(7) * F.col("r.b") + F.col("r.s")).alias(
+        half_up("r.l", 6).alias("level_micro"),
+        half_up("r.b", 6).alias("trend_micro"),
+        half_up("r.s", 6).alias("seasonal_micro"),
+        half_up(F.col("r.l") + F.lit(7) * F.col("r.b") + F.col("r.s"), 6).alias(
             "forecast7_micro"
         ),
     )
@@ -1587,9 +1586,7 @@ def ts_binary_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     iteration, so lineage stays bounded and the oracle replays both
     levels as chained CTEs on exact integers."""
     t = trades_view(spark, sf_dir).filter(F.col("value").isNotNull())
-    cents = (
-        F.signum("value") * F.floor(F.abs(F.col("value")) * 100 + F.lit(0.5))
-    ).cast("long")
+    cents = half_away("value", 2)
     hourly = materialize(  # both levels scan it
         t.withColumn("slot", (F.unix_micros("ts") / F.lit(3_600_000_000)).cast("long"))
         .withColumn("c", cents)
@@ -1835,28 +1832,27 @@ def ts_periodogram_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.broadcast(tbl),
         F.pmod(F.col("h"), F.col("period")) == F.col("phase"),
     ).select("event_type", "period", "x", "cq", "sq")
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     s = j.groupBy("event_type", "period").agg(
         F.count(F.lit(1)).cast("long").alias("n_hours"),
-        F.sum(dec(F.col("x"))).alias("sx"),
-        F.sum(dec(F.col("x")) * dec(F.col("x"))).alias("sxx"),
-        F.sum(dec(F.col("x")) * dec(F.col("cq"))).alias("sxc"),
-        F.sum(dec(F.col("x")) * dec(F.col("sq"))).alias("sxs"),
-        F.sum(dec(F.col("cq"))).alias("csum"),
-        F.sum(dec(F.col("sq"))).alias("ssum"),
+        F.sum(dec38(F.col("x"))).alias("sx"),
+        F.sum(dec38(F.col("x")) * dec38(F.col("x"))).alias("sxx"),
+        F.sum(dec38(F.col("x")) * dec38(F.col("cq"))).alias("sxc"),
+        F.sum(dec38(F.col("x")) * dec38(F.col("sq"))).alias("sxs"),
+        F.sum(dec38(F.col("cq"))).alias("csum"),
+        F.sum(dec38(F.col("sq"))).alias("ssum"),
     )
     d = s.select(
         "event_type",
         "period",
         "n_hours",
         F.col("n_hours").cast("double").alias("nn"),
-        (dec(F.col("n_hours")) * F.col("sxc") - F.col("sx") * F.col("csum"))
+        (dec38(F.col("n_hours")) * F.col("sxc") - F.col("sx") * F.col("csum"))
         .cast("double")
         .alias("cn"),
-        (dec(F.col("n_hours")) * F.col("sxs") - F.col("sx") * F.col("ssum"))
+        (dec38(F.col("n_hours")) * F.col("sxs") - F.col("sx") * F.col("ssum"))
         .cast("double")
         .alias("sn"),
-        (dec(F.col("n_hours")) * F.col("sxx") - F.col("sx") * F.col("sx"))
+        (dec38(F.col("n_hours")) * F.col("sxx") - F.col("sx") * F.col("sx"))
         .cast("double")
         .alias("vn"),
     )
@@ -1959,27 +1955,26 @@ def ts_dominant_period(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.broadcast(tbl),
         F.pmod(F.col("h"), F.col("period")) == F.col("phase"),
     ).select("event_type", "period", "x", "cq", "sq")
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     s = j.groupBy("event_type", "period").agg(
         F.count(F.lit(1)).cast("long").alias("n_hours"),
-        F.sum(dec(F.col("x"))).alias("sx"),
-        F.sum(dec(F.col("x")) * dec(F.col("x"))).alias("sxx"),
-        F.sum(dec(F.col("x")) * dec(F.col("cq"))).alias("sxc"),
-        F.sum(dec(F.col("x")) * dec(F.col("sq"))).alias("sxs"),
-        F.sum(dec(F.col("cq"))).alias("csum"),
-        F.sum(dec(F.col("sq"))).alias("ssum"),
+        F.sum(dec38(F.col("x"))).alias("sx"),
+        F.sum(dec38(F.col("x")) * dec38(F.col("x"))).alias("sxx"),
+        F.sum(dec38(F.col("x")) * dec38(F.col("cq"))).alias("sxc"),
+        F.sum(dec38(F.col("x")) * dec38(F.col("sq"))).alias("sxs"),
+        F.sum(dec38(F.col("cq"))).alias("csum"),
+        F.sum(dec38(F.col("sq"))).alias("ssum"),
     )
     d = s.select(
         "event_type",
         "period",
         F.col("n_hours").cast("double").alias("nn"),
-        (dec(F.col("n_hours")) * F.col("sxc") - F.col("sx") * F.col("csum"))
+        (dec38(F.col("n_hours")) * F.col("sxc") - F.col("sx") * F.col("csum"))
         .cast("double")
         .alias("cn"),
-        (dec(F.col("n_hours")) * F.col("sxs") - F.col("sx") * F.col("ssum"))
+        (dec38(F.col("n_hours")) * F.col("sxs") - F.col("sx") * F.col("ssum"))
         .cast("double")
         .alias("sn"),
-        (dec(F.col("n_hours")) * F.col("sxx") - F.col("sx") * F.col("sx"))
+        (dec38(F.col("n_hours")) * F.col("sxx") - F.col("sx") * F.col("sx"))
         .cast("double")
         .alias("vn"),
     )
@@ -2104,7 +2099,7 @@ def ts_goertzel_harmonics(spark: SparkSession, sf_dir: str) -> DataFrame:
     ht = ev.groupBy(
         "event_type",
         (F.unix_micros("ts") / F.lit(3_600_000_000)).cast("long").alias("h"),
-    ).agg(F.sum(finance.to_scaled_long("value", 2)).cast("long").alias("x"))
+    ).agg(F.sum(half_away("value", 2)).cast("long").alias("x"))
     tbl = spark.createDataFrame(
         _GZ_TABLE, schema="period INT, phase INT, cq BIGINT, sq BIGINT"
     )
@@ -2112,14 +2107,13 @@ def ts_goertzel_harmonics(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.broadcast(tbl),
         F.pmod(F.col("h"), F.col("period")) == F.col("phase"),
     ).select("event_type", "period", "x", "cq", "sq")
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     s = j.groupBy("event_type", "period").agg(
-        F.count(F.lit(1)).cast("decimal(38,0)").alias("nn"),
-        F.sum(dec(F.col("x"))).alias("sx"),
-        F.sum(dec(F.col("x")) * dec(F.col("cq"))).alias("sxc"),
-        F.sum(dec(F.col("x")) * dec(F.col("sq"))).alias("sxs"),
-        F.sum(dec(F.col("cq"))).alias("csum"),
-        F.sum(dec(F.col("sq"))).alias("ssum"),
+        dec38(F.count(F.lit(1))).alias("nn"),
+        F.sum(dec38(F.col("x"))).alias("sx"),
+        F.sum(dec38(F.col("x")) * dec38(F.col("cq"))).alias("sxc"),
+        F.sum(dec38(F.col("x")) * dec38(F.col("sq"))).alias("sxs"),
+        F.sum(dec38(F.col("cq"))).alias("csum"),
+        F.sum(dec38(F.col("sq"))).alias("ssum"),
     )
     p = s.selectExpr("event_type", "period", f"{_GZ_POW} AS pw")
     wide = p.groupBy("event_type").agg(
@@ -2193,7 +2187,7 @@ def twap_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_type").alias("key"),
         (F.unix_micros("ts") / F.lit(86_400_000_000)).cast("long").alias("day"),
         F.unix_micros("ts").alias("t_us"),
-        finance.to_scaled_long("value", 2).alias("cents"),
+        half_away("value", 2).alias("cents"),
     )
     w = Window.partitionBy("key", "day").orderBy("t_us", "cents")
     held = px.select(
@@ -2202,12 +2196,11 @@ def twap_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cents",
         (F.lead("t_us").over(w) - F.col("t_us")).alias("hold_us"),
     )
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     agg = (
         held.filter(F.col("hold_us").isNotNull())
         .groupBy("key", "day")
         .agg(
-            F.sum(dec(F.col("cents")) * dec(F.col("hold_us"))).alias("pw"),
+            F.sum(dec38(F.col("cents")) * dec38(F.col("hold_us"))).alias("pw"),
             F.sum("hold_us").cast("long").alias("w"),
             F.count(F.lit(1)).cast("long").alias("n_ticks"),
         )
@@ -2367,7 +2360,7 @@ def rsi_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max(
             F.struct(
                 F.unix_micros("ts").alias("t"),
-                finance.to_scaled_long("value", 2).alias("c"),
+                half_away("value", 2).alias("c"),
             )
         )["c"].alias("close")
     )
@@ -2462,15 +2455,14 @@ def ewma_control_chart(spark: SparkSession, sf_dir: str) -> DataFrame:
     hourly = t.groupBy(
         F.col("event_type").alias("key"),
         (F.unix_micros("ts") / F.lit(3_600_000_000)).cast("long").alias("slot"),
-    ).agg(F.sum(finance.to_scaled_long("value", 2)).cast("long").alias("x"))
+    ).agg(F.sum(half_away("value", 2)).cast("long").alias("x"))
     ew = running.ewma(
         hourly, key="key", order=("slot",), value_col="x", alpha=0.5
     ).withColumnRenamed("ewma_raw", "ew")
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     stats = hourly.groupBy("key").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum(dec(F.col("x"))).alias("sx"),
-        F.sum(dec(F.col("x")) * dec(F.col("x"))).alias("sxx"),
+        F.sum(dec38(F.col("x"))).alias("sx"),
+        F.sum(dec38(F.col("x")) * dec38(F.col("x"))).alias("sxx"),
     )
     return (
         ew.join(F.broadcast(stats), "key")
@@ -2542,7 +2534,7 @@ def sma_crossover_pnl(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_trunc("hour", F.col("ts")).alias("bucket_ts"),
     ).agg(
         F.round(
-            F.sum(finance.to_scaled_long("value", 2)).cast("double")
+            F.sum(half_away("value", 2)).cast("double")
             / F.count(F.lit(1)).cast("double")
             * 10,
             0,
@@ -2642,7 +2634,7 @@ def drawdown_duration(spark: SparkSession, sf_dir: str) -> DataFrame:
     px = t.select(
         F.col("event_type").alias("key"),
         F.unix_micros("ts").alias("t_us"),
-        finance.to_scaled_long("value", 2).alias("cents"),
+        half_away("value", 2).alias("cents"),
     )
     w = Window.partitionBy("key").orderBy("t_us", "cents")
     runmax = px.select(
@@ -2729,7 +2721,7 @@ def runs_test_price_moves(spark: SparkSession, sf_dir: str) -> DataFrame:
     px = t.select(
         F.col("event_type").alias("key"),
         F.unix_micros("ts").alias("t_us"),
-        finance.to_scaled_long("value", 2).alias("cents"),
+        half_away("value", 2).alias("cents"),
     )
     w = Window.partitionBy("key").orderBy("t_us", "cents")
     mv = px.select(
@@ -2821,8 +2813,8 @@ def amihud_illiquidity(spark: SparkSession, sf_dir: str) -> DataFrame:
     px = t.select(
         F.col("event_type").alias("key"),
         F.unix_micros("ts").alias("t_us"),
-        finance.to_scaled_long("value", 2).alias("cents"),
-        finance.to_scaled_long("volume", 6).alias("q"),
+        half_away("value", 2).alias("cents"),
+        half_away("volume", 6).alias("q"),
     )
     w = Window.partitionBy("key").orderBy("t_us", "cents")
     mv = px.select(
@@ -2836,16 +2828,11 @@ def amihud_illiquidity(spark: SparkSession, sf_dir: str) -> DataFrame:
     ticks = mv.filter(
         F.col("dc").isNotNull() & (F.col("q") > 0) & (F.col("cents") > 0)
     ).selectExpr("key", f"{_AMIHUD_TICK} AS illiq_nano")
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     return ticks.groupBy("key").agg(
         F.count(F.lit(1)).cast("long").alias("n_ticks"),
-        F.floor(
-            F.sum(dec(F.col("illiq_nano"))).cast("double")
-            / F.count(F.lit(1))
-            + F.lit(0.5)
-        )
-        .cast("long")
-        .alias("amihud_nano"),
+        half_up(
+            F.sum(dec38(F.col("illiq_nano"))).cast("double") / F.count(F.lit(1)), 0
+        ).alias("amihud_nano"),
     )
 
 
@@ -2913,7 +2900,7 @@ def expected_shortfall(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max(
             F.struct(
                 F.unix_micros("ts").alias("t"),
-                finance.to_scaled_long("value", 2).alias("c"),
+                half_away("value", 2).alias("c"),
             )
         )["c"].alias("close")
     )

@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from stock_streaming_data_pipeline_spark.functions.scalars import dec38, half_up
 from stock_streaming_data_pipeline_spark.operators import (
     bpe,
     coreset,
@@ -284,8 +285,6 @@ def embedding_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("label").alias("neighbor_label"),
         similarity.as_double(F.col("embedding")).alias("cv"),
     )
-    from pyspark.sql import Window
-
     scored = (
         c.crossJoin(F.broadcast(q))
         .filter(
@@ -296,14 +295,10 @@ def embedding_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cosine", F.round(similarity.cosine(F.col("qv"), F.col("cv")), 6)
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= 3)
-        .select(
-            "query_id", "query_label", "neighbor_id", "neighbor_label",
-            "cosine", "rank",
-        )
+    return similarity.ranked_topk(
+        scored,
+        3,
+        ("query_id", "query_label", "neighbor_id", "neighbor_label", "cosine", "rank"),
     )
 
 
@@ -2571,14 +2566,12 @@ def text_hash_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     micros = F.transform(
         F.col("embedding"),
-        lambda x: F.floor(x * 1_000_000 + F.lit(0.5)).cast("bigint"),
+        lambda x: half_up(x, 6),
     )
     return emb.select(
         "doc_id",
         F.to_json(micros).alias("embedding_micros"),
-        F.floor(sq * 1_000_000 + F.lit(0.5)).cast("bigint").alias(
-            "sq_norm_micros"
-        ),
+        half_up(sq, 6).alias("sq_norm_micros"),
     )
 
 
@@ -3253,9 +3246,7 @@ def linkage_fellegi_sunter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def term(agree_m, agree_u):
         # micro-snapped ln odds; identical expression tree to the oracle
-        return F.floor(
-            F.log(agree_m / agree_u) * F.lit(1_000_000) + F.lit(0.5)
-        ).cast("long")
+        return half_up(F.log(agree_m / agree_u), 6)
 
     nm2 = F.col("nm") + F.lit(2.0)
     nu2 = F.col("nu") + F.lit(2.0)
@@ -3615,7 +3606,7 @@ def phash_from_docs(spark: SparkSession, docs: DataFrame) -> DataFrame:
     integers out: the resulting phash values are bit-identical to the
     decimal/join formulation (unit-pinned in tests)."""
     media = multimodal.documents_as_png_media(docs, width=8, height=8)
-    px = multimodal.png_pixel_rows(media)
+    px = multimodal.pixel_rows(media)
     cos_u = {
         u: F.array(
             *[F.lit(c).cast("long") for uu, _x, c in _DCT_TAB if uu == u]
@@ -3768,13 +3759,12 @@ def multimodal_wav_spectrogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     tab = spark.createDataFrame(
         _SPG_TAB, schema="k INT, ph INT, cq BIGINT, sq BIGINT"
     )
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     acc = (
         fr.join(F.broadcast(tab), "ph")
         .groupBy("media_id", "frame", "k")
         .agg(
-            F.sum(dec(F.col("v")) * dec(F.col("cq"))).cast("long").alias("c"),
-            F.sum(dec(F.col("v")) * dec(F.col("sq"))).cast("long").alias("s"),
+            F.sum(dec38(F.col("v")) * dec38(F.col("cq"))).cast("long").alias("c"),
+            F.sum(dec38(F.col("v")) * dec38(F.col("sq"))).cast("long").alias("s"),
         )
     )
     return acc.selectExpr("media_id", "frame", "k", _SPG_MAG)
@@ -4155,10 +4145,7 @@ def multimodal_wav_silence_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("long").alias("n_runs"),
             F.sum("run_len").cast("long").alias("n_silent"),
             F.max("run_len").cast("long").alias("longest_run"),
-            F.floor(
-                F.sum("run_len").cast("double") / 64 * 1000000 + F.lit(0.5)
-            )
-            .cast("long")
+            half_up(F.sum("run_len").cast("double") / 64, 6)
             .alias("silence_frac_micro"),
         )
         .filter(F.col("longest_run") >= 4)
@@ -4225,7 +4212,7 @@ def multimodal_png_equalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     after is bounded by 256 levels x images."""
     docs = _ascii_text_docs(load_table(spark, sf_dir, "documents"))
     media = multimodal.documents_as_png_media(docs, width=8, height=8)
-    px = multimodal.png_pixel_rows(media)
+    px = multimodal.pixel_rows(media)
     hist = px.groupBy("media_id", "v").agg(
         F.count(F.lit(1)).cast("long").alias("c")
     )
@@ -4239,14 +4226,12 @@ def multimodal_png_equalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     eq = cdf.join(mn, "media_id").filter(F.col("cmin") < 64).select(
         "media_id",
         "c",
-        F.floor(
+        half_up(
             (F.col("cle") - F.col("cmin")).cast("double")
             * 255
-            / (64 - F.col("cmin"))
-            + F.lit(0.5)
-        )
-        .cast("long")
-        .alias("nv"),
+            / (64 - F.col("cmin")),
+            0,
+        ).alias("nv"),
     )
     return eq.groupBy("media_id").agg(
         F.min("nv").cast("long").alias("min_eq"),
@@ -4648,23 +4633,18 @@ def text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("negf", -F.col("f"))
     )
     ranked = running.global_rank(freq, order_col="negf", id_col="term", out="rnk")
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     pts = ranked.select(
-        F.floor(F.log(F.col("rnk").cast("double")) * 1000000 + F.lit(0.5))
-        .cast("long")
-        .alias("lx"),
-        F.floor(F.log(F.col("f").cast("double")) * 1000000 + F.lit(0.5))
-        .cast("long")
-        .alias("ly"),
+        half_up(F.log(F.col("rnk").cast("double")), 6).alias("lx"),
+        half_up(F.log(F.col("f").cast("double")), 6).alias("ly"),
     )
     s = pts.agg(
         F.count(F.lit(1)).cast("long").alias("vocab_size"),
         F.count(F.lit(1)).cast("double").alias("n"),
-        F.sum(dec(F.col("lx"))).cast("double").alias("sx"),
-        F.sum(dec(F.col("ly"))).cast("double").alias("sy"),
-        F.sum(dec(F.col("lx")) * dec(F.col("lx"))).cast("double").alias("sxx"),
-        F.sum(dec(F.col("ly")) * dec(F.col("ly"))).cast("double").alias("syy"),
-        F.sum(dec(F.col("lx")) * dec(F.col("ly"))).cast("double").alias("sxy"),
+        F.sum(dec38(F.col("lx"))).cast("double").alias("sx"),
+        F.sum(dec38(F.col("ly"))).cast("double").alias("sy"),
+        F.sum(dec38(F.col("lx")) * dec38(F.col("lx"))).cast("double").alias("sxx"),
+        F.sum(dec38(F.col("ly")) * dec38(F.col("ly"))).cast("double").alias("syy"),
+        F.sum(dec38(F.col("lx")) * dec38(F.col("ly"))).cast("double").alias("sxy"),
     )
     return s.selectExpr(*_ZIPF_OUT)
 
@@ -4722,7 +4702,7 @@ def multimodal_consistency_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     moment aggregate."""
     docs = _ascii_text_docs(load_table(spark, sf_dir, "documents"))
     media = multimodal.documents_as_png_media(docs, width=8, height=8)
-    px = multimodal.png_pixel_rows(media)
+    px = multimodal.pixel_rows(media)
     sums = px.groupBy("media_id").agg(
         F.sum("v").cast("long").alias("sum_px")
     )
@@ -4730,19 +4710,18 @@ def multimodal_consistency_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").alias("media_id"), "n_chars"
     )
     j = sums.join(meta, "media_id")
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     s = j.agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.count(F.lit(1)).cast("double").alias("n"),
-        F.sum(dec(F.col("n_chars"))).cast("double").alias("sx"),
-        F.sum(dec(F.col("sum_px"))).cast("double").alias("sy"),
-        F.sum(dec(F.col("n_chars")) * dec(F.col("n_chars")))
+        F.sum(dec38(F.col("n_chars"))).cast("double").alias("sx"),
+        F.sum(dec38(F.col("sum_px"))).cast("double").alias("sy"),
+        F.sum(dec38(F.col("n_chars")) * dec38(F.col("n_chars")))
         .cast("double")
         .alias("sxx"),
-        F.sum(dec(F.col("sum_px")) * dec(F.col("sum_px")))
+        F.sum(dec38(F.col("sum_px")) * dec38(F.col("sum_px")))
         .cast("double")
         .alias("syy"),
-        F.sum(dec(F.col("n_chars")) * dec(F.col("sum_px")))
+        F.sum(dec38(F.col("n_chars")) * dec38(F.col("sum_px")))
         .cast("double")
         .alias("sxy"),
     )
@@ -4798,20 +4777,12 @@ def corpus_hapax_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(F.col("f") == 1, 1).otherwise(0))
         .cast("long")
         .alias("n_hapax"),
-        F.floor(
+        half_up(
             F.sum(F.when(F.col("f") == 1, 1).otherwise(0)).cast("double")
-            / F.count(F.lit(1))
-            * 1000000
-            + F.lit(0.5)
-        )
-        .cast("long")
-        .alias("hapax_ratio_micro"),
-        F.floor(
-            F.count(F.lit(1)).cast("double") / F.sum("f") * 1000000
-            + F.lit(0.5)
-        )
-        .cast("long")
-        .alias("ttr_micro"),
+            / F.count(F.lit(1)),
+            6,
+        ).alias("hapax_ratio_micro"),
+        half_up(F.count(F.lit(1)).cast("double") / F.sum("f"), 6).alias("ttr_micro"),
     )
 
 
@@ -4876,18 +4847,17 @@ def embedding_space_health(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     comps = pca.quantized_components(emb, id_col="vec_id", vec_col="embedding")
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     percomp = comps.groupBy("i").agg(
-        F.sum(dec(F.col("xi"))).alias("sx"),
-        F.sum(dec(F.col("xi")) * dec(F.col("xi"))).alias("sxx"),
+        F.sum(dec38(F.col("xi"))).alias("sx"),
+        F.sum(dec38(F.col("xi")) * dec38(F.col("xi"))).alias("sxx"),
     )
     nn = emb.agg(
         F.count(F.lit(1)).cast("long").alias("n_vectors"),
         F.count(F.lit(1)).cast("long").alias("n"),
     )
     agg = percomp.agg(
-        F.sum("sxx").cast("decimal(38,0)").alias("ssq"),
-        F.sum(F.col("sx") * F.col("sx")).cast("decimal(38,0)").alias("csq"),
+        dec38(F.sum("sxx")).alias("ssq"),
+        dec38(F.sum(F.col("sx") * F.col("sx"))).alias("csq"),
     )
     return agg.crossJoin(F.broadcast(nn)).selectExpr(*_ESH_OUT)
 
@@ -5367,10 +5337,9 @@ def corpus_simpson_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("source", "term")
         .agg(F.count(F.lit(1)).cast("long").alias("f"))
     )
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     s = cnts.groupBy("source").agg(
         F.sum("f").cast("long").alias("nn"),
-        F.sum(dec(F.col("f")) * dec(F.col("f"))).alias("sf2"),
+        F.sum(dec38(F.col("f")) * dec38(F.col("f"))).alias("sf2"),
     )
     return s.selectExpr(
         "source",
@@ -5454,13 +5423,12 @@ def multimodal_wav_spectral_flatness(spark: SparkSession, sf_dir: str) -> DataFr
     tab = spark.createDataFrame(
         _SPG_TAB, schema="k INT, ph INT, cq BIGINT, sq BIGINT"
     )
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     acc = (
         fr.join(F.broadcast(tab), "ph")
         .groupBy("media_id", "frame", "k")
         .agg(
-            F.sum(dec(F.col("v")) * dec(F.col("cq"))).cast("long").alias("c"),
-            F.sum(dec(F.col("v")) * dec(F.col("sq"))).cast("long").alias("s"),
+            F.sum(dec38(F.col("v")) * dec38(F.col("cq"))).cast("long").alias("c"),
+            F.sum(dec38(F.col("v")) * dec38(F.col("sq"))).cast("long").alias("s"),
         )
     )
     mag = acc.selectExpr(
@@ -5471,14 +5439,9 @@ def multimodal_wav_spectral_flatness(spark: SparkSession, sf_dir: str) -> DataFr
         .groupBy("media_id")
         .agg(
             F.count(F.lit(1)).cast("long").alias("nb"),
-            F.sum(dec(F.col("p"))).cast("long").alias("sp"),
+            F.sum(dec38(F.col("p"))).cast("long").alias("sp"),
             F.sum(
-                dec(
-                    F.floor(
-                        F.log(F.col("p").cast("double")) * 1000000
-                        + F.lit(0.5)
-                    ).cast("long")
-                )
+                dec38(half_up(F.log(F.col("p").cast("double")), 6))
             )
             .cast("long")
             .alias("slnp"),
@@ -5675,19 +5638,18 @@ def stylometry_burrows_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
         "CAST(floor(CAST(f AS DOUBLE) / n * 1000000 + 0.5) AS BIGINT)"
         " AS rfm",
     )
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     ts = rf.groupBy("term").agg(
         F.count(F.lit(1)).cast("long").alias("ns"),
         F.sum("rfm").cast("long").alias("sr"),
-        F.sum(dec(F.col("rfm")) * dec(F.col("rfm"))).alias("srr"),
+        F.sum(dec38(F.col("rfm")) * dec38(F.col("rfm"))).alias("srr"),
     )
     z = (
         rf.join(F.broadcast(ts), "term")
         .filter(
             (F.col("ns") > 1)
             & (
-                F.col("srr") * dec(F.col("ns"))
-                > dec(F.col("sr")) * dec(F.col("sr"))
+                F.col("srr") * dec38(F.col("ns"))
+                > dec38(F.col("sr")) * dec38(F.col("sr"))
             )
         )
         .selectExpr(
@@ -5946,7 +5908,7 @@ def embedding_mutual_reach_clusters(spark: SparkSession, sf_dir: str) -> DataFra
         .filter(F.col("ia") != F.col("ib"))
         .select(
             "ia", "ib",
-            F.floor(sqd * 1_000_000 + F.lit(0.5)).cast("long").alias("d2m"),
+            half_up(sqd, 6).alias("d2m"),
         )
     )
     w = Window.partitionBy("ia").orderBy(F.asc("d2m"), F.asc("ib"))

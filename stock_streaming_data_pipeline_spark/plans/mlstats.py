@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from stock_streaming_data_pipeline_spark.functions.scalars import dec38, half_up
 from stock_streaming_data_pipeline_spark.operators import running
 from stock_streaming_data_pipeline_spark.operators.checkpoint import materialize
 from stock_streaming_data_pipeline_spark.plans.catalog import register
@@ -180,7 +181,7 @@ def survival_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
         "d_events",
         "c_censored",
         F.when(F.col("hit_zero") == 1, F.lit(0))
-        .otherwise(F.floor(F.exp("log_s") * 1_000_000 + F.lit(0.5)))
+        .otherwise(half_up(F.exp("log_s"), 6))
         .cast("long")
         .alias("survival_micro"),
     )
@@ -315,12 +316,8 @@ def drift_psi_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         "bin",
         "c_a",
         "c_b",
-        F.floor(F.col("contrib") * 1_000_000 + F.lit(0.5))
-        .cast("long")
-        .alias("contrib_micro"),
-        F.floor(F.sum("contrib").over(w_et) * 1_000_000 + F.lit(0.5))
-        .cast("long")
-        .alias("psi_micro"),
+        half_up("contrib", 6).alias("contrib_micro"),
+        half_up(F.sum("contrib").over(w_et), 6).alias("psi_micro"),
     )
 
 
@@ -693,9 +690,7 @@ def trend_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         (F.unix_micros("ts") / F.lit(_US_PER_DAY)).cast("long").alias("d"),
     ).agg(
-        F.sum(
-            F.floor(F.col("value") * 1_000_000 + F.lit(0.5)).cast("long")
-        ).alias("sum_micro"),
+        F.sum(half_up("value", 6)).alias("sum_micro"),
         F.count(F.lit(1)).alias("cnt"),
     )
     pts = daily.select(
@@ -1176,9 +1171,7 @@ def bootstrap_ci_poisson(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "o_orderpriority",
         "b",
-        F.floor(F.col("o_totalprice") * 1_000_000 + F.lit(0.5))
-        .cast("long")
-        .alias("price_micro"),
+        half_up("o_totalprice", 6).alias("price_micro"),
         F.pmod(
             dedup.portable_hash(
                 F.concat_ws(":", F.col("o_orderkey").cast("string"),
@@ -1356,7 +1349,7 @@ def mi_chi2_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "bin",
         "n_xy",
-        F.floor(e * 1_000_000 + F.lit(0.5)).cast("long").alias("expected_micro"),
+        half_up(e, 6).alias("expected_micro"),
         F.when(
             F.col("n_xy") > 0,
             (F.col("n_xy").cast("double") / F.col("n"))
@@ -1385,12 +1378,8 @@ def mi_chi2_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
         "bin",
         "n_xy",
         "expected_micro",
-        F.floor(F.col("mi_sum") * 1_000_000 + F.lit(0.5))
-        .cast("long")
-        .alias("mi_micro"),
-        F.floor(F.col("chi_sum") * 1_000_000 + F.lit(0.5))
-        .cast("long")
-        .alias("chi2_micro"),
+        half_up("mi_sum", 6).alias("mi_micro"),
+        half_up("chi_sum", 6).alias("chi2_micro"),
         (F.col("chi_sum") > F.lit(_CHI2_CRIT_DF36_05)).alias(
             "reject_independence_05"
         ),
@@ -1499,8 +1488,7 @@ def classifier_auc_roc(spark: SparkSession, sf_dir: str) -> DataFrame:
             "pos",
             "j",
             (
-                F.floor(F.col("e").cast("double") * 1_000_000 + F.lit(0.5))
-                .cast("long")
+                half_up(F.col("e").cast("double"), 6)
                 + 1_000_000
             ).alias("xs"),
         )
@@ -1652,9 +1640,7 @@ def welch_t_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     xm = ev.select(
         "event_type",
-        F.floor(F.col("value") * 1_000_000 + F.lit(0.5))
-        .cast("long")
-        .alias("xm"),
+        half_up("value", 6).alias("xm"),
     )
     m = xm.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"), F.sum("xm").alias("sx")
@@ -1665,7 +1651,7 @@ def welch_t_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = (
         xm.join(F.broadcast(m), "event_type")
         .groupBy("event_type", "n", "mean")
-        .agg(F.sum((d * d).cast("decimal(38,0)")).cast("double").alias("ss"))
+        .agg(F.sum(dec38(d * d)).cast("double").alias("ss"))
     )
     a = s.filter(F.col("event_type") == "click").select(
         F.col("n").alias("n_a"),
@@ -1688,8 +1674,8 @@ def welch_t_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_b",
         "mean_a_micro",
         "mean_b_micro",
-        F.floor(t * 1_000_000 + F.lit(0.5)).cast("long").alias("t_micro"),
-        F.floor(df_w * 1_000_000 + F.lit(0.5)).cast("long").alias("df_micro"),
+        half_up(t, 6).alias("t_micro"),
+        half_up(df_w, 6).alias("df_micro"),
         (F.abs(t) > F.lit(_Z_CRIT_05)).alias("reject_05"),
     )
 
@@ -1751,9 +1737,7 @@ def anova_oneway_f(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     xm = ev.select(
         "event_type",
-        F.floor(F.col("value") * 1_000_000 + F.lit(0.5))
-        .cast("long")
-        .alias("xm"),
+        half_up("value", 6).alias("xm"),
     )
     g = xm.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"), F.sum("xm").alias("sx")
@@ -1772,13 +1756,13 @@ def anova_oneway_f(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = F.col("xm") - F.col("mean")
     ssw = (
         xm.join(F.broadcast(g), "event_type")
-        .agg(F.sum((d * d).cast("decimal(38,0)")).cast("double").alias("ssw"))
+        .agg(F.sum(dec38(d * d)).cast("double").alias("ssw"))
     )
     db = F.col("mean") - F.col("gmean")
     ssb = (
         g.crossJoin(F.broadcast(tot))
         .agg(
-            F.sum((F.col("n") * db * db).cast("decimal(38,0)"))
+            F.sum(dec38(F.col("n") * db * db))
             .cast("double")
             .alias("ssb")
         )
@@ -1800,12 +1784,8 @@ def anova_oneway_f(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "n",
         F.col("mean").alias("mean_micro"),
-        F.floor(F.col("fstat") * 1_000_000 + F.lit(0.5))
-        .cast("long")
-        .alias("f_micro"),
-        F.floor(F.col("eta2") * 1_000_000 + F.lit(0.5))
-        .cast("long")
-        .alias("eta2_micro"),
+        half_up("fstat", 6).alias("f_micro"),
+        half_up("eta2", 6).alias("eta2_micro"),
         "df1",
         "df2",
         (F.col("fstat") > F.lit(_F_CRIT_DF4_INF_05)).alias("reject_05"),
@@ -1896,9 +1876,7 @@ def ts_acf_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         (F.unix_micros("ts") / F.lit(_US_PER_DAY)).cast("long").alias("d"),
     ).agg(
-        F.sum(
-            F.floor(F.col("value") * 1_000_000 + F.lit(0.5)).cast("long")
-        ).alias("sum_micro"),
+        F.sum(half_up("value", 6)).alias("sum_micro"),
         F.count(F.lit(1)).alias("cnt"),
     )
     w_seq = Window.partitionBy("event_type").orderBy("d")
@@ -1915,8 +1893,7 @@ def ts_acf_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     pm = pts.join(F.broadcast(m), "event_type")
     c0 = pm.groupBy("event_type").agg(
         F.sum(
-            ((F.col("y") - F.col("ybar")) * (F.col("y") - F.col("ybar")))
-            .cast("decimal(38,0)")
+            dec38((F.col("y") - F.col("ybar")) * (F.col("y") - F.col("ybar")))
         )
         .cast("double")
         .alias("c0")
@@ -1941,7 +1918,7 @@ def ts_acf_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
         a.join(b, ["event_type", "tb"])
         .groupBy("event_type", "lag")
         .agg(
-            F.sum((F.col("da") * F.col("db")).cast("decimal(38,0)"))
+            F.sum(dec38(F.col("da") * F.col("db")))
             .cast("double")
             .alias("ck")
         )
@@ -1949,9 +1926,7 @@ def ts_acf_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     acf = num.join(c0, "event_type").select(
         "event_type",
         F.col("lag").cast("long").alias("lag"),
-        F.floor(F.col("ck") / F.col("c0") * 1_000_000 + F.lit(0.5))
-        .cast("long")
-        .alias("acf_micro"),
+        half_up(F.col("ck") / F.col("c0"), 6).alias("acf_micro"),
     )
     qstat = (
         acf.join(F.broadcast(m), "event_type")
@@ -2182,26 +2157,21 @@ def ols_price_model(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     xm = li.select(
         F.col("l_returnflag").alias("flag"),
-        F.floor(F.col("l_quantity") + F.lit(0.5)).cast("long").alias("x1"),
-        F.floor(F.col("l_discount") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("x2"),
-        F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("y"),
+        half_up("l_quantity", 0).alias("x1"),
+        half_up("l_discount", 2).alias("x2"),
+        half_up("l_extendedprice", 2).alias("y"),
     )
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     s = xm.groupBy("flag").agg(
         F.count(F.lit(1)).cast("double").alias("nn"),
-        F.sum(dec(F.col("x1"))).cast("double").alias("s1"),
-        F.sum(dec(F.col("x2"))).cast("double").alias("s2"),
-        F.sum(dec(F.col("x1") * F.col("x1"))).cast("double").alias("s11"),
-        F.sum(dec(F.col("x1") * F.col("x2"))).cast("double").alias("s12"),
-        F.sum(dec(F.col("x2") * F.col("x2"))).cast("double").alias("s22"),
-        F.sum(dec(F.col("y"))).cast("double").alias("sy"),
-        F.sum(dec(F.col("x1") * F.col("y"))).cast("double").alias("s1y"),
-        F.sum(dec(F.col("x2") * F.col("y"))).cast("double").alias("s2y"),
-        F.sum(dec(F.col("y") * F.col("y"))).cast("double").alias("syy"),
+        F.sum(dec38(F.col("x1"))).cast("double").alias("s1"),
+        F.sum(dec38(F.col("x2"))).cast("double").alias("s2"),
+        F.sum(dec38(F.col("x1") * F.col("x1"))).cast("double").alias("s11"),
+        F.sum(dec38(F.col("x1") * F.col("x2"))).cast("double").alias("s12"),
+        F.sum(dec38(F.col("x2") * F.col("x2"))).cast("double").alias("s22"),
+        F.sum(dec38(F.col("y"))).cast("double").alias("sy"),
+        F.sum(dec38(F.col("x1") * F.col("y"))).cast("double").alias("s1y"),
+        F.sum(dec38(F.col("x2") * F.col("y"))).cast("double").alias("s2y"),
+        F.sum(dec38(F.col("y") * F.col("y"))).cast("double").alias("syy"),
         F.count(F.lit(1)).cast("long").alias("n"),
     )
     d = s.selectExpr(
@@ -2321,10 +2291,8 @@ def spearman_rank_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     xm = li.select(
         F.col("l_returnflag").alias("flag"),
-        F.floor(F.col("l_quantity") + F.lit(0.5)).cast("long").alias("q"),
-        F.floor(F.col("l_discount") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("d"),
+        half_up("l_quantity", 0).alias("q"),
+        half_up("l_discount", 2).alias("d"),
     )
     cells = xm.groupBy("flag", "q", "d").agg(
         F.count(F.lit(1)).cast("long").alias("cnt")
@@ -2352,19 +2320,18 @@ def spearman_rank_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     j = cells.join(F.broadcast(qr), ["flag", "q"]).join(
         F.broadcast(dr), ["flag", "d"]
     )
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     s = j.groupBy("flag").agg(
         F.sum("cnt").cast("long").alias("n_rows"),
         F.sum("cnt").cast("double").alias("n"),
-        F.sum(dec(F.col("cnt")) * dec(F.col("rx2"))).cast("double").alias("sx"),
-        F.sum(dec(F.col("cnt")) * dec(F.col("ry2"))).cast("double").alias("sy"),
-        F.sum(dec(F.col("cnt")) * dec(F.col("rx2")) * dec(F.col("rx2")))
+        F.sum(dec38(F.col("cnt")) * dec38(F.col("rx2"))).cast("double").alias("sx"),
+        F.sum(dec38(F.col("cnt")) * dec38(F.col("ry2"))).cast("double").alias("sy"),
+        F.sum(dec38(F.col("cnt")) * dec38(F.col("rx2")) * dec38(F.col("rx2")))
         .cast("double")
         .alias("sxx"),
-        F.sum(dec(F.col("cnt")) * dec(F.col("ry2")) * dec(F.col("ry2")))
+        F.sum(dec38(F.col("cnt")) * dec38(F.col("ry2")) * dec38(F.col("ry2")))
         .cast("double")
         .alias("syy"),
-        F.sum(dec(F.col("cnt")) * dec(F.col("rx2")) * dec(F.col("ry2")))
+        F.sum(dec38(F.col("cnt")) * dec38(F.col("rx2")) * dec38(F.col("ry2")))
         .cast("double")
         .alias("sxy"),
     )
@@ -2443,7 +2410,6 @@ def sketch_ams_f2_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     tk = docs.select(F.explode(dedup.tokens(F.col("text"))).alias("term"))
     rows = spark.range(_AMS_K).select(F.col("id").alias("i"))
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     signs = tk.crossJoin(F.broadcast(rows)).select(
         "i",
         (
@@ -2461,12 +2427,14 @@ def sketch_ams_f2_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     z = signs.groupBy("i").agg(F.sum("sign").cast("long").alias("z"))
     est = z.agg(
         F.count(F.lit(1)).cast("long").alias("k"),
-        F.sum(dec(F.col("z")) * dec(F.col("z"))).cast("double").alias("sz2"),
+        F.sum(dec38(F.col("z")) * dec38(F.col("z"))).cast("double").alias("sz2"),
     )
     ex = (
         tk.groupBy("term")
         .agg(F.count(F.lit(1)).alias("f"))
-        .agg(F.sum(dec(F.col("f")) * dec(F.col("f"))).cast("long").alias("f2_exact"))
+        .agg(
+            F.sum(dec38(F.col("f")) * dec38(F.col("f"))).cast("long").alias("f2_exact")
+        )
     )
     return est.crossJoin(F.broadcast(ex)).selectExpr(*_AMS_OUT)
 
@@ -2736,10 +2704,7 @@ def graph_hits_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
         auth.crossJoin(F.broadcast(amax))
         .select(
             F.col("i").alias("part_key"),
-            F.floor(
-                F.col("a").cast("double") / F.col("amax") * 1000000 + 0.5
-            )
-            .cast("long")
+            half_up(F.col("a").cast("double") / F.col("amax"), 6)
             .alias("auth_rel_micro"),
             "a",
         )
@@ -2856,17 +2821,16 @@ def pca_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
     cov = pca.covariance_rows(emb, id_col="vec_id", vec_col="embedding")
     cov = materialize(cov, eager=False)
     v = pca.power_iteration(cov, rounds=_PCA_ROUNDS)
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     rf = (
         cov.join(v.withColumnsRenamed({"i": "j"}), "j")
         .groupBy("i")
-        .agg(F.sum(F.col("c") * dec(F.col("v"))).alias("raw"))
+        .agg(F.sum(F.col("c") * dec38(F.col("v"))).alias("raw"))
     )
     num_t = (
         v.join(rf, "i")
-        .agg(F.sum(dec(F.col("v")) * F.col("raw")).alias("num"))
+        .agg(F.sum(dec38(F.col("v")) * F.col("raw")).alias("num"))
     )
-    den_t = v.agg(F.sum(dec(F.col("v")) * dec(F.col("v"))).alias("den"))
+    den_t = v.agg(F.sum(dec38(F.col("v")) * dec38(F.col("v"))).alias("den"))
     tr_t = cov.filter(F.col("i") == F.col("j")).agg(
         F.sum("c").alias("tr")
     )
@@ -2936,12 +2900,11 @@ def pca_projection_extremes(spark: SparkSession, sf_dir: str) -> DataFrame:
         pca.covariance_rows(emb, id_col="vec_id", vec_col="embedding"), eager=False
     )
     v = pca.power_iteration(cov, rounds=_PCA_ROUNDS)
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     comps = pca.quantized_components(emb, id_col="vec_id", vec_col="embedding")
     scores = (
         comps.join(F.broadcast(v), "i")
         .groupBy("vid")
-        .agg(F.sum(dec(F.col("xi")) * dec(F.col("v"))).alias("s"))
+        .agg(F.sum(dec38(F.col("xi")) * dec38(F.col("v"))).alias("s"))
     )
     top = (
         scores.orderBy(F.desc("s"), F.asc("vid"))
@@ -3053,7 +3016,6 @@ def markov_stationary_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         eager=False,
     )
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     p = (
         trans.groupBy(F.col("a").alias("s"))
         .agg(F.count(F.lit(1)).alias("_d"))
@@ -3063,7 +3025,7 @@ def markov_stationary_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         raw = (
             p.join(pq, p["s"] == pq["a"])
             .groupBy(F.col("b").alias("s2"))
-            .agg(F.sum(dec(F.col("v")) * dec(F.col("pq"))).alias("raw"))
+            .agg(F.sum(dec38(F.col("v")) * dec38(F.col("pq"))).alias("raw"))
             .withColumnRenamed("s2", "s")
         )
         tot = raw.agg(F.sum("raw").cast("double").alias("tot"))
@@ -3171,14 +3133,12 @@ def decision_stump_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     qf = li.select(
         y.alias("y"),
         F.lit("quantity").alias("feature"),
-        F.floor(F.col("l_quantity") + F.lit(0.5)).cast("long").alias("v"),
+        half_up("l_quantity", 0).alias("v"),
     )
     df_ = li.select(
         y.alias("y"),
         F.lit("discount").alias("feature"),
-        F.floor(F.col("l_discount") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("v"),
+        half_up("l_discount", 2).alias("v"),
     )
     cells = (
         qf.unionByName(df_)
@@ -3482,8 +3442,8 @@ def boosted_stumps_round2(spark: SparkSession, sf_dir: str) -> DataFrame:
     y = F.when(F.col("l_returnflag") == "R", F.lit(1)).otherwise(F.lit(0))
     base = li.select(
         y.alias("y"),
-        F.floor(F.col("l_quantity") + F.lit(0.5)).cast("long").alias("vq"),
-        F.floor(F.col("l_discount") * 100 + F.lit(0.5)).cast("long").alias("vd"),
+        half_up("l_quantity", 0).alias("vq"),
+        half_up("l_discount", 2).alias("vd"),
     )
 
     def unpivot(rows: DataFrame, with_w: bool) -> DataFrame:
@@ -3706,17 +3666,12 @@ def corpus_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     cnts = tk.groupBy("source", "term").agg(
         F.count(F.lit(1)).cast("long").alias("f")
     )
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     s = cnts.groupBy("source").agg(
         F.sum("f").cast("long").alias("nn"),
         F.count(F.lit(1)).cast("long").alias("vv"),
         F.sum(
-            dec(F.col("f"))
-            * dec(
-                F.floor(F.log(F.col("f").cast("double")) * 1000000 + F.lit(0.5)).cast(
-                    "long"
-                )
-            )
+            dec38(F.col("f"))
+            * dec38(half_up(F.log(F.col("f").cast("double")), 6))
         ).alias("sfl"),
     )
     return s.selectExpr(*_ENTROPY_OUT)
@@ -3798,15 +3753,14 @@ def ts_ccf_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(b, F.col("sb") == F.col("sa") + F.col("lag"))
         .select("lag", "xa", "xb")
     )
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     s = j.groupBy("lag").agg(
         F.count(F.lit(1)).cast("long").alias("n_pairs"),
         F.count(F.lit(1)).cast("double").alias("n"),
         F.sum("xa").cast("double").alias("sx"),
         F.sum("xb").cast("double").alias("sy"),
-        F.sum(dec(F.col("xa")) * dec(F.col("xa"))).cast("double").alias("sxx"),
-        F.sum(dec(F.col("xb")) * dec(F.col("xb"))).cast("double").alias("syy"),
-        F.sum(dec(F.col("xa")) * dec(F.col("xb"))).cast("double").alias("sxy"),
+        F.sum(dec38(F.col("xa")) * dec38(F.col("xa"))).cast("double").alias("sxx"),
+        F.sum(dec38(F.col("xb")) * dec38(F.col("xb"))).cast("double").alias("syy"),
+        F.sum(dec38(F.col("xa")) * dec38(F.col("xb"))).cast("double").alias("sxy"),
     )
     r = s.selectExpr("lag", "n_pairs", _SPEARMAN_RHO)
     return r.selectExpr(
@@ -3916,17 +3870,17 @@ def mann_whitney_u_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     pre = running.running_sum_salted(
         pts, key="event_type", ts="value", value="ca", out="ca_le", segment=seg
     )
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     t = F.col("ca") + F.col("cb")
     s = pre.groupBy("event_type").agg(
         F.sum("ca").cast("long").alias("n_a"),
         F.sum("cb").cast("long").alias("n_b"),
-        F.sum(dec(F.col("cb")) * (2 * dec(F.col("ca_le")) - dec(F.col("ca"))))
-        .cast("decimal(38,0)")
-        .alias("u2"),
-        F.sum(dec(t) * dec(t) * dec(t) - dec(t))
-        .cast("decimal(38,0)")
-        .alias("tt"),
+        dec38(
+            F.sum(
+                dec38(F.col("cb"))
+                * (2 * dec38(F.col("ca_le")) - dec38(F.col("ca")))
+            )
+        ).alias("u2"),
+        dec38(F.sum(dec38(t) * dec38(t) * dec38(t) - dec38(t))).alias("tt"),
     )
     return s.selectExpr(*_MWU_OUT)
 
@@ -3985,21 +3939,18 @@ def corr_matrix_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     one 1-row shuffle — the canonical 'sufficient statistics, never
     the data' pattern."""
     li = load_table(spark, sf_dir, "lineitem")
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     xm = li.select(
-        F.floor(F.col("l_quantity") + F.lit(0.5)).cast("long").alias("q"),
-        F.floor(F.col("l_discount") * 100 + F.lit(0.5)).cast("long").alias("d"),
-        F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("p"),
-        F.floor(F.col("l_tax") * 100 + F.lit(0.5)).cast("long").alias("t"),
+        half_up("l_quantity", 0).alias("q"),
+        half_up("l_discount", 2).alias("d"),
+        half_up("l_extendedprice", 2).alias("p"),
+        half_up("l_tax", 2).alias("t"),
     )
     aggs = [F.count(F.lit(1)).cast("double").alias("n")]
     aggs += [
-        F.sum(dec(F.col(v))).cast("double").alias(f"s_{v}") for v in _CORR_VARS
+        F.sum(dec38(F.col(v))).cast("double").alias(f"s_{v}") for v in _CORR_VARS
     ]
     aggs += [
-        F.sum(dec(F.col(a)) * dec(F.col(b))).cast("double").alias(f"s_{a}{b}")
+        F.sum(dec38(F.col(a)) * dec38(F.col(b))).cast("double").alias(f"s_{a}{b}")
         for ai, a in enumerate(_CORR_VARS)
         for b in _CORR_VARS[ai:]
     ]
@@ -4068,11 +4019,7 @@ def churn_rate_by_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
     return labeled.groupBy("freq_bucket").agg(
         F.count(F.lit(1)).cast("long").alias("n_users"),
         F.sum("churned").cast("long").alias("n_churned"),
-        F.floor(
-            F.sum("churned").cast("double") / F.count(F.lit(1)) * 1000000
-            + F.lit(0.5)
-        )
-        .cast("long")
+        half_up(F.sum("churned").cast("double") / F.count(F.lit(1)), 6)
         .alias("churn_rate_micro"),
     )
 
@@ -4202,15 +4149,12 @@ def kendall_tau_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     xm = li.select(
         F.col("l_returnflag").alias("flag"),
-        F.floor(F.col("l_quantity") + F.lit(0.5)).cast("long").alias("q"),
-        F.floor(F.col("l_discount") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("d"),
+        half_up("l_quantity", 0).alias("q"),
+        half_up("l_discount", 2).alias("d"),
     )
     cells = xm.groupBy("flag", "q", "d").agg(
         F.count(F.lit(1)).cast("long").alias("cnt")
     )
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     a = cells.selectExpr("flag", "q AS qa", "d AS da", "cnt AS ca")
     b = cells.selectExpr("flag AS flag_b", "q AS qb", "d AS db", "cnt AS cb")
     pairs = (
@@ -4223,14 +4167,14 @@ def kendall_tau_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(
                 F.when(
                     F.col("da") < F.col("db"),
-                    dec(F.col("ca")) * dec(F.col("cb")),
-                ).otherwise(F.lit(0).cast("decimal(38,0)"))
+                    dec38(F.col("ca")) * dec38(F.col("cb")),
+                ).otherwise(dec38(F.lit(0)))
             ).alias("cc"),
             F.sum(
                 F.when(
                     F.col("da") > F.col("db"),
-                    dec(F.col("ca")) * dec(F.col("cb")),
-                ).otherwise(F.lit(0).cast("decimal(38,0)"))
+                    dec38(F.col("ca")) * dec38(F.col("cb")),
+                ).otherwise(dec38(F.lit(0)))
             ).alias("dd"),
         )
     )
@@ -4240,9 +4184,7 @@ def kendall_tau_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum("cnt").cast("long").alias("tc"))
         .groupBy("flag")
         .agg(
-            F.sum(dec(F.col("tc")) * dec(F.col("tc") - 1) / 2)
-            .cast("decimal(38,0)")
-            .alias("n1")
+            dec38(F.sum(dec38(F.col("tc")) * dec38(F.col("tc") - 1) / 2)).alias("n1")
         )
     )
     td = (
@@ -4250,9 +4192,7 @@ def kendall_tau_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum("cnt").cast("long").alias("tc"))
         .groupBy("flag")
         .agg(
-            F.sum(dec(F.col("tc")) * dec(F.col("tc") - 1) / 2)
-            .cast("decimal(38,0)")
-            .alias("n2")
+            dec38(F.sum(dec38(F.col("tc")) * dec38(F.col("tc") - 1) / 2)).alias("n2")
         )
     )
     s = (
@@ -4264,9 +4204,7 @@ def kendall_tau_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n",
             "cc",
             "dd",
-            (dec(F.col("n")) * dec(F.col("n") - 1) / 2)
-            .cast("decimal(38,0)")
-            .alias("n0"),
+            dec38(dec38(F.col("n")) * dec38(F.col("n") - 1) / 2).alias("n0"),
             "n1",
             "n2",
         )
@@ -4372,8 +4310,7 @@ def pca_second_component(spark: SparkSession, sf_dir: str) -> DataFrame:
     cov = pca.covariance_rows(emb, id_col="vec_id", vec_col="embedding")
     cov = materialize(cov, eager=False)
     v1 = materialize(pca.power_iteration(cov, rounds=_PCA_ROUNDS), eager=False)
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    mx = cov.agg(F.max(F.abs(F.col("c"))).cast("decimal(38,0)").alias("m"))
+    mx = cov.agg(dec38(F.max(F.abs(F.col("c")))).alias("m"))
     cov_s = materialize(
         cov.crossJoin(F.broadcast(mx))
         .selectExpr(
@@ -4386,11 +4323,11 @@ def pca_second_component(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         eager=False,
     )
-    vtv = v1.agg(F.sum(dec(F.col("v")) * dec(F.col("v"))).alias("w"))
+    vtv = v1.agg(F.sum(dec38(F.col("v")) * dec38(F.col("v"))).alias("w"))
     cv = (
         cov_s.join(v1.withColumnsRenamed({"i": "j"}), "j")
         .groupBy("i")
-        .agg(F.sum(F.col("c") * dec(F.col("v"))).alias("raw"))
+        .agg(F.sum(F.col("c") * dec38(F.col("v"))).alias("raw"))
     )
     cov2 = materialize(
         cov_s.join(F.broadcast(cv), "i")
@@ -4401,8 +4338,7 @@ def pca_second_component(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "i",
             "j",
-            (F.col("w") * F.col("c") - F.col("raw") * dec(F.col("vj")))
-            .cast("decimal(38,0)")
+            dec38(F.col("w") * F.col("c") - F.col("raw") * dec38(F.col("vj")))
             .alias("c"),
         ),
         eager=False,
@@ -4410,10 +4346,10 @@ def pca_second_component(spark: SparkSession, sf_dir: str) -> DataFrame:
     v2 = pca.power_iteration(cov2, rounds=_PCA_ROUNDS)
     dp_t = (
         v1.join(v2.withColumnsRenamed({"v": "v2"}), "i")
-        .agg(F.sum(dec(F.col("v")) * dec(F.col("v2"))).alias("dp"))
+        .agg(F.sum(dec38(F.col("v")) * dec38(F.col("v2"))).alias("dp"))
     )
-    n1_t = v1.agg(F.sum(dec(F.col("v")) * dec(F.col("v"))).alias("w1"))
-    n2_t = v2.agg(F.sum(dec(F.col("v")) * dec(F.col("v"))).alias("w2"))
+    n1_t = v1.agg(F.sum(dec38(F.col("v")) * dec38(F.col("v"))).alias("w1"))
+    n2_t = v2.agg(F.sum(dec38(F.col("v")) * dec38(F.col("v"))).alias("w2"))
     return (
         v2.crossJoin(F.broadcast(dp_t))
         .crossJoin(F.broadcast(n1_t))
@@ -4491,7 +4427,7 @@ def stratified_treatment_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells, then bounded-relation arithmetic."""
     li = load_table(spark, sf_dir, "lineitem")
     xm = li.select(
-        F.floor(F.col("l_quantity") + F.lit(0.5)).cast("long").alias("stratum"),
+        half_up("l_quantity", 0).alias("stratum"),
         F.when(F.col("l_discount") >= 0.05, F.lit(1))
         .otherwise(F.lit(0))
         .alias("treated"),
@@ -5007,12 +4943,11 @@ def arrival_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         (F.unix_micros("ts") / F.lit(3_600_000_000)).cast("long").alias("h"),
     ).agg(F.count(F.lit(1)).cast("long").alias("x"))
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     s = ht.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n_hours"),
         F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum(dec(F.col("x"))).alias("sx"),
-        F.sum(dec(F.col("x")) * dec(F.col("x"))).alias("sxx"),
+        F.sum(dec38(F.col("x"))).alias("sx"),
+        F.sum(dec38(F.col("x")) * dec38(F.col("x"))).alias("sxx"),
     )
     return s.filter(F.col("n") > 1).selectExpr(
         "event_type", "n_hours", _FANO
@@ -5068,15 +5003,12 @@ def powerlaw_alpha_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("k")
     )
     terms = baskets.filter(F.col("k") >= 1).select(
-        F.floor(F.log(F.col("k").cast("double") / 1) * 1000000 + F.lit(0.5))
-        .cast("long")
-        .alias("lq")
+        half_up(F.log(F.col("k").cast("double") / 1), 6).alias("lq")
     )
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     nb = terms.agg(F.count(F.lit(1)).cast("long").alias("n_baskets"))
     s = terms.filter(F.col("lq") > 0).agg(
         F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum(dec(F.col("lq"))).cast("long").alias("sl"),
+        F.sum(dec38(F.col("lq"))).cast("long").alias("sl"),
     )
     return (
         s.crossJoin(F.broadcast(nb))
@@ -5130,22 +5062,13 @@ def peak_hour_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.unix_micros("ts") / F.lit(3_600_000_000)).cast("long").alias("slot"),
     ).agg(F.count(F.lit(1)).cast("long").alias("x"))
     daily = ht.groupBy("event_type", "day").agg(
-        F.floor(
-            F.max("x").cast("double") / F.sum("x") * 1000000 + F.lit(0.5)
-        )
-        .cast("long")
-        .alias("share_micro")
+        half_up(F.max("x").cast("double") / F.sum("x"), 6).alias("share_micro")
     )
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     return daily.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n_days"),
-        F.floor(
-            F.sum(dec(F.col("share_micro"))).cast("double")
-            / F.count(F.lit(1))
-            + F.lit(0.5)
-        )
-        .cast("long")
-        .alias("avg_peak_share_micro"),
+        half_up(
+            F.sum(dec38(F.col("share_micro"))).cast("double") / F.count(F.lit(1)), 0
+        ).alias("avg_peak_share_micro"),
         F.max("share_micro").cast("long").alias("max_peak_share_micro"),
     )
 
@@ -5237,14 +5160,13 @@ def mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("s")
         )
     )
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     ties = (
         ht.groupBy("event_type", "x")
         .agg(F.count(F.lit(1)).cast("long").alias("tc"))
         .groupBy("event_type")
         .agg(
             F.sum(
-                dec(F.col("tc")) * dec(F.col("tc") - 1) * dec(2 * F.col("tc") + 5)
+                dec38(F.col("tc")) * dec38(F.col("tc") - 1) * dec38(2 * F.col("tc") + 5)
             ).alias("tt")
         )
     )
@@ -5380,7 +5302,6 @@ def hurst_exponent_rs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         (F.unix_micros("ts") / F.lit(3_600_000_000)).cast("long").alias("h"),
     ).agg(F.count(F.lit(1)).cast("long").alias("x"))
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     wseq = Window.partitionBy("event_type").orderBy("h")
     seqd = ht.select(
         "event_type", "x", F.row_number().over(wseq).alias("seq")
@@ -5411,7 +5332,7 @@ def hurst_exponent_rs(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("minc"),
             F.sum("x").cast("long").alias("sx"),
-            F.sum(dec(F.col("x")) * dec(F.col("x"))).cast("long").alias("sxx"),
+            F.sum(dec38(F.col("x")) * dec38(F.col("x"))).cast("long").alias("sxx"),
             F.count(F.lit(1)).cast("long").alias("cnt"),
         )
         parts.append(
@@ -5529,13 +5450,12 @@ def kruskal_wallis_values(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("r2"),
     )
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     grp = (
         pts.join(ranked.select("value", "r2"), "value")
         .groupBy("event_type")
         .agg(
             F.sum("c").cast("long").alias("nj"),
-            F.sum(dec(F.col("c")) * dec(F.col("r2"))).alias("rsum2"),
+            F.sum(dec38(F.col("c")) * dec38(F.col("r2"))).alias("rsum2"),
         )
     )
     s = grp.agg(
@@ -5543,18 +5463,23 @@ def kruskal_wallis_values(spark: SparkSession, sf_dir: str) -> DataFrame:
         # integer floor division in BOTH engines (duck // / spark DIV) —
         # plain / is double in DuckDB and decimal in Spark, a latent
         # rounding-boundary divergence
-        F.sum(F.expr(
-            "CAST(rsum2 * rsum2 AS DECIMAL(38,0))"
-            " DIV CAST(nj AS DECIMAL(38,0))"
-        ))
-        .cast("decimal(38,0)")
-        .alias("sr2"),
+        dec38(
+            F.sum(
+                F.expr(
+                    "CAST(rsum2 * rsum2 AS DECIMAL(38,0))"
+                    " DIV CAST(nj AS DECIMAL(38,0))"
+                )
+            )
+        ).alias("sr2"),
         F.count(F.lit(1)).cast("long").alias("k"),
     )
     t = vals.agg(
-        F.sum(dec(F.col("tc")) * dec(F.col("tc")) * dec(F.col("tc")) - dec(F.col("tc")))
-        .cast("decimal(38,0)")
-        .alias("tt")
+        dec38(
+            F.sum(
+                dec38(F.col("tc")) * dec38(F.col("tc")) * dec38(F.col("tc"))
+                - dec38(F.col("tc"))
+            )
+        ).alias("tt")
     )
     return s.crossJoin(F.broadcast(t)).selectExpr("k", "nn AS n_rows", _KW_H)
 
@@ -6225,16 +6150,15 @@ def robust_regression_huber(spark: SparkSession, sf_dir: str) -> DataFrame:
     xy = materialize(
         li.selectExpr(f"{_HUB_X} AS x", f"{_HUB_Y} AS y"), eager=False
     )
-    dec = "decimal(38,0)"
     m = F.lit(_HUB_MICRO).cast("long")
 
     def sums(w):
         return [
-            F.sum(w.cast(dec)).alias("sw"),
-            F.sum((w * F.col("x")).cast(dec)).alias("swx"),
-            F.sum((w * F.col("y")).cast(dec)).alias("swy"),
-            F.sum((w * F.col("x") * F.col("x")).cast(dec)).alias("swxx"),
-            F.sum((w * F.col("x") * F.col("y")).cast(dec)).alias("swxy"),
+            F.sum(dec38(w)).alias("sw"),
+            F.sum(dec38(w * F.col("x"))).alias("swx"),
+            F.sum(dec38(w * F.col("y"))).alias("swy"),
+            F.sum(dec38(w * F.col("x") * F.col("x"))).alias("swxx"),
+            F.sum(dec38(w * F.col("x") * F.col("y"))).alias("swxy"),
         ]
 
     row = xy.agg(*sums(m)).first()

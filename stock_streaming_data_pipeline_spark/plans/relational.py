@@ -15,7 +15,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from stock_streaming_data_pipeline_spark.functions.scalars import epoch_us, money
+from stock_streaming_data_pipeline_spark.functions.scalars import (
+    dec38,
+    epoch_us,
+    half_away,
+    half_up,
+    money,
+)
 from stock_streaming_data_pipeline_spark.operators import profile
 from stock_streaming_data_pipeline_spark.plans.catalog import register
 from stock_streaming_data_pipeline_spark.tables import load_table
@@ -1367,9 +1373,7 @@ def incremental_agg_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     from stock_streaming_data_pipeline_spark.operators import incremental
 
     ev = load_table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
-    cents = (
-        F.signum("value") * F.floor(F.abs(F.col("value")) * 100 + F.lit(0.5))
-    ).cast("long")
+    cents = half_away("value", 2)
     facts = ev.select("event_type", F.dayofmonth("ts").alias("d"), cents.alias("cents"))
     measures = {"cents": ["sum", "count", "min", "max"]}
     base = incremental.aggregate_state(
@@ -1426,9 +1430,7 @@ def array_functions_showcase(spark: SparkSession, sf_dir: str) -> DataFrame:
     explode+aggregate forms the dedup tier demonstrates. Exact integers
     throughout; full oracle."""
     ev = load_table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
-    cents = (
-        F.signum("value") * F.floor(F.abs(F.col("value")) * 100 + F.lit(0.5))
-    ).cast("long")
+    cents = half_away("value", 2)
     per_user = (
         ev.select("user_id", F.unix_micros("ts").alias("us"), "event_id", cents.alias("c"))
         .groupBy("user_id")
@@ -1761,13 +1763,7 @@ def pareto_abc_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup (bounded: #parts, not #lineitems); the heavy work is the
     partial-aggregated rollup shuffle."""
     li = load_table(spark, sf_dir, "lineitem")
-    cents = (
-        F.signum(F.col("l_extendedprice") * (1 - F.col("l_discount")))
-        * F.floor(
-            F.abs(F.col("l_extendedprice") * (1 - F.col("l_discount"))) * 100
-            + F.lit(0.5)
-        )
-    ).cast("long")
+    cents = half_away(F.col("l_extendedprice") * (1 - F.col("l_discount")), 2)
     rev = li.groupBy("l_partkey").agg(F.sum(cents).alias("cents"))
     tot = rev.agg(F.sum("cents").alias("t"))
     w = (
@@ -1820,13 +1816,7 @@ def revenue_gini_by_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-brand agg."""
     li = load_table(spark, sf_dir, "lineitem")
     part = load_table(spark, sf_dir, "part")
-    cents = (
-        F.signum(F.col("l_extendedprice") * (1 - F.col("l_discount")))
-        * F.floor(
-            F.abs(F.col("l_extendedprice") * (1 - F.col("l_discount"))) * 100
-            + F.lit(0.5)
-        )
-    ).cast("long")
+    cents = half_away(F.col("l_extendedprice") * (1 - F.col("l_discount")), 2)
     rev = (
         li.join(
             part.select(F.col("p_partkey").alias("l_partkey"), "p_brand"),
@@ -1901,9 +1891,7 @@ def bloom_semi_join_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     # canonicalizer is repr-sensitive to Decimal trailing zeros.
     return joined.groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).alias("n_orders"),
-        F.sum(
-            F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("bigint")
-        ).alias("total_price_cents"),
+        F.sum(half_up("o_totalprice", 2)).alias("total_price_cents"),
     )
 
 
@@ -2250,10 +2238,7 @@ def rfm_customer_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle's plain row_number windows are an independent single-node
     derivation of the same total orders."""
     orders = load_table(spark, sf_dir, "orders")
-    cents = (
-        F.signum("o_totalprice")
-        * F.floor(F.abs(F.col("o_totalprice")) * 100 + F.lit(0.5))
-    ).cast("long")
+    cents = half_away("o_totalprice", 2)
     base = (
         orders.withColumn("cents", cents)
         .groupBy(F.col("o_custkey").alias("custkey"))
@@ -2344,7 +2329,7 @@ def dq_benford_first_digit(spark: SparkSession, sf_dir: str) -> DataFrame:
     the whole fact scan folds into 9 groups, the expected table is a
     9-row broadcast VALUES relation."""
     orders = load_table(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 0)
-    cents = (F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))).cast("long")
+    cents = half_up("o_totalprice", 2)
     digits = (
         orders.select(
             F.substring(cents.cast("string"), 1, 1).cast("int").alias("digit")
@@ -2731,7 +2716,6 @@ def supplier_hhi_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     s = load_table(spark, sf_dir, "supplier")
     n = load_table(spark, sf_dir, "nation")
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     # no broadcast hint on supplier (SF-scaled) — stats/AQE decide
     rev = (
         li.join(s.select("s_suppkey", "s_nationkey"),
@@ -2750,7 +2734,7 @@ def supplier_hhi_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     agg = rev.groupBy("nationkey").agg(
         F.count(F.lit(1)).cast("long").alias("n_suppliers"),
-        F.sum(dec(F.col("cents")) * dec(F.col("cents")))
+        F.sum(dec38(F.col("cents")) * dec38(F.col("cents")))
         .cast("double")
         .alias("ss"),
         F.sum("cents").cast("double").alias("st"),
@@ -2939,11 +2923,7 @@ def order_fill_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     return labeled.groupBy("fill_state").agg(
         F.count(F.lit(1)).cast("long").alias("n_orders"),
         F.sum("n_lines").cast("long").alias("n_lines"),
-        F.floor(
-            F.sum("n_lines").cast("double") / F.count(F.lit(1)) * 1000000
-            + F.lit(0.5)
-        )
-        .cast("long")
+        half_up(F.sum("n_lines").cast("double") / F.count(F.lit(1)), 6)
         .alias("avg_lines_micro"),
     )
 
@@ -3001,11 +2981,7 @@ def demand_curve_price_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     return j.groupBy("price_band").agg(
         F.count(F.lit(1)).cast("long").alias("n_lines"),
         F.sum("q").cast("long").alias("total_qty"),
-        F.floor(
-            F.sum("q").cast("double") / F.count(F.lit(1)) * 1000000
-            + F.lit(0.5)
-        )
-        .cast("long")
+        half_up(F.sum("q").cast("double") / F.count(F.lit(1)), 6)
         .alias("avg_qty_micro"),
         F.sum("cents").cast("long").alias("revenue_cents"),
     )
@@ -3066,17 +3042,12 @@ def brand_diversity_leaders(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("o_custkey").alias("cust"), F.col("p_brand").alias("brand"))
         .agg(F.count(F.lit(1)).cast("long").alias("f"))
     )
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     s = cb.groupBy("cust").agg(
         F.sum("f").cast("long").alias("nn"),
         F.count(F.lit(1)).cast("long").alias("n_brands"),
         F.sum(
-            dec(F.col("f"))
-            * dec(
-                F.floor(
-                    F.log(F.col("f").cast("double")) * 1000000 + F.lit(0.5)
-                ).cast("long")
-            )
+            dec38(F.col("f"))
+            * dec38(half_up(F.log(F.col("f").cast("double")), 6))
         ).alias("sfl"),
     )
     scored = s.filter(F.col("nn") >= 20).selectExpr(

@@ -17,6 +17,8 @@ from pyspark.sql import functions as F
 
 from stock_streaming_data_pipeline_spark.functions.scalars import (
     epoch_us,
+    half_away,
+    half_up,
     json_double,
     round6,
 )
@@ -399,9 +401,7 @@ def hierarchical_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
     tier's totals merge associatively and match the SQL oracle bit-for-bit.
     """
     ev = load_table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
-    cents = (
-        F.signum("value") * F.floor(F.abs(F.col("value")) * 100 + F.lit(0.5))
-    ).cast("long")
+    cents = half_away("value", 2)
     # Materialize the fine tier once: without this the three union
     # branches each re-derive `minute` from the fact scan (3 full
     # scans observed in the physical plan). With it, the facts are
@@ -882,7 +882,7 @@ def ewma_price(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         "event_id",
         "ts_us",
-        F.floor(F.col("ewma_raw") * 1_000_000 + 0.5).cast("long").alias("ewma_micro"),
+        half_up("ewma_raw", 6).alias("ewma_micro"),
     )
 
 
@@ -919,9 +919,7 @@ def outlier_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     summation-order sensitivity. Physical shape: tiny per-key stats agg
     broadcast back onto the fact scan; the facts never shuffle."""
     ev = load_table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
-    cents = (
-        F.signum("value") * F.floor(F.abs(F.col("value")) * 100 + F.lit(0.5))
-    ).cast("long")
+    cents = half_away("value", 2)
     c = ev.select("event_id", "event_type", cents.alias("value_cents"))
     stats = c.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),

@@ -21,7 +21,12 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from stock_streaming_data_pipeline_spark.functions.scalars import round6
+from stock_streaming_data_pipeline_spark.functions.scalars import (
+    dec38,
+    half_away,
+    half_up,
+    round6,
+)
 from stock_streaming_data_pipeline_spark.operators.ohlc import bar_aggs
 from stock_streaming_data_pipeline_spark.plans import stock as _stock
 from stock_streaming_data_pipeline_spark.plans.catalog import _REGISTRY, register
@@ -302,7 +307,7 @@ def kafka_payload_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     from stock_streaming_data_pipeline_spark.tables import load_table
 
     ev = load_table(spark, sf_dir, "events")
-    cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint")
+    cents = half_up("value", 2)
     agg = ev.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("num_trades"),
         F.sum(cents).alias("c"),
@@ -504,7 +509,7 @@ def streaming_ewma_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("symbol").alias("event_type"),
         "event_id",
         F.unix_micros("ts").alias("ts_us"),
-        F.floor(F.col("ewma_raw") * 1_000_000 + 0.5).cast("long").alias("ewma_micro"),
+        half_up("ewma_raw", 6).alias("ewma_micro"),
     )
 
 
@@ -700,9 +705,7 @@ def streaming_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     must reproduce the batch outlier query row-for-row."""
     from stock_streaming_data_pipeline_spark.tables import load_table
 
-    cents = (
-        F.signum("value") * F.floor(F.abs(F.col("value")) * 100 + F.lit(0.5))
-    ).cast("long")
+    cents = half_away("value", 2)
     batch = load_table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     stats = (
         batch.select("event_type", cents.alias("value_cents"))
@@ -848,14 +851,14 @@ def streaming_custom_source_vwap(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("n_rows", 2000)
         .load()
     )
-    p = (F.signum("price") * F.floor(F.abs(F.col("price")) * 100 + F.lit(0.5))).cast("long")
-    q = (F.signum("qty") * F.floor(F.abs(F.col("qty")) * 1e6 + F.lit(0.5))).cast("long")
+    p = half_away("price", 2)
+    q = half_away("qty", 6)
     agg = (
         feed.withWatermark("ts", "1 hour")
         .groupBy(F.window("ts", "1 hour").alias("w"), F.col("symbol").alias("key"))
         .agg(
-            F.sum((p * q).cast("decimal(38,0)")).alias("s_pq"),
-            F.sum(q.cast("decimal(38,0)")).alias("s_q"),
+            F.sum(dec38(p * q)).alias("s_pq"),
+            F.sum(dec38(q)).alias("s_q"),
             F.count(F.lit(1)).alias("n_trades"),
         )
     )
@@ -1014,9 +1017,7 @@ def streaming_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
         counts.crossJoin(F.broadcast(totals))
         .select(
             "b",
-            (F.signum(ratio) * F.floor(F.abs(ratio) * 1e6 + F.lit(0.5)))
-            .cast("long")
-            .alias("lam_micro"),
+            half_away(ratio, 6).alias("lam_micro"),
         )
     )
     sdocs = stream_documents(spark, sf_dir).filter(F.col("source") != "src0")
@@ -1073,7 +1074,6 @@ def streaming_ams_f2(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from stock_streaming_data_pipeline_spark.tables import load_table
 
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     tk = stream_documents(spark, sf_dir).select(
         F.explode(tokens(F.col("text"))).alias("term")
     )
@@ -1098,7 +1098,7 @@ def streaming_ams_f2(spark: SparkSession, sf_dir: str) -> DataFrame:
     settled = settle(z, "complete")
     est = settled.agg(
         F.count(F.lit(1)).cast("long").alias("k"),
-        F.sum(dec(F.col("z")) * dec(F.col("z"))).cast("double").alias("sz2"),
+        F.sum(dec38(F.col("z")) * dec38(F.col("z"))).cast("double").alias("sz2"),
     )
     ex = (
         load_table(spark, sf_dir, "documents")
@@ -1106,7 +1106,7 @@ def streaming_ams_f2(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("term")
         .agg(F.count(F.lit(1)).alias("f"))
         .agg(
-            F.sum(dec(F.col("f")) * dec(F.col("f")))
+            F.sum(dec38(F.col("f")) * dec38(F.col("f")))
             .cast("long")
             .alias("f2_exact")
         )
@@ -1134,7 +1134,6 @@ def streaming_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     from stock_streaming_data_pipeline_spark.operators.dedup import tokens
     from stock_streaming_data_pipeline_spark.plans.mlstats import _ENTROPY_OUT
 
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     tk = stream_documents(spark, sf_dir).select(
         "source", F.explode(tokens(F.col("text"))).alias("term")
     )
@@ -1146,12 +1145,8 @@ def streaming_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("f").cast("long").alias("nn"),
         F.count(F.lit(1)).cast("long").alias("vv"),
         F.sum(
-            dec(F.col("f"))
-            * dec(
-                F.floor(
-                    F.log(F.col("f").cast("double")) * 1000000 + F.lit(0.5)
-                ).cast("long")
-            )
+            dec38(F.col("f"))
+            * dec38(half_up(F.log(F.col("f").cast("double")), 6))
         ).alias("sfl"),
     )
     return s.selectExpr(*_ENTROPY_OUT)

@@ -12,8 +12,10 @@ from __future__ import annotations
 import datetime as dt
 import math
 
+import duckdb
 from pyspark.sql import functions as F
 
+from stock_streaming_data_pipeline_spark.functions.scalars import half_away, half_up
 from stock_streaming_data_pipeline_spark.operators import finance
 
 T0 = dt.datetime(2024, 1, 1)
@@ -139,13 +141,40 @@ def test_scaled_long_half_away_rounding(spark):
     )
     got = [
         r[0]
-        for r in df.select(finance.to_scaled_long("v", 2)).collect()
+        for r in df.select(half_away("v", 2)).collect()
     ]
     # the contract is half-away on the DOUBLE product (2.675*100 rounds
     # up to the representable 267.5, hence 268) — exactly what DuckDB's
     # round(v*100, 0) computes on the identical double, which is the
     # portability contract (NOT decimal-string rounding).
     assert got == [13, -13, 268, 1]
+
+    # Exact ties (v * 10^scale == +-k.5 as a double): half-up moves both
+    # signs toward +inf, half-away moves each away from zero. Both agree
+    # with DuckDB's floor(v * s + 0.5) and round(v * s) on the same doubles.
+    ties = {
+        0: [0.5, -0.5, 2.5, -2.5, 7.5, -7.5],
+        2: [0.125, -0.125, 0.375, -0.375, 2.675, -2.675],
+        6: [5e-07, -5e-07, 2.5e-06, -2.5e-06, 0.2500005, -0.2500005],
+    }
+    con = duckdb.connect()
+    for scale, xs in ties.items():
+        assert all(abs(x * 10**scale) % 1 == 0.5 for x in xs)
+        tie = [(abs(x * 10**scale) - 0.5) for x in xs]
+        want_up = [int(t) + 1 if x > 0 else -int(t) for t, x in zip(tie, xs)]
+        want_away = [int(t) + 1 if x > 0 else -int(t) - 1 for t, x in zip(tie, xs)]
+        got = spark.createDataFrame(list(enumerate(xs)), "i int, v double").select(
+            "i", half_up("v", scale), half_away("v", scale)
+        )
+        spark_rows = [(r[1], r[2]) for r in sorted(got.collect())]
+        mul = f" * {10**scale}" if scale else ""
+        rows = ", ".join(f"({i}, CAST({x!r} AS DOUBLE))" for i, x in enumerate(xs))
+        duck_rows = con.execute(
+            f"SELECT CAST(floor(v{mul} + 0.5) AS BIGINT), CAST(round(v{mul}) AS BIGINT)"
+            f" FROM (VALUES {rows}) AS t(i, v) ORDER BY i"
+        ).fetchall()
+        assert spark_rows == list(zip(want_up, want_away)), scale
+        assert duck_rows == spark_rows, scale
 
 
 def test_trend_slope_recovers_planted_line(spark):
@@ -160,9 +189,7 @@ def test_trend_slope_recovers_planted_line(spark):
     df = _trades(spark, rows)
     x = (FF.unix_micros("ts") / FF.lit(1_000_000)).cast("long")
     x = x - FF.lit(int(T0.replace(tzinfo=dt.timezone.utc).timestamp()))
-    from stock_streaming_data_pipeline_spark.operators import finance as fin
-
-    y = fin.to_scaled_long("value", 2)
+    y = half_away("value", 2)
     base = df.select(x.alias("x"), y.alias("y"))
     m = base.agg(
         FF.count(FF.lit(1)).alias("n"), FF.sum("x").alias("sx"),

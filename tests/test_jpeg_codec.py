@@ -119,6 +119,32 @@ def test_decode_image_routes_jpeg():
         multimodal.decode_image(b"\x00\x01\x02not-an-image")
 
 
+def test_jpeg_payloads_get_pixel_features_and_rows(spark):
+    """extract_features and pixel_rows read JPEG payloads through
+    decode_image: real pixel features (not the digest fake) and the
+    decoded samples, both equal to reference_transform of the bytes."""
+    from stock_streaming_data_pipeline_spark.operators import multimodal
+    from stock_streaming_data_pipeline_spark.tables import load_table
+
+    docs = load_table(spark, "/root/testdata/sf0.001", "documents").limit(5)
+    media = multimodal.documents_as_jpeg_media(docs, width=8, height=8)
+    feats = {
+        r["media_id"]: r["feat"] for r in multimodal.extract_features(media).collect()
+    }
+    rows: dict[int, dict[int, int]] = {}
+    for r in multimodal.pixel_rows(media).collect():
+        rows.setdefault(r["media_id"], {})[r["i"]] = r["v"]
+    raw = {r["doc_id"]: r["text"] for r in docs.collect()}
+    assert feats and set(feats) == set(raw) == set(rows)
+    for did, text in raw.items():
+        px = j.reference_transform(text.encode()[:64].ljust(64, b" "), 8, 8)
+        f = feats[did]
+        assert f[:4] == [8.0, 8.0, 1.0, 64.0]
+        assert f[4] == pytest.approx(sum(px) / 64 / 255.0, abs=1e-12)
+        assert f[5:] == [min(px) / 255.0, max(px) / 255.0, px[0] / 255.0]
+        assert bytes(rows[did][i] for i in range(64)) == px
+
+
 # --- color (4:2:0 YCbCr) ---
 
 
@@ -565,6 +591,14 @@ def _pin_inputs(w: int, h: int, ch: int) -> tuple[bytes, ...]:
     return noise, bytes(sparse), checker
 
 
+# A gray progressive 64x8 ramp (5 levels per column, wrapping at 256).
+# Its AC refinement scans hold history coefficients behind more than 15
+# zeros past the last newly visible coefficient: those zeros must fold
+# into the EOB, not become ZRLs. The decoder reads both forms, and no
+# input of _pin_inputs reaches that case in a gray progressive stream.
+_RAMP_PIN = "0dabae55d4aa26bf1811b22a7c1a59e8e4b1450214f8f9a777afeaa26b8c30db"
+
+
 def test_encoded_streams_are_pinned():
     """The stream bytes themselves, not only the pixels they decode to:
     the catalog stores these payloads, so a change to headers, scan
@@ -578,3 +612,6 @@ def test_encoded_streams_are_pinned():
                 enc = j.encode_jpeg_progressive(px, w, h, subsampling=sub)
             got.append(hashlib.sha256(enc).hexdigest())
         assert tuple(got) == want, (kind, sub, w, h, ri)
+    ramp = bytes(x * 5 % 256 for _ in range(8) for x in range(64))
+    enc = j.encode_jpeg_progressive(ramp, 64, 8)
+    assert hashlib.sha256(enc).hexdigest() == _RAMP_PIN

@@ -1,0 +1,147 @@
+"""Source guard: each Spark-side parity rule of the catalog has one owner.
+
+The half-up and half-away snaps to scaled BIGINT and the exact
+DECIMAL(38,0) cast live in ``functions/scalars.py``; the ranked top-k
+tail (``cosine`` desc, ``neighbor_id`` asc) lives in
+``operators/similarity.py``. A Column-API copy anywhere else in the
+package would let one site drift from the DuckDB rule its oracle spells.
+SQL text (oracle strings, ``F.expr``) is the independent reference and
+is not checked."""
+
+from __future__ import annotations
+
+import ast
+
+from tests.conftest import REPO
+
+PACKAGE = REPO / "stock_streaming_data_pipeline_spark"
+OWNERS = {
+    "snap": PACKAGE / "functions" / "scalars.py",
+    "dec38": PACKAGE / "functions" / "scalars.py",
+    "topk": PACKAGE / "operators" / "similarity.py",
+}
+
+
+def _is_f(node: ast.AST, name: str) -> bool:
+    return (
+        isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == name
+        and isinstance(node.func.value, ast.Name)
+        and node.func.value.id == "F"
+    )
+
+
+def _is_half(node: ast.AST) -> bool:
+    if isinstance(node, ast.Constant):
+        return node.value == 0.5
+    return _is_f(node, "lit") and len(node.args) == 1 and _is_half(node.args[0])
+
+
+def _is_snap(node: ast.AST) -> bool:
+    """``F.floor(x + 0.5)`` with either operand the half."""
+    if not (_is_f(node, "floor") and len(node.args) == 1):
+        return False
+    a = node.args[0]
+    return (
+        isinstance(a, ast.BinOp)
+        and isinstance(a.op, ast.Add)
+        and (_is_half(a.left) or _is_half(a.right))
+    )
+
+
+def _is_dec38(node: ast.AST) -> bool:
+    """``<x>.cast("decimal(38,0)")`` or ``DecimalType(38, 0)``."""
+    if not isinstance(node, ast.Call):
+        return False
+    func = node.func
+    name = func.attr if isinstance(func, ast.Attribute) else getattr(func, "id", "")
+    args = [a.value for a in node.args if isinstance(a, ast.Constant)]
+    if name == "cast":
+        return (
+            len(args) == 1
+            and isinstance(args[0], str)
+            and "".join(args[0].lower().split()) == "decimal(38,0)"
+        )
+    return name == "DecimalType" and args == [38, 0]
+
+
+def _names(node: ast.AST) -> set[str]:
+    return {
+        n.value
+        for n in ast.walk(node)
+        if isinstance(n, ast.Constant) and isinstance(n.value, str)
+    }
+
+
+def _is_cosine_desc(node: ast.AST) -> bool:
+    """``F.desc("cosine")`` or ``F.col("cosine").desc()``."""
+    if _is_f(node, "desc"):
+        return _names(node) == {"cosine"}
+    return (
+        isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "desc"
+        and _names(node.func.value) == {"cosine"}
+    )
+
+
+def _is_topk_order(node: ast.AST) -> bool:
+    """``.orderBy(<cosine desc>, ..."neighbor_id"...)``."""
+    return (
+        isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "orderBy"
+        and any(_is_cosine_desc(a) for a in node.args)
+        and any("neighbor_id" in _names(a) for a in node.args)
+    )
+
+
+_RULES = {"snap": _is_snap, "dec38": _is_dec38, "topk": _is_topk_order}
+
+
+def parity_rule_sites(source: str) -> list[tuple[str, int]]:
+    """(rule, line) for every Column-API spelling of a parity rule."""
+    return sorted(
+        (rule, n.lineno)
+        for n in ast.walk(ast.parse(source))
+        for rule, hit in _RULES.items()
+        if hit(n)
+    )
+
+
+def test_each_parity_rule_is_spelled_only_by_its_owner():
+    found = []
+    for path in sorted(PACKAGE.rglob("*.py")):
+        found += [
+            f"{path.relative_to(REPO)}:{ln} {rule}"
+            for rule, ln in parity_rule_sites(path.read_text())
+            if OWNERS[rule] != path
+        ]
+    assert found == []
+
+
+def test_each_owner_spells_its_rule():
+    for rule, owner in OWNERS.items():
+        assert rule in {r for r, _ in parity_rule_sites(owner.read_text())}
+
+
+def test_guard_flags_planted_copies():
+    src = (
+        "cents = F.floor(F.col('value') * 100 + F.lit(0.5)).cast('long')\n"
+        "s = F.sum(x.cast('decimal(38, 0)'))\n"
+        "w = Window.partitionBy('query_id').orderBy(\n"
+        "    F.col('cosine').desc(), F.asc('neighbor_id')\n"
+        ")\n"
+        "ok = half_up('value', 2) + dec38(F.col('n'))\n"
+        "sql = F.expr('CAST(floor(v * 100 + 0.5) AS DECIMAL(38,0))')\n"
+        "bins = F.floor(F.col('v') / 10)\n"
+        "by_doc = df.orderBy(F.desc('cosine'), F.asc('doc'))\n"
+        "t = DecimalType(38, 0)\n"
+    )
+    assert parity_rule_sites(src) == [
+        ("dec38", 2),
+        ("dec38", 10),
+        ("snap", 1),
+        ("topk", 3),
+    ]

@@ -21,11 +21,13 @@ Scale design (100 TB):
 
 from __future__ import annotations
 
+import hashlib
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from stock_streaming_data_pipeline_spark.operators.checkpoint import materialize
-from stock_streaming_data_pipeline_spark.tables import fan_out
+from stock_streaming_data_pipeline_spark.tables import duck_connection, fan_out, values_sql
 
 MERSENNE31 = 2_147_483_647  # 2^31 - 1, fingerprint modulus
 
@@ -39,6 +41,11 @@ def portable_hash(col: Column, salt: str = "") -> Column:
 
 def sql_portable_hash(expr: str, salt: str = "") -> str:
     return f"('0x' || substr(md5('{salt}' || {expr}), 1, 15))::BIGINT"
+
+
+def py_portable_hash(value, salt: str = "") -> int:
+    """The same hash in Python, over ``str(value)``."""
+    return int(hashlib.md5(f"{salt}{value}".encode()).hexdigest()[:15], 16)
 
 
 def _norm_text(text: Column) -> Column:
@@ -686,19 +693,15 @@ def sql_minhash_lsh_pairs_xxh64_expected(
     call this."""
     from decimal import ROUND_HALF_UP, Decimal
 
-    import duckdb
-
     from stock_streaming_data_pipeline_spark.functions.xxh64_ref import (
         spark_xxhash64_str,
     )
 
-    from stock_streaming_data_pipeline_spark.tables import duck_glob
-
     rows_per_band = num_perm // bands
-    con = duckdb.connect()
+    con = duck_connection(sf_dir)
     rows = con.execute(
         f"SELECT {id_col} AS doc, unnest({sql_shingles(text_col, n)}) AS s "
-        f"FROM read_parquet('{duck_glob(sf_dir, table)}')"
+        f"FROM {table}"
     ).fetchall()
     con.close()
 
@@ -738,7 +741,7 @@ def sql_minhash_lsh_pairs_xxh64_expected(
                 if a != b:
                     cands.add((a, b))
 
-    out: list[tuple[int, int, str]] = []
+    out: list[tuple[int, int, float]] = []
     q6 = Decimal("0.000001")
     for a, b in sorted(cands):
         inter = len(hsets[a] & hsets[b])
@@ -750,19 +753,8 @@ def sql_minhash_lsh_pairs_xxh64_expected(
             continue
         # Spark F.round(double, 6): HALF_UP on the shortest decimal repr
         j6 = float(Decimal(repr(j)).quantize(q6, rounding=ROUND_HALF_UP))
-        out.append((a, b, repr(j6)))
-
-    if not out:
-        return (
-            "SELECT CAST(NULL AS BIGINT) AS doc_a, CAST(NULL AS BIGINT) AS doc_b, "
-            "CAST(NULL AS DOUBLE) AS jaccard WHERE FALSE"
-        )
-    values = ",\n".join(f"({a}, {b}, {j})" for a, b, j in out)
-    return (
-        "SELECT CAST(doc_a AS BIGINT) AS doc_a, CAST(doc_b AS BIGINT) AS doc_b, "
-        "CAST(jaccard AS DOUBLE) AS jaccard\n"
-        f"FROM (VALUES\n{values}\n) AS t(doc_a, doc_b, jaccard)"
-    )
+        out.append((a, b, j6))
+    return values_sql("doc_a BIGINT, doc_b BIGINT, jaccard DOUBLE", out)
 
 
 def lsh_band_params(threshold: float, num_perm: int = 64) -> tuple[int, int]:

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from stock_streaming_data_pipeline_spark.functions.scalars import dec38, half_away
 from stock_streaming_data_pipeline_spark.operators.checkpoint import materialize
+from stock_streaming_data_pipeline_spark.tables import duck_connection, values_sql
 
 SCALE = 1_000_000
 
@@ -179,7 +180,6 @@ def sql_pagerank_expected(
     *,
     iters: int = 3,
     damping: float = 0.85,
-    tables: tuple[str, ...] = ("documents",),
 ) -> str:
     """Literal-VALUES oracle for :func:`pagerank` — the bounded-memory
     replacement for :func:`sql_pagerank` at large scale factors. The
@@ -197,28 +197,16 @@ def sql_pagerank_expected(
     OPQ/xxh64 literal-oracle precedent."""
     import math
 
-    import duckdb
-
-    from stock_streaming_data_pipeline_spark.tables import duck_glob
-
-    con = duckdb.connect()
-    for t in tables:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{duck_glob(sf_dir, t)}')"
-        )
+    con = duck_connection(sf_dir)
     edges = con.execute(
         f"WITH e AS ({edges_cte}) SELECT DISTINCT src, dst FROM e"
     ).fetchall()
     con.close()
 
+    schema = "node BIGINT, rank_micro BIGINT, rank DOUBLE"
     nodes = sorted({s for s, _ in edges} | {d for _, d in edges})
     if not nodes:
-        return (
-            "SELECT CAST(NULL AS BIGINT) AS node, "
-            "CAST(NULL AS BIGINT) AS rank_micro, "
-            "CAST(NULL AS DOUBLE) AS rank WHERE 1 = 0"
-        )
+        return values_sql(schema, [])
     n = len(nodes)
     deg: dict[int, int] = {}
     out_adj: dict[int, list[int]] = {}
@@ -237,15 +225,7 @@ def sql_pagerank_expected(
             v: base + math.floor(damping * float(s_acc[v]) + 0.5)
             for v in nodes
         }
-    values = ",\n".join(
-        f"({v}, {r[v]}, {r[v] / float(SCALE)!r})" for v in nodes
-    )
-    return (
-        "SELECT CAST(node AS BIGINT) AS node, "
-        "CAST(rank_micro AS BIGINT) AS rank_micro, "
-        "CAST(rank AS DOUBLE) AS rank\n"
-        f"FROM (VALUES\n{values}\n) AS t(node, rank_micro, rank)"
-    )
+    return values_sql(schema, [(v, r[v], r[v] / float(SCALE)) for v in nodes])
 
 
 def triangles(

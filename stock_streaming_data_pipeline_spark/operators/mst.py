@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from stock_streaming_data_pipeline_spark.operators.checkpoint import truncate_lineage
+from stock_streaming_data_pipeline_spark.tables import duck_connection, values_sql
 
 
 def boruvka_mst(
@@ -274,23 +275,13 @@ def sql_mst_components_expected(
     edges_cte: str,
     *,
     top: int = 20,
-    tables: tuple[str, ...] = ("lineitem",),
 ) -> str:
     """Literal-VALUES oracle: read the edge relation via DuckDB (the
     differentially trusted sub-plan — identical SQL both engines can
     run), derive the forest with KRUSKAL in exact Python integers, and
     emit the per-component summary. Borůvka (Spark) vs Kruskal (here)
     is an independent-algorithm witness, not a replay."""
-    import duckdb
-
-    from stock_streaming_data_pipeline_spark.tables import duck_glob
-
-    con = duckdb.connect()
-    for t in tables:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{duck_glob(sf_dir, t)}')"
-        )
+    con = duck_connection(sf_dir)
     rows = con.execute(
         f"WITH e AS ({edges_cte}) SELECT u, v, w FROM e"
     ).fetchall()
@@ -300,19 +291,7 @@ def sql_mst_components_expected(
         ((sz, tw, root) for root, (sz, tw) in comps.items()),
         key=lambda t: (-t[0], -t[1], t[2]),
     )[:top]
-    if not ranked:
-        return (
-            "SELECT CAST(NULL AS BIGINT) AS component, CAST(NULL AS BIGINT)"
-            " AS n_nodes, CAST(NULL AS BIGINT) AS n_edges, CAST(NULL AS"
-            " BIGINT) AS total_weight WHERE FALSE"
-        )
-    vals = ", ".join(
-        f"({root}, {sz}, {sz - 1}, {tw})" for sz, tw, root in ranked
-    )
-    return (
-        "SELECT CAST(component AS BIGINT) AS component, CAST(n_nodes AS"
-        " BIGINT) AS n_nodes, CAST(n_edges AS BIGINT) AS n_edges,"
-        " CAST(total_weight AS BIGINT) AS total_weight FROM (VALUES"
-        f" {vals}) AS t(component, n_nodes, n_edges, total_weight)"
-        " ORDER BY n_nodes DESC, total_weight DESC, component"
+    return values_sql(
+        "component BIGINT, n_nodes BIGINT, n_edges BIGINT, total_weight BIGINT",
+        [(root, sz, sz - 1, tw) for sz, tw, root in ranked],
     )

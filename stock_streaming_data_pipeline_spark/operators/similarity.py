@@ -22,6 +22,11 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from stock_streaming_data_pipeline_spark.operators.checkpoint import materialize
+from stock_streaming_data_pipeline_spark.tables import (
+    duck_connection,
+    sql_double,
+    values_sql,
+)
 
 
 def _subspace_dim(dim: int, num_sub: int) -> int:
@@ -503,16 +508,9 @@ def sql_ivf_topk_expected(
     same robustness contract the SQL oracle relied on), empty-cluster
     retention. Memory is O(corpus × dim); the OPQ/xxh64 literal-oracle
     precedent."""
-    import duckdb
     import numpy as np
 
-    from stock_streaming_data_pipeline_spark.tables import duck_glob
-
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW {table} AS SELECT * FROM "
-        f"read_parquet('{duck_glob(sf_dir, table)}')"
-    )
+    con = duck_connection(sf_dir)
     rows = con.execute(
         f"SELECT vec_id, embedding FROM {table} ORDER BY vec_id"
     ).fetchall()
@@ -579,19 +577,8 @@ def sql_ivf_topk_expected(
         for rank, (c6, nid) in enumerate(scored[:k], start=1):
             out.append((int(qid), nid, c6, rank))
 
-    if not out:
-        return (
-            "SELECT CAST(NULL AS BIGINT) AS query_id, "
-            "CAST(NULL AS BIGINT) AS neighbor_id, "
-            "CAST(NULL AS DOUBLE) AS cosine, "
-            "CAST(NULL AS BIGINT) AS rank WHERE 1 = 0"
-        )
-    values = ",\n".join(f"({q}, {n}, {c!r}, {r})" for q, n, c, r in out)
-    return (
-        "SELECT CAST(query_id AS BIGINT) AS query_id, "
-        "CAST(neighbor_id AS BIGINT) AS neighbor_id, "
-        "CAST(cosine AS DOUBLE) AS cosine, CAST(rank AS BIGINT) AS rank\n"
-        f"FROM (VALUES\n{values}\n) AS t(query_id, neighbor_id, cosine, rank)"
+    return values_sql(
+        "query_id BIGINT, neighbor_id BIGINT, cosine DOUBLE, rank BIGINT", out
     )
 
 
@@ -1544,7 +1531,7 @@ def _sql_rot_cte(R, table: str, *, name: str = "rot") -> str:
     ``v[j] = dot(R[j,:], x)`` — the same orientation as
     :func:`_rotate_vecs`'s ``X @ R.T``."""
     rows = ",\n       ".join(
-        "[" + ", ".join(repr(float(w)) for w in row) + "]" for row in R
+        "[" + ", ".join(sql_double(w) for w in row) + "]" for row in R
     )
     return f"""{name} AS MATERIALIZED (
   SELECT vec_id,
@@ -1670,17 +1657,10 @@ def sql_opq_topk(
     if cached is not None:
         return cached
 
-    import duckdb
     import numpy as np
 
     dsub = _subspace_dim(dim, num_sub)
-    from stock_streaming_data_pipeline_spark.tables import duck_glob
-
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW {table} AS SELECT * "
-        f"FROM read_parquet('{duck_glob(sf_dir, table)}')"
-    )
+    con = duck_connection(sf_dir)
 
     def round_M(R) -> "np.ndarray":
         parts = [_sql_rot_cte(R, table)]
@@ -1712,6 +1692,7 @@ GROUP BY 1, 2
     for _ in range(iters):
         U, _, Vt = np.linalg.svd(round_M(R))
         R = U @ Vt
+    con.close()
 
     # Final SQL with the converged rotation frozen as literals.
     parts = [_sql_rot_cte(R, table)]

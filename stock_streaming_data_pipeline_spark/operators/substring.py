@@ -39,6 +39,7 @@ from stock_streaming_data_pipeline_spark.operators.dedup import (
     portable_hash,
     sql_portable_hash,
 )
+from stock_streaming_data_pipeline_spark.tables import duck_connection, values_sql
 
 
 def lcs_length(a: str, b: str) -> int:
@@ -229,10 +230,8 @@ def sql_longest_shared_substring_expected(
     giving the automaton a cross-algorithm check on every driver run.
     Cost is bounded by the corpus the driver checks at; production runs
     never call this. ``corpus_select_duck`` must yield (doc, txt) and
-    may reference ``read_parquet`` paths built from ``sf_dir``."""
-    import duckdb
-
-    con = duckdb.connect()
+    may reference the testdata tables by name."""
+    con = duck_connection(sf_dir)
     cand_sql = sql_lgram_candidate_pairs(
         corpus_select=corpus_select_duck, gram=min_len
     )
@@ -245,14 +244,4 @@ def sql_longest_shared_substring_expected(
         n = lcs_length_gramsets(texts[a], texts[b], lo=min_len)
         if n >= min_len:
             out.append((a, b, n))
-    if not out:
-        return (
-            "SELECT CAST(NULL AS BIGINT) AS doc_a, CAST(NULL AS BIGINT) AS doc_b,"
-            " CAST(NULL AS BIGINT) AS lcs_len WHERE FALSE"
-        )
-    values = ",\n".join(f"({a}, {b}, {n})" for a, b, n in out)
-    return (
-        "SELECT CAST(doc_a AS BIGINT) AS doc_a, CAST(doc_b AS BIGINT) AS doc_b,"
-        " CAST(lcs_len AS BIGINT) AS lcs_len\n"
-        f"FROM (VALUES\n{values}\n) AS t(doc_a, doc_b, lcs_len)"
-    )
+    return values_sql("doc_a BIGINT, doc_b BIGINT, lcs_len BIGINT", out)

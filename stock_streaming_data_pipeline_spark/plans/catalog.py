@@ -24,6 +24,14 @@ On the Spark side each rule has one owner, and
 - ``operators/similarity.ranked_topk(scored, k)``: ``row_number()`` over
   ``query_id`` by ``cosine DESC, neighbor_id``, kept while ``rank <= k``.
 The oracle SQL spells each rule on its own; it is the independent side.
+
+The data-dependent oracles (``oracle_fn``) replay their operator in
+Python, each in its own builder. They have one owner for their plumbing,
+``tables.py``, and the same guard fails on a copy: they read testdata
+through ``duck_connection(sf_dir)`` (every table a DuckDB view) and hand
+the replayed rows back through ``values_sql(schema, rows)``, which writes
+each double as an exact ``'<repr>'::DOUBLE`` literal and gives a typed
+empty relation for zero rows.
 """
 
 from __future__ import annotations

@@ -29,7 +29,7 @@ from stock_streaming_data_pipeline_spark.operators import (
 )
 from stock_streaming_data_pipeline_spark.operators.checkpoint import materialize
 from stock_streaming_data_pipeline_spark.plans.catalog import register
-from stock_streaming_data_pipeline_spark.tables import load_table
+from stock_streaming_data_pipeline_spark.tables import duck_connection, load_table, values_sql
 
 # ---------------------------------------------------------------------------
 # Dedup
@@ -6092,21 +6092,18 @@ def sample_pps_horvitz_thompson(spark: SparkSession, sf_dir: str) -> DataFrame:
 _LSS_MIN_LEN = 64
 
 
-def _lss_corpus_duck(sf_dir: str) -> str:
-    """DuckDB mirror of the planted corpus: docs with doc_id % 11 == 0
-    get a verbatim passage whose content is keyed by doc_id DIV 110, so
-    blocks of ~10 planted docs share a >=100-char run (pair count grows
-    LINEARLY with corpus size — a block never spans more than 10 planted
-    docs at any sf) while different blocks share nothing 64 chars long."""
-    from stock_streaming_data_pipeline_spark.tables import duck_glob
-
-    return (
-        "SELECT doc_id AS doc, "
-        "CASE WHEN doc_id % 11 = 0 THEN text || ' ' || "
-        "repeat('blk' || (doc_id // 110)::VARCHAR || ' ', 20) "
-        "ELSE text END AS txt "
-        f"FROM read_parquet('{duck_glob(sf_dir, 'documents')}')"
-    )
+# DuckDB mirror of the planted corpus: docs with doc_id % 11 == 0 get a
+# verbatim passage whose content is keyed by doc_id DIV 110, so blocks of
+# ~10 planted docs share a >=100-char run (pair count grows LINEARLY with
+# corpus size — a block never spans more than 10 planted docs at any sf)
+# while different blocks share nothing 64 chars long.
+_LSS_CORPUS_DUCK = (
+    "SELECT doc_id AS doc, "
+    "CASE WHEN doc_id % 11 = 0 THEN text || ' ' || "
+    "repeat('blk' || (doc_id // 110)::VARCHAR || ' ', 20) "
+    "ELSE text END AS txt "
+    "FROM documents"
+)
 
 
 @register(
@@ -6114,7 +6111,7 @@ def _lss_corpus_duck(sf_dir: str) -> str:
     tags=("LLM-dedup",),
     oracle_fn=lambda sf_dir: substring.sql_longest_shared_substring_expected(
         sf_dir,
-        corpus_select_duck=_lss_corpus_duck(sf_dir),
+        corpus_select_duck=_LSS_CORPUS_DUCK,
         min_len=_LSS_MIN_LEN,
     ),
 )
@@ -6354,15 +6351,11 @@ def _coverage_oracle(sf_dir: str) -> str:
     the same normalize/split/shingle contract the Spark side uses), greedy replayed by
     the independent pure-Python implementation (set arithmetic vs the
     engine's join algebra)."""
-    import duckdb
-
     from stock_streaming_data_pipeline_spark.operators.dedup import sql_shingles
-    from stock_streaming_data_pipeline_spark.tables import duck_glob
 
-    con = duckdb.connect()
+    con = duck_connection(sf_dir)
     rows = con.execute(
-        f"SELECT doc_id, unnest({sql_shingles('text', 3)}) AS tok FROM "
-        f"read_parquet('{duck_glob(sf_dir, 'documents')}')"
+        f"SELECT doc_id, unnest({sql_shingles('text', 3)}) AS tok FROM documents"
     ).fetchall()
     con.close()
     sets: dict[int, set[str]] = {}
@@ -6370,16 +6363,12 @@ def _coverage_oracle(sf_dir: str) -> str:
         sets.setdefault(int(doc), set()).add(tok)
     trace = _coverage.greedy_max_coverage_py(sets, k=8)
     cum = 0
-    vals = []
+    rows_out = []
     for rnd, doc, gain in trace:
         cum += gain
-        vals.append(f"({rnd}, {doc}, {gain}, {cum})")
-    return (
-        "SELECT CAST(round AS BIGINT) AS round, CAST(doc_id AS BIGINT) AS"
-        " doc_id, CAST(gain AS BIGINT) AS gain, CAST(covered_total AS"
-        " BIGINT) AS covered_total FROM (VALUES "
-        + ", ".join(vals)
-        + ") AS t(round, doc_id, gain, covered_total)"
+        rows_out.append((rnd, doc, gain, cum))
+    return values_sql(
+        "round BIGINT, doc_id BIGINT, gain BIGINT, covered_total BIGINT", rows_out
     )
 
 

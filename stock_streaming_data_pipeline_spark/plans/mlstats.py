@@ -26,7 +26,7 @@ from stock_streaming_data_pipeline_spark.functions.scalars import dec38, half_up
 from stock_streaming_data_pipeline_spark.operators import running
 from stock_streaming_data_pipeline_spark.operators.checkpoint import materialize
 from stock_streaming_data_pipeline_spark.plans.catalog import register
-from stock_streaming_data_pipeline_spark.tables import load_table
+from stock_streaming_data_pipeline_spark.tables import duck_connection, load_table, values_sql
 
 _US_PER_DAY = 86_400_000_000  # epoch-microsecond day, exact integer
 
@@ -5739,21 +5739,18 @@ def _sql_wis_expected(sf_dir: str) -> str:
     differential verifies the DISTRIBUTED plumbing: grouping, Arrow
     round-trip, ordering) over rows DuckDB reads from the same parquet.
     Bounded by the driver's check tier (sf0.01: 15k orders)."""
-    import duckdb
-
     from stock_streaming_data_pipeline_spark.operators.scheduling import (
         weighted_interval_best,
     )
-    from stock_streaming_data_pipeline_spark.tables import duck_glob
 
-    rows = duckdb.sql(
+    rows = duck_connection(sf_dir).execute(
         f"""
         SELECT o_custkey,
                epoch_us(o_orderdate) AS s,
                epoch_us(o_orderdate)
                  + ((o_orderkey % 30) + 1) * {_US_PER_DAY} AS e,
                {_WIS_CENTS} AS w
-        FROM read_parquet('{duck_glob(sf_dir, "orders")}')
+        FROM orders
         """
     ).fetchall()
     groups: dict[int, list[tuple[int, int, int]]] = {}
@@ -5764,15 +5761,10 @@ def _sql_wis_expected(sf_dir: str) -> str:
         best, n_sel = weighted_interval_best(items)
         scored.append((ck, len(items), n_sel, best))
     scored.sort(key=lambda r: (-r[3], r[0]))
-    top = scored[:_WIS_TOP]
-    values = ",\n".join(f"({ck}, {ni}, {ns}, {bv})" for ck, ni, ns, bv in top)
-    return (
-        "SELECT CAST(o_custkey AS BIGINT) AS o_custkey,\n"
-        "       CAST(n_intervals AS BIGINT) AS n_intervals,\n"
-        "       CAST(n_selected AS BIGINT) AS n_selected,\n"
-        "       CAST(best_value_cents AS BIGINT) AS best_value_cents\n"
-        f"FROM (VALUES\n{values}\n"
-        ") AS t(o_custkey, n_intervals, n_selected, best_value_cents)"
+    return values_sql(
+        "o_custkey BIGINT, n_intervals BIGINT, n_selected BIGINT,"
+        " best_value_cents BIGINT",
+        scored[:_WIS_TOP],
     )
 
 
@@ -5852,31 +5844,22 @@ def _sql_isotonic_expected(sf_dir: str) -> str:
     (operators/isotonic.py) over the binned relation DuckDB computes
     from the same parquet — the differential verifies binning, grouping
     and the Arrow round-trip, which is the Spark-owned part."""
-    import duckdb
-
     from stock_streaming_data_pipeline_spark.operators.isotonic import (
         pava_rates_micro,
     )
-    from stock_streaming_data_pipeline_spark.tables import duck_glob
 
-    rows = duckdb.sql(
+    rows = duck_connection(sf_dir).execute(
         f"""
         SELECT {_ISO_BIN} AS bin,
                CAST(count(*) AS BIGINT) AS n,
                CAST(sum({_ISO_Y}) AS BIGINT) AS s
-        FROM read_parquet('{duck_glob(sf_dir, "events")}')
+        FROM events
         WHERE value IS NOT NULL
         GROUP BY 1 ORDER BY 1
         """
     ).fetchall()
     fitted = pava_rates_micro([(int(b), int(n), int(s)) for b, n, s in rows])
-    values = ",\n".join(f"({b}, {n}, {r})" for b, n, r in fitted)
-    return (
-        "SELECT CAST(bin AS BIGINT) AS bin,\n"
-        "       CAST(n_events AS BIGINT) AS n_events,\n"
-        "       CAST(rate_micro AS BIGINT) AS rate_micro\n"
-        f"FROM (VALUES\n{values}\n) AS t(bin, n_events, rate_micro)"
-    )
+    return values_sql("bin BIGINT, n_events BIGINT, rate_micro BIGINT", fitted)
 
 
 @register(
@@ -5952,20 +5935,17 @@ def _sql_tdigest_expected(sf_dir: str) -> str:
     estimator itself is pinned by an independent rank-error property
     test, per the standing rule) replayed over DuckDB-read rows with the
     identical content-hash sharding."""
-    import duckdb
-
     from stock_streaming_data_pipeline_spark.operators import tdigest
     from stock_streaming_data_pipeline_spark.operators.dedup import (
         sql_portable_hash,
     )
-    from stock_streaming_data_pipeline_spark.tables import duck_glob
 
     h = sql_portable_hash(_TDG_ID, salt="tdg_")
-    rows = duckdb.sql(
+    rows = duck_connection(sf_dir).execute(
         f"""
         SELECT ({h}) % {_TDG_SHARDS} AS shard,
                CAST(round(l_extendedprice * 100, 0) AS BIGINT) AS cents
-        FROM read_parquet('{duck_glob(sf_dir, "lineitem")}')
+        FROM lineitem
         """
     ).fetchall()
     shards: dict[int, list[int]] = {}
@@ -5985,12 +5965,7 @@ def _sql_tdigest_expected(sf_dir: str) -> str:
             final, q=pm / 1000.0, v_min=int(v_min), v_max=int(v_max)
         )
         out.append((pm, tdigest.round_half_up(est)))
-    values = ",\n".join(f"({pm}, {est})" for pm, est in out)
-    return (
-        "SELECT CAST(q_permille AS BIGINT) AS q_permille,\n"
-        "       CAST(est_cents AS BIGINT) AS est_cents\n"
-        f"FROM (VALUES\n{values}\n) AS t(q_permille, est_cents)"
-    )
+    return values_sql("q_permille BIGINT, est_cents BIGINT", out)
 
 
 @register(
@@ -6091,16 +6066,10 @@ def _sql_huber_expected(sf_dir: str) -> str:
     estimator itself is pinned by independent property tests: exact-OLS
     equality on clean data, bounded slope shift under gross outliers,
     IRLS fixed-point stationarity) over DuckDB-read integer pairs."""
-    import duckdb
-
     from stock_streaming_data_pipeline_spark.operators import robust
-    from stock_streaming_data_pipeline_spark.tables import duck_glob
 
-    rows = duckdb.sql(
-        f"""
-        SELECT {_HUB_X} AS x, {_HUB_Y} AS y
-        FROM read_parquet('{duck_glob(sf_dir, "lineitem")}')
-        """
+    rows = duck_connection(sf_dir).execute(
+        f"SELECT {_HUB_X} AS x, {_HUB_Y} AS y FROM lineitem"
     ).fetchall()
     xy = [(int(x), int(y)) for x, y in rows]
     n = len(xy)
@@ -6113,15 +6082,10 @@ def _sql_huber_expected(sf_dir: str) -> str:
     a, b, n_rows, n_down = robust.huber_irls(
         xy, delta_micro=_HUB_DELTA_MICRO, iters=_HUB_ITERS
     )
-    return (
-        "SELECT CAST(n_rows AS BIGINT) AS n_rows,\n"
-        "       CAST(ols_slope_micro AS BIGINT) AS ols_slope_micro,\n"
-        "       CAST(huber_slope_micro AS BIGINT) AS huber_slope_micro,\n"
-        "       CAST(huber_intercept_micro AS BIGINT) AS huber_intercept_micro,\n"
-        "       CAST(n_downweighted AS BIGINT) AS n_downweighted\n"
-        f"FROM (VALUES ({n_rows}, {ols_b}, {b}, {a}, {n_down}))\n"
-        " AS t(n_rows, ols_slope_micro, huber_slope_micro,"
-        " huber_intercept_micro, n_downweighted)"
+    return values_sql(
+        "n_rows BIGINT, ols_slope_micro BIGINT, huber_slope_micro BIGINT,"
+        " huber_intercept_micro BIGINT, n_downweighted BIGINT",
+        [(n_rows, ols_b, b, a, n_down)],
     )
 
 
@@ -6202,32 +6166,30 @@ _ASG_PART_CENTS = "CAST(round(p_retailprice * 100, 0) AS BIGINT)"
 def _asg_rows_duck(sf_dir: str):
     """Top-K suppliers per nation and parts per partkey-residue class,
     ranked exactly as the Spark windows rank them."""
-    import duckdb
-
-    from stock_streaming_data_pipeline_spark.tables import duck_glob
-
-    sup = duckdb.sql(
+    con = duck_connection(sf_dir)
+    sup = con.execute(
         f"""
         SELECT s_nationkey, cents FROM (
           SELECT s_nationkey, {_ASG_SUP_CENTS} AS cents,
                  row_number() OVER (PARTITION BY s_nationkey
                                     ORDER BY {_ASG_SUP_CENTS} DESC, s_suppkey)
                    AS rk
-          FROM read_parquet('{duck_glob(sf_dir, "supplier")}')
+          FROM supplier
         ) WHERE rk <= {_ASG_K}
         """
     ).fetchall()
-    parts = duckdb.sql(
+    parts = con.execute(
         f"""
         SELECT residue, cents FROM (
           SELECT p_partkey % 25 AS residue, {_ASG_PART_CENTS} AS cents,
                  row_number() OVER (PARTITION BY p_partkey % 25
                                     ORDER BY {_ASG_PART_CENTS} DESC, p_partkey)
                    AS rk
-          FROM read_parquet('{duck_glob(sf_dir, "part")}')
+          FROM part
         ) WHERE rk <= {_ASG_K}
         """
     ).fetchall()
+    con.close()
     return sup, parts
 
 
@@ -6253,13 +6215,8 @@ def _sql_assignment_expected(sf_dir: str) -> str:
         rows, cols = (a, b) if len(a) <= len(b) else (b, a)
         cost = [[abs(r - c) for c in cols] for r in rows]
         out.append((nk, len(rows), brute_force_assignment(cost)))
-    values = ",\n".join(f"({nk}, {k}, {t})" for nk, k, t in out)
-    return (
-        "SELECT CAST(nationkey AS BIGINT) AS nationkey,\n"
-        "       CAST(n_assigned AS BIGINT) AS n_assigned,\n"
-        "       CAST(min_total_cost_cents AS BIGINT) AS min_total_cost_cents\n"
-        f"FROM (VALUES\n{values}\n"
-        ") AS t(nationkey, n_assigned, min_total_cost_cents)"
+    return values_sql(
+        "nationkey BIGINT, n_assigned BIGINT, min_total_cost_cents BIGINT", out
     )
 
 

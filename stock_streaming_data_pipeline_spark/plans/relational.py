@@ -24,7 +24,7 @@ from stock_streaming_data_pipeline_spark.functions.scalars import (
 )
 from stock_streaming_data_pipeline_spark.operators import profile
 from stock_streaming_data_pipeline_spark.plans.catalog import register
-from stock_streaming_data_pipeline_spark.tables import load_table
+from stock_streaming_data_pipeline_spark.tables import duck_connection, load_table, values_sql
 
 
 def _dsum(col) -> F.Column:
@@ -384,18 +384,15 @@ def _sql_approx_distinct_profile_expected(sf_dir: str) -> str:
     tests/test_sketches.py) and freeze the expected counts. The exact
     ``n_rows`` rides along as plain arithmetic. Cost is one duckdb
     column scan + ~18M vectorized hashes at the sf1 sweep tier."""
-    import duckdb
     import numpy as np
 
     from stock_streaming_data_pipeline_spark.functions.hllpp_ref import (
         approx_count_distinct_long,
     )
-    from stock_streaming_data_pipeline_spark.tables import duck_glob
 
-    con = duckdb.connect()
+    con = duck_connection(sf_dir)
     tbl = con.execute(
-        "SELECT l_returnflag, l_partkey, l_suppkey, l_orderkey "
-        f"FROM read_parquet('{duck_glob(sf_dir, 'lineitem')}')"
+        "SELECT l_returnflag, l_partkey, l_suppkey, l_orderkey FROM lineitem"
     ).fetchnumpy()
     con.close()
     flags = np.asarray(tbl["l_returnflag"], dtype=object)
@@ -409,16 +406,10 @@ def _sql_approx_distinct_profile_expected(sf_dir: str) -> str:
             for c in ("l_partkey", "l_suppkey", "l_orderkey")
         ]
         rows.append((flag, *nds, int(sel.sum())))
-    values = ",\n".join(
-        f"('{f}', {p}, {s}, {o}, {n})" for f, p, s, o, n in rows
-    )
-    return (
-        "SELECT l_returnflag, CAST(nd_parts AS BIGINT) AS nd_parts,\n"
-        "       CAST(nd_suppliers AS BIGINT) AS nd_suppliers,\n"
-        "       CAST(nd_orders AS BIGINT) AS nd_orders,\n"
-        "       CAST(n_rows AS BIGINT) AS n_rows\n"
-        f"FROM (VALUES\n{values}\n"
-        ") AS t(l_returnflag, nd_parts, nd_suppliers, nd_orders, n_rows)"
+    return values_sql(
+        "l_returnflag VARCHAR, nd_parts BIGINT, nd_suppliers BIGINT,"
+        " nd_orders BIGINT, n_rows BIGINT",
+        rows,
     )
 
 

@@ -437,21 +437,18 @@ def sql_ewma_expected(sf_dir: str, *, alpha: float = 0.5) -> str:
     0.5*value + 0.5*y), micro-snapped floor(y*1e6 + 0.5). Pinned equal
     to the CTE form at sf0.001/0.01 in pytest (the pagerank/IVF
     precedent). A 1M-row VALUES literal parses in ~30 s — measured."""
-    import duckdb
+    import math
 
-    from stock_streaming_data_pipeline_spark.tables import duck_glob
+    from stock_streaming_data_pipeline_spark.tables import duck_connection, values_sql
 
     a = float(alpha)
     one_minus_a = 1.0 - a
-    con = duckdb.connect()
+    con = duck_connection(sf_dir)
     rows = con.execute(
-        "SELECT event_type, event_id, epoch_us(ts) AS ts_us, value "
-        f"FROM read_parquet('{duck_glob(sf_dir, 'events')}') "
+        "SELECT event_type, event_id, epoch_us(ts) AS ts_us, value FROM events "
         "WHERE value IS NOT NULL ORDER BY event_type, ts_us, event_id"
     ).fetchall()
     con.close()
-
-    import math
 
     out = []
     cur_key: str | None = None
@@ -464,21 +461,9 @@ def sql_ewma_expected(sf_dir: str, *, alpha: float = 0.5) -> str:
             y = a * v + one_minus_a * y
         else:
             y, has = v, True
-        et_sql = str(et).replace("'", "''")
-        out.append(f"('{et_sql}', {eid}, {ts_us}, {math.floor(y * 1_000_000 + 0.5)})")
-    if not out:
-        return (
-            "SELECT CAST(NULL AS VARCHAR) AS event_type, "
-            "CAST(NULL AS BIGINT) AS event_id, CAST(NULL AS BIGINT) AS ts_us, "
-            "CAST(NULL AS BIGINT) AS ewma_micro WHERE 1 = 0"
-        )
-    values = ",\n".join(out)
-    return (
-        "SELECT CAST(event_type AS VARCHAR) AS event_type, "
-        "CAST(event_id AS BIGINT) AS event_id, "
-        "CAST(ts_us AS BIGINT) AS ts_us, "
-        "CAST(ewma_micro AS BIGINT) AS ewma_micro\n"
-        f"FROM (VALUES\n{values}\n) AS t(event_type, event_id, ts_us, ewma_micro)"
+        out.append((et, eid, ts_us, math.floor(y * 1_000_000 + 0.5)))
+    return values_sql(
+        "event_type VARCHAR, event_id BIGINT, ts_us BIGINT, ewma_micro BIGINT", out
     )
 
 

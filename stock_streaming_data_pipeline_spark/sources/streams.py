@@ -10,6 +10,8 @@ source (parquet directory replay) — the planner-facing semantics
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -48,6 +50,22 @@ TRADES_SCHEMA = T.StructType(
 )
 
 
+def _stream_table(
+    spark: SparkSession, sf_dir: str, name: str, schema: T.StructType
+) -> DataFrame:
+    """File stream over one testdata table. The file source requires a
+    directory: the driver's testdata ships ``<name>.parquet`` as a single
+    FILE inside the sf dir (scope the listing with a glob), generated
+    tiers (.scaletier) ship it as a DIRECTORY of part files (stream that
+    directory itself; a filename glob on the parent would match no files
+    and replay nothing)."""
+    p = table_path(sf_dir, name)
+    r = spark.readStream.schema(schema)
+    if os.path.isdir(p):
+        return r.parquet(p)
+    return r.option("pathGlobFilter", os.path.basename(p)).parquet(sf_dir)
+
+
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming view of the events table (file source), normalized to the
     same schema as the batch loader (ts → TIMESTAMP in micros)."""
@@ -55,30 +73,11 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Streaming reads need an explicit schema; probe the (cached) batch
     # schema for the testdata generation's physical ts type (raw nano-long
     # vs micros).
-    import os
-
-    p = table_path(sf_dir, "events")
-    stored = read_parquet(spark, p).schema["ts"].dataType
-    # The file stream source requires a directory. The driver's testdata
-    # ships events.parquet as a single FILE inside the sf dir (scope the
-    # listing with a glob); generated tiers (.scaletier) ship it as a
-    # DIRECTORY of part files (stream that directory itself — a filename
-    # glob on the parent would match no files and replay nothing).
-    if os.path.isdir(p):
-        read_dir, glob = p, None
-    else:
-        read_dir, glob = sf_dir, "events.parquet"
-
-    def reader(schema: T.StructType):
-        r = spark.readStream.schema(schema)
-        if glob is not None:
-            r = r.option("pathGlobFilter", glob)
-        return r.parquet(read_dir)
-
+    stored = read_parquet(spark, table_path(sf_dir, "events")).schema["ts"].dataType
     if isinstance(stored, T.LongType):
-        raw = reader(EVENTS_NANOS_SCHEMA)
+        raw = _stream_table(spark, sf_dir, "events", EVENTS_NANOS_SCHEMA)
         return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return reader(_events_schema(T.TimestampType()))
+    return _stream_table(spark, sf_dir, "events", _events_schema(T.TimestampType()))
 
 
 def stream_trades(
@@ -125,14 +124,4 @@ def stream_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming view of the documents table (file source) — the
     ingest-time shape of a curation pipeline: documents arrive as files
     land, and scoring/filter stages run per micro-batch."""
-    import os
-
-    p = table_path(sf_dir, "documents")
-    if os.path.isdir(p):
-        # generated tiers ship the table as a directory of part files
-        return spark.readStream.schema(DOCUMENTS_SCHEMA).parquet(p)
-    return (
-        spark.readStream.schema(DOCUMENTS_SCHEMA)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
+    return _stream_table(spark, sf_dir, "documents", DOCUMENTS_SCHEMA)

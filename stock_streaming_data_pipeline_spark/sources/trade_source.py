@@ -22,7 +22,6 @@ the stream's offset log stores two integers per batch.
 
 from __future__ import annotations
 
-import hashlib
 from dataclasses import dataclass
 
 from pyspark.sql.datasource import (
@@ -40,15 +39,10 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from stock_streaming_data_pipeline_spark.operators.dedup import py_portable_hash
+
 SYMBOLS = ("BTCUSDT", "ETHUSDT", "SOLUSDT", "ADAUSDT")
 START_EPOCH_S = 1_704_067_200  # 2024-01-01T00:00:00Z
-
-
-def _h(salt: str, i: int) -> int:
-    """Top 60 bits of md5(salt || i) — the same portable hash contract as
-    operators/dedup.portable_hash, replayable as
-    ('0x' || substr(md5(salt || i::VARCHAR), 1, 15))::BIGINT in DuckDB."""
-    return int(hashlib.md5(f"{salt}{i}".encode()).hexdigest()[:15], 16)
 
 
 def gen_row(i: int) -> tuple:
@@ -56,8 +50,8 @@ def gen_row(i: int) -> tuple:
     import datetime as dt
 
     sym = SYMBOLS[i % len(SYMBOLS)]
-    price = (1000 + _h("p", i) % 100_000) / 100.0
-    qty = float(_h("q", i) % 100)
+    price = (1000 + py_portable_hash(i, "p") % 100_000) / 100.0
+    qty = float(py_portable_hash(i, "q") % 100)
     ts = dt.datetime.fromtimestamp(START_EPOCH_S + i, dt.timezone.utc).replace(
         tzinfo=None
     )

@@ -312,7 +312,7 @@ def kmv_state_fold(
     sketch carries the batch query's full DuckDB oracle, which no
     HLL-based streaming sketch can. Emits one row per key per batch with
     the refreshed sketch and estimate; update semantics (latest wins)."""
-    import hashlib
+    from stock_streaming_data_pipeline_spark.operators.dedup import py_portable_hash
 
     out_schema = T.StructType(
         [
@@ -330,11 +330,6 @@ def kmv_state_fold(
     )
     domain = float(1 << 60)
 
-    def _h(v) -> int:
-        return int(
-            hashlib.md5(f"{salt}{v}".encode()).hexdigest()[:15], 16
-        )
-
     def fold(
         group_key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
@@ -344,7 +339,7 @@ def kmv_state_fold(
         seen = set(sketch)
         for pdf in pdfs:
             for v in pdf[member]:
-                seen.add(_h(v))
+                seen.add(py_portable_hash(v, salt))
         sketch = sorted(seen)[:k]
         batches += 1
         est = (

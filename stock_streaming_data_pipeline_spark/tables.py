@@ -56,6 +56,60 @@ def duck_glob(sf_dir: str, name: str) -> str:
     return os.path.join(p, "*.parquet") if os.path.isdir(p) else p
 
 
+def duck_connection(sf_dir: str):
+    """A fresh DuckDB connection with every table of ``sf_dir`` registered
+    as a view of the same name: the one way the oracles read testdata.
+    DuckDB keeps its own memory default (80% of RAM), so a runaway oracle
+    fails with a DuckDB error instead of taking the host down."""
+    import duckdb
+
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{duck_glob(sf_dir, t)}')"
+        )
+    return con
+
+
+def sql_double(x: float) -> str:
+    """Exact DuckDB literal for a double. DuckDB types a plain decimal
+    literal as DECIMAL, and its DECIMAL -> DOUBLE cast can land one ulp off
+    the value ``repr`` wrote; a string cast parses the shortest repr back
+    to the same bits."""
+    return f"'{float(x)!r}'::DOUBLE"
+
+
+def values_sql(schema: str, rows) -> str:
+    """A typed literal relation: ``schema`` is DDL-style ("a BIGINT, b
+    DOUBLE, c VARCHAR", upper-case one-word types), ``rows`` are tuples in
+    that column order. DOUBLE cells go through :func:`sql_double`, VARCHAR
+    cells are quoted with their quotes doubled, every other type takes
+    ``int(cell)``; None is NULL. Zero rows give an empty relation with the
+    same names and types (an empty VALUES list does not parse)."""
+    cols = [c.split() for c in schema.split(",")]
+    names = ", ".join(n for n, _ in cols)
+
+    def cell(v, typ: str) -> str:
+        if v is None:
+            return "NULL"
+        if typ == "DOUBLE":
+            return sql_double(v)
+        if typ == "VARCHAR":
+            return "'" + str(v).replace("'", "''") + "'"
+        return str(int(v))
+
+    rendered = [
+        "(" + ", ".join(cell(v, t) for v, (_, t) in zip(r, cols)) + ")"
+        for r in rows
+    ]
+    if not rendered:
+        nulls = ", ".join(f"CAST(NULL AS {t}) AS {n}" for n, t in cols)
+        return f"SELECT {nulls} WHERE FALSE"
+    select = ", ".join(f"CAST({n} AS {t}) AS {n}" for n, t in cols)
+    body = ",\n".join(rendered)
+    return f"SELECT {select}\nFROM (VALUES\n{body}\n) AS t({names})"
+
+
 def _timestamp_read_confs(spark: SparkSession) -> None:
     """Pin timestamp semantics across testdata generations.
 

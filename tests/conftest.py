@@ -26,9 +26,8 @@ def spark():
 
 @pytest.fixture(scope="session")
 def duck():
-    import sys
+    from stock_streaming_data_pipeline_spark.tables import duck_connection
 
+    # tests that use this fixture import check_oracle.compare
     sys.path.insert(0, str(REPO / "tools"))
-    from check_oracle import duck_connection
-
     return duck_connection(SF_SMOKE)

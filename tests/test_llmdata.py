@@ -1024,17 +1024,11 @@ def test_values_oracles_match_cte_oracles(sf_dir):
     rows of the unrolled-CTE oracles they replace, at every testdata tier:
     same DuckDB engine, two independent derivations of the same defined
     arithmetic."""
-    import duckdb
-
     from stock_streaming_data_pipeline_spark.operators import graph, similarity
     from stock_streaming_data_pipeline_spark.plans.llmdata import _PR_EDGES_SQL
-    from stock_streaming_data_pipeline_spark.tables import duck_glob
+    from stock_streaming_data_pipeline_spark.tables import duck_connection
 
-    con = duckdb.connect()
-    for t in ("documents", "embeddings"):
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{duck_glob(sf_dir, t)}')"
-        )
+    con = duck_connection(sf_dir)
 
     old_pr = con.sql(
         graph.sql_pagerank(_PR_EDGES_SQL, iters=3, damping=0.85)
@@ -1062,8 +1056,6 @@ def test_ewma_values_oracle_matches_cte(sf_dir):
     """streaming_ewma_state's round-8 literal-VALUES oracle must equal the
     recursive-CTE form it replaced (the CTE is O(rows * key-depth) in
     DuckDB at the sf1 tier), at every testdata tier."""
-    import duckdb
-
     from stock_streaming_data_pipeline_spark.plans import catalog as cat
 
     cat._load_all()  # plan modules register in dependency order
@@ -1071,12 +1063,9 @@ def test_ewma_values_oracle_matches_cte(sf_dir):
         EWMA_CTE_SQL,
         sql_ewma_expected,
     )
-    from stock_streaming_data_pipeline_spark.tables import duck_glob
+    from stock_streaming_data_pipeline_spark.tables import duck_connection
 
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW events AS SELECT * FROM read_parquet('{duck_glob(sf_dir, 'events')}')"
-    )
+    con = duck_connection(sf_dir)
     old = sorted(con.sql(EWMA_CTE_SQL).fetchall())
     new = sorted(con.sql(sql_ewma_expected(sf_dir)).fetchall())
     assert len(old) > 0

@@ -1,4 +1,4 @@
-"""Source guard: each Spark-side parity rule of the catalog has one owner.
+"""Source guard: each parity rule of the catalog has one owner.
 
 The half-up and half-away snaps to scaled BIGINT and the exact
 DECIMAL(38,0) cast live in ``functions/scalars.py``; the ranked top-k
@@ -6,11 +6,20 @@ tail (``cosine`` desc, ``neighbor_id`` asc) lives in
 ``operators/similarity.py``. A Column-API copy anywhere else in the
 package would let one site drift from the DuckDB rule its oracle spells.
 SQL text (oracle strings, ``F.expr``) is the independent reference and
-is not checked."""
+is not checked for those rules.
+
+On the oracle side, ``tables.py`` owns the DuckDB reader
+(``duck_connection``) and the literal-relation renderer (``values_sql``):
+a ``duckdb.connect(`` or ``duckdb.sql(`` call, or a rendered
+``FROM (VALUES ...) AS t(...)`` relation, anywhere else in the package
+fails. Static literal tables that name no columns of their own, such as
+the CTE ``ct(u, x, c) AS (VALUES ...)`` or ``SELECT 'y', * FROM (VALUES
+...)`` inside one, are not checked."""
 
 from __future__ import annotations
 
 import ast
+import re
 
 from tests.conftest import REPO
 
@@ -19,6 +28,8 @@ OWNERS = {
     "snap": PACKAGE / "functions" / "scalars.py",
     "dec38": PACKAGE / "functions" / "scalars.py",
     "topk": PACKAGE / "operators" / "similarity.py",
+    "duckdb": PACKAGE / "tables.py",
+    "values": PACKAGE / "tables.py",
 }
 
 
@@ -97,16 +108,68 @@ def _is_topk_order(node: ast.AST) -> bool:
     )
 
 
-_RULES = {"snap": _is_snap, "dec38": _is_dec38, "topk": _is_topk_order}
+def _is_duckdb(node: ast.AST) -> bool:
+    """``duckdb.connect(...)`` or ``duckdb.sql(...)``."""
+    return (
+        isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr in ("connect", "sql")
+        and isinstance(node.func.value, ast.Name)
+        and node.func.value.id == "duckdb"
+    )
+
+
+# FROM (VALUES <rows>) AS t(...), where <rows> is a computed part ("{}")
+# or literal tuples.
+_VALUES_RELATION = re.compile(
+    r"\bFROM\s*\(\s*VALUES\s*(\{\}|\([^()]*\)(\s*,\s*\([^()]*\))*)\s*\)"
+    r"\s*AS\s+\w+\s*\(",
+    re.IGNORECASE,
+)
+
+
+def _sql_text(node: ast.AST) -> str | None:
+    """The text of a string expression with "{}" for each computed part:
+    a str constant, an f-string, or a ``+`` chain holding either."""
+    if isinstance(node, ast.Constant):
+        return node.value if isinstance(node.value, str) else None
+    if isinstance(node, ast.JoinedStr):
+        return "".join(
+            v.value if isinstance(v, ast.Constant) else "{}" for v in node.values
+        )
+    if isinstance(node, ast.BinOp) and isinstance(node.op, ast.Add):
+        left, right = _sql_text(node.left), _sql_text(node.right)
+        if left is None and right is None:
+            return None
+        return (left or "{}") + (right or "{}")
+    return None
+
+
+def _is_values_relation(node: ast.AST) -> bool:
+    """A string expression holding ``FROM (VALUES <rows>) AS t(``."""
+    text = _sql_text(node)
+    return text is not None and _VALUES_RELATION.search(text) is not None
+
+
+_RULES = {
+    "snap": _is_snap,
+    "dec38": _is_dec38,
+    "topk": _is_topk_order,
+    "duckdb": _is_duckdb,
+    "values": _is_values_relation,
+}
 
 
 def parity_rule_sites(source: str) -> list[tuple[str, int]]:
-    """(rule, line) for every Column-API spelling of a parity rule."""
+    """(rule, line) for every spelling of a parity rule; a string and the
+    parts it is built from count once."""
     return sorted(
-        (rule, n.lineno)
-        for n in ast.walk(ast.parse(source))
-        for rule, hit in _RULES.items()
-        if hit(n)
+        {
+            (rule, n.lineno)
+            for n in ast.walk(ast.parse(source))
+            for rule, hit in _RULES.items()
+            if hit(n)
+        }
     )
 
 
@@ -138,10 +201,30 @@ def test_guard_flags_planted_copies():
         "bins = F.floor(F.col('v') / 10)\n"
         "by_doc = df.orderBy(F.desc('cosine'), F.asc('doc'))\n"
         "t = DecimalType(38, 0)\n"
+        "con = duckdb.connect()\n"
+        "rows = duckdb.sql('SELECT 1').fetchall()\n"
+        "sql = f'SELECT a\\nFROM (VALUES\\n{rows}\\n) AS t(a)'\n"
+        "dct = f'WITH ct(u, x, c) AS (VALUES {_DCT_VALUES}),'\n"
+        "pats = f'WITH pats(pattern) AS (VALUES {_MP_VALUES})'\n"
+        "q = f\"qmat(ch, u, v, q) AS (SELECT 'y', * FROM (VALUES {qvals}))\"\n"
+        "rel = values_sql('a BIGINT', rows)\n"
+        "con = duck_connection(sf_dir)\n"
+        "q = con.sql('SELECT * FROM lineitem')\n"
     )
     assert parity_rule_sites(src) == [
         ("dec38", 2),
         ("dec38", 10),
+        ("duckdb", 11),
+        ("duckdb", 12),
         ("snap", 1),
         ("topk", 3),
+        ("values", 13),
     ]
+    # the parent's hand renderers: f-string, implicit and ``+`` concatenation
+    renderers = (
+        "a = f'FROM (VALUES\\n{values}\\n) AS t(doc_a, doc_b, jaccard)'\n"
+        "b = ('FROM (VALUES' f' {vals}) AS t(component, n_nodes)')\n"
+        "c = 'x FROM (VALUES ' + ', '.join(vals) + ') AS t(round, doc_id)'\n"
+        "d = f'FROM (VALUES ({n_rows}, {ols_b}))\\n AS t(n_rows, ols)'\n"
+    )
+    assert parity_rule_sites(renderers) == [("values", n) for n in (1, 2, 3, 4)]

@@ -360,8 +360,8 @@ def test_upsert_fanout_query_leaves_no_output_directory(
 
 
 def test_check_oracle_import_does_not_raise_settle_cap(monkeypatch):
-    """Importing tools/check_oracle (conftest and the schema-gate tests do,
-    for its compare/duck_connection helpers) must NOT export the raised
+    """Importing tools/check_oracle (the schema-gate and parity tests do,
+    for its compare helper) must NOT export the raised
     SPARK_GRAFT_SETTLE_MAX_ROWS into the process: the r8 import-time
     setdefault silently disabled the production 100k settle() guard for
     the rest of any session that imported the module (VERDICT r8 'What's

@@ -16,13 +16,12 @@ import os
 import sys
 import time
 
-import duckdb
 import numpy as np
 import pandas as pd
 
 sys.path.insert(0, ".")
 
-from stock_streaming_data_pipeline_spark.tables import TABLES, duck_glob  # noqa: E402
+from stock_streaming_data_pipeline_spark.tables import duck_connection  # noqa: E402
 
 # Queries whose ORACLE (never the Spark plan) is infeasible at the locally
 # generated 10x tier (.scaletier/sf1) — the documented out-of-scope list
@@ -48,20 +47,6 @@ ORACLE_OUT_OF_SCOPE: dict[str, str] = {
         "at sf1) and the query is differentially green at sf0.001-0.1"
     ),
 }
-
-
-def duck_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
-    con = duckdb.connect()
-    # Bounded memory: a runaway oracle (unrolled k-means at a generated
-    # 10x tier) should fail with a DuckDB OOM error on its own row, not
-    # SIGKILL the whole sweep. Oracles are test-scale constructs; the
-    # product plans' scale story is measured Spark-side (SCALING_r*).
-    con.execute("SET memory_limit='24GB'")
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{duck_glob(sf_dir, t)}')"
-        )
-    return con
 
 
 # Cell types the driver's repr-sensitive canonicalizer breaks on: it
@@ -207,7 +192,7 @@ def main() -> int:
     # big-tier sweeps must not trip the production settle() memory-sink
     # cap when a 1M-event replay legitimately settles a fact-grained
     # differential result. Set HERE (the CLI entry), never at import:
-    # tests/conftest and the schema-gate tests import this module for its
+    # the schema-gate and parity tests import this module for its
     # helpers, and an import-time setdefault leaked the raised cap into
     # the whole pytest session, silently disabling the production guard
     # (r8 commit 2a23ec9 leak class; pinned by

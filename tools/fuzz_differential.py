@@ -740,20 +740,15 @@ def main(argv: list[str]) -> int:
     args = ap.parse_args(argv)
     sf_dir = f"/root/testdata/sf{args.sf}"
 
-    import duckdb
-
     from stock_streaming_data_pipeline_spark.session import get_spark
-    from stock_streaming_data_pipeline_spark.tables import duck_glob, load_table
+    from stock_streaming_data_pipeline_spark.tables import duck_connection, load_table
 
     spark = get_spark(
         "fuzz-differential", extra_conf={"spark.sql.shuffle.partitions": "8"}
     )
-    con = duckdb.connect()
+    con = duck_connection(sf_dir)
     for t in TABLES:
         load_table(spark, sf_dir, t).createOrReplaceTempView(t)
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{duck_glob(sf_dir, t)}')"
-        )
 
     seeds = [args.seed] if args.seed is not None else range(args.start, args.start + args.seeds)
     runner = run_one_float if args.tier == "float" else run_one

@@ -18,8 +18,9 @@ Mechanics folded in from the round-7 operational notes:
 - name-filtered oracle resolution (oracle_sql(names=...)): eager
   literal-VALUES oracles (OPQ, xxh64, and the round-8 pagerank/IVF
   replacements) run real data-dependent computation at resolve time.
-- 24 GB DuckDB memory cap (duck_connection): a runaway oracle fails on
-  its own row instead of SIGKILLing the sweep.
+- DuckDB's own memory limit (80% of RAM; tables.duck_connection keeps
+  it): a runaway oracle fails on its own row with a DuckDB out-of-memory
+  error instead of SIGKILLing the sweep.
 - machine-readable skip reasons: check_oracle --skip-oos records the
   documented ORACLE_OUT_OF_SCOPE rows (Spark side still runs) and
   rows-only queries record err="no_oracle" — the artifact enumerates

@@ -22,14 +22,16 @@ pruning are pinned in tests/test_ann_index.py.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from stock_streaming_data_pipeline_spark.operators.similarity import (
-    _nearest_centroid,
-    as_double,
+    _ivf2_leaves,
+    _ivf_lists,
+    _keyed,
+    _nearest_lists,
+    _nearest_subcells,
     cosine,
-    ivf_train,
     ranked_topk,
 )
 from stock_streaming_data_pipeline_spark.tables import read_parquet
@@ -47,13 +49,10 @@ def build_ivf_index(
     """Train + assign + persist: ``{path}/lists`` holds the vectors
     partitioned by cluster_id; ``{path}/centroids`` the nlist centroid
     vectors. Both parquet — readable by any engine."""
-    cents = ivf_train(
-        corpus, id_col=id_col, vec_col=vec_col, nlist=nlist, iters=iters
+    cents, _, assigned = _ivf_lists(
+        corpus, id_col=id_col, vec_col=vec_col, key="vec_id", vec="v",
+        nlist=nlist, iters=iters,
     )
-    c = corpus.select(
-        F.col(id_col).alias("vec_id"), as_double(F.col(vec_col)).alias("v")
-    )
-    assigned = _nearest_centroid(c, cents, key_col="vec_id", vec_alias="v")
     (
         assigned.select("vec_id", "v", "cluster_id")
         .write.mode("overwrite")
@@ -80,19 +79,9 @@ def ivf_index_topk(
     semi-join on the probed cluster_ids, so unprobed list directories
     are pruned before any file I/O."""
     cents = read_parquet(spark, f"{path}/centroids")
-    q = queries.select(
-        F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qv")
-    )
-    q_scored = q.crossJoin(F.broadcast(cents)).withColumn(
-        "_sim", F.round(cosine(F.col("qv"), F.col("cvec")), 6)
-    )
-    w_probe = Window.partitionBy("query_id").orderBy(
-        F.desc("_sim"), F.asc("cluster_id")
-    )
-    q_probes = (
-        q_scored.withColumn("_rn", F.row_number().over(w_probe))
-        .filter(F.col("_rn") <= nprobe)
-        .select("query_id", "qv", "cluster_id")
+    q = _keyed(queries, id_col, vec_col, "query_id", "qv")
+    q_probes = _nearest_lists(
+        q, cents, nprobe, key="query_id", vec="qv", cid="cluster_id"
     )
     lists = read_parquet(spark, f"{path}/lists")
     # Partition pruning: the probed cluster_ids are a tiny driver-side
@@ -126,28 +115,15 @@ def build_ivf2_index(
     """Persist a HIERARCHICAL (two-level) IVF index: vectors partitioned
     by ``cluster_id/subcell`` (one directory per LEAF), the level-1
     centroids and the per-cell sub-centroids as tiny side tables. The
-    training is byte-identical to :func:`similarity.ivf2_topk` (cosine
-    Lloyd coarse cells, pq_train per-cell sub-quantizer), so a probe of
+    training is :func:`similarity.ivf2_topk`'s own (``_ivf2_leaves``:
+    cosine Lloyd coarse cells, pq_train per-cell sub-quantizer), so a probe of
     the persisted index answers exactly like the retrain-per-query
     operator — and leaf directories give probes two levels of partition
     pruning (corpus × (nprobe1·nprobe2)/(nlist1·nlist2) I/O)."""
-    from stock_streaming_data_pipeline_spark.operators.similarity import (
-        _argmin_code,
-        pq_train,
+    cents1, _, a1, cb2, codes = _ivf2_leaves(
+        corpus, id_col=id_col, vec_col=vec_col, key="vec_id", vec="v",
+        nlist1=nlist1, nlist2=nlist2, iters=iters,
     )
-
-    cents1 = ivf_train(
-        corpus, id_col=id_col, vec_col=vec_col, nlist=nlist1, iters=iters
-    )
-    c = corpus.select(
-        F.col(id_col).alias("vec_id"), as_double(F.col(vec_col)).alias("v")
-    )
-    a1 = _nearest_centroid(c, cents1, key_col="vec_id", vec_alias="v")
-    rows = a1.select(
-        "vec_id", F.col("cluster_id").alias("m"), F.col("v").alias("sub")
-    )
-    cb2 = pq_train(rows, key_col="vec_id", num_sub=nlist1, ksub=nlist2, iters=iters)
-    codes = _argmin_code(rows, cb2, key_col="vec_id")
     (
         a1.join(codes.select("vec_id", F.col("code").alias("subcell")), "vec_id")
         .select("vec_id", "v", "cluster_id", "subcell")
@@ -178,33 +154,15 @@ def ivf2_index_topk(
     sub-centroids on the tiny side tables, then scan ONLY the reached
     leaf directories (a boolean partition predicate over
     (cluster_id, subcell) prunes before any file I/O)."""
-    from stock_streaming_data_pipeline_spark.operators.similarity import l2sq
-
     cents = read_parquet(spark, f"{path}/centroids")
     subcents = read_parquet(spark, f"{path}/subcentroids")
-    q = queries.select(
-        F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qv")
+    q = _keyed(queries, id_col, vec_col, "query_id", "qv")
+    probes1 = _nearest_lists(
+        q, cents, nprobe1, key="query_id", vec="qv", cid="cluster_id"
     )
-    q1 = q.crossJoin(F.broadcast(cents)).withColumn(
-        "_sim", F.round(cosine(F.col("qv"), F.col("cvec")), 6)
-    )
-    w1 = Window.partitionBy("query_id").orderBy(F.desc("_sim"), F.asc("cluster_id"))
-    probes1 = (
-        q1.withColumn("_rn", F.row_number().over(w1))
-        .filter(F.col("_rn") <= nprobe1)
-        .select("query_id", "qv", "cluster_id")
-    )
-    q2 = probes1.join(F.broadcast(subcents), "cluster_id").withColumn(
-        "_d", F.round(l2sq(F.col("qv"), F.col("cbvec")), 6)
-    )
-    w2 = Window.partitionBy("query_id", "cluster_id").orderBy(
-        F.asc("_d"), F.asc("subcell")
-    )
-    probes2 = (
-        q2.withColumn("_rn", F.row_number().over(w2))
-        .filter(F.col("_rn") <= nprobe2)
-        .select("query_id", "qv", "cluster_id", "subcell")
-    )
+    probes2 = _nearest_subcells(
+        probes1, subcents, nprobe2, cell="cluster_id", code="subcell"
+    ).select("query_id", "qv", "cluster_id", "subcell")
     # Driver-side leaf set (≤ queries × nprobe1 × nprobe2, bounded by the
     # index's nlist1 × nlist2): a partition-column predicate prunes leaf
     # directories at planning time — metadata-sized by construction.

@@ -27,7 +27,12 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from stock_streaming_data_pipeline_spark.operators.checkpoint import materialize
-from stock_streaming_data_pipeline_spark.tables import duck_connection, fan_out, values_sql
+from stock_streaming_data_pipeline_spark.tables import (
+    duck_connection,
+    fan_out,
+    spark_round,
+    values_sql,
+)
 
 MERSENNE31 = 2_147_483_647  # 2^31 - 1, fingerprint modulus
 
@@ -691,8 +696,6 @@ def sql_minhash_lsh_pairs_xxh64_expected(
     Cost is bounded by the corpus the DRIVER checks at (sf0.01: 500
     docs, ~25k shingle rows — a second or two); production runs never
     call this."""
-    from decimal import ROUND_HALF_UP, Decimal
-
     from stock_streaming_data_pipeline_spark.functions.xxh64_ref import (
         spark_xxhash64_str,
     )
@@ -742,7 +745,6 @@ def sql_minhash_lsh_pairs_xxh64_expected(
                     cands.add((a, b))
 
     out: list[tuple[int, int, float]] = []
-    q6 = Decimal("0.000001")
     for a, b in sorted(cands):
         inter = len(hsets[a] & hsets[b])
         union = len(hsets[a]) + len(hsets[b]) - inter
@@ -751,9 +753,7 @@ def sql_minhash_lsh_pairs_xxh64_expected(
         # SQL oracle filter unrounded, rounding only the output column)
         if j < threshold:
             continue
-        # Spark F.round(double, 6): HALF_UP on the shortest decimal repr
-        j6 = float(Decimal(repr(j)).quantize(q6, rounding=ROUND_HALF_UP))
-        out.append((a, b, j6))
+        out.append((a, b, spark_round(j, 6)))
     return values_sql("doc_a BIGINT, doc_b BIGINT, jaccard DOUBLE", out)
 
 

@@ -30,6 +30,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from stock_streaming_data_pipeline_spark.tables import sql_double
+
 
 @dataclass(frozen=True)
 class LinearModel:
@@ -81,9 +83,9 @@ def sql_score(feature_cols: list[str], model: LinearModel | None = None) -> str:
     """DuckDB mirror of the scorer (same arithmetic, same fold order)."""
     model = model or default_model()
     terms = " + ".join(
-        f"{w!r} * {c}" for w, c in zip(model.weights, feature_cols)
+        f"{sql_double(w)} * {c}" for w, c in zip(model.weights, feature_cols)
     )
-    return f"({model.bias!r} + {terms})"
+    return f"({sql_double(model.bias)} + {terms})"
 
 
 def align_predictions(

@@ -40,6 +40,8 @@ from __future__ import annotations
 import math
 import struct
 
+from stock_streaming_data_pipeline_spark.tables import sql_double
+
 # Standard luminance quantization table (ITU T.81 Annex K.1) — public.
 QUANT_LUMA = [
     16, 11, 10, 16, 24, 40, 51, 61,
@@ -291,7 +293,7 @@ def sql_reference_stats(media_text_sql: str, *, table: str = "documents") -> str
     is exactly what the differential proves, because any entropy bug
     breaks decode(encode(px)) == reference_transform(px)."""
     cvals = ",\n    ".join(
-        f"({u}, {i}, {DCT_BASIS[u][i]!r})" for u in range(8) for i in range(8)
+        f"({u}, {i}, {sql_double(DCT_BASIS[u][i])})" for u in range(8) for i in range(8)
     )
     qvals = ",\n    ".join(
         f"({u}, {v}, {QUANT_LUMA[u * 8 + v]})" for u in range(8) for v in range(8)
@@ -566,7 +568,7 @@ def sql_reference_stats_color(media_text_sql: str, *, table: str = "documents") 
     :func:`multimodal.pixel_stats`. Entropy layer correctness
     is what the differential proves, exactly as in the grayscale oracle."""
     cvals = ",\n    ".join(
-        f"({u}, {i}, {DCT_BASIS[u][i]!r})" for u in range(8) for i in range(8)
+        f"({u}, {i}, {sql_double(DCT_BASIS[u][i])})" for u in range(8) for i in range(8)
     )
     qvals = ",\n    ".join(
         f"({u}, {v}, {QUANT_LUMA[u * 8 + v]})" for u in range(8) for v in range(8)
@@ -602,9 +604,9 @@ px AS (
 ),
 ycc AS (
   SELECT media_id, r, c,
-    {lat.format(x=f"({ky_r!r}) * rv + ({ky_g!r}) * gv + ({ky_b!r}) * bv")} AS y,
-    {lat.format(x=f"({kb_r!r}) * rv + ({kb_g!r}) * gv + ({kb_b!r}) * bv + 128.0")} AS cb,
-    {lat.format(x=f"({kr_r!r}) * rv + ({kr_g!r}) * gv + ({kr_b!r}) * bv + 128.0")} AS cr
+    {lat.format(x=f"({sql_double(ky_r)}) * rv + ({sql_double(ky_g)}) * gv + ({sql_double(ky_b)}) * bv")} AS y,
+    {lat.format(x=f"({sql_double(kb_r)}) * rv + ({sql_double(kb_g)}) * gv + ({sql_double(kb_b)}) * bv + 128.0")} AS cb,
+    {lat.format(x=f"({sql_double(kr_r)}) * rv + ({sql_double(kr_g)}) * gv + ({sql_double(kr_b)}) * bv + 128.0")} AS cr
   FROM px
 ),
 csub AS (
@@ -685,9 +687,9 @@ cj AS (
 ),
 rgb AS (
   SELECT y.media_id,
-    {lat.format(x=f"CAST(y.y2 AS DOUBLE) + ({ki_cr_r!r}) * (CAST(cj.cr2 AS DOUBLE) - 128.0)")} AS r2,
-    {lat.format(x=f"CAST(y.y2 AS DOUBLE) + ({ki_cb_g!r}) * (CAST(cj.cb2 AS DOUBLE) - 128.0) + ({ki_cr_g!r}) * (CAST(cj.cr2 AS DOUBLE) - 128.0)")} AS g2,
-    {lat.format(x=f"CAST(y.y2 AS DOUBLE) + ({ki_cb_b!r}) * (CAST(cj.cb2 AS DOUBLE) - 128.0)")} AS b2
+    {lat.format(x=f"CAST(y.y2 AS DOUBLE) + ({sql_double(ki_cr_r)}) * (CAST(cj.cr2 AS DOUBLE) - 128.0)")} AS r2,
+    {lat.format(x=f"CAST(y.y2 AS DOUBLE) + ({sql_double(ki_cb_g)}) * (CAST(cj.cb2 AS DOUBLE) - 128.0) + ({sql_double(ki_cr_g)}) * (CAST(cj.cr2 AS DOUBLE) - 128.0)")} AS g2,
+    {lat.format(x=f"CAST(y.y2 AS DOUBLE) + ({sql_double(ki_cb_b)}) * (CAST(cj.cb2 AS DOUBLE) - 128.0)")} AS b2
   FROM yrc y JOIN cj
     ON cj.media_id = y.media_id AND cj.sr = y.r // 2 AND cj.sc = y.c // 2
 )
@@ -710,7 +712,7 @@ def sql_reference_stats_color_444(
     conversion discipline as the 4:2:0 oracle, minus the subsample
     stage (4:4:4 has none)."""
     cvals = ",\n    ".join(
-        f"({u}, {i}, {DCT_BASIS[u][i]!r})" for u in range(8) for i in range(8)
+        f"({u}, {i}, {sql_double(DCT_BASIS[u][i])})" for u in range(8) for i in range(8)
     )
     qvals = ",\n    ".join(
         f"({u}, {v}, {QUANT_LUMA[u * 8 + v]})" for u in range(8) for v in range(8)
@@ -751,15 +753,15 @@ px AS (
 ),
 ycc AS (
   SELECT media_id, 'y' AS ch, r, c,
-         {lat.format(x=f"({ky_r!r}) * rv + ({ky_g!r}) * gv + ({ky_b!r}) * bv")} AS v
+         {lat.format(x=f"({sql_double(ky_r)}) * rv + ({sql_double(ky_g)}) * gv + ({sql_double(ky_b)}) * bv")} AS v
   FROM px
   UNION ALL
   SELECT media_id, 'cb', r, c,
-         {lat.format(x=f"({kb_r!r}) * rv + ({kb_g!r}) * gv + ({kb_b!r}) * bv + 128.0")}
+         {lat.format(x=f"({sql_double(kb_r)}) * rv + ({sql_double(kb_g)}) * gv + ({sql_double(kb_b)}) * bv + 128.0")}
   FROM px
   UNION ALL
   SELECT media_id, 'cr', r, c,
-         {lat.format(x=f"({kr_r!r}) * rv + ({kr_g!r}) * gv + ({kr_b!r}) * bv + 128.0")}
+         {lat.format(x=f"({sql_double(kr_r)}) * rv + ({sql_double(kr_g)}) * gv + ({sql_double(kr_b)}) * bv + 128.0")}
   FROM px
 ),
 lvl AS (
@@ -801,9 +803,9 @@ pj AS (
 ),
 rgb AS (
   SELECT media_id,
-    {lat.format(x=f"CAST(y2 AS DOUBLE) + ({ki_cr_r!r}) * (CAST(cr2 AS DOUBLE) - 128.0)")} AS r2,
-    {lat.format(x=f"CAST(y2 AS DOUBLE) + ({ki_cb_g!r}) * (CAST(cb2 AS DOUBLE) - 128.0) + ({ki_cr_g!r}) * (CAST(cr2 AS DOUBLE) - 128.0)")} AS g2,
-    {lat.format(x=f"CAST(y2 AS DOUBLE) + ({ki_cb_b!r}) * (CAST(cb2 AS DOUBLE) - 128.0)")} AS b2
+    {lat.format(x=f"CAST(y2 AS DOUBLE) + ({sql_double(ki_cr_r)}) * (CAST(cr2 AS DOUBLE) - 128.0)")} AS r2,
+    {lat.format(x=f"CAST(y2 AS DOUBLE) + ({sql_double(ki_cb_g)}) * (CAST(cb2 AS DOUBLE) - 128.0) + ({sql_double(ki_cr_g)}) * (CAST(cr2 AS DOUBLE) - 128.0)")} AS g2,
+    {lat.format(x=f"CAST(y2 AS DOUBLE) + ({sql_double(ki_cb_b)}) * (CAST(cb2 AS DOUBLE) - 128.0)")} AS b2
   FROM pj
 )
 SELECT media_id, 8 AS width, 8 AS height,
@@ -1184,7 +1186,7 @@ def sql_reference_stats_tiled(
     n = width * height
     bw = width // 8
     cvals = ",\n    ".join(
-        f"({u}, {i}, {DCT_BASIS[u][i]!r})" for u in range(8) for i in range(8)
+        f"({u}, {i}, {sql_double(DCT_BASIS[u][i])})" for u in range(8) for i in range(8)
     )
     qvals = ",\n    ".join(
         f"({u}, {v}, {QUANT_LUMA[u * 8 + v]})" for u in range(8) for v in range(8)

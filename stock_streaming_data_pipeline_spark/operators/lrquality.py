@@ -56,6 +56,7 @@ from stock_streaming_data_pipeline_spark.operators.dedup import (
     sql_portable_hash,
     tokens,
 )
+from stock_streaming_data_pipeline_spark.tables import sql_double
 
 DIM = 64  # hashed feature buckets; idx DIM is the bias term
 _SALT = "lrq_"
@@ -81,14 +82,15 @@ _EXP_6 = tuple(math.exp(d * 1e-6) for d in range(100))  # step 1e-6
 def _table_lookup(vals: tuple[float, ...], idx: str, *, spark: bool) -> str:
     """1-based constant-array lookup, per engine dialect. Spark double
     literals need the ``D`` suffix (bare decimals parse as DECIMAL and
-    would drag the arithmetic onto the truncating decimal path); DuckDB
-    takes a whole-list cast to DOUBLE[] (each shortest-repr decimal
-    literal casts to exactly the original double)."""
+    would drag the arithmetic onto the truncating decimal path). DuckDB
+    also types a bare decimal literal as DECIMAL, and its DECIMAL ->
+    DOUBLE cast can land one ulp off the original double, so each element
+    is an exact string-cast literal (:func:`tables.sql_double`)."""
     if spark:
         lits = ", ".join(f"{v!r}D" for v in vals)
         return f"element_at(array({lits}), CAST({idx} AS INT) + 1)"
-    lits = ", ".join(repr(v) for v in vals)
-    return f"list_extract(CAST([{lits}] AS DOUBLE[]), CAST({idx} AS INT) + 1)"
+    lits = ", ".join(sql_double(v) for v in vals)
+    return f"list_extract([{lits}], CAST({idx} AS INT) + 1)"
 
 
 def sigmoid_micro_sql(z: str, *, spark: bool) -> str:

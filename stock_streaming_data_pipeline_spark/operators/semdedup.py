@@ -16,16 +16,15 @@ whole pipeline bit-for-bit, clustering included).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from stock_streaming_data_pipeline_spark.operators.similarity import (
-    _nearest_centroid,
+    _ivf_lists,
     _sql_cos,
     _sql_lloyd_ctes,
-    as_double,
+    _sql_nearest_lists,
     cosine,
-    ivf_train,
 )
 
 
@@ -44,11 +43,9 @@ def semantic_pairs(
     the pair blow-up is confined to each inverted list. The join carries
     (id, vector) only; similarity is computed once per candidate pair.
     """
-    cents = ivf_train(df, id_col=id_col, vec_col=vec_col, nlist=k, iters=iters)
-    vecs = df.select(
-        F.col(id_col).alias("_vid"), as_double(F.col(vec_col)).alias("v")
+    _, _, assigned = _ivf_lists(
+        df, id_col=id_col, vec_col=vec_col, key="_vid", vec="v", nlist=k, iters=iters
     )
-    assigned = _nearest_centroid(vecs, cents, key_col="_vid", vec_alias="v")
     a = assigned.select(
         F.col("_vid").alias("vec_a"), F.col("v").alias("va"), "cluster_id"
     )
@@ -101,24 +98,13 @@ def sql_semantic_drop_list(
     """DuckDB replay: Lloyd CTEs (shared builder) → final assignment →
     within-cluster pair join → per-victim aggregation."""
     parts = _sql_lloyd_ctes(table, k, iters)
+    parts.append(_sql_nearest_lists("fin", table, f"c{iters}", 1))
     parts.append(
-        f"""fin AS (
-  SELECT vec_id, cid,
-         row_number() OVER (
-           PARTITION BY vec_id ORDER BY sim DESC, cid
-         ) AS rn
-  FROM (
-    SELECT e.vec_id, c.cid, {_sql_cos('e.embedding', 'c.cvec', 6)} AS sim
-    FROM {table} e CROSS JOIN c{iters} c
-  )
-)"""
-    )
-    parts.append(
-        """asg AS (
+        f"""asg AS (
   SELECT e.vec_id, f.cid, e.embedding
-  FROM (SELECT vec_id, cid FROM fin WHERE rn = 1) f
+  FROM fin f
   JOIN {table} e USING (vec_id)
-)""".replace("{table}", table)
+)"""
     )
     cos = _sql_cos("a.embedding", "b.embedding", 6)
     parts.append(

@@ -1,18 +1,36 @@
 """Similarity search over embedding columns (``array<float>``).
 
-Two tiers, per the standard ANN architecture:
-- **Brute-force cosine top-k** — the exact baseline: broadcast the (small)
-  query set against the full corpus, one scan, no shuffle of the corpus.
-  Dot products are left-fold ``F.aggregate`` in DOUBLE so the arithmetic
-  order is fixed → bit-reproducible (and mirrored by the DuckDB oracle's
-  ``list_reduce``).
-- **LSH-bucketed ANN (random-hyperplane signs)** — the scale path: hash
-  every vector to a sign-bit bucket; probe only the query's bucket.
-  Linear build, sub-linear probe; approximate by design (rows-only
-  check).
+Dot products are left-fold ``F.aggregate`` in DOUBLE, so the arithmetic
+order is fixed and bit-reproducible (the DuckDB oracles mirror it with
+``list_reduce``). Every ranking decision is made on round-6 values with
+id tie-breaks, so last-ulp noise in double aggregates cannot flip it in
+one engine only.
 
-At 100 TB the brute-force tier survives as the re-rank stage over LSH/IVF
-candidates, which is exactly how it is composed here.
+Exact tiers: :func:`cosine_topk` (broadcast queries against the corpus)
+and :func:`neardup_pairs`. The approximate tiers are one candidate-then-
+refine pipeline; each stage has one owner on the Spark side and one on
+the SQL side, and the two sides share no code:
+
+- train: :func:`ivf_train` (seeded cosine Lloyd) for the coarse lists,
+  :func:`pq_train` for PQ codebooks and the IVF2 sub-cells, and
+  :func:`opq_train` for the OPQ rotation; SQL ``_sql_lloyd_ctes``,
+  ``_sql_pq_chain``;
+- assign and probe: :func:`_nearest_lists` ranks centroids by round-6
+  cosine (``n = 1`` assigns a vector its list, ``n = nprobe`` probes a
+  query's lists); :func:`_ivf_lists` and :func:`_ivf2_leaves` train and
+  assign; :func:`_nearest_subcells` is the level-2 probe; SQL
+  ``_sql_nearest_lists``;
+- shortlist: :func:`_shortlist`, after ADC scoring in
+  :func:`_adc_shortlist`; SQL ``_sql_adc_rerank``, ``_sql_rerank``;
+- re-rank: :func:`_rerank`, exact cosine on the raw vectors;
+- rank: :func:`ranked_topk`, (cosine desc, neighbor_id asc) numbered
+  1..k; SQL :func:`sql_ranked_topk`.
+
+The tiers built from these stages are LSH (:func:`lsh_topk`, one
+sign-bit bucket probe), IVF-Flat (:func:`ivf_topk`), IVF-PQ
+(:func:`ivf_pq_topk`), two-level IVF (:func:`ivf2_topk`), OPQ
+(:func:`opq_topk`), SQ8 (``sq_quant.sq_topk``) and the persisted
+IVF / IVF2 indexes (``ann_index``).
 """
 
 from __future__ import annotations
@@ -24,6 +42,7 @@ from pyspark.sql import functions as F
 from stock_streaming_data_pipeline_spark.operators.checkpoint import materialize
 from stock_streaming_data_pipeline_spark.tables import (
     duck_connection,
+    spark_round,
     sql_double,
     values_sql,
 )
@@ -79,6 +98,82 @@ def ranked_topk(
     )
 
 
+def _keyed(df: DataFrame, id_col: str, vec_col: str, key: str, vec: str) -> DataFrame:
+    """``df`` as ``(key, vec)``: the id renamed, the vector cast to double."""
+    return df.select(F.col(id_col).alias(key), as_double(F.col(vec_col)).alias(vec))
+
+
+def _nearest_lists(
+    vecs: DataFrame,
+    cents: DataFrame,
+    n: int,
+    *,
+    key: str,
+    vec: str,
+    cid: str = "_cid",
+    out: str = "cluster_id",
+    keep: tuple[str, ...] = (),
+) -> DataFrame:
+    """The ``n`` centroids nearest each row of ``vecs``: list assignment
+    (``n = 1``) and query probing (``n = nprobe``). Centroids ``(cid,
+    cvec)`` are broadcast; the cosine is rounded to 6 decimals BEFORE the
+    ranking, so last-ulp noise in the double-aggregated centroid means
+    (summation order differs across engines and partition layouts) cannot
+    flip a decision; ties go to the lower centroid id. One window shuffle
+    on ``key``. Returns ``vecs``' columns, the centroid id as ``out`` and
+    the centroid columns named in ``keep``."""
+    scored = vecs.crossJoin(F.broadcast(cents)).withColumn(
+        "_sim", F.round(cosine(F.col(vec), F.col("cvec")), 6)
+    )
+    w = Window.partitionBy(key).orderBy(F.desc("_sim"), F.asc(cid))
+    rn = F.col("_rn")
+    return (
+        scored.withColumn("_rn", F.row_number().over(w))
+        .filter(rn == 1 if n == 1 else rn <= n)
+        .select(*vecs.columns, F.col(cid).alias(out), *keep)
+    )
+
+
+def _shortlist(scored: DataFrame, n: int, score: Column) -> DataFrame:
+    """The first ``n`` candidates per ``query_id`` by ``score`` (an
+    ordering Column), ties on ``neighbor_id`` asc: the approximate stage
+    the exact re-rank refines."""
+    w = Window.partitionBy("query_id").orderBy(score, F.asc("neighbor_id"))
+    return (
+        scored.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") <= n)
+        .select("query_id", "neighbor_id")
+    )
+
+
+def _adc_shortlist(
+    codes: DataFrame, lut: DataFrame, on: list[str], n: int
+) -> DataFrame:
+    """Asymmetric-distance scoring, then its :func:`_shortlist`: each
+    candidate's ``(neighbor_id, *on)`` code rows join the broadcast
+    per-query LUT of subspace distances ``pdist``; the round-6 sum is the
+    candidate's ADC distance, nearest first."""
+    adc = (
+        codes.join(F.broadcast(lut), on)
+        .filter(F.col("neighbor_id") != F.col("query_id"))
+        .groupBy("query_id", "neighbor_id")
+        .agg(F.round(F.sum("pdist"), 6).alias("adc_dist"))
+    )
+    return _shortlist(adc, n, F.asc("adc_dist"))
+
+
+def _rerank(cands: DataFrame, c: DataFrame, q: DataFrame, k: int) -> DataFrame:
+    """Exact re-rank of candidate ``(query_id, neighbor_id)`` pairs on the
+    raw vectors: ``c`` is the corpus as ``(neighbor_id, cv)``, ``q`` the
+    (broadcast) queries as ``(query_id, qv)``."""
+    rescored = (
+        cands.join(c, "neighbor_id")
+        .join(F.broadcast(q), "query_id")
+        .withColumn("cosine", F.round(cosine(F.col("qv"), F.col("cv")), 6))
+    )
+    return ranked_topk(rescored, k)
+
+
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -92,12 +187,8 @@ def cosine_topk(
     queries is broadcast (it is the small side by construction); ranking is
     deterministic: (rounded score desc, neighbor id asc).
     """
-    q = queries.select(
-        F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qv")
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), as_double(F.col(vec_col)).alias("cv")
-    )
+    q = _keyed(queries, id_col, vec_col, "query_id", "qv")
+    c = _keyed(corpus, id_col, vec_col, "neighbor_id", "cv")
     scored = (
         c.crossJoin(F.broadcast(q))
         .filter(F.col("neighbor_id") != F.col("query_id"))
@@ -115,8 +206,8 @@ def neardup_pairs(
 ) -> DataFrame:
     """All pairs with cosine >= threshold (exact, quadratic — compose with
     LSH buckets below for scale)."""
-    a = df.select(F.col(id_col).alias("id_a"), as_double(F.col(vec_col)).alias("va"))
-    b = df.select(F.col(id_col).alias("id_b"), as_double(F.col(vec_col)).alias("vb"))
+    a = _keyed(df, id_col, vec_col, "id_a", "va")
+    b = _keyed(df, id_col, vec_col, "id_b", "vb")
     return (
         a.join(b, F.col("id_a") < F.col("id_b"))
         .withColumn("cosine", F.round(cosine(F.col("va"), F.col("vb")), 6))
@@ -160,7 +251,7 @@ def sql_lsh_topk(
     path a hash-exact differential oracle."""
 
     def plane_lit(b: int) -> str:
-        return "[" + ", ".join(repr(w) for w in _hyperplane(dim, b)) + "]"
+        return "[" + ", ".join(sql_double(w) for w in _hyperplane(dim, b)) + "]"
 
     def bucket_expr(col: str) -> str:
         terms = [
@@ -174,27 +265,22 @@ def sql_lsh_topk(
         f"round(({SQL_DOT.format(a='c.embedding', b='q.qv')}) / "
         f"(({SQL_NORM.format(a='c.embedding')}) * ({SQL_NORM.format(a='q.qv')})), 6)"
     )
-    return f"""
-WITH c AS (
+    parts = [
+        f"""c AS (
   SELECT vec_id, embedding, {bucket_expr('embedding')} AS bucket
   FROM {table}
-),
-q AS (
+)""",
+        f"""q AS (
   SELECT vec_id AS query_id, embedding AS qv, bucket
   FROM c WHERE {query_pred}
-),
-scored AS (
+)""",
+        f"""scored AS (
   SELECT q.query_id, c.vec_id AS neighbor_id, {cos} AS cosine
   FROM c JOIN q USING (bucket)
   WHERE c.vec_id != q.query_id
-)
-SELECT query_id, neighbor_id, cosine,
-       CAST(row_number() OVER (
-         PARTITION BY query_id ORDER BY cosine DESC, neighbor_id
-       ) AS BIGINT) AS rank
-FROM scored
-QUALIFY rank <= {k}
-"""
+)""",
+    ]
+    return sql_ranked_topk(parts, k)
 
 
 def lsh_topk(
@@ -209,12 +295,12 @@ def lsh_topk(
 ) -> DataFrame:
     """Approximate top-k: exact re-rank restricted to the query's LSH
     bucket. Build is one linear pass; probe touches ~corpus/2^bits rows."""
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), as_double(F.col(vec_col)).alias("cv")
-    ).withColumn("bucket", lsh_bucket(F.col("cv"), dim=dim, bits=bits))
-    q = queries.select(
-        F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qv")
-    ).withColumn("bucket", lsh_bucket(F.col("qv"), dim=dim, bits=bits))
+    c = _keyed(corpus, id_col, vec_col, "neighbor_id", "cv").withColumn(
+        "bucket", lsh_bucket(F.col("cv"), dim=dim, bits=bits)
+    )
+    q = _keyed(queries, id_col, vec_col, "query_id", "qv").withColumn(
+        "bucket", lsh_bucket(F.col("qv"), dim=dim, bits=bits)
+    )
     scored = (
         c.join(F.broadcast(q), "bucket")
         .filter(F.col("neighbor_id") != F.col("query_id"))
@@ -222,32 +308,6 @@ def lsh_topk(
         .withColumn("cosine", F.round(cosine(F.col("qv"), F.col("cv")), 6))
     )
     return ranked_topk(scored, k)
-
-
-def _nearest_centroid(
-    vecs: DataFrame,
-    cents: DataFrame,
-    *,
-    key_col: str,
-    vec_alias: str,
-    out: str = "cluster_id",
-) -> DataFrame:
-    """Assign each vector to its nearest centroid by cosine (broadcast
-    centroids; deterministic tie-break on cluster id). One window shuffle
-    on the unique vector id. The similarity is rounded to 6 decimals
-    BEFORE the argmin so the decision is insensitive to last-ulp noise in
-    the centroid means (double aggregation order differs across engines
-    and across partition layouts); ties resolve by cluster id — the same
-    rule the DuckDB kmeans oracle replays."""
-    scored = vecs.crossJoin(F.broadcast(cents)).withColumn(
-        "_sim", F.round(cosine(F.col(vec_alias), F.col("cvec")), 6)
-    )
-    w = Window.partitionBy(key_col).orderBy(F.desc("_sim"), F.asc("_cid"))
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select(*vecs.columns, F.col("_cid").alias(out))
-    )
 
 
 def ivf_train(
@@ -271,9 +331,7 @@ def ivf_train(
     At 10^9 vectors, train on a sampled slice and keep iters small —
     the quantizer only needs to be roughly balanced, not converged.
     """
-    vecs = df.select(
-        F.col(id_col).alias("_vid"), as_double(F.col(vec_col)).alias("v")
-    )
+    vecs = _keyed(df, id_col, vec_col, "_vid", "v")
     # Seed selection via TakeOrderedAndProject (per-partition top-k +
     # driver merge of nlist rows) — NOT an unpartitioned window, which
     # would funnel the whole corpus through one task.
@@ -285,7 +343,7 @@ def ivf_train(
         eager=True,
     )
     for _ in range(iters):
-        assigned = _nearest_centroid(vecs, cents, key_col="_vid", vec_alias="v")
+        assigned = _nearest_lists(vecs, cents, 1, key="_vid", vec="v")
         new_means = (
             assigned.select("cluster_id", F.posexplode("v"))
             .groupBy("cluster_id", "pos")
@@ -313,6 +371,65 @@ def ivf_train(
     return cents
 
 
+def _ivf_lists(
+    corpus: DataFrame,
+    *,
+    id_col: str,
+    vec_col: str,
+    key: str,
+    vec: str,
+    nlist: int,
+    iters: int,
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """Train the coarse quantizer (:func:`ivf_train`) and assign every
+    corpus vector its list: ``(centroids, corpus as (key, vec), corpus as
+    (key, vec, cluster_id))``."""
+    cents = ivf_train(corpus, id_col=id_col, vec_col=vec_col, nlist=nlist, iters=iters)
+    c = _keyed(corpus, id_col, vec_col, key, vec)
+    return cents, c, _nearest_lists(c, cents, 1, key=key, vec=vec)
+
+
+def _ivf2_leaves(
+    corpus: DataFrame,
+    *,
+    id_col: str,
+    vec_col: str,
+    key: str,
+    vec: str,
+    nlist1: int,
+    nlist2: int,
+    iters: int,
+) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame, DataFrame]:
+    """The two-level index of :func:`ivf2_topk`: level-1 lists
+    (:func:`_ivf_lists`), then ``nlist2`` squared-L2 sub-cells per list,
+    trained by :func:`pq_train` with the list id as the grouping column and
+    the full vector as the "subvector". Returns ``(centroids, corpus as
+    (key, vec), corpus with cluster_id, sub-centroids (m, code, cbvec),
+    leaf codes (key, m, code))``."""
+    cents1, c, a1 = _ivf_lists(
+        corpus, id_col=id_col, vec_col=vec_col, key=key, vec=vec,
+        nlist=nlist1, iters=iters,
+    )
+    rows = a1.select(key, F.col("cluster_id").alias("m"), F.col(vec).alias("sub"))
+    cb2 = pq_train(rows, key_col=key, num_sub=nlist1, ksub=nlist2, iters=iters)
+    return cents1, c, a1, cb2, _argmin_code(rows, cb2, key_col=key)
+
+
+def _nearest_subcells(
+    probes: DataFrame, subcents: DataFrame, n: int, *, cell: str, code: str
+) -> DataFrame:
+    """Level-2 probe: inside each probed list ``cell``, the ``n``
+    sub-centroids ``(cell, code, cbvec)`` nearest the query ``qv`` by
+    round-6 squared L2, ties on the lower ``code``."""
+    scored = probes.join(F.broadcast(subcents), cell).withColumn(
+        "_d", F.round(l2sq(F.col("qv"), F.col("cbvec")), 6)
+    )
+    w = Window.partitionBy("query_id", cell).orderBy(F.asc("_d"), F.asc(code))
+    return scored.withColumn("_rn", F.row_number().over(w)).filter(
+        F.col("_rn") <= n
+    )
+
+
 SQL_L2SQ = (
     "list_reduce(list_prepend(0.0::DOUBLE, "
     "list_transform(range(1, len({a}) + 1), "
@@ -329,6 +446,92 @@ def _sql_cos(a: str, b: str, digits: int | None) -> str:
     return raw if digits is None else f"round({raw}, {digits})"
 
 
+def sql_ranked_topk(parts: list[str], k: int) -> str:
+    """``WITH <parts>`` and the :func:`ranked_topk` tail over their last
+    CTE ``scored (query_id, neighbor_id, cosine)``: the top ``k`` rows per
+    query by (cosine desc, neighbor_id asc), numbered as BIGINT ``rank``."""
+    body = ",\n".join(parts)
+    return f"""
+WITH {body}
+SELECT query_id, neighbor_id, cosine,
+       CAST(row_number() OVER (
+         PARTITION BY query_id ORDER BY cosine DESC, neighbor_id
+       ) AS BIGINT) AS rank
+FROM scored
+QUALIFY rank <= {k}
+"""
+
+
+def _sql_nearest_lists(
+    name: str,
+    table: str,
+    cents: str,
+    n: int,
+    *,
+    out: str = "vec_id, cid",
+    key: str = "vec_id",
+    where: str | None = None,
+    materialized: bool = False,
+) -> str:
+    """CTE ``name``: the ``n`` centroids of CTE ``cents (cid, cvec)``
+    nearest each vector of ``table`` (only the rows matching ``where``,
+    if given) by round-6 cosine desc, ties on the lower cid — the
+    :func:`_nearest_lists` rule in SQL. The vector id is named ``key``;
+    the CTE selects ``out`` over ``(key, cid, cvec)``."""
+    mat = " MATERIALIZED" if materialized else ""
+    cond = f"\n    WHERE {where}" if where else ""
+    return f"""{name} AS{mat} (
+  SELECT {out}
+  FROM (
+    SELECT e.vec_id AS {key}, c.cid, c.cvec,
+           row_number() OVER (
+             PARTITION BY e.vec_id
+             ORDER BY {_sql_cos('e.embedding', 'c.cvec', 6)} DESC, c.cid
+           ) AS rn
+    FROM {table} e CROSS JOIN {cents} c{cond}
+  ) WHERE rn <= {n}
+)"""
+
+
+def _sql_rerank(table: str, src: str, order: str, n: int) -> list[str]:
+    """CTEs ``short`` (the first ``n`` rows of ``src`` per query by
+    ``order``, ties on neighbor_id asc: the :func:`_shortlist` rule) and
+    ``scored`` (their exact round-6 cosine on the raw vectors)."""
+    cos = _sql_cos("n.embedding", "q.embedding", 6)
+    return [
+        f"""short AS (
+  SELECT query_id, neighbor_id
+  FROM (
+    SELECT query_id, neighbor_id,
+           row_number() OVER (
+             PARTITION BY query_id ORDER BY {order}, neighbor_id ASC
+           ) AS rn
+    FROM {src}
+  ) WHERE rn <= {n}
+)""",
+        f"""scored AS (
+  SELECT s.query_id, s.neighbor_id, {cos} AS cosine
+  FROM short s
+  JOIN {table} n ON n.vec_id = s.neighbor_id
+  JOIN {table} q ON q.vec_id = s.query_id
+)""",
+    ]
+
+
+def _sql_adc_rerank(table: str, on: list[str], rerank: int) -> list[str]:
+    """The :func:`_adc_shortlist` → :func:`_rerank` tail in SQL over CTEs
+    ``codes (neighbor_id, *on)`` and ``lut (query_id, *on, pdist)``."""
+    cond = " AND ".join(f"l.{c} = c.{c}" for c in on)
+    adc = f"""adc AS MATERIALIZED (
+  SELECT l.query_id, c.neighbor_id, round(sum(l.pdist), 6) AS adc_dist
+  FROM codes c
+  JOIN lut l ON {cond}
+  WHERE c.neighbor_id != l.query_id
+  GROUP BY 1, 2
+)"""
+    return [adc, *_sql_rerank(table, "adc", "adc_dist ASC", rerank)]
+
+
 def _sql_lloyd_ctes(table: str, k: int, iters: int) -> list[str]:
     """Chained CTEs for the seeded Lloyd loop (the :func:`ivf_train`
     semantics in SQL): seeds = k lowest ids, round-6 cosine argmin with
@@ -342,21 +545,11 @@ def _sql_lloyd_ctes(table: str, k: int, iters: int) -> list[str]:
 )"""
     ]
     for i in range(iters):
-        parts.append(
-            f"""a{i} AS (
-  SELECT vec_id, cid,
-         row_number() OVER (
-           PARTITION BY vec_id ORDER BY sim DESC, cid
-         ) AS rn
-  FROM (
-    SELECT e.vec_id, c.cid, {_sql_cos('e.embedding', 'c.cvec', 6)} AS sim
-    FROM {table} e CROSS JOIN c{i} c
-  )
-)""")
+        parts.append(_sql_nearest_lists(f"a{i}", table, f"c{i}", 1))
         parts.append(
             f"""m{i} AS (
   SELECT g.cid, u.i AS pos, avg((e.embedding)[u.i]::DOUBLE) AS mv
-  FROM (SELECT vec_id, cid FROM a{i} WHERE rn = 1) g
+  FROM a{i} g
   JOIN {table} e USING (vec_id),
        unnest(range(1, len(e.embedding) + 1)) AS u(i)
   GROUP BY g.cid, u.i
@@ -382,17 +575,7 @@ def sql_kmeans_profile(
     check."""
     parts = _sql_lloyd_ctes(table, k, iters)
     parts.append(
-        f"""fin AS (
-  SELECT vec_id, cid, cvec,
-         row_number() OVER (
-           PARTITION BY vec_id ORDER BY sim DESC, cid
-         ) AS rn
-  FROM (
-    SELECT e.vec_id, c.cid, c.cvec,
-           {_sql_cos('e.embedding', 'c.cvec', 6)} AS sim
-    FROM {table} e CROSS JOIN c{iters} c
-  )
-)"""
+        _sql_nearest_lists("fin", table, f"c{iters}", 1, out="vec_id, cid, cvec")
     )
     body = ",\n".join(parts)
     l2 = SQL_L2SQ.format(a="e.embedding", b="f.cvec")
@@ -402,7 +585,7 @@ WITH {body}
 SELECT f.cid AS cluster_id, count(*) AS size,
        round(sum({l2}), 4) AS inertia,
        round(avg({cos_raw}), 6) AS avg_cosine
-FROM (SELECT vec_id, cid, cvec FROM fin WHERE rn = 1) f
+FROM fin f
 JOIN {table} e USING (vec_id)
 GROUP BY f.cid
 ORDER BY f.cid
@@ -424,33 +607,14 @@ def sql_ivf_topk(
     the probed lists — the full IVF-Flat pipeline as one differential
     check (approximate vs brute force by design, deterministic in
     execution)."""
+    cents = f"c{iters}"
     parts = _sql_lloyd_ctes(table, k=nlist, iters=iters)
+    parts.append(_sql_nearest_lists("asg", table, cents, 1))
     parts.append(
-        f"""asg AS (
-  SELECT vec_id, cid
-  FROM (
-    SELECT e.vec_id, c.cid,
-           row_number() OVER (
-             PARTITION BY e.vec_id
-             ORDER BY {_sql_cos('e.embedding', 'c.cvec', 6)} DESC, c.cid
-           ) AS rn
-    FROM {table} e CROSS JOIN c{iters} c
-  ) WHERE rn = 1
-)"""
-    )
-    parts.append(
-        f"""probes AS (
-  SELECT query_id, cid
-  FROM (
-    SELECT e.vec_id AS query_id, c.cid,
-           row_number() OVER (
-             PARTITION BY e.vec_id
-             ORDER BY {_sql_cos('e.embedding', 'c.cvec', 6)} DESC, c.cid
-           ) AS rn
-    FROM {table} e CROSS JOIN c{iters} c
-    WHERE {query_pred}
-  ) WHERE rn <= {nprobe}
-)"""
+        _sql_nearest_lists(
+            "probes", table, cents, nprobe, out="query_id, cid", key="query_id",
+            where=query_pred,
+        )
     )
     cos = _sql_cos("n.embedding", "q.embedding", 6)
     parts.append(
@@ -463,25 +627,7 @@ def sql_ivf_topk(
   WHERE n.vec_id != q.vec_id
 )"""
     )
-    body = ",\n".join(parts)
-    return f"""
-WITH {body}
-SELECT query_id, neighbor_id, cosine,
-       CAST(row_number() OVER (
-         PARTITION BY query_id ORDER BY cosine DESC, neighbor_id
-       ) AS BIGINT) AS rank
-FROM scored
-QUALIFY rank <= {k}
-"""
-
-
-def _round6_spark(x: float) -> float:
-    """Spark F.round(double, 6): BigDecimal.valueOf semantics — HALF_UP
-    on the SHORTEST DECIMAL REPR of the double (repr(x) in Python), the
-    documented cross-engine recipe pinned by the rounding tests."""
-    from decimal import ROUND_HALF_UP, Decimal
-
-    return float(Decimal(repr(x)).quantize(Decimal("0.000001"), ROUND_HALF_UP))
+    return sql_ranked_topk(parts, k)
 
 
 def sql_ivf_topk_expected(
@@ -502,7 +648,7 @@ def sql_ivf_topk_expected(
     (exact), ordered LEFT-FOLD dot products (np.cumsum accumulates
     sequentially along the dim axis — the same add order as Spark's
     F.aggregate fold and DuckDB's list_reduce), IEEE sqrt/divide, Spark
-    round-6 (:func:`_round6_spark`) before every argmin/rank decision
+    round-6 (:func:`tables.spark_round`) before every argmin/rank decision
     with cid/neighbor-id tie-breaks, per-cluster means summed in vec_id
     order (order differences are absorbed by the round-6 decisions, the
     same robustness contract the SQL oracle relied on), empty-cluster
@@ -531,7 +677,7 @@ def sql_ivf_topk_expected(
         dots = np.cumsum(vecs * c[None, :], axis=1)[:, -1]
         cnorm = float(np.sqrt(np.cumsum(c * c)[-1]))
         sims = dots / (norms * cnorm)
-        return np.array([_round6_spark(float(s)) for s in sims])
+        return np.array([spark_round(float(s), 6) for s in sims])
 
     def rank_centroids(cents: list[np.ndarray]) -> np.ndarray:
         """(N, nlist) round-6 sims, one column per cid."""
@@ -571,7 +717,7 @@ def sql_ivf_topk_expected(
         for i in cand_ix:
             d = float(np.cumsum(qv * vecs[i])[-1])
             scored.append(
-                (_round6_spark(d / (qn * float(norms[i]))), int(ids[i]))
+                (spark_round(d / (qn * float(norms[i])), 6), int(ids[i]))
             )
         scored.sort(key=lambda t: (-t[0], t[1]))
         for rank, (c6, nid) in enumerate(scored[:k], start=1):
@@ -599,11 +745,9 @@ def kmeans_profile(
     pass over the corpus plus one posexplode mean — vectors never reach
     the driver, so the same plan runs at 10^9 vectors (train on a sample
     there; the profile pass is a single scan either way)."""
-    cents = ivf_train(df, id_col=id_col, vec_col=vec_col, nlist=k, iters=iters)
-    vecs = df.select(
-        F.col(id_col).alias("_vid"), as_double(F.col(vec_col)).alias("v")
+    cents, _, assigned = _ivf_lists(
+        df, id_col=id_col, vec_col=vec_col, key="_vid", vec="v", nlist=k, iters=iters
     )
-    assigned = _nearest_centroid(vecs, cents, key_col="_vid", vec_alias="v")
     j = assigned.join(
         F.broadcast(cents), assigned["cluster_id"] == cents["_cid"]
     )
@@ -638,27 +782,12 @@ def ivf_topk(
     brute force; recall is tunable with nprobe (= exact when
     nprobe = nlist). Approximate by design → rows-only driver check, with
     a planted-neighbor recall test in tests/test_llmdata.py."""
-    cents = ivf_train(
-        corpus, id_col=id_col, vec_col=vec_col, nlist=nlist, iters=iters
+    cents, _, c_assigned = _ivf_lists(
+        corpus, id_col=id_col, vec_col=vec_col, key="neighbor_id", vec="cv",
+        nlist=nlist, iters=iters,
     )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), as_double(F.col(vec_col)).alias("cv")
-    )
-    c_assigned = _nearest_centroid(c, cents, key_col="neighbor_id", vec_alias="cv")
-    q = queries.select(
-        F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qv")
-    )
-    # round-6 before the probe argsort (same ulp-robustness rule as
-    # _nearest_centroid; mirrored by the SQL oracles).
-    q_scored = q.crossJoin(F.broadcast(cents)).withColumn(
-        "_sim", F.round(cosine(F.col("qv"), F.col("cvec")), 6)
-    )
-    w_probe = Window.partitionBy("query_id").orderBy(F.desc("_sim"), F.asc("_cid"))
-    q_probes = (
-        q_scored.withColumn("_rn", F.row_number().over(w_probe))
-        .filter(F.col("_rn") <= nprobe)
-        .select("query_id", "qv", F.col("_cid").alias("cluster_id"))
-    )
+    q = _keyed(queries, id_col, vec_col, "query_id", "qv")
+    q_probes = _nearest_lists(q, cents, nprobe, key="query_id", vec="qv")
     scored = (
         c_assigned.join(F.broadcast(q_probes), "cluster_id")
         .filter(F.col("neighbor_id") != F.col("query_id"))
@@ -689,20 +818,13 @@ def sql_ivf_pq_topk(
     shortlist selection and the exact re-rank. Every ranking decision is
     made on round-6 values, so last-ulp noise in double-aggregated
     means/residuals cannot flip a decision in one engine only."""
-    dsub = dim // num_sub
-    cos6 = _sql_cos("e.embedding", "c.cvec", 6)
+    dsub = _subspace_dim(dim, num_sub)
+    cents = f"c{iters}"
     parts = _sql_lloyd_ctes(table, k=nlist, iters=iters)
     parts.append(
-        f"""asg AS MATERIALIZED (
-  SELECT vec_id, cid, cvec
-  FROM (
-    SELECT e.vec_id, c.cid, c.cvec,
-           row_number() OVER (
-             PARTITION BY e.vec_id ORDER BY {cos6} DESC, c.cid
-           ) AS rn
-    FROM {table} e CROSS JOIN c{iters} c
-  ) WHERE rn = 1
-)"""
+        _sql_nearest_lists(
+            "asg", table, cents, 1, out="vec_id, cid, cvec", materialized=True
+        )
     )
     parts.append(
         f"""res AS MATERIALIZED (
@@ -712,54 +834,10 @@ def sql_ivf_pq_topk(
   FROM asg a JOIN {table} e USING (vec_id)
 )"""
     )
-    parts.append(
-        f"""sub AS MATERIALIZED (
-  SELECT vec_id, CAST(u.m AS INT) AS m,
-         list_transform(range(u.m * {dsub} + 1, u.m * {dsub} + {dsub} + 1),
-                        i -> rv[i]) AS sub
-  FROM res, unnest(range(0, {num_sub})) AS u(m)
-)"""
+    parts += _sql_pq_chain(
+        num_sub=num_sub, dsub=dsub, ksub=ksub, pq_iters=iters,
+        sub_sql=_sql_subspaces("res", "rv", dsub, num_sub),
     )
-    parts.append(
-        f"""cb0 AS MATERIALIZED (
-  SELECT m, CAST(rn - 1 AS INT) AS code, sub AS cbvec
-  FROM (
-    SELECT m, sub,
-           row_number() OVER (PARTITION BY m ORDER BY vec_id) AS rn
-    FROM sub
-  ) WHERE rn <= {ksub}
-)"""
-    )
-    l2_sub_cb = SQL_L2SQ.format(a="s.sub", b="cb.cbvec")
-    for r in range(iters + 1):  # iters training rounds + final encode
-        parts.append(
-            f"""as{r} AS MATERIALIZED (
-  SELECT vec_id, m,
-         (min(struct_pack(d := d6, code := code))).code AS code
-  FROM (
-    SELECT s.vec_id, s.m, cb.code,
-           round({l2_sub_cb}, 6) AS d6
-    FROM sub s JOIN cb{r} cb USING (m)
-  ) GROUP BY vec_id, m
-)"""
-        )
-        if r == iters:
-            break
-        parts.append(
-            f"""cb{r + 1} AS MATERIALIZED (
-  SELECT cb.m, cb.code, coalesce(n.new_cbvec, cb.cbvec) AS cbvec
-  FROM cb{r} cb LEFT JOIN (
-    SELECT m, code, list(cv ORDER BY pos) AS new_cbvec
-    FROM (
-      SELECT a.m, a.code, u.i AS pos, avg((s.sub)[u.i]) AS cv
-      FROM as{r} a
-      JOIN sub s ON s.vec_id = a.vec_id AND s.m = a.m,
-           unnest(range(1, {dsub} + 1)) AS u(i)
-      GROUP BY a.m, a.code, u.i
-    ) GROUP BY m, code
-  ) n ON n.m = cb.m AND n.code = cb.code
-)"""
-        )
     parts.append(
         f"""codes AS MATERIALIZED (
   SELECT a.vec_id AS neighbor_id, r.cid AS cluster_id, a.m, a.code
@@ -767,17 +845,10 @@ def sql_ivf_pq_topk(
 )"""
     )
     parts.append(
-        f"""probes AS MATERIALIZED (
-  SELECT query_id, cid, cvec
-  FROM (
-    SELECT e.vec_id AS query_id, c.cid, c.cvec,
-           row_number() OVER (
-             PARTITION BY e.vec_id ORDER BY {cos6} DESC, c.cid
-           ) AS rn
-    FROM {table} e CROSS JOIN c{iters} c
-    WHERE {query_pred}
-  ) WHERE rn <= {nprobe}
-)"""
+        _sql_nearest_lists(
+            "probes", table, cents, nprobe, out="query_id, cid, cvec",
+            key="query_id", where=query_pred, materialized=True,
+        )
     )
     parts.append(
         f"""qsub AS MATERIALIZED (
@@ -796,46 +867,8 @@ def sql_ivf_pq_topk(
   FROM qsub q JOIN cb{iters} cb USING (m)
 )"""
     )
-    parts.append(
-        f"""adc AS MATERIALIZED (
-  SELECT l.query_id, c.neighbor_id, round(sum(l.pdist), 6) AS adc_dist
-  FROM codes c
-  JOIN lut l ON l.cluster_id = c.cluster_id AND l.m = c.m AND l.code = c.code
-  WHERE c.neighbor_id != l.query_id
-  GROUP BY 1, 2
-)"""
-    )
-    parts.append(
-        f"""short AS (
-  SELECT query_id, neighbor_id
-  FROM (
-    SELECT query_id, neighbor_id,
-           row_number() OVER (
-             PARTITION BY query_id ORDER BY adc_dist ASC, neighbor_id ASC
-           ) AS rn
-    FROM adc
-  ) WHERE rn <= {rerank}
-)"""
-    )
-    cos_final = _sql_cos("n.embedding", "q.embedding", 6)
-    parts.append(
-        f"""scored AS (
-  SELECT s.query_id, s.neighbor_id, {cos_final} AS cosine
-  FROM short s
-  JOIN {table} n ON n.vec_id = s.neighbor_id
-  JOIN {table} q ON q.vec_id = s.query_id
-)"""
-    )
-    body = ",\n".join(parts)
-    return f"""
-WITH {body}
-SELECT query_id, neighbor_id, cosine,
-       CAST(row_number() OVER (
-         PARTITION BY query_id ORDER BY cosine DESC, neighbor_id
-       ) AS BIGINT) AS rank
-FROM scored
-QUALIFY rank <= {k}
-"""
+    parts += _sql_adc_rerank(table, ["cluster_id", "m", "code"], rerank)
+    return sql_ranked_topk(parts, k)
 
 
 def l2sq(a: Column, b: Column) -> Column:
@@ -884,7 +917,7 @@ def _argmin_code(
     ``sub`` is ever compared. Callers that need ``sub`` next to the
     assignment (Lloyd mean updates) then skip a corpus-scale join back
     to ``rows`` (optimization round 11; guide §2.4)."""
-    # round-6 before the argmin (the _nearest_centroid ulp-robustness
+    # round-6 before the argmin (the _nearest_lists ulp-robustness
     # rule: codebook means are double aggregates whose summation order
     # differs across engines/partitionings; ties resolve on code asc —
     # mirrored by the SQL oracle).
@@ -1028,11 +1061,10 @@ def ivf_pq_topk(
     dim = int(dim_row["d"])
     dsub = _subspace_dim(dim, num_sub)
 
-    cents = ivf_train(corpus, id_col=id_col, vec_col=vec_col, nlist=nlist, iters=iters)
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), as_double(F.col(vec_col)).alias("cv")
+    cents, c, c_assigned = _ivf_lists(
+        corpus, id_col=id_col, vec_col=vec_col, key="neighbor_id", vec="cv",
+        nlist=nlist, iters=iters,
     )
-    c_assigned = _nearest_centroid(c, cents, key_col="neighbor_id", vec_alias="cv")
     # Residual against the assigned coarse centroid, exploded to subspaces;
     # materialized because it feeds codebook training AND encoding.
     c_res = materialize(
@@ -1062,24 +1094,14 @@ def ivf_pq_topk(
     )
 
     # Query side: probe lists, then build the per-(query, list) ADC LUT.
-    q = queries.select(
-        F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qv")
-    )
-    # round-6 before the probe argsort (same ulp-robustness rule as
-    # _nearest_centroid; mirrored by the SQL oracles).
-    q_scored = q.crossJoin(F.broadcast(cents)).withColumn(
-        "_sim", F.round(cosine(F.col("qv"), F.col("cvec")), 6)
-    )
-    w_probe = Window.partitionBy("query_id").orderBy(F.desc("_sim"), F.asc("_cid"))
-    q_probes = (
-        q_scored.withColumn("_rn", F.row_number().over(w_probe))
-        .filter(F.col("_rn") <= nprobe)
-        .select(
-            "query_id",
-            "qv",
-            F.col("_cid").alias("cluster_id"),
-            F.zip_with("qv", "cvec", lambda x, y: x - y).alias("qr"),
-        )
+    q = _keyed(queries, id_col, vec_col, "query_id", "qv")
+    q_probes = _nearest_lists(
+        q, cents, nprobe, key="query_id", vec="qv", keep=("cvec",)
+    ).select(
+        "query_id",
+        "qv",
+        "cluster_id",
+        F.zip_with("qv", "cvec", lambda x, y: x - y).alias("qr"),
     )
     q_sub = _sub_rows(
         q_probes.select(
@@ -1100,26 +1122,9 @@ def ivf_pq_topk(
             F.round(l2sq(F.col("sub"), F.col("cbvec")), 6).alias("pdist"),
         )
     )
-    # ADC: sum the LUT distances over each candidate's codes.
-    adc = (
-        codes.join(F.broadcast(lut), ["cluster_id", "m", "code"])
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.round(F.sum("pdist"), 6).alias("adc_dist"))
+    return _rerank(
+        _adc_shortlist(codes, lut, ["cluster_id", "m", "code"], rerank), c, q, k
     )
-    w_adc = Window.partitionBy("query_id").orderBy(F.asc("adc_dist"), F.asc("neighbor_id"))
-    shortlist = (
-        adc.withColumn("_rn", F.row_number().over(w_adc))
-        .filter(F.col("_rn") <= rerank)
-        .select("query_id", "neighbor_id")
-    )
-    # Exact re-rank on the shortlist only.
-    rescored = (
-        shortlist.join(c, "neighbor_id")
-        .join(F.broadcast(q), "query_id")
-        .withColumn("cosine", F.round(cosine(F.col("qv"), F.col("cv")), 6))
-    )
-    return ranked_topk(rescored, k)
 
 
 def ivf2_topk(
@@ -1150,53 +1155,21 @@ def ivf2_topk(
     as the "subvector" — same seeded Lloyd, same round-6 argmin and
     tie-breaks, so the DuckDB oracle replays it with the shared CTE
     chain (:func:`_sql_pq_chain` with ``sub_sql``)."""
-    cents1 = ivf_train(
-        corpus, id_col=id_col, vec_col=vec_col, nlist=nlist1, iters=iters
+    cents1, c, _, cb2, codes = _ivf2_leaves(
+        corpus, id_col=id_col, vec_col=vec_col, key="neighbor_id", vec="cv",
+        nlist1=nlist1, nlist2=nlist2, iters=iters,
     )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), as_double(F.col(vec_col)).alias("cv")
-    )
-    a1 = _nearest_centroid(c, cents1, key_col="neighbor_id", vec_alias="cv")
-    rows = a1.select(
-        "neighbor_id", F.col("cluster_id").alias("m"), F.col("cv").alias("sub")
-    )
-    cb2 = pq_train(
-        rows, key_col="neighbor_id", num_sub=nlist1, ksub=nlist2, iters=iters
-    )
-    codes = _argmin_code(rows, cb2, key_col="neighbor_id")
-
-    q = queries.select(
-        F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qv")
-    )
-    q1 = q.crossJoin(F.broadcast(cents1)).withColumn(
-        "_sim", F.round(cosine(F.col("qv"), F.col("cvec")), 6)
-    )
-    w1 = Window.partitionBy("query_id").orderBy(F.desc("_sim"), F.asc("_cid"))
-    probes1 = (
-        q1.withColumn("_rn", F.row_number().over(w1))
-        .filter(F.col("_rn") <= nprobe1)
-        .select("query_id", "qv", F.col("_cid").alias("m"))
-    )
-    q2 = probes1.join(F.broadcast(cb2), "m").withColumn(
-        "_d", F.round(l2sq(F.col("qv"), F.col("cbvec")), 6)
-    )
-    w2 = Window.partitionBy("query_id", "m").orderBy(F.asc("_d"), F.asc("code"))
-    probes2 = (
-        q2.withColumn("_rn", F.row_number().over(w2))
-        .filter(F.col("_rn") <= nprobe2)
-        .select("query_id", "m", "code")
+    q = _keyed(queries, id_col, vec_col, "query_id", "qv")
+    probes1 = _nearest_lists(q, cents1, nprobe1, key="query_id", vec="qv", out="m")
+    probes2 = _nearest_subcells(probes1, cb2, nprobe2, cell="m", code="code").select(
+        "query_id", "m", "code"
     )
     cands = (
         codes.join(F.broadcast(probes2), ["m", "code"])
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .select("query_id", "neighbor_id")
     )
-    rescored = (
-        cands.join(c, "neighbor_id")
-        .join(F.broadcast(q), "query_id")
-        .withColumn("cosine", F.round(cosine(F.col("qv"), F.col("cv")), 6))
-    )
-    return ranked_topk(rescored, k)
+    return _rerank(cands, c, q, k)
 
 
 def sql_ivf2_topk(
@@ -1215,20 +1188,9 @@ def sql_ivf2_topk(
     CTE builder), level-2 per-cell Lloyd via the shared pq_train chain
     (grouping = cell id, subvector = full vector), tree-descent probes,
     exact re-rank."""
-    cos6 = _sql_cos("e.embedding", "c.cvec", 6)
+    cents = f"c{iters}"
     parts = _sql_lloyd_ctes(table, k=nlist1, iters=iters)
-    parts.append(
-        f"""asg AS MATERIALIZED (
-  SELECT vec_id, cid
-  FROM (
-    SELECT e.vec_id, c.cid,
-           row_number() OVER (
-             PARTITION BY e.vec_id ORDER BY {cos6} DESC, c.cid
-           ) AS rn
-    FROM {table} e CROSS JOIN c{iters} c
-  ) WHERE rn = 1
-)"""
-    )
+    parts.append(_sql_nearest_lists("asg", table, cents, 1, materialized=True))
     parts.append(
         f"""cvx AS MATERIALIZED (
   SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v
@@ -1242,17 +1204,10 @@ def sql_ivf2_topk(
         num_sub=nlist1, dsub=dim, ksub=nlist2, pq_iters=iters, sub_sql=sub_sql
     )
     parts.append(
-        f"""probes1 AS MATERIALIZED (
-  SELECT query_id, cid AS m
-  FROM (
-    SELECT e.vec_id AS query_id, c.cid,
-           row_number() OVER (
-             PARTITION BY e.vec_id ORDER BY {cos6} DESC, c.cid
-           ) AS rn
-    FROM {table} e CROSS JOIN c{iters} c
-    WHERE {query_pred}
-  ) WHERE rn <= {nprobe1}
-)"""
+        _sql_nearest_lists(
+            "probes1", table, cents, nprobe1, out="query_id, cid AS m",
+            key="query_id", where=query_pred, materialized=True,
+        )
     )
     l2_q_cb = SQL_L2SQ.format(a="qv.v", b="cb.cbvec")
     parts.append(
@@ -1281,16 +1236,7 @@ def sql_ivf2_topk(
   WHERE a.vec_id != p.query_id
 )"""
     )
-    body = ",\n".join(parts)
-    return f"""
-WITH {body}
-SELECT query_id, neighbor_id, cosine,
-       CAST(row_number() OVER (
-         PARTITION BY query_id ORDER BY cosine DESC, neighbor_id
-       ) AS BIGINT) AS rank
-FROM scored
-QUALIFY rank <= {k}
-"""
+    return sql_ranked_topk(parts, k)
 
 
 def _rotate_vecs(df: DataFrame, R, *, id_col: str, vec_col: str, out: str = "v") -> DataFrame:
@@ -1389,10 +1335,7 @@ def opq_train(
 
     d = int(df.select(F.size(F.col(vec_col)).alias("d")).first()["d"])
     dsub = _subspace_dim(d, num_sub)
-    x = materialize(
-        df.select(F.col(id_col).alias("_k"), as_double(F.col(vec_col)).alias("x")),
-        eager=True,
-    )
+    x = materialize(_keyed(df, id_col, vec_col, "_k", "x"), eager=True)
 
     R = np.eye(d)
     for _ in range(iters):
@@ -1441,8 +1384,7 @@ def pq_reconstruction_error(
     """Mean squared quantization error ``avg ||R·x − decode(encode(R·x))||²``
     — the objective OPQ minimizes; used by tests to prove the rotation
     beats identity."""
-    d = int(df.select(F.size(F.col(vec_col)).alias("d")).first()["d"])
-    dsub = d // num_sub
+    dsub = _subspace_dim(R.shape[0], num_sub)
     y = _rotate_vecs(df, R, id_col=id_col, vec_col=vec_col, out="v").select(
         F.col(id_col).alias("_k"), "v"
     )
@@ -1478,8 +1420,7 @@ def opq_topk(
         corpus, id_col=id_col, vec_col=vec_col, num_sub=num_sub, ksub=ksub,
         iters=iters,
     )
-    d = int(corpus.select(F.size(F.col(vec_col)).alias("d")).first()["d"])
-    dsub = d // num_sub
+    dsub = _subspace_dim(R.shape[0], num_sub)
 
     c_rot = _rotate_vecs(corpus, R, id_col=id_col, vec_col=vec_col, out="v").select(
         F.col(id_col).alias("neighbor_id"), "v"
@@ -1497,32 +1438,12 @@ def opq_topk(
         "query_id", "m", "code",
         F.round(l2sq(F.col("sub"), F.col("cbvec")), 9).alias("pdist"),
     )
-    adc = (
-        codes.join(F.broadcast(lut), ["m", "code"])
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.round(F.sum("pdist"), 6).alias("adc_dist"))
+    return _rerank(
+        _adc_shortlist(codes, lut, ["m", "code"], rerank),
+        _keyed(corpus, id_col, vec_col, "neighbor_id", "cv"),
+        _keyed(queries, id_col, vec_col, "query_id", "qv"),
+        k,
     )
-    w_adc = Window.partitionBy("query_id").orderBy(
-        F.asc("adc_dist"), F.asc("neighbor_id")
-    )
-    shortlist = (
-        adc.withColumn("_rn", F.row_number().over(w_adc))
-        .filter(F.col("_rn") <= rerank)
-        .select("query_id", "neighbor_id")
-    )
-    c_raw = corpus.select(
-        F.col(id_col).alias("neighbor_id"), as_double(F.col(vec_col)).alias("cv")
-    )
-    q_raw = queries.select(
-        F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qv")
-    )
-    rescored = (
-        shortlist.join(c_raw, "neighbor_id")
-        .join(F.broadcast(q_raw), "query_id")
-        .withColumn("cosine", F.round(cosine(F.col("qv"), F.col("cv")), 6))
-    )
-    return ranked_topk(rescored, k)
 
 
 def _sql_rot_cte(R, table: str, *, name: str = "rot") -> str:
@@ -1543,32 +1464,30 @@ def _sql_rot_cte(R, table: str, *, name: str = "rot") -> str:
 )"""
 
 
-def _sql_pq_chain(
-    *,
-    num_sub: int,
-    dsub: int,
-    ksub: int,
-    pq_iters: int,
-    sub_sql: str | None = None,
-) -> list[str]:
-    """CTE chain replaying :func:`pq_train` + the final encode: grouped
-    lowest-id seeds, ``pq_iters`` Lloyd rounds (round-6 squared-L2
-    argmin, code tie-break via struct min, empty-code retention), final
-    assignment in ``as{pq_iters}``, final codebook in ``cb{pq_iters}``.
-    Same discipline as the IVF-PQ oracle's loop.
-
-    By default the training rows ``sub (vec_id, m, sub)`` are the
-    ``num_sub`` subspace slices of the rotated vectors in CTE ``rot``
-    (the OPQ use). Pass ``sub_sql`` to train over ANY grouped row set
-    with that shape — e.g. the hierarchical-IVF use, where ``m`` is the
-    level-1 cluster id and ``sub`` the full vector (per-cluster k-means
-    IS pq_train with a different grouping)."""
-    if sub_sql is None:
-        sub_sql = f"""
+def _sql_subspaces(src: str, col: str, dsub: int, num_sub: int) -> str:
+    """Rows ``(vec_id, m, sub)``: the ``num_sub`` length-``dsub`` slices
+    of list column ``col`` of ``src`` (the :func:`_sub_rows` explode)."""
+    return f"""
   SELECT vec_id, CAST(u.m AS INT) AS m,
          list_transform(range(u.m * {dsub} + 1, u.m * {dsub} + {dsub} + 1),
-                        i -> v[i]) AS sub
-  FROM rot, unnest(range(0, {num_sub})) AS u(m)"""
+                        i -> {col}[i]) AS sub
+  FROM {src}, unnest(range(0, {num_sub})) AS u(m)"""
+
+
+def _sql_pq_chain(
+    *, num_sub: int, dsub: int, ksub: int, pq_iters: int, sub_sql: str
+) -> list[str]:
+    """CTE chain replaying :func:`pq_train` + the final encode over the
+    training rows ``sub (vec_id, m, sub)`` that ``sub_sql`` selects:
+    grouped lowest-id seeds, ``pq_iters`` Lloyd rounds (round-6
+    squared-L2 argmin, code tie-break via struct min, empty-code
+    retention), final assignment in ``as{pq_iters}``, final codebook in
+    ``cb{pq_iters}``.
+
+    The rows are subspace slices (:func:`_sql_subspaces`) for IVF-PQ and
+    OPQ, and for the hierarchical IVF the full vectors grouped by their
+    level-1 cluster id (per-cluster k-means IS pq_train with a different
+    grouping)."""
     parts = [
         f"""sub AS MATERIALIZED ({sub_sql}
 )""",
@@ -1662,9 +1581,14 @@ def sql_opq_topk(
     dsub = _subspace_dim(dim, num_sub)
     con = duck_connection(sf_dir)
 
+    def pq_ctes(R) -> list[str]:
+        return [_sql_rot_cte(R, table)] + _sql_pq_chain(
+            num_sub=num_sub, dsub=dsub, ksub=ksub, pq_iters=pq_iters,
+            sub_sql=_sql_subspaces("rot", "v", dsub, num_sub),
+        )
+
     def round_M(R) -> "np.ndarray":
-        parts = [_sql_rot_cte(R, table)]
-        parts += _sql_pq_chain(num_sub=num_sub, dsub=dsub, ksub=ksub, pq_iters=pq_iters)
+        parts = pq_ctes(R)
         parts.append(
             f"""vhat AS MATERIALIZED (
   SELECT a.vec_id, flatten(list(cb.cbvec ORDER BY a.m)) AS vh
@@ -1695,8 +1619,7 @@ GROUP BY 1, 2
     con.close()
 
     # Final SQL with the converged rotation frozen as literals.
-    parts = [_sql_rot_cte(R, table)]
-    parts += _sql_pq_chain(num_sub=num_sub, dsub=dsub, ksub=ksub, pq_iters=pq_iters)
+    parts = pq_ctes(R)
     parts.append(
         f"""codes AS MATERIALIZED (
   SELECT vec_id AS neighbor_id, m, code FROM as{pq_iters}
@@ -1718,46 +1641,8 @@ GROUP BY 1, 2
   FROM qsub q JOIN cb{pq_iters} cb USING (m)
 )"""
     )
-    parts.append(
-        """adc AS MATERIALIZED (
-  SELECT l.query_id, c.neighbor_id, round(sum(l.pdist), 6) AS adc_dist
-  FROM codes c
-  JOIN lut l ON l.m = c.m AND l.code = c.code
-  WHERE c.neighbor_id != l.query_id
-  GROUP BY 1, 2
-)"""
-    )
-    parts.append(
-        f"""short AS (
-  SELECT query_id, neighbor_id
-  FROM (
-    SELECT query_id, neighbor_id,
-           row_number() OVER (
-             PARTITION BY query_id ORDER BY adc_dist ASC, neighbor_id ASC
-           ) AS rn
-    FROM adc
-  ) WHERE rn <= {rerank}
-)"""
-    )
-    cos_final = _sql_cos("n.embedding", "q.embedding", 6)
-    parts.append(
-        f"""scored AS (
-  SELECT s.query_id, s.neighbor_id, {cos_final} AS cosine
-  FROM short s
-  JOIN {table} n ON n.vec_id = s.neighbor_id
-  JOIN {table} q ON q.vec_id = s.query_id
-)"""
-    )
-    body = ",\n".join(parts)
-    sql = f"""
-WITH {body}
-SELECT query_id, neighbor_id, cosine,
-       CAST(row_number() OVER (
-         PARTITION BY query_id ORDER BY cosine DESC, neighbor_id
-       ) AS BIGINT) AS rank
-FROM scored
-QUALIFY rank <= {k}
-"""
+    parts += _sql_adc_rerank(table, ["m", "code"], rerank)
+    sql = sql_ranked_topk(parts, k)
     _SQL_OPQ_CACHE[key] = sql
     return sql
 

@@ -23,19 +23,19 @@ window partitions by query — never hot.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from stock_streaming_data_pipeline_spark.functions.scalars import half_up
 from stock_streaming_data_pipeline_spark.operators.similarity import (
-    SQL_DOT,
-    SQL_NORM,
+    _keyed,
+    _rerank,
+    _shortlist,
     _sql_cos,
+    _sql_rerank,
     as_double,
     cosine,
-    dot,
-    norm,
-    ranked_topk,
+    sql_ranked_topk,
 )
 
 
@@ -124,9 +124,7 @@ def sq_topk(
     grid = sq_train(corpus, vec_col=vec_col)
     codes = sq_encode(corpus, grid, id_col=id_col, vec_col=vec_col)
     recon = sq_reconstruct(codes, grid)
-    q = queries.select(
-        F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qv")
-    )
+    q = _keyed(queries, id_col, vec_col, "query_id", "qv")
     approx = (
         recon.join(F.broadcast(q), recon["_sqid"] != q["query_id"])
         .withColumn(
@@ -134,23 +132,12 @@ def sq_topk(
         )
         .select("query_id", F.col("_sqid").alias("neighbor_id"), "approx")
     )
-    w_short = Window.partitionBy("query_id").orderBy(
-        F.desc("approx"), F.asc("neighbor_id")
+    return _rerank(
+        _shortlist(approx, shortlist, F.desc("approx")),
+        _keyed(corpus, id_col, vec_col, "neighbor_id", "cv"),
+        q,
+        k,
     )
-    short = (
-        approx.withColumn("_rn", F.row_number().over(w_short))
-        .filter(F.col("_rn") <= shortlist)
-        .select("query_id", "neighbor_id")
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), as_double(F.col(vec_col)).alias("cv")
-    )
-    rerank = (
-        short.join(c, "neighbor_id")
-        .join(F.broadcast(q), "query_id")
-        .withColumn("cosine", F.round(cosine(F.col("qv"), F.col("cv")), 6))
-    )
-    return ranked_topk(rerank, k)
 
 
 def sql_sq_topk(
@@ -163,55 +150,38 @@ def sql_sq_topk(
     """DuckDB replay of :func:`sq_topk` — identical grid, codes,
     reconstruction, scoring and ranking decisions."""
     recon_cos = _sql_cos("q.embedding", "r.recon", 6)
-    exact_cos = _sql_cos("q.embedding", "n.embedding", 6)
-    return f"""
-WITH per AS (
+    parts = [
+        f"""per AS (
   SELECT u.i AS pos,
          min(e.embedding[u.i]::DOUBLE) AS lo,
          max(e.embedding[u.i]::DOUBLE) AS hi
   FROM {table} e, unnest(range(1, len(e.embedding) + 1)) AS u(i)
   GROUP BY u.i
-),
-grid AS (
+)""",
+        """grid AS (
   SELECT list(lo ORDER BY pos) AS lo, list(hi ORDER BY pos) AS hi FROM per
-),
-codes AS (
+)""",
+        f"""codes AS (
   SELECT e.vec_id, list_transform(range(1, len(e.embedding) + 1),
            i -> CASE WHEN g.hi[i] = g.lo[i] THEN 0.0
                 ELSE least(255.0,
                      floor((e.embedding[i]::DOUBLE - g.lo[i])
                            / (g.hi[i] - g.lo[i]) * 255.0 + 0.5)) END) AS code
   FROM {table} e CROSS JOIN grid g
-),
-recon AS (
+)""",
+        """recon AS (
   SELECT c.vec_id, list_transform(range(1, len(c.code) + 1),
            i -> g.lo[i] + c.code[i] * (g.hi[i] - g.lo[i]) / 255.0) AS recon
   FROM codes c CROSS JOIN grid g
-),
-qs AS (
+)""",
+        f"""qs AS (
   SELECT vec_id, embedding FROM {table} WHERE {query_pred}
-),
-approx AS (
+)""",
+        f"""approx AS (
   SELECT q.vec_id AS query_id, r.vec_id AS neighbor_id,
          {recon_cos} AS approx
   FROM qs q JOIN recon r ON r.vec_id != q.vec_id
-),
-short AS (
-  SELECT query_id, neighbor_id
-  FROM (
-    SELECT query_id, neighbor_id,
-           row_number() OVER (
-             PARTITION BY query_id ORDER BY approx DESC, neighbor_id
-           ) AS rn
-    FROM approx
-  ) WHERE rn <= {shortlist}
-)
-SELECT s.query_id, s.neighbor_id, {exact_cos} AS cosine,
-       CAST(row_number() OVER (
-         PARTITION BY s.query_id ORDER BY {exact_cos} DESC, s.neighbor_id
-       ) AS BIGINT) AS rank
-FROM short s
-JOIN {table} q ON q.vec_id = s.query_id
-JOIN {table} n ON n.vec_id = s.neighbor_id
-QUALIFY rank <= {k}
-"""
+)""",
+        *_sql_rerank(table, "approx", "approx DESC", shortlist),
+    ]
+    return sql_ranked_topk(parts, k)

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from stock_streaming_data_pipeline_spark.functions.scalars import round6
+from stock_streaming_data_pipeline_spark.tables import sql_double
 
 
 def znorm_pattern(pattern: list[float]) -> list[float]:
@@ -104,7 +105,7 @@ def sql_subsequence_topk(
     ``trades_sql`` must yield (event_type, ts, event_id, value)."""
     q = znorm_pattern(pattern)
     m = len(q)
-    qlist = ", ".join(repr(v) for v in q)
+    qlist = ", ".join(sql_double(v) for v in q)
     return f"""
 WITH src AS ({trades_sql}),
 sub AS (
@@ -223,9 +224,9 @@ def sql_sax_words(*, trades_sql: str, m: int = 8, segments: int = 4) -> str:
 
     def symbol(expr: str) -> str:
         return (
-            f"CASE WHEN {expr} < ({b1!r}) THEN 'a' "
-            f"WHEN {expr} < ({b2!r}) THEN 'b' "
-            f"WHEN {expr} < ({b3!r}) THEN 'c' ELSE 'd' END"
+            f"CASE WHEN {expr} < ({sql_double(b1)}) THEN 'a' "
+            f"WHEN {expr} < ({sql_double(b2)}) THEN 'b' "
+            f"WHEN {expr} < ({sql_double(b3)}) THEN 'c' ELSE 'd' END"
         )
 
     word = " || ".join(symbol(seg_mean(k)) for k in range(segments))
@@ -370,9 +371,9 @@ def sql_motif_pairs(
 
     def symbol(expr: str) -> str:
         return (
-            f"CASE WHEN {expr} < ({b1!r}) THEN 'a' "
-            f"WHEN {expr} < ({b2!r}) THEN 'b' "
-            f"WHEN {expr} < ({b3!r}) THEN 'c' ELSE 'd' END"
+            f"CASE WHEN {expr} < ({sql_double(b1)}) THEN 'a' "
+            f"WHEN {expr} < ({sql_double(b2)}) THEN 'b' "
+            f"WHEN {expr} < ({sql_double(b3)}) THEN 'c' ELSE 'd' END"
         )
 
     word = " || ".join(symbol(seg_mean(kk)) for kk in range(segments))

@@ -32,6 +32,8 @@ from __future__ import annotations
 import math
 from fractions import Fraction
 
+from stock_streaming_data_pipeline_spark.tables import spark_round
+
 _TWO_PI = 2.0 * math.pi
 
 
@@ -123,6 +125,4 @@ def quantile(
 def round_half_up(x: float) -> int:
     """Engine-neutral half-up rounding on the shortest decimal repr (the
     repo's F.round parity convention)."""
-    from decimal import ROUND_HALF_UP, Decimal
-
-    return int(Decimal(repr(x)).quantize(Decimal("1"), rounding=ROUND_HALF_UP))
+    return int(spark_round(x, 0))

@@ -2667,10 +2667,11 @@ def sample_weighted_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "text_semantic_search",
     tags=("LLM-text", "LLM-sim"),
-    oracle=f"""
-WITH {retrieval.sql_hash_embed(id_col="doc_id", text_col="text", dim=32)},
-qs AS (SELECT doc_id, embedding FROM hemb WHERE doc_id < 3),
-scored AS (
+    oracle=similarity.sql_ranked_topk(
+        [
+            retrieval.sql_hash_embed(id_col="doc_id", text_col="text", dim=32),
+            "qs AS (SELECT doc_id, embedding FROM hemb WHERE doc_id < 3)",
+            """scored AS (
   SELECT q.doc_id AS query_id, c.doc_id AS neighbor_id,
          round(
            list_reduce(list_prepend(0.0::DOUBLE,
@@ -2678,14 +2679,10 @@ scored AS (
                i -> (q.embedding)[i] * (c.embedding)[i])), (a, x) -> a + x),
            6) AS cosine
   FROM qs q JOIN hemb c ON c.doc_id != q.doc_id
-)
-SELECT query_id, neighbor_id, cosine,
-       CAST(row_number() OVER (
-         PARTITION BY query_id ORDER BY cosine DESC, neighbor_id
-       ) AS BIGINT) AS rank
-FROM scored
-QUALIFY rank <= 5
-""",
+)""",
+        ],
+        5,
+    ),
 )
 def text_semantic_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Model-free semantic search end-to-end: hash-embed the TEXT corpus

@@ -26,7 +26,12 @@ from stock_streaming_data_pipeline_spark.functions.scalars import dec38, half_up
 from stock_streaming_data_pipeline_spark.operators import running
 from stock_streaming_data_pipeline_spark.operators.checkpoint import materialize
 from stock_streaming_data_pipeline_spark.plans.catalog import register
-from stock_streaming_data_pipeline_spark.tables import duck_connection, load_table, values_sql
+from stock_streaming_data_pipeline_spark.tables import (
+    duck_connection,
+    load_table,
+    sql_double,
+    values_sql,
+)
 
 _US_PER_DAY = 86_400_000_000  # epoch-microsecond day, exact integer
 
@@ -5206,7 +5211,7 @@ _HURST_WS = (16, 32, 64)
 _lx = [_math.log(w) for w in _HURST_WS]
 _lxm = sum(_lx) / 3
 _den = sum((v - _lxm) ** 2 for v in _lx)
-_HURST_C = [repr((v - _lxm) / _den) for v in _lx]
+_HURST_C = [(v - _lxm) / _den for v in _lx]
 # Per-block R/S from exact integers: cumdev extremes are W-scaled ints,
 # S is the population std of the block.
 _RS_BLOCK = (
@@ -5245,7 +5250,7 @@ s{w} AS (
         for w in _HURST_WS
     )
     cases = " + ".join(
-        f"{c} * ln(m{w})" for c, w in zip(_HURST_C, _HURST_WS)
+        f"{sql_double(c)} * ln(m{w})" for c, w in zip(_HURST_C, _HURST_WS)
     )
     return f"""WITH ht AS (
   SELECT event_type, epoch_us(ts) // 3600000000 AS h,
@@ -5356,7 +5361,7 @@ def hurst_exponent_rs(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
     cases = " + ".join(
-        f"{c} * ln(m{w})" for c, w in zip(_HURST_C, _HURST_WS)
+        f"{c!r} * ln(m{w})" for c, w in zip(_HURST_C, _HURST_WS)
     )
     return piv.filter(
         " AND ".join(f"m{w} IS NOT NULL" for w in _HURST_WS)

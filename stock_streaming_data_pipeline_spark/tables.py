@@ -79,6 +79,15 @@ def sql_double(x: float) -> str:
     return f"'{float(x)!r}'::DOUBLE"
 
 
+def spark_round(x: float, s: int) -> float:
+    """Python replay of Spark's ``F.round(x, s)`` on a double: HALF_UP at
+    ``s`` decimals on the shortest decimal repr of ``x`` (what
+    ``BigDecimal.valueOf`` reads), not on its binary value."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    return float(Decimal(repr(x)).quantize(Decimal(1).scaleb(-s), ROUND_HALF_UP))
+
+
 def values_sql(schema: str, rows) -> str:
     """A typed literal relation: ``schema`` is DDL-style ("a BIGINT, b
     DOUBLE, c VARCHAR", upper-case one-word types), ``rows`` are tuples in

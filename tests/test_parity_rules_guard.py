@@ -8,6 +8,14 @@ package would let one site drift from the DuckDB rule its oracle spells.
 SQL text (oracle strings, ``F.expr``) is the independent reference and
 is not checked for those rules.
 
+The ANN pipeline has one owner per stage in ``operators/similarity.py``,
+and two of them are checked here: the nearest-centroid window (a
+``row_number`` ordered by ``_sim`` desc, :func:`_nearest_lists`) and the
+SQL ranked tail (``QUALIFY rank <=``, :func:`sql_ranked_topk`). Each
+appears exactly once, in its owner. The Python replay of Spark's
+``F.round`` (``Decimal(repr(x))`` quantized half-up) lives in
+``tables.spark_round``.
+
 On the oracle side, ``tables.py`` owns the DuckDB reader
 (``duck_connection``) and the literal-relation renderer (``values_sql``):
 a ``duckdb.connect(`` or ``duckdb.sql(`` call, or a rendered
@@ -30,7 +38,12 @@ OWNERS = {
     "topk": PACKAGE / "operators" / "similarity.py",
     "duckdb": PACKAGE / "tables.py",
     "values": PACKAGE / "tables.py",
+    "probe": PACKAGE / "operators" / "similarity.py",
+    "qualify": PACKAGE / "operators" / "similarity.py",
+    "decimal_repr": PACKAGE / "tables.py",
 }
+# Rules whose owner spells them in one helper only.
+SINGLE_SITE = ("probe", "qualify")
 
 
 def _is_f(node: ast.AST, name: str) -> bool:
@@ -85,15 +98,40 @@ def _names(node: ast.AST) -> set[str]:
     }
 
 
-def _is_cosine_desc(node: ast.AST) -> bool:
-    """``F.desc("cosine")`` or ``F.col("cosine").desc()``."""
+def _is_desc(node: ast.AST, col: str) -> bool:
+    """``F.desc(col)`` or ``F.col(col).desc()``."""
     if _is_f(node, "desc"):
-        return _names(node) == {"cosine"}
+        return _names(node) == {col}
     return (
         isinstance(node, ast.Call)
         and isinstance(node.func, ast.Attribute)
         and node.func.attr == "desc"
-        and _names(node.func.value) == {"cosine"}
+        and _names(node.func.value) == {col}
+    )
+
+
+def _is_cosine_desc(node: ast.AST) -> bool:
+    return _is_desc(node, "cosine")
+
+
+def _is_probe_order(node: ast.AST) -> bool:
+    """``.orderBy(<_sim desc>, ...)``: the nearest-centroid ranking."""
+    return (
+        isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "orderBy"
+        and any(_is_desc(a, "_sim") for a in node.args)
+    )
+
+
+def _is_decimal_repr(node: ast.AST) -> bool:
+    """``Decimal(repr(x))``."""
+    return (
+        isinstance(node, ast.Call)
+        and getattr(node.func, "id", None) == "Decimal"
+        and len(node.args) == 1
+        and isinstance(node.args[0], ast.Call)
+        and getattr(node.args[0].func, "id", None) == "repr"
     )
 
 
@@ -151,12 +189,24 @@ def _is_values_relation(node: ast.AST) -> bool:
     return text is not None and _VALUES_RELATION.search(text) is not None
 
 
+_QUALIFY_RANK = re.compile(r"\bQUALIFY\s+rank\s*<=", re.IGNORECASE)
+
+
+def _is_qualify_tail(node: ast.AST) -> bool:
+    """A string expression holding ``QUALIFY rank <=``."""
+    text = _sql_text(node)
+    return text is not None and _QUALIFY_RANK.search(text) is not None
+
+
 _RULES = {
     "snap": _is_snap,
     "dec38": _is_dec38,
     "topk": _is_topk_order,
     "duckdb": _is_duckdb,
     "values": _is_values_relation,
+    "probe": _is_probe_order,
+    "qualify": _is_qualify_tail,
+    "decimal_repr": _is_decimal_repr,
 }
 
 
@@ -187,6 +237,12 @@ def test_each_parity_rule_is_spelled_only_by_its_owner():
 def test_each_owner_spells_its_rule():
     for rule, owner in OWNERS.items():
         assert rule in {r for r, _ in parity_rule_sites(owner.read_text())}
+
+
+def test_each_ann_stage_has_one_site():
+    for rule in SINGLE_SITE:
+        sites = parity_rule_sites(OWNERS[rule].read_text())
+        assert [r for r, _ in sites].count(rule) == 1, rule
 
 
 def test_guard_flags_planted_copies():
@@ -228,3 +284,29 @@ def test_guard_flags_planted_copies():
         "d = f'FROM (VALUES ({n_rows}, {ols_b}))\\n AS t(n_rows, ols)'\n"
     )
     assert parity_rule_sites(renderers) == [("values", n) for n in (1, 2, 3, 4)]
+    # the ANN stage owners and the F.round replay, each beside near-misses
+    ann = (
+        "w = Window.partitionBy(key).orderBy(F.desc('_sim'), F.asc('_cid'))\n"
+        "w1 = Window.partitionBy('query_id').orderBy(F.col('_sim').desc())\n"
+        "tail = f'FROM scored\\nQUALIFY rank <= {k}\\n'\n"
+        "j6 = float(Decimal(repr(j)).quantize(q6, rounding=ROUND_HALF_UP))\n"
+        "short = Window.partitionBy('query_id').orderBy(\n"
+        "    F.desc('approx'), F.asc('neighbor_id')\n"
+        ")\n"
+        "top = Window.partitionBy('query_id').orderBy(\n"
+        "    F.desc('cosine'), F.asc('neighbor_id')\n"
+        ")\n"
+        "sub = Window.partitionBy('query_id', 'm').orderBy(F.asc('_d'), F.asc('code'))\n"
+        "asc = df.orderBy(F.asc('_sim'))\n"
+        "brute = f'SELECT * FROM ranked WHERE rank <= {k}'\n"
+        "first = 'SELECT * FROM t QUALIFY rn = 1'\n"
+        "x = Decimal(str(j))\n"
+        "y = spark_round(j, 6)\n"
+    )
+    assert parity_rule_sites(ann) == [
+        ("decimal_repr", 4),
+        ("probe", 1),
+        ("probe", 2),
+        ("qualify", 3),
+        ("topk", 8),
+    ]

@@ -8,6 +8,18 @@ rate, batch duration, state size and watermark lag per micro-batch.
 in-memory ring (driver-side, metrics only — never data) and exposes it
 as a DataFrame for dashboards/alerts; ``watermark_lag_seconds`` is the
 staleness signal an on-call actually pages on.
+
+The collector takes each event as Spark's own JSON string, the route
+``StreamingQuery.recentProgress`` already takes: its Java-side listener
+proxy calls ``jevent.progress().json()`` (two py4j commands) and parses
+the text in Python. PySpark's bridge (``StreamingQueryProgress.fromJObject``)
+instead converts the event field by field, about 540 py4j commands
+per event, most of them failed class lookups that each scan the whole
+classpath: 82–94 ms wall, 22–26 ms driver CPU and 61–87 ms JVM CPU per
+event on a 4-core host, against 0.06–0.11 ms driver CPU and 0.1–0.7 ms
+JVM CPU for the JSON string. The listener-bus thread that delivers the
+events runs behind the queries, so that cost was paid once per
+micro-batch of every query.
 """
 
 from __future__ import annotations
@@ -17,6 +29,8 @@ import datetime as dt
 import json
 import threading
 
+from py4j.java_gateway import JavaClass
+from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQueryListener
 
@@ -35,12 +49,29 @@ class ProgressCollector(StreamingQueryListener):
         self._events = collections.deque(maxlen=capacity)
         self._lock = threading.Lock()
 
+    @property
+    def _jlistener(self):
+        """The Java listener ``spark.streams.addListener`` and
+        ``removeListener`` register: Spark's Python-listener wrapper around
+        ``_JsonProgress``, so PySpark's field-by-field event conversion
+        never runs for this collector."""
+        if not hasattr(self, "_jlistenerobj"):
+            wrapper = JavaClass(
+                "org.apache.spark.sql.streaming.PythonStreamingQueryListenerWrapper",
+                SparkContext._gateway._gateway_client,
+            )
+            self._jlistenerobj = wrapper(_JsonProgress(self))
+        return self._jlistenerobj
+
     # -- listener callbacks -------------------------------------------------
     def onQueryStarted(self, event) -> None:  # noqa: N802
         pass
 
     def onQueryProgress(self, event) -> None:  # noqa: N802
-        p = json.loads(event.progress.json)
+        self._record(event.progress.json)
+
+    def _record(self, progress_json: str) -> None:
+        p = json.loads(progress_json)
         dur = p.get("durationMs", {}) or {}
         state = p.get("stateOperators") or []
         with self._lock:
@@ -89,3 +120,27 @@ class ProgressCollector(StreamingQueryListener):
         )
         now = now or dt.datetime.now(dt.timezone.utc)
         return (now - latest).total_seconds()
+
+
+class _JsonProgress:
+    """Java-side proxy of a ``ProgressCollector``: implements Spark's
+    ``PythonStreamingQueryListener`` and hands the collector each progress
+    event as Spark's own JSON, one ``progress().json()`` call per event."""
+
+    def __init__(self, collector: ProgressCollector) -> None:
+        self._collector = collector
+
+    def onQueryStarted(self, jevent) -> None:  # noqa: N802
+        pass
+
+    def onQueryProgress(self, jevent) -> None:  # noqa: N802
+        self._collector._record(jevent.progress().json())
+
+    def onQueryIdle(self, jevent) -> None:  # noqa: N802
+        pass
+
+    def onQueryTerminated(self, jevent) -> None:  # noqa: N802
+        pass
+
+    class Java:
+        implements = ["org.apache.spark.sql.streaming.PythonStreamingQueryListener"]

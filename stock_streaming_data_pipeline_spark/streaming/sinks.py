@@ -33,19 +33,38 @@ from __future__ import annotations
 import json
 import os
 import re
+import time
+from typing import NamedTuple
 from urllib.parse import unquote, urlparse
 
+from py4j.java_gateway import JavaClass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import ArrayType, MapType, StructField, StructType
+
+
+def _jclass(spark: SparkSession, name: str):
+    """The JVM class ``name`` by its fully qualified name, the one way
+    this module reaches a JVM class. Building it sends no py4j command; a
+    ``spark._jvm.org.…`` walk sends one per package segment, each a failed
+    class lookup over the whole classpath."""
+    return JavaClass(name, spark._jvm._gateway_client)
 
 
 def _hadoop_fs(spark: SparkSession, path: str):
     """(FileSystem, Path) for any Hadoop-supported URI (file://, s3a://…)."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    hpath = _jclass(spark, "org.apache.hadoop.fs.Path")(path)
     fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
     return fs, hpath
+
+
+def _local_fs_path(uri_or_path: str) -> str | None:
+    """The local filesystem path when the sink lives on posix storage
+    (bare paths and file: URIs), else None."""
+    parsed = urlparse(uri_or_path)
+    if parsed.scheme in ("", "file"):
+        return parsed.path or uri_or_path
+    return None
 
 
 # ---------------------------------------------------------------------------
@@ -59,15 +78,34 @@ def _hadoop_fs(spark: SparkSession, path: str):
 #
 #   - every commit writes its data files, then publishes
 #     `_manifests/manifest-<version>.json` holding the COMPLETE data-file
-#     list, via create-exclusive — losers of a version race retry at the
-#     next number. The primitive is Hadoop `FileSystem.create(path,
-#     overwrite=false)`, which IS the portable conditional-write surface:
-#     atomic create-no-overwrite on HDFS/posix here, and on S3A (Hadoop
-#     3.4.1+, `fs.s3a.create.conditional.enabled`) a conditional PUT with
-#     `If-None-Match: *` — so the same code path is transactional on a
-#     real object store; only the jar/credentials are absent in this
-#     sandbox. The loser-retries contention behavior is pinned by
-#     tests/test_scale_ops.py::test_concurrent_committers_never_lose_a_commit;
+#     list, via create-exclusive. The primitive is Hadoop
+#     `FileSystem.create(path, overwrite=false)`, which IS the portable
+#     conditional-write surface: atomic create-no-overwrite on HDFS here,
+#     and on S3A (Hadoop 3.4.1+, `fs.s3a.create.conditional.enabled`) a
+#     conditional PUT with `If-None-Match: *` — so the same code path is
+#     transactional on a real object store; only the jar/credentials are
+#     absent from this build. On posix storage it is a hard link
+#     (`_put_if_absent_posix`);
+#   - a manifest also carries `schema`: the table's StructType JSON, the
+#     union of its data and tombstone columns in the order and with the
+#     nullability a `mergeSchema` read infers (every column nullable, as
+#     Spark writes parquet; later commits' new columns appended, as
+#     `StructType.merge` appends them: `_merge_types`). Readers
+#     read with it and start no footer job. A manifest written before
+#     manifests carried a schema is read through `mergeSchema`; the
+#     table's next commit infers the schema that once and writes it;
+#   - race rule: a committer that finds its version taken has lost to a
+#     concurrent commit. An append re-reads the winner's manifest and
+#     retries one version above it with the winner's files plus its own,
+#     so it neither drops the winner's files nor republishes history a
+#     compaction has collected (on HDFS, where a manifest's content lands
+#     after its create, it waits up to `_TORN_WAIT_S` for that content
+#     and counts a winner still torn as crashed). A compaction raises
+#     instead: its files were resolved from a manifest that is no longer
+#     the latest, so it publishes nothing, and its files stay invisible
+#     garbage for the next compaction to delete. Pinned by
+#     tests/test_scale_ops.py::test_concurrent_committers_never_lose_a_commit
+#     and tests/test_sink_bookkeeping.py;
 #   - readers resolve the highest committed manifest and read EXACTLY its
 #     files: a crash between data-write and manifest-commit leaves the
 #     previous manifest (and therefore the previous state) in force, and
@@ -77,12 +115,19 @@ def _hadoop_fs(spark: SparkSession, path: str):
 #     switch from full history to compacted state — the physical deletes
 #     that follow are pure garbage collection with no correctness role.
 #
+# On posix storage, listing the table and its manifests and reading a
+# manifest are plain file I/O, so a commit sends the same number of py4j
+# commands however many files the table holds.
+#
 # Single-writer discipline (one streaming query per sink path, compaction
 # run between batches) — the same contract the reference's Cassandra
 # writer has per partition key (ddl.cql:7,15).
 # ---------------------------------------------------------------------------
 
 _MANIFEST_RE = re.compile(r"manifest-(\d+)\.json$")
+# how long a committer that lost a version race waits for the winner's
+# manifest content to land before counting the winner as crashed
+_TORN_WAIT_S = 10.0
 
 
 def _manifest_dir(path: str) -> str:
@@ -93,21 +138,20 @@ def _read_text(spark: SparkSession, fs, hpath) -> str:
     """One small file's text through the Hadoop FS (no Spark job)."""
     stream = fs.open(hpath)
     try:
-        return spark._jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
+        return _jclass(spark, "org.apache.commons.io.IOUtils").toString(stream, "UTF-8")
     finally:
         stream.close()
 
 
-def _read_manifest_doc(spark: SparkSession, fs, mfile: str):
-    """Parse one manifest through the Hadoop FS stream (no Spark job for
-    a tiny JSON — manifest reads happen once per micro-batch). Returns
-    None when the file is empty or torn: create-exclusive reserves the
-    version atomically, but on posix the CONTENT lands in a separate
-    write, so a reader racing the commit (or surviving a writer crash
-    between create and write) can observe an in-flight manifest — which
-    is, by the protocol's own semantics, not yet committed."""
+def _manifest_doc(read, name: str):
+    """Parse one manifest (``read(name)`` returns its text). Returns None
+    when the file is empty or torn: create-exclusive reserves the version
+    atomically, but on HDFS/S3A the CONTENT lands in a separate write, so
+    a reader racing the commit (or surviving a writer crash between create
+    and write) can observe an in-flight manifest — which is, by the
+    protocol's own semantics, not yet committed."""
     try:
-        raw = _read_text(spark, fs, spark._jvm.org.apache.hadoop.fs.Path(mfile))
+        raw = read(name)
     except Exception:
         # open/read failure on a listed manifest = in-flight or torn
         # (e.g. the checksummed local FS rejects a mid-write read, S3
@@ -123,35 +167,38 @@ def _read_manifest_doc(spark: SparkSession, fs, mfile: str):
 
 
 def _latest_manifest(spark: SparkSession, path: str):
-    """(version, [file basenames]) of the highest COMMITTED manifest —
-    in-flight/torn manifests are skipped (the previous manifest stays in
-    force, exactly the crash-window contract) — or None when the table
-    predates the manifest protocol."""
-    fs, _ = _hadoop_fs(spark, path)
-    jvm = spark._jvm
-    mpath = jvm.org.apache.hadoop.fs.Path(_manifest_dir(path))
-    if not fs.exists(mpath):
-        return None
-    entries = []
-    for st in fs.listStatus(mpath):
-        m = _MANIFEST_RE.match(st.getPath().getName())
-        if m:
-            entries.append((int(m.group(1)), st.getPath().toString()))
-    for version, mfile in sorted(entries, reverse=True):
-        doc = _read_manifest_doc(spark, fs, mfile)
+    """(version, [file basenames], schema JSON or None) of the highest
+    COMMITTED manifest — in-flight/torn manifests are skipped (the
+    previous manifest stays in force, exactly the crash-window contract)
+    — or None when the table predates the manifest protocol. The schema
+    is None in a manifest written before manifests carried one."""
+    mdir = _manifest_dir(path)
+    local = _local_fs_path(mdir)
+    if local is not None:
+        try:
+            names = os.listdir(local)
+        except FileNotFoundError:
+            return None
+
+        def read(name: str) -> str:
+            with open(os.path.join(local, name), encoding="utf-8") as fh:
+                return fh.read()
+
+    else:
+        fs, hdir = _hadoop_fs(spark, mdir)
+        if not fs.exists(hdir):
+            return None
+        names = [st.getPath().getName() for st in fs.listStatus(hdir)]
+        hpath = _jclass(spark, "org.apache.hadoop.fs.Path")
+
+        def read(name: str) -> str:
+            return _read_text(spark, fs, hpath(f"{mdir}/{name}"))
+
+    versions = ((int(m.group(1)), n) for n in names if (m := _MANIFEST_RE.match(n)))
+    for version, name in sorted(versions, reverse=True):
+        doc = _manifest_doc(read, name)
         if doc is not None:
-            return version, doc["files"]
-    return None
-
-
-def _local_fs_path(uri_or_path: str) -> str | None:
-    """The local filesystem path when the sink lives on posix storage
-    (bare paths and file: URIs), else None."""
-    from urllib.parse import urlparse
-
-    parsed = urlparse(uri_or_path)
-    if parsed.scheme in ("", "file"):
-        return parsed.path or uri_or_path
+            return version, doc["files"], doc.get("schema")
     return None
 
 
@@ -181,81 +228,208 @@ def _put_if_absent_posix(final: str, payload: bytes) -> bool:
         os.unlink(tmp)
 
 
+def _put_if_absent(spark: SparkSession, mdir: str, name: str, payload: bytes) -> bool:
+    """Create ``mdir/name`` holding ``payload`` unless it exists, through
+    each backend's own atomic conditional write: posix = temp-write + hard
+    link (atomic name+content); HDFS = namenode-atomic
+    ``create(overwrite=false)``; S3A (Hadoop 3.4.1+) = the same create
+    call compiled to a conditional PUT with ``If-None-Match: *``."""
+    local = _local_fs_path(mdir)
+    if local is not None:
+        os.makedirs(local, exist_ok=True)
+        return _put_if_absent_posix(os.path.join(local, name), payload)
+    fs, hdir = _hadoop_fs(spark, mdir)
+    fs.mkdirs(hdir)
+    try:
+        out = fs.create(_jclass(spark, "org.apache.hadoop.fs.Path")(f"{mdir}/{name}"), False)
+    except Exception:
+        return False
+    out.write(bytearray(payload))
+    out.close()
+    return True
+
+
+def _written_schema(df: DataFrame) -> StructType:
+    """The schema Spark reads back from the parquet files ``df`` writes:
+    Spark writes every column nullable, nested fields included."""
+
+    def nullable(t):
+        if isinstance(t, StructType):
+            return StructType(
+                [StructField(f.name, nullable(f.dataType), True, f.metadata) for f in t.fields]
+            )
+        if isinstance(t, ArrayType):
+            return ArrayType(nullable(t.elementType), True)
+        if isinstance(t, MapType):
+            return MapType(nullable(t.keyType), nullable(t.valueType), True)
+        return t
+
+    return nullable(df.schema)
+
+
+def _merge_types(left, right, path: str):
+    """``right`` merged into ``left`` by the rule Spark's ``StructType.merge``
+    applies file by file in a ``mergeSchema`` read: struct fields matched
+    by name and merged, ``right``'s new fields appended in their order,
+    arrays and maps merged by element; any other pair must be equal."""
+    if isinstance(left, StructType) and isinstance(right, StructType):
+        theirs = {f.name: f for f in right.fields}
+        fields = [
+            StructField(
+                f.name,
+                _merge_types(f.dataType, theirs[f.name].dataType, path),
+                f.nullable or theirs[f.name].nullable,
+                f.metadata,
+            )
+            if f.name in theirs
+            else f
+            for f in left.fields
+        ]
+        ours = set(left.names)
+        return StructType(fields + [f for f in right.fields if f.name not in ours])
+    if isinstance(left, ArrayType) and isinstance(right, ArrayType):
+        return ArrayType(
+            _merge_types(left.elementType, right.elementType, path),
+            left.containsNull or right.containsNull,
+        )
+    if isinstance(left, MapType) and isinstance(right, MapType):
+        return MapType(
+            _merge_types(left.keyType, right.keyType, path),
+            _merge_types(left.valueType, right.valueType, path),
+            left.valueContainsNull or right.valueContainsNull,
+        )
+    if left != right:
+        raise ValueError(
+            f"{path}: {left.simpleString()} in the table and {right.simpleString()} "
+            "in this write; parquet schema merging cannot unify them"
+        )
+    return left
+
+
+def _table_schema(spark: SparkSession, path: str, base, added: StructType | None):
+    """The schema a manifest publishing ``base``'s files plus files of
+    schema ``added`` carries: ``added`` merged into the base schema as a
+    ``mergeSchema`` read merges it. A base manifest written before
+    manifests carried a schema has its files' schema inferred once
+    through ``mergeSchema``. None when ``added`` is unknown."""
+    _, names, schema = base
+    if added is None:
+        return None
+    if schema is None and not names:
+        return added
+    left = (
+        StructType.fromJson(schema)
+        if schema is not None
+        else _read_committed(spark, path, base).schema
+    )
+    return _merge_types(left, added, path)
+
+
 def _commit_manifest(
-    spark: SparkSession, path: str, files: list[str], *, after: int | None = None
+    spark: SparkSession,
+    path: str,
+    added: list[str],
+    *,
+    base=None,
+    schema: StructType | None = None,
+    replace: bool = False,
 ) -> int:
-    """Publish the complete data-file list as the next numbered manifest
-    via each backend's own atomic conditional-write primitive, so
-    concurrent committers cannot both win a version (losers retry at the
-    next number): posix = temp-write + hard link (atomic name+content);
-    HDFS = namenode-atomic ``create(overwrite=false)``; S3A (Hadoop
-    3.4.1+) = the same create call compiled to a conditional PUT with
-    ``If-None-Match: *``. Pinned under real thread contention by
-    tests/test_scale_ops.py::test_concurrent_committers_never_lose_a_commit.
+    """Publish the next numbered manifest: ``base``'s files plus
+    ``added`` (``added`` alone when ``replace``), through
+    ``_put_if_absent``, so concurrent committers cannot both win a
+    version. Returns the version published.
 
-    ``after`` is the committed version ``files`` builds on (0 for none)
-    when the caller has already read it; otherwise it is read here."""
-    fs, _ = _hadoop_fs(spark, path)
-    jvm = spark._jvm
-    mdir = jvm.org.apache.hadoop.fs.Path(_manifest_dir(path))
-    fs.mkdirs(mdir)
-    local_mdir = _local_fs_path(_manifest_dir(path))
-    if after is None:
-        latest = _latest_manifest(spark, path)
-        after = latest[0] if latest else 0
-    version = after + 1
+    ``base`` is the committed manifest the caller built on, as
+    ``_latest_manifest`` returns it (``(0, adopted files, None)`` for a
+    table that predates the protocol); it is read here when None.
+    ``schema`` is that of ``added``'s files; the manifest carries no
+    schema when it is None.
+
+    A lost version race follows the race rule in the section comment: an
+    append re-reads the winner's manifest and retries above it; a
+    ``replace`` (compaction) raises RuntimeError. Pinned under real thread
+    contention by
+    tests/test_scale_ops.py::test_concurrent_committers_never_lose_a_commit."""
+    mdir = _manifest_dir(path)
+    if base is None:
+        base = _latest_manifest(spark, path) or (0, [], None)
     while True:
-        doc = json.dumps({"version": version, "files": sorted(files)})
-        if local_mdir is not None:
-            final = os.path.join(local_mdir, f"manifest-{version:012d}.json")
-            if _put_if_absent_posix(final, doc.encode("utf-8")):
-                return version
-            version += 1
-            continue
-        name = f"{_manifest_dir(path)}/manifest-{version:012d}.json"
-        mpath = jvm.org.apache.hadoop.fs.Path(name)
+        version, files = base[0] + 1, set(added) if replace else {*base[1], *added}
+        doc = {"version": version, "files": sorted(files)}
+        table = schema if replace else _table_schema(spark, path, base, schema)
+        if table is not None:
+            doc["schema"] = table.jsonValue()
+        payload = json.dumps(doc).encode("utf-8")
+        if _put_if_absent(spark, mdir, f"manifest-{version:012d}.json", payload):
+            return version
+        if replace:
+            raise RuntimeError(
+                f"{path}: manifest {version} was published by a concurrent commit "
+                f"while this compaction resolved manifest {base[0]}; nothing was "
+                "published, and its files are garbage for the next compaction"
+            )
+        # on HDFS the winner's content lands after its create: wait for it,
+        # and count a winner still torn after _TORN_WAIT_S as crashed (its
+        # version stays skipped, as every reader skips it)
+        deadline = time.monotonic() + _TORN_WAIT_S
+        winner = _latest_manifest(spark, path)
+        while (winner is None or winner[0] < version) and time.monotonic() < deadline:
+            time.sleep(0.05)
+            winner = _latest_manifest(spark, path)
+        base = winner if winner and winner[0] >= version else (version, base[1], base[2])
+
+
+def _list_data_files(spark: SparkSession, path: str) -> list[str]:
+    """Basenames of the data files in the table directory (``_``- and
+    ``.``-prefixed entries are Spark's and Hadoop's bookkeeping); none
+    when it does not exist yet. One ``os.scandir`` on posix storage, so
+    no py4j command per file."""
+    local = _local_fs_path(path)
+    if local is not None:
         try:
-            out = fs.create(mpath, False)
-        except Exception:
-            version += 1
-            continue
-        out.write(bytearray(doc.encode("utf-8")))
-        out.close()
-        return version
-
-
-def _list_data_files(fs, hpath) -> list[str]:
-    return [
-        f.getPath().toString()
-        for f in fs.listStatus(hpath)
-        if f.isFile() and not f.getPath().getName().startswith("_")
-    ]
-
-
-def _current_data_files(spark: SparkSession, path: str) -> list[str]:
-    """The files a reader must resolve: the latest committed manifest, or
-    (back-compat for tables written before the protocol / by plain
-    parquet appends) the raw directory listing."""
-    latest = _latest_manifest(spark, path)
-    if latest is not None:
-        base = path.rstrip("/")
-        return [f"{base}/{name}" for name in latest[1]]
+            with os.scandir(local) as entries:
+                return [e.name for e in entries if e.name[0] not in "_." and e.is_file()]
+        except FileNotFoundError:
+            return []
     fs, hpath = _hadoop_fs(spark, path)
-    return _list_data_files(fs, hpath)
+    if not fs.exists(hpath):
+        return []
+    names = (f.getPath().getName() for f in fs.listStatus(hpath) if f.isFile())
+    return [n for n in names if not n.startswith("_")]
 
 
-def _commit_after_append(spark: SparkSession, path: str, pre: set[str]) -> None:
+def _committed(spark: SparkSession, path: str):
+    """(version, [file basenames], schema JSON or None) a reader resolves:
+    the latest committed manifest, or (back-compat for tables written
+    before the protocol / by plain parquet appends) the raw directory
+    listing with no schema."""
+    return _latest_manifest(spark, path) or (0, _list_data_files(spark, path), None)
+
+
+def _current_data_files(spark: SparkSession, path: str, committed=None) -> list[str]:
+    """The paths of the files a reader must resolve (``committed``, as
+    ``_committed`` returns it, read here when None)."""
+    base = path.rstrip("/")
+    return [f"{base}/{name}" for name in (committed or _committed(spark, path))[1]]
+
+
+class _Append(NamedTuple):
+    """What an epoch append knew before it wrote: the data files already
+    in the table directory and the schema of the files it writes."""
+
+    before: set[str]
+    schema: StructType
+
+
+def _commit_after_append(spark: SparkSession, path: str, pre: _Append) -> None:
     """Commit the manifest after a data append: new listing = previous
     committed set (or the pre-append listing when adopting a
     pre-manifest table) plus exactly the files this append created —
     never a blanket directory listing, which would resurrect invisible
     garbage left by crashed compactions."""
-    fs, hpath = _hadoop_fs(spark, path)
-    post = _list_data_files(fs, hpath)
-    added = [f.rsplit("/", 1)[-1] for f in post if f not in pre]
-    adopted = [f.rsplit("/", 1)[-1] for f in sorted(pre)]
-    after, base = _latest_manifest(spark, path) or (0, adopted)
-    _commit_manifest(spark, path, list(base) + added, after=after)
+    added = [name for name in _list_data_files(spark, path) if name not in pre.before]
+    base = _latest_manifest(spark, path) or (0, sorted(pre.before), None)
+    _commit_manifest(spark, path, added, base=base, schema=pre.schema)
 
 
 def _epoch_writer(path: str, project):
@@ -265,14 +439,9 @@ def _epoch_writer(path: str, project):
 
     def write(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
-        fs, hpath = _hadoop_fs(spark, path)
-        pre = set(_list_data_files(fs, hpath)) if fs.exists(hpath) else set()
-        (
-            project(batch_df)
-            .withColumn("_epoch", F.lit(int(epoch_id)))
-            .write.mode("append")
-            .parquet(path)
-        )
+        out = project(batch_df).withColumn("_epoch", F.lit(int(epoch_id)))
+        pre = _Append(set(_list_data_files(spark, path)), _written_schema(out))
+        out.write.mode("append").parquet(path)
         _commit_after_append(spark, path, pre)
 
     return write
@@ -298,14 +467,30 @@ def tombstone_writer(path: str, key_cols: list[str]):
     )
 
 
-def _read_committed(spark: SparkSession, path: str) -> DataFrame:
-    """Exactly the committed files, with ``mergeSchema`` because a
-    tombstone file holds only the keys, ``_epoch`` and ``_deleted``. The
-    file list is pinned when the DataFrame is built, so a later append
-    alongside it cannot drift into the plan."""
-    return spark.read.option("mergeSchema", "true").parquet(
-        *_current_data_files(spark, path)
+def _read_committed(spark: SparkSession, path: str, committed=None) -> DataFrame:
+    """Exactly the committed files (``committed``, as ``_committed``
+    returns it, read here when None), pinned when the DataFrame is built,
+    so a later append alongside it cannot drift into the plan.
+
+    With the manifest's schema the read lists the table directory once
+    and keeps the committed files by name; Spark drops the others before
+    opening them. So it reads no parquet footer, sends no py4j command per
+    file, and starts no listing job (Spark lists more than
+    ``parallelPartitionDiscovery.threshold`` explicit paths, 32 by
+    default, in a job). A table whose manifest predates the schema field
+    is read file by file with ``mergeSchema``, because a tombstone file
+    holds only the keys, ``_epoch`` and ``_deleted``."""
+    committed = committed or _committed(spark, path)
+    if committed[2] is None:
+        return spark.read.option("mergeSchema", "true").parquet(
+            *_current_data_files(spark, path, committed)
+        )
+    names = ", ".join(
+        "'" + name.replace("\\", "\\\\").replace("'", "\\'") + "'"
+        for name in committed[1]
     )
+    listed = F.expr(f"_metadata.file_name IN ({names})") if names else F.lit(False)
+    return spark.read.schema(StructType.fromJson(committed[2])).parquet(path).filter(listed)
 
 
 def _resolve(
@@ -360,7 +545,10 @@ def compact_upsert_table(
        are NOT visible — readers still resolve the old manifest);
     3. commit a manifest listing ONLY the compacted files — the atomic
        visibility flip (create-exclusive numbered manifest, the
-       put-if-absent protocol);
+       put-if-absent protocol). When a concurrent commit has taken the
+       next version, the compaction raises RuntimeError here, publishing
+       nothing: its files resolved a manifest that is no longer the
+       latest;
     4. delete every data file the new manifest does not list (the old
        history plus any orphans from previously crashed compactions) —
        pure GC, invisible to readers whenever it runs or dies.
@@ -371,25 +559,32 @@ def compact_upsert_table(
     even when a fresh checkpoint restarts epochs at 0. Uses Hadoop
     FileSystem APIs, so the same code runs on file://, s3a://, hdfs://.
     """
-    fs, hpath = _hadoop_fs(spark, path)
-    resolved = _resolve(_read_committed(spark, path), key_cols)
-    pre = set(_list_data_files(fs, hpath))
-    resolved.withColumn("_epoch", F.lit(-1)).write.mode("append").parquet(path)
+    committed = _committed(spark, path)
+    out = _resolve(_read_committed(spark, path, committed), key_cols).withColumn(
+        "_epoch", F.lit(-1)
+    )
+    pre = set(_list_data_files(spark, path))
+    out.write.mode("append").parquet(path)
     if _crash_before_manifest:
         # failpoint: die between writing the compacted files and the
         # manifest commit — readers must still resolve the OLD state
         return
-    post = _list_data_files(fs, hpath)
-    compacted = [f.rsplit("/", 1)[-1] for f in post if f not in pre]
-    _commit_manifest(spark, path, compacted)
+    post = _list_data_files(spark, path)
+    compacted = [name for name in post if name not in pre]
+    _commit_manifest(
+        spark, path, compacted, base=committed, schema=_written_schema(out), replace=True
+    )
     if _crash_after_publish:
         # failpoint: die between the atomic visibility flip and the GC
         # deletes — readers must already resolve the compacted state
         return
     keep = set(compacted)
-    for f in post:
-        if f.rsplit("/", 1)[-1] not in keep:
-            fs.delete(spark._jvm.org.apache.hadoop.fs.Path(f), False)
+    fs, _ = _hadoop_fs(spark, path)
+    hpath = _jclass(spark, "org.apache.hadoop.fs.Path")
+    base = path.rstrip("/")
+    for name in post:
+        if name not in keep:
+            fs.delete(hpath(f"{base}/{name}"), False)
 
 
 def read_upsert_table_as_of(
